@@ -204,7 +204,7 @@ def _scale_sweep(spark, sf_dir: str, queries) -> dict:
                 release_tracked()
                 release_result_memos()
                 spark.catalog.clearCache()
-                _dd._SETMASK_DECISION_CACHE.clear()
+                _dd._ENCODING_DECISION_CACHE.clear()
                 t0 = time.perf_counter()
                 queries[name].builder(spark, scale_dir).write.mode(
                     "overwrite"
@@ -216,7 +216,7 @@ def _scale_sweep(spark, sf_dir: str, queries) -> dict:
             os.environ.pop("MMR_SETMASK", None)
         else:
             os.environ["MMR_SETMASK"] = saved
-        _dd._SETMASK_DECISION_CACHE.clear()
+        _dd._ENCODING_DECISION_CACHE.clear()
         release_tracked()
         release_result_memos()
         spark.catalog.clearCache()
@@ -228,6 +228,49 @@ def _scale_sweep(spark, sf_dir: str, queries) -> dict:
         "gen_seconds": gen_s,
         "queries": timings,
     }
+
+
+def _decision_stamps() -> dict:
+    """Copies of the memoized per-corpus decisions (LSH hot-bucket,
+    containment candidate path, jaccard broadcast guard, zscore chunk
+    width, ngram df-cut, eval-sample modulus, skew join, CC broadcast),
+    stamped for drift tracking across rounds (VERDICT r4 task 8 / r5
+    task 8)."""
+    from multithreaded_mapreduce_spark.operators import anomaly as _anomaly
+    from multithreaded_mapreduce_spark.operators import dedup as _dedup
+    from multithreaded_mapreduce_spark.operators import skew as _skew
+
+    def copy(d):
+        return None if d is None else dict(d)
+
+    return {
+        "lsh_auto_decision": copy(_dedup.LAST_LSH_DECISION),
+        "containment_auto_decision": copy(_dedup.LAST_CONTAINMENT_DECISION),
+        "jaccard_auto_decision": copy(_dedup.LAST_JACCARD_DECISION),
+        "zscore_auto_decision": copy(_anomaly.LAST_ZSCORE_DECISION),
+        "ngram_dfcut_auto_decision": copy(_dedup.LAST_NGRAM_DFCUT_DECISION),
+        # md5-uniform eval-sample modulus for the ground-truth-bound
+        # eval queries (k = 1 → identity; k > 1 → 1-in-k doc sample)
+        "eval_sample_decision": copy(_dedup.LAST_EVAL_SAMPLE_DECISION),
+        # measured straggler factor → plain / aqe / salted join choice
+        "skew_auto_decision": copy(_skew.LAST_SKEW_JOIN_DECISION),
+        # label-sized CC relations broadcast vs shuffle (node ceiling)
+        "cc_bcast_auto_decision": copy(_dedup.LAST_CC_BCAST_DECISION),
+    }
+
+
+def _stamps_then_sweep(spark, sf_dir: str, queries) -> tuple[dict, dict]:
+    """(decision stamps, scale-sweep stamp). The stamps are read FIRST:
+    the sweep re-runs dedup builders on the 10× replica, which overwrite
+    the LAST_* decision globals with that corpus' values."""
+    stamps = _decision_stamps()
+    sweep: dict = {"skipped": "off"}
+    if os.environ.get("MMR_BENCH_SCALE_SWEEP", "auto") != "off":
+        try:
+            sweep = _scale_sweep(spark, sf_dir, queries)
+        except Exception as ex:  # noqa: BLE001 — informational stamp only
+            sweep = {"skipped": repr(ex)[:200]}
+    return stamps, sweep
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -514,12 +557,7 @@ def main() -> None:
     # corpus executes, and the one the r11 lossy-bitmap prune targets.
     # OUTSIDE the headline totals; any failure degrades to a skipped
     # stamp, never a bench failure. MMR_BENCH_SCALE_SWEEP=off disables.
-    scale_sweep_stamp: dict = {"skipped": "off"}
-    if os.environ.get("MMR_BENCH_SCALE_SWEEP", "auto") != "off":
-        try:
-            scale_sweep_stamp = _scale_sweep(spark, sf_dir, queries)
-        except Exception as ex:  # noqa: BLE001 — informational stamp only
-            scale_sweep_stamp = {"skipped": repr(ex)[:200]}
+    decision_stamps, scale_sweep_stamp = _stamps_then_sweep(spark, sf_dir, queries)
 
     total = round(sum(timings.values()), 3)
     r3_set = HEADLINE[: HEADLINE.index("kmeans_lloyd")]
@@ -530,20 +568,6 @@ def main() -> None:
 
     def _pass_subtotal(p: dict[str, list[float]], names) -> float:
         return round(sum(min(p[n]) for n in names), 3)
-    # the memoized per-corpus decisions (LSH hot-bucket, containment
-    # candidate path, jaccard broadcast guard, zscore chunk width) —
-    # stamped for drift tracking across rounds (VERDICT r4 task 8 /
-    # r5 task 8)
-    from multithreaded_mapreduce_spark.operators.anomaly import LAST_ZSCORE_DECISION
-    from multithreaded_mapreduce_spark.operators import dedup as _dedup
-    from multithreaded_mapreduce_spark.operators import skew as _skew
-    from multithreaded_mapreduce_spark.operators.dedup import (
-        LAST_CONTAINMENT_DECISION,
-        LAST_JACCARD_DECISION,
-        LAST_LSH_DECISION,
-        LAST_NGRAM_DFCUT_DECISION,
-    )
-
     # Round-over-round reads (ADVICE r4): min-of-N totals are only
     # comparable at the SAME n_runs (an extra sample biases the min
     # down on a noisy VM) — the median subtotals below are the
@@ -562,11 +586,8 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "queries_median": medians,
-        "lsh_auto_decision": LAST_LSH_DECISION,
-        "containment_auto_decision": LAST_CONTAINMENT_DECISION,
-        "jaccard_auto_decision": LAST_JACCARD_DECISION,
-        "zscore_auto_decision": LAST_ZSCORE_DECISION,
-        "ngram_dfcut_auto_decision": LAST_NGRAM_DFCUT_DECISION,
+        # the memoized per-corpus decisions, read before the 10× sweep
+        **decision_stamps,
         # shared-CC memo: first entry cold (miss), the next two are
         # memo hits — the pipeline-shaped cost of the components trio
         "cc_memo_decision": cc_memo_stamp,
@@ -583,13 +604,6 @@ def main() -> None:
         # 10×-replica sweep with the setmask disabled — the at-scale
         # dedup branch the r11 bitmap prune targets (r11)
         "scale_sweep": scale_sweep_stamp,
-        # md5-uniform eval-sample modulus for the ground-truth-bound
-        # eval queries (k = 1 → identity; k > 1 → 1-in-k doc sample)
-        "eval_sample_decision": dict(_dedup.LAST_EVAL_SAMPLE_DECISION),
-        # measured straggler factor → plain / aqe / salted join choice
-        "skew_auto_decision": dict(_skew.LAST_SKEW_JOIN_DECISION),
-        # label-sized CC relations broadcast vs shuffle (node ceiling)
-        "cc_bcast_auto_decision": _dedup.LAST_CC_BCAST_DECISION,
         "runs_per_query": per_pass * 2,
         "median_total_r3_comparable": round(sum(medians[n] for n in r3_set), 3),
         "median_total_r4_comparable": round(sum(medians[n] for n in r4_set), 3),

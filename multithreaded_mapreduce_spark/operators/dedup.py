@@ -181,220 +181,102 @@ def _group_relation(
 
 
 # ------------------------------------------------------------------
-# Fixed-width set-bitmask compare (r10 optimization, guide §2.3
-# "narrower types" + §1.2 per-task work). The exact-jaccard and
-# minhash-verify paths both reduce to |A∩B| over distinct-token-id
-# sets; Spark's array_intersect builds a hash set per ROW PAIR, and
-# the pairwise group compare was profiled at ~93 executor-seconds at
-# sf0.1 (the single heaviest stage in the suite; the minhash verify
-# join another ~44). When the corpus' distinct token-id universe fits
-# SETMASK_MAX_VOCAB bit positions, each set packs into
-# ceil(vocab/64) longs and every intersection becomes W AND+popcount
-# ops — and the relation that shuffles/broadcasts carries W longs
-# instead of a variable-length array. The id→position mapping is
-# injective (row_number over the distinct ids), so |A∩B| — and with
-# it every jaccard double — is bit-identical to the array path; the
-# mapping is built INSIDE the plan from the already-persisted
-# token-set relation (one tiny window + broadcast join), never cached
-# across runs. Above the cap (any realistic corpus vocabulary) the
-# decision disengages and the array/postings paths stand unchanged;
-# the knob exists because low-cardinality token universes — enum-like
-# fields, k-mer alphabets, hashed feature buckets — are a real shape,
-# and the driver corpus is one. Kill switch: MMR_SETMASK=off.
+# Set-compare encoding: ONE bitmap helper behind the five verify sites
+# (the nested group cross, containment, the LSH verify, the minhash
+# banding verify and the incremental banding verify). Every site
+# reduces to |A∩B| over two distinct-token-id sets; Spark's
+# array_intersect builds a hash set per ROW PAIR (profiled ~93
+# executor-seconds on the pairwise group compare at sf0.1), while a
+# fixed-width bitmap turns each pair into W AND/OR+popcounts.
+#
+# One memoized decision per (corpus, site) runs ONE action — the
+# distinct ids, limited to SETMASK_MAX_VOCAB + 1 — and picks a branch:
+#
+# * exact (0 < n <= SETMASK_MAX_VOCAB): bit position = the id's dense
+#   rank in the collected vocabulary, looked up in one array literal, so
+#   each set packs into ceil(n/64) longs and c = popcount(a & b) is
+#   bit-identical to the array intersect. A pure projection — no extra
+#   join/window/aggregate stage enters any consumer plan. An id outside
+#   the collected vocabulary raises (never a silently missing bit).
+# * hashed (n above the cap, any real corpus vocabulary, or the kill
+#   switch MMR_SETMASK=off): the exact array_intersect stays the
+#   verify. At the |G|²-candidate sites (nested cross, containment,
+#   LSH) each side also carries a lossy BITMAP_WORDS-long bitmap (bit =
+#   pmod(id, 64·W), collisions allowed). popcount(bm_a | bm_b) <=
+#   |A ∪ B| — every set bit needs at least one distinct member, and
+#   each member sets exactly one bit — so
+#
+#       ub = na + nb − popcount(bm_a | bm_b)  >=  |A ∩ B|
+#
+#   is an upper bound no matter how ids collide, and _bitmap_guard
+#   skips the intersect of every pair whose ub cannot reach the
+#   threshold (dedup_components 173 → 27.6 s at the 10× corpus). The
+#   banding-survivor sites (minhash and incremental verify) see
+#   candidates that are mostly true near-dups, where the bitmap build
+#   measured net-negative, so they run the plain intersect.
 # ------------------------------------------------------------------
 
-SETMASK_MAX_VOCAB = int(os.environ.get("MMR_SETMASK_MAX_VOCAB", "1024"))
-#: at or under this vocab the bit positions are collected to the driver
-#: (bounded: ≤ 64 longs) and masks become pure projections — no
-#: window/join/aggregate stages enter any consumer plan
-SETMASK_LITERAL_MAX_VOCAB = 64
-_SETMASK_DECISION_CACHE: dict[tuple, dict] = {}
-LAST_SETMASK_DECISION: dict = {}
+#: longs per bitmap in the hashed branch; the exact branch's cap is the
+#: same 1024 bit positions
+BITMAP_WORDS = 16
+SETMASK_MAX_VOCAB = 64 * BITMAP_WORDS
+_ENCODING_DECISION_CACHE: dict[tuple, dict] = {}
+LAST_ENCODING_DECISION: dict = {}
 
 
-def _signed64(x: int) -> int:
-    """Two's-complement fold for bit-63 literals (1 << 63 overflows a
-    signed long; Spark longs are signed)."""
-    return x - (1 << 64) if x >= (1 << 63) else x
-
-
-def _literal_mask_cols(arr_col: str, vocab_ids: list) -> list:
-    """Mask word columns _m0.._m{W-1} as a PURE PROJECTION over the
-    token-id array column: one array_contains per vocab bit, the shift
-    precomputed in Python. O(|vocab| × |set|) per row — bounded by the
-    literal cap — and zero extra plan stages."""
-    from functools import reduce
-
-    nw = (len(vocab_ids) + 63) // 64
-    cols = []
-    for w in range(nw):
-        terms = [
-            F.when(
-                F.array_contains(F.col(arr_col), F.lit(int(v)).cast("long")),
-                F.lit(_signed64(1 << (p % 64))).cast("long"),
-            ).otherwise(F.lit(0).cast("long"))
-            for p, v in enumerate(vocab_ids)
-            if p // 64 == w
-        ]
-        cols.append(
-            reduce(lambda a, b: a.bitwiseOR(b), terms).alias(f"_m{w}")
-        )
-    return cols
-
-
-def _setmask_decision(
-    spark: SparkSession, sf_dir: str, ids: DataFrame, site: str
-) -> dict:
-    """Measured per-corpus decision (memoized, the LSH/jaccard/zscore
-    pattern): count the distinct token ids of ``ids`` and engage the
-    bitmask compare only when 0 < n <= SETMASK_MAX_VOCAB. Either path
-    yields identical values (pytest-asserted), so the cached choice
-    only affects the physical plan."""
-    global LAST_SETMASK_DECISION
+def _encoding_decision(sf_dir: str, ids: DataFrame, site: str) -> dict:
+    """Measured per-(corpus, site) branch choice (memoized, the
+    LSH/jaccard pattern): collect at most SETMASK_MAX_VOCAB + 1
+    distinct ids of ``ids`` in one action; at or under the cap the
+    sorted ids are the exact branch's vocabulary. ``n_vocab`` of
+    SETMASK_MAX_VOCAB + 1 means "over the cap". Both branches yield
+    identical values (pytest-asserted), so the cached choice only
+    affects the physical plan. A site that builds over a sample carries
+    the sample modulus in ``site`` (ADVICE r10): two samples never
+    share a vocabulary."""
+    global LAST_ENCODING_DECISION
     if os.environ.get("MMR_SETMASK", "auto") == "off":
-        LAST_SETMASK_DECISION = {"forced": "off", "engage": False, "site": site}
-        return LAST_SETMASK_DECISION
-    key = (_docs_stamp(sf_dir), site)
-    if key not in _SETMASK_DECISION_CACHE:
-        n = ids.distinct().count()
-        d = {
-            "site": site,
-            "n_vocab": n,
-            "max_vocab": SETMASK_MAX_VOCAB,
-            "n_words": (n + 63) // 64,
-            "engage": 0 < n <= SETMASK_MAX_VOCAB,
+        LAST_ENCODING_DECISION = {
+            "site": site, "forced": "off", "exact": False, "n_words": BITMAP_WORDS,
         }
-        if d["engage"] and n <= SETMASK_LITERAL_MAX_VOCAB:
-            # LITERAL positions (the same bounded-driver-state pattern
-            # as the Lloyd/PQ/BPE knobs): ≤ 64 ids collect once per
-            # corpus into the memoized decision, and every mask becomes
-            # a pure projection (array_contains per vocab bit) with NO
-            # extra window/join/aggregate stages in any consumer plan —
-            # this is what makes the bounded eval-sampled variants a
-            # win too (the join-based mask build's added stages cost
-            # more than bounded relations save, A/B-measured).
-            d["vocab_ids"] = sorted(
-                r["id"] for r in ids.distinct().collect()
-            )
-        _SETMASK_DECISION_CACHE[key] = d
-    LAST_SETMASK_DECISION = _SETMASK_DECISION_CACHE[key]
-    return LAST_SETMASK_DECISION
+        return LAST_ENCODING_DECISION
+    key = (_docs_stamp(sf_dir), site)
+    if key not in _ENCODING_DECISION_CACHE:
+        vocab = sorted(
+            r["id"] for r in ids.distinct().limit(SETMASK_MAX_VOCAB + 1).collect()
+        )
+        exact = 0 < len(vocab) <= SETMASK_MAX_VOCAB
+        _ENCODING_DECISION_CACHE[key] = {
+            "site": site,
+            "n_vocab": len(vocab),
+            "exact": exact,
+            "n_words": (len(vocab) + 63) // 64 if exact else BITMAP_WORDS,
+            "vocab": vocab if exact else None,
+        }
+    LAST_ENCODING_DECISION = _ENCODING_DECISION_CACHE[key]
+    return LAST_ENCODING_DECISION
 
 
-def _setmask_vocab(ids: DataFrame) -> DataFrame:
-    """(id, pos) with pos = dense 0-based rank of the distinct ids —
-    the injective bit-position assignment. The window is a single
-    sort of <= SETMASK_MAX_VOCAB rows."""
-    from pyspark.sql import Window
-
-    return ids.distinct().select(
-        "id", (F.row_number().over(Window.orderBy("id")) - 1).alias("pos")
-    )
-
-
-def _mask_word_aggs(n_words: int, pos_col: str = "pos") -> list:
-    """bit_or aggregate columns _m0.._m{W-1}: word w collects bit
-    (pos % 64) of every member id with pos in [64w, 64w+64)."""
-    # the PySpark shiftleft wrapper only takes a literal shift; the JVM
-    # ShiftLeft expression takes a column one — go through expr()
-    shifted = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST({pos_col} % 64 AS INT))")
-    return [
-        F.bit_or(
-            F.when(
-                (F.col(pos_col) >= w * 64) & (F.col(pos_col) < (w + 1) * 64),
-                shifted,
-            ).otherwise(F.lit(0).cast("long"))
-        ).alias(f"_m{w}")
-        for w in range(n_words)
-    ]
-
-
-def _mask_intersect_size(n_words: int, a_prefix: str, b_prefix: str):
-    """|A∩B| as W AND+popcounts — exact, because id→pos is injective."""
-    from functools import reduce
-    from operator import add
-
-    return reduce(
-        add,
-        [
-            F.bit_count(
-                F.col(f"{a_prefix}{w}").bitwiseAND(F.col(f"{b_prefix}{w}"))
-            )
-            for w in range(n_words)
-        ],
-    ).cast("int")
-
-
-# ------------------------------------------------------------------
-# Hashed-bitmap union bound (r11 optimization, guide §2.3/§3.2 — the
-# Bloom-style runtime prune, applied per pair instead of per join).
-# This is the scale path the exact setmask CANNOT serve: past
-# SETMASK_MAX_VOCAB distinct ids (any real corpus vocabulary) the
-# injective bit assignment no longer fits, and before r11 every
-# disengaged verify fell back to a per-pair array_intersect — profiled
-# 5084 executor-seconds for dedup_components' pairwise stage at the 10×
-# corpus with MMR_SETMASK=off (plans/r11, the 100 TB shape). The fix:
-# each token-id set additionally carries a FIXED-width lossy bitmap
-# (W longs; bit = pmod(id, 64·W), collisions allowed). For any two sets
-# popcount(bm_a | bm_b) <= |A ∪ B| — every set bit needs at least one
-# distinct member, and each member sets exactly one bit — so
-#
-#     ub = na + nb − popcount(bm_a | bm_b)  >=  |A ∩ B|
-#
-# is an exact UPPER bound on the intersection no matter how many ids
-# collide. A candidate pair whose ub cannot reach the jaccard (or
-# containment) threshold is dropped BEFORE the exact verify; survivors
-# still pay the unchanged array_intersect + threshold filter, so the
-# output is bit-identical (the bound admits false positives, never
-# false negatives). Per-pair cost: W OR+popcounts instead of an
-# array_intersect hash build — the same arithmetic shape that made the
-# setmask a 10-30× win, minus the exactness (which the prune does not
-# need). The +1 slack in the keep conditions absorbs double-rounding at
-# the threshold boundary (the exact filter still decides). Kill switch:
-# MMR_BITMAP_PRUNE=off; width knob MMR_BITMAP_WORDS (longs per set,
-# default 16 = 1024 bits — comfortably past the ~40-token sets of the
-# test corpora; for real ~1k-token documents the bound saturates
-# gracefully and merely prunes less).
-# ------------------------------------------------------------------
-
-BITMAP_PRUNE_WORDS = int(os.environ.get("MMR_BITMAP_WORDS", "16"))
-
-
-def _bitmap_prune_on(site_default: bool = True) -> bool:
-    """Per-SITE engagement (A/B-measured at the 10× corpus with
-    MMR_SETMASK=off): the prune pays for itself where the candidate
-    pool is large and mostly sub-threshold — the |G|²/2 nested cross
-    (dedup_components 173→27.6 s) and the containment nested loop
-    (65.6→52.1 s) — but banding-survivor verifies see candidates that
-    are mostly TRUE near-dups, so the per-row bitmap build is overhead
-    with nothing to prune (dedup_minhash_verified 24.9→27.2 s,
-    dedup_incremental_neardup 7.3→8.4 s WORSE with it on). Those sites
-    pass site_default=False. MMR_BITMAP_PRUNE=on|off overrides every
-    site; auto (default) takes the per-site measurement."""
-    mode = os.environ.get("MMR_BITMAP_PRUNE", "auto")
-    if mode == "off" or BITMAP_PRUNE_WORDS <= 0:
-        return False
-    if mode == "on":
-        return True
-    return site_default
-
-
-def _bitmap_cols(arr_col: str, prefix: str) -> list:
-    """Lossy-bitmap word columns {prefix}0..{prefix}{W-1} over a
-    long-array column: bit pmod(id, 64·W), one aggregate fold per word
-    (O(W·|set|) per ROW, once — vs per candidate pair downstream)."""
-    nw = BITMAP_PRUNE_WORDS
-    nbits = 64 * nw
+def _bitmap_cols(arr_col: str, prefix: str, n_words: int = BITMAP_WORDS, bit=None) -> list:
+    """Bitmap word columns {prefix}0..{prefix}{W-1} over a long-array
+    column: element t sets bit ``bit(t)`` (default pmod(t, 64·W), the
+    hashed branch; the exact branch passes dense positions through),
+    one aggregate fold per word — O(W·|set|) per ROW, once, vs per
+    candidate pair downstream."""
+    if bit is None:
+        def bit(t):
+            return F.pmod(t, F.lit(64 * n_words))
 
     def _step_for(w: int):
         # the fold lambda must take EXACTLY (acc, t): PySpark reads the
         # callable's arity to build the higher-order function
         def step(acc, t):
-            b = F.pmod(t, F.lit(nbits))
+            b = bit(t)
             return acc.bitwiseOR(
                 F.when(
                     (b >= F.lit(w * 64)) & (b < F.lit((w + 1) * 64)),
-                    # pmod(t, 64) == pmod(pmod(t, nbits), 64): 64 | nbits
+                    # pmod(t, 64) == pmod(bit(t), 64): 64 | 64·W, and a
+                    # dense position is its own bit
                     F.call_function(
                         "shiftleft",
                         F.lit(1).cast("long"),
@@ -409,40 +291,40 @@ def _bitmap_cols(arr_col: str, prefix: str) -> list:
         F.aggregate(F.col(arr_col), F.lit(0).cast("long"), _step_for(w)).alias(
             f"{prefix}{w}"
         )
-        for w in range(nw)
+        for w in range(n_words)
     ]
 
 
-def _bitmap_intersect_ub(a_prefix: str, b_prefix: str, na: str = "na", nb: str = "nb"):
-    """na + nb − popcount(bm_a | bm_b) — exact upper bound on |A∩B|."""
+def _popcount_sum(n_words: int, a_prefix: str, b_prefix: str, op: str):
+    """Σ_w popcount(a_w ``op`` b_w) over the two sides' bitmap words."""
     from functools import reduce
     from operator import add
 
-    popc = reduce(
+    return reduce(
         add,
         [
-            F.bit_count(
-                F.col(f"{a_prefix}{w}").bitwiseOR(F.col(f"{b_prefix}{w}"))
-            )
-            for w in range(BITMAP_PRUNE_WORDS)
+            F.bit_count(getattr(F.col(f"{a_prefix}{w}"), op)(F.col(f"{b_prefix}{w}")))
+            for w in range(n_words)
         ],
     )
-    return F.col(na) + F.col(nb) - popc
 
 
-def _bitmap_keep_jaccard(a_prefix: str, b_prefix: str, threshold: float):
+def _bitmap_intersect_ub(a_prefix: str, b_prefix: str):
+    """na + nb − popcount(bm_a | bm_b) — exact upper bound on |A∩B|."""
+    return F.col("na") + F.col("nb") - _popcount_sum(BITMAP_WORDS, a_prefix, b_prefix, "bitwiseOR")
+
+
+def _bitmap_keep_jaccard(ub, threshold: float):
     """Keep condition for jaccard >= t: a true pair has
     c >= t·(na+nb)/(1+t), and ub >= c, so (ub+1)·(1+t) >= t·(na+nb)
     (the +1 is double-rounding slack; the exact filter still decides)."""
-    ub = _bitmap_intersect_ub(a_prefix, b_prefix)
     return (ub + F.lit(1)).cast("double") * F.lit(1.0 + threshold) >= F.lit(
         threshold
     ) * (F.col("na") + F.col("nb"))
 
 
-def _bitmap_keep_containment(a_prefix: str, b_prefix: str, threshold: float):
+def _bitmap_keep_containment(ub, threshold: float):
     """Keep condition for containment c/na >= t: (ub+1) >= t·na."""
-    ub = _bitmap_intersect_ub(a_prefix, b_prefix)
     return (ub + F.lit(1)).cast("double") >= F.lit(threshold) * F.col("na")
 
 
@@ -505,23 +387,56 @@ def _bitmap_guard(keep_cond, exact_intersect):
     return F.when(keep_cond, exact_intersect).otherwise(F.lit(-1))
 
 
-def _group_masks(groups: DataFrame, n_words: int) -> DataFrame:
-    """(toks_h, _m0.._m{W-1}) for the collapsed-group relation. Keyed
-    by the hashed token ARRAY (the group identity — gid is NOT unique
-    under the duplicate-doc_id fixture, where one doc_id can be the
-    min member of two different token sets); the vocab mapping is
-    derived from the persisted groups relation itself, so no extra
-    corpus scan enters the plan."""
-    ids = groups.select(F.explode("toks_h").alias("id"))
-    vocab = _setmask_vocab(ids)
-    tokm = groups.select("toks_h").distinct().select(
-        "toks_h", F.explode("toks_h").alias("id")
-    )
-    return (
-        tokm.join(F.broadcast(vocab), "id")
-        .groupBy("toks_h")
-        .agg(*_mask_word_aggs(n_words))
-    )
+def _set_compare(sf_dir: str, rel: DataFrame, arr: str, site: str, cols: dict, keep=None):
+    """The two verify-join sides over ``rel`` and the intersection-size
+    expression ``c`` between them, under the site's measured encoding.
+
+    ``cols`` maps each source column to its side alias with ``{}`` for
+    the side letter (key first, e.g. ``{"gid": "g{}", "n": "n{}"}``).
+    ``keep`` maps the hashed branch's union bound to the condition that
+    guards the exact intersect; None (the banding-survivor sites) runs
+    the plain intersect."""
+    d = _encoding_decision(sf_dir, rel.select(F.explode(arr).alias("id")), site)
+
+    def side(s: str) -> list:
+        return [F.col(src).alias(fmt.format(s)) for src, fmt in cols.items()]
+
+    if d["exact"]:
+        nw = d["n_words"]
+        vocab = F.lit(d["vocab"]).cast("array<bigint>")
+
+        # positions once per row (array_position is 1-based, 0 = absent),
+        # then one fold per word over them
+        ranked = rel.withColumn(
+            "_pos", F.transform(arr, lambda t: F.array_position(vocab, t) - 1)
+        ).withColumn(
+            "_pos",
+            F.when(
+                F.exists("_pos", lambda p: p < 0),
+                F.raise_error(
+                    F.lit(
+                        f"set-compare site {site}: a token id is outside the "
+                        "vocabulary collected for this corpus"
+                    )
+                ),
+            ).otherwise(F.col("_pos")),
+        )
+
+        def bitmap(s: str) -> list:
+            return _bitmap_cols("_pos", f"_p{s}", nw, bit=lambda t: t)
+
+        c = _popcount_sum(nw, "_pa", "_pb", "bitwiseAND").cast("int")
+        return ranked.select(*side("a"), *bitmap("a")), ranked.select(*side("b"), *bitmap("b")), c
+
+    def hashed(s: str):
+        key, *rest = side(s)
+        bits = _bitmap_cols(arr, f"_p{s}") if keep is not None else []
+        return rel.select(key, F.col(arr).alias(f"t{s}"), *rest, *bits)
+
+    c = F.size(F.array_intersect("ta", "tb"))
+    if keep is not None:
+        c = _bitmap_guard(keep(_bitmap_intersect_ub("_pa", "_pb")), c)
+    return hashed("a"), hashed("b"), c
 
 
 def _jaccard_group_cross(
@@ -556,79 +471,23 @@ def _jaccard_group_cross(
         F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
     ).alias("jaccard")
     if _jaccard_path_decision(groups, sf_dir, tag=decision_tag)["use_broadcast"]:
-        sm = _setmask_decision(
-            spark,
-            sf_dir,
-            groups.select(F.explode("toks_h").alias("id")),
-            f"jaccard_groups{decision_tag}",
+        # pairwise path: broadcast the collapsed-group relation (byte-
+        # guarded above — the gate is a measured bytes estimate, not a
+        # row count) and compare every gid-ordered pair under the
+        # size-ratio prune. Exact branch: W AND+popcounts per pair
+        # (profiled 93 → ~8 exec-s on the components edge stage at
+        # sf0.1). Hashed branch: the intersect is CASE-guarded by the
+        # cheap conjuncts — gid order, size-ratio prune, union bound —
+        # so a sub-threshold pair never evaluates array_intersect, even
+        # after Catalyst pushes the threshold filter into the join
+        # condition (see _bitmap_guard)
+        a, b, c = _set_compare(
+            sf_dir, groups, "toks_h", f"jaccard_groups{decision_tag}",
+            {"gid": "g{}", "members": "m_{}", "n": "n{}"},
+            keep=lambda ub: (F.col("ga") < F.col("gb"))
+            & ratio_prune
+            & _bitmap_keep_jaccard(ub, JACCARD_THRESHOLD),
         )
-        # the JOIN-based mask build only engages on the UNBOUNDED
-        # full-corpus path: the eval-sampled variants (decision_tag !=
-        # "") are capped at ~EVAL_SAMPLE_TARGET_DOCS docs by
-        # construction, and that build's extra stages cost more than
-        # the bounded intersect work saves (A/B at sf0.1: sweep
-        # +0.27 s, kfold +0.49 s, recall +1.4 s sampled vs components
-        # −2.4 s full). The LITERAL mask path adds no stages at all, so
-        # it engages everywhere.
-        use_masks = sm["engage"] and ("vocab_ids" in sm or not decision_tag)
-        if use_masks:
-            # bitmask pairwise path (r10 optimization, see the setmask
-            # block above): the broadcast relation carries W longs per
-            # group instead of the token array, and each of the |G|²/2
-            # candidate intersections is W AND+popcounts instead of an
-            # array_intersect hash build — profiled 93 → ~8 exec-s on
-            # the components edge stage at sf0.1, value-identical
-            nw = sm["n_words"]
-            if "vocab_ids" in sm:
-                g2 = groups.select(
-                    "gid", "members", "n",
-                    *_literal_mask_cols("toks_h", sm["vocab_ids"]),
-                )
-            else:
-                g2 = groups.join(F.broadcast(_group_masks(groups, nw)), "toks_h")
-            a = g2.select(
-                F.col("gid").alias("ga"),
-                F.col("members").alias("m_a"), F.col("n").alias("na"),
-                *[F.col(f"_m{w}").alias(f"_a{w}") for w in range(nw)],
-            )
-            b = g2.select(
-                F.col("gid").alias("gb"),
-                F.col("members").alias("m_b"), F.col("n").alias("nb"),
-                *[F.col(f"_m{w}").alias(f"_b{w}") for w in range(nw)],
-            )
-            c = _mask_intersect_size(nw, "_a", "_b")
-        else:
-            # pairwise path: broadcast the collapsed-group relation and
-            # compare hashed token arrays directly — byte-guarded above
-            # (the relation carries full toks_h arrays, so the gate is a
-            # measured bytes estimate, not a row count). r11: each side
-            # additionally carries the W-long lossy bitmap, and the
-            # exact intersect is CASE-guarded by the cheap conjuncts —
-            # gid order, size-ratio prune, hashed-bitmap union bound —
-            # so a sub-threshold pair is rejected by int compares + W
-            # OR+popcounts and never evaluates array_intersect, even
-            # after Catalyst pushes the threshold filter into the join
-            # condition (see _bitmap_guard; 5084 exec-s before at the
-            # 10× disengaged profile)
-            bm = _bitmap_prune_on()
-            a = groups.select(
-                F.col("gid").alias("ga"), F.col("toks_h").alias("ta"),
-                F.col("members").alias("m_a"), F.col("n").alias("na"),
-                *(_bitmap_cols("toks_h", "_pa") if bm else []),
-            )
-            b = groups.select(
-                F.col("gid").alias("gb"), F.col("toks_h").alias("tb"),
-                F.col("members").alias("m_b"), F.col("n").alias("nb"),
-                *(_bitmap_cols("toks_h", "_pb") if bm else []),
-            )
-            c = F.size(F.array_intersect("ta", "tb"))
-            if bm:
-                c = _bitmap_guard(
-                    (F.col("ga") < F.col("gb"))
-                    & ratio_prune
-                    & _bitmap_keep_jaccard("_pa", "_pb", JACCARD_THRESHOLD),
-                    c,
-                )
         cross = (
             F.broadcast(a)
             .join(b, (F.col("ga") < F.col("gb")) & ratio_prune)
@@ -1342,53 +1201,13 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("ga", "gb")
         )
-    # bitmask verify under the measured vocab decision — same shape and
-    # rationale as the jaccard group cross (see the setmask block); the
-    # candidate⋈group joins then carry W longs instead of token arrays
-    sm = _setmask_decision(
-        spark, sf_dir, groups.select(F.explode("toks_h").alias("id")), "containment_groups"
+    # verify under the measured set-compare encoding (see _set_compare);
+    # in the hashed branch the union bound guards the intersect
+    a, b, c = _set_compare(
+        sf_dir, groups, "toks_h", "containment_groups",
+        {"gid": "g{}", "members": "m_{}", "n": "n{}"},
+        keep=lambda ub: _bitmap_keep_containment(ub, CONTAINMENT_THRESHOLD),
     )
-    if sm["engage"]:
-        nw = sm["n_words"]
-        if "vocab_ids" in sm:
-            # literal masks: pure projection, zero extra stages
-            g2 = groups.select(
-                "gid", "members", "n",
-                *_literal_mask_cols("toks_h", sm["vocab_ids"]),
-            )
-        else:
-            g2 = groups.join(F.broadcast(_group_masks(groups, nw)), "toks_h")
-        a = g2.select(
-            F.col("gid").alias("ga"),
-            F.col("members").alias("m_a"), F.col("n").alias("na"),
-            *[F.col(f"_m{w}").alias(f"_a{w}") for w in range(nw)],
-        )
-        b = g2.select(
-            F.col("gid").alias("gb"), F.col("members").alias("m_b"),
-            *[F.col(f"_m{w}").alias(f"_b{w}") for w in range(nw)],
-        )
-        c = _mask_intersect_size(nw, "_a", "_b")
-    else:
-        # r11: disengaged verify carries the lossy bitmap, and the
-        # exact intersect is CASE-guarded by the union upper bound so
-        # pruned candidates never evaluate array_intersect regardless
-        # of filter pushdown (see _bitmap_guard)
-        bm = _bitmap_prune_on()
-        a = groups.select(
-            F.col("gid").alias("ga"), F.col("toks_h").alias("ta"),
-            F.col("members").alias("m_a"), F.col("n").alias("na"),
-            *(_bitmap_cols("toks_h", "_pa") if bm else []),
-        )
-        b = groups.select(
-            F.col("gid").alias("gb"), F.col("toks_h").alias("tb"),
-            F.col("members").alias("m_b"),
-            *([F.col("n").alias("nb")] + _bitmap_cols("toks_h", "_pb") if bm else []),
-        )
-        c = F.size(F.array_intersect("ta", "tb"))
-        if bm:
-            c = _bitmap_guard(
-                _bitmap_keep_containment("_pa", "_pb", CONTAINMENT_THRESHOLD), c
-            )
     cross = (
         cand.join(a, "ga")
         .join(b, "gb")
@@ -1913,64 +1732,18 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     else:
         cand = _lsh_chunked_candidates(bands, hot_threshold)
-    # exact Jaccard verification on candidate group pairs: intersect/union
-    # over fixed-width long arrays is O(|a|+|b|) integer compares in
-    # codegen — no shuffle of exploded tokens, no string comparisons. The
-    # group table joins by gid; AQE broadcasts it when small, shuffles by
-    # key at 100 TB.
-    # bitmask verify under the measured vocab decision (r10, see the
-    # setmask block) — same shape as dedup_containment's verify
-    sm = _setmask_decision(
-        spark, sf_dir, groups.select(F.explode("toks_h").alias("id")), "minhash_lsh_groups"
+    # exact Jaccard verification on candidate group pairs under the
+    # measured set-compare encoding (see _set_compare): no shuffle of
+    # exploded tokens, no string comparisons. The group table joins by
+    # gid; AQE broadcasts it when small, shuffles by key at 100 TB.
+    # |A∪B| = na + nb − |A∩B| (sets are distinct by construction), so
+    # one intersect per candidate serves both terms, and in the hashed
+    # branch the union bound guards it.
+    ga, gb, inter = _set_compare(
+        sf_dir, groups, "toks_h", "minhash_lsh_groups",
+        {"gid": "g{}", "members": "m_{}", "n": "n{}"},
+        keep=lambda ub: _bitmap_keep_jaccard(ub, JACCARD_THRESHOLD),
     )
-    if sm["engage"]:
-        nw = sm["n_words"]
-        if "vocab_ids" in sm:
-            g2 = groups.select(
-                "gid", "members", "n",
-                *_literal_mask_cols("toks_h", sm["vocab_ids"]),
-            )
-        else:
-            g2 = groups.join(F.broadcast(_group_masks(groups, nw)), "toks_h")
-        ga = g2.select(
-            F.col("gid").alias("ga"), F.col("members").alias("m_a"),
-            F.col("n").alias("na"),
-            *[F.col(f"_m{w}").alias(f"_a{w}") for w in range(nw)],
-        )
-        gb = g2.select(
-            F.col("gid").alias("gb"), F.col("members").alias("m_b"),
-            F.col("n").alias("nb"),
-            *[F.col(f"_m{w}").alias(f"_b{w}") for w in range(nw)],
-        )
-        inter = _mask_intersect_size(nw, "_a", "_b")
-    else:
-        bm = _bitmap_prune_on()
-        ga = groups.select(
-            F.col("gid").alias("ga"),
-            F.col("toks_h").alias("toks_a"),
-            F.col("members").alias("m_a"),
-            F.col("n").alias("na"),
-            *(_bitmap_cols("toks_h", "_pa") if bm else []),
-        )
-        gb = groups.select(
-            F.col("gid").alias("gb"),
-            F.col("toks_h").alias("toks_b"),
-            F.col("members").alias("m_b"),
-            F.col("n").alias("nb"),
-            *(_bitmap_cols("toks_h", "_pb") if bm else []),
-        )
-        # |A∪B| = na + nb - |A∩B| (sets are distinct by construction):
-        # one array_intersect per candidate instead of intersect + union —
-        # the verify step is the hot loop when the corpus is near-dup
-        # dense. The intersect lands in its own projection so it is
-        # evaluated once even though jaccard references it twice. r11:
-        # candidates failing the lossy-bitmap union bound never evaluate
-        # the intersect — CASE-guarded, pushdown-proof (_bitmap_guard).
-        inter = F.size(F.array_intersect("toks_a", "toks_b"))
-        if bm:
-            inter = _bitmap_guard(
-                _bitmap_keep_jaccard("_pa", "_pb", JACCARD_THRESHOLD), inter
-            )
     verified = (
         cand.join(ga, "ga")
         .join(gb, "gb")
@@ -2138,9 +1911,9 @@ def _minhash_verified_pairs(
     """Banded-and-verified MinHash pairs over ``docs`` (the full
     documents table by default; the md5-uniform eval sample when the
     recall report engages sampling). ``sample_k`` is the sample modulus
-    that produced ``docs`` — it keys the setmask decision memo so two
-    builds with different moduli in one process can never reuse each
-    other's literal vocabulary (ADVICE r10)."""
+    that produced ``docs`` — it keys the set-compare decision memo so
+    two builds with different moduli in one process can never reuse
+    each other's vocabulary (ADVICE r10)."""
     docs_is_full = docs is None
     if docs is None:
         docs = load_table(spark, sf_dir, "documents")
@@ -2171,48 +1944,6 @@ def _minhash_verified_pairs(
     sigs = dsets.select(
         "doc_id", "tids", F.size("tids").alias("n"), *sig_cols
     ).transform(tracked_persist)
-    # bitmask verify (r10 optimization, see the setmask block): when the
-    # distinct-tid universe fits, the verify join ships W longs per doc
-    # instead of the tid array and each candidate intersection is W
-    # AND+popcounts instead of an array_intersect (profiled ~44 exec-s
-    # in the verify stage at sf0.1). Masks and the vocab mapping are
-    # both derived from the PERSISTED sigs relation (cached reads, no
-    # extra corpus scan enters the plan); doc_id is unique post-groupBy
-    # so it can key the mask aggregate, and n rides along as the
-    # distinct-tid count. The decision is memoized per corpus+variant
-    # (sample-restricted positions when the eval sample engages —
-    # positions only need to be consistent within one plan).
-    sm = _setmask_decision(
-        spark,
-        sf_dir,
-        sigs.select(F.explode("tids").alias("id")),
-        # the sampled site carries the modulus (ADVICE r10): a second
-        # build at a different k must not reuse the first sample's
-        # memoized literal vocab_ids — token ids outside them would be
-        # silently dropped from the bitmasks. Matches the jaccard
-        # twin's decision_tag=f"sample{k}" keying.
-        "minhash_tids" if docs_is_full else f"minhash_tids_sampled{sample_k}",
-    )
-    mask_rel = None
-    lit_masks = None
-    if sm["engage"] and "vocab_ids" in sm:
-        # literal masks: pure projection over the persisted sigs rows,
-        # zero extra stages — engages on the sampled variants too
-        lit_masks = sm["vocab_ids"]
-    elif sm["engage"] and docs_is_full:
-        # the JOIN-based mask build only on the unbounded full path
-        # (A/B: its extra stages cost more than bounded eval-sampled
-        # relations save — see the jaccard-cross twin of this gate)
-        nw = sm["n_words"]
-        vocab = _setmask_vocab(sigs.select(F.explode("tids").alias("id")))
-        # persisted: referenced by BOTH sides of the verify join
-        mask_rel = (
-            sigs.select("doc_id", F.explode("tids").alias("id"))
-            .join(F.broadcast(vocab), "id")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n"), *_mask_word_aggs(nw))
-            .transform(tracked_persist)
-        )
     # band key = (band index, the band's 2 signature values) as a struct —
     # exact equality, no re-hash, so the candidate set is literally the
     # oracle's OR-of-band-equalities, generated by ONE equi-join
@@ -2245,50 +1976,16 @@ def _minhash_verified_pairs(
         .select(F.col("x.doc_id").alias("da"), F.col("y.doc_id").alias("db"))
         .distinct()
     )
-    if lit_masks is not None:
-        nw = sm["n_words"]
-        lit_cols = _literal_mask_cols("tids", lit_masks)
-        sa = sigs.select(
-            F.col("doc_id").alias("da"), F.col("n").alias("na"),
-            *[c.alias(f"_a{w}") for w, c in enumerate(lit_cols)],
-        )
-        sb = sigs.select(
-            F.col("doc_id").alias("db"), F.col("n").alias("nb"),
-            *[c.alias(f"_b{w}") for w, c in enumerate(lit_cols)],
-        )
-        inter = _mask_intersect_size(nw, "_a", "_b")
-    elif mask_rel is not None:
-        nw = sm["n_words"]
-        sa = mask_rel.select(
-            F.col("doc_id").alias("da"), F.col("n").alias("na"),
-            *[F.col(f"_m{w}").alias(f"_a{w}") for w in range(nw)],
-        )
-        sb = mask_rel.select(
-            F.col("doc_id").alias("db"), F.col("n").alias("nb"),
-            *[F.col(f"_m{w}").alias(f"_b{w}") for w in range(nw)],
-        )
-        inter = _mask_intersect_size(nw, "_a", "_b")
-    else:
-        # r11: banding survivors are mostly true near-dups, so the
-        # lossy-bitmap prune is site-default OFF here (A/B-measured
-        # net-negative — see _bitmap_prune_on); MMR_BITMAP_PRUNE=on
-        # still engages the CASE-guarded path for A/B runs
-        bm = _bitmap_prune_on(site_default=False)
-        sa = sigs.select(
-            F.col("doc_id").alias("da"), F.col("tids").alias("ta"),
-            F.col("n").alias("na"),
-            *(_bitmap_cols("tids", "_pa") if bm else []),
-        )
-        sb = sigs.select(
-            F.col("doc_id").alias("db"), F.col("tids").alias("tb"),
-            F.col("n").alias("nb"),
-            *(_bitmap_cols("tids", "_pb") if bm else []),
-        )
-        inter = F.size(F.array_intersect("ta", "tb"))
-        if bm:
-            inter = _bitmap_guard(
-                _bitmap_keep_jaccard("_pa", "_pb", JACCARD_THRESHOLD), inter
-            )
+    # verify under the measured set-compare encoding (see _set_compare);
+    # banding survivors are mostly true near-dups, so the hashed branch
+    # runs the plain intersect (no union-bound guard). The sampled site
+    # carries the modulus (ADVICE r10): a build at another k never
+    # reuses this sample's vocabulary.
+    sa, sb, inter = _set_compare(
+        sf_dir, sigs, "tids",
+        "minhash_tids" if docs_is_full else f"minhash_tids_sampled{sample_k}",
+        {"doc_id": "d{}", "n": "n{}"},
+    )
     return (
         cand.join(sa, "da")
         .join(sb, "db")
@@ -3857,62 +3554,11 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("x.doc_id").alias("da"), F.col("y.doc_id").alias("db"))
         .distinct()
     )
-    # bitmask verify under the measured vocab decision — same shape and
-    # rationale as _minhash_verified_pairs (see the setmask block)
-    sm = _setmask_decision(
-        spark, sf_dir, sigs.select(F.explode("tids").alias("id")), "incremental_tids"
+    # verify under the measured set-compare encoding — same banding-
+    # survivor shape as _minhash_verified_pairs (plain hashed intersect)
+    sa, sb, inter = _set_compare(
+        sf_dir, sigs, "tids", "incremental_tids", {"doc_id": "d{}", "n": "n{}"}
     )
-    if sm["engage"] and "vocab_ids" in sm:
-        # literal masks: pure projection, zero extra stages
-        nw = sm["n_words"]
-        lit_cols = _literal_mask_cols("tids", sm["vocab_ids"])
-        sa = sigs.select(
-            F.col("doc_id").alias("da"), F.col("n").alias("na"),
-            *[c.alias(f"_a{w}") for w, c in enumerate(lit_cols)],
-        )
-        sb = sigs.select(
-            F.col("doc_id").alias("db"), F.col("n").alias("nb"),
-            *[c.alias(f"_b{w}") for w, c in enumerate(lit_cols)],
-        )
-        inter = _mask_intersect_size(nw, "_a", "_b")
-    elif sm["engage"]:
-        nw = sm["n_words"]
-        vocab = _setmask_vocab(sigs.select(F.explode("tids").alias("id")))
-        mask_rel = (
-            sigs.select("doc_id", F.explode("tids").alias("id"))
-            .join(F.broadcast(vocab), "id")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n"), *_mask_word_aggs(nw))
-            .transform(tracked_persist)
-        )
-        sa = mask_rel.select(
-            F.col("doc_id").alias("da"), F.col("n").alias("na"),
-            *[F.col(f"_m{w}").alias(f"_a{w}") for w in range(nw)],
-        )
-        sb = mask_rel.select(
-            F.col("doc_id").alias("db"), F.col("n").alias("nb"),
-            *[F.col(f"_m{w}").alias(f"_b{w}") for w in range(nw)],
-        )
-        inter = _mask_intersect_size(nw, "_a", "_b")
-    else:
-        # r11: same banding-survivor shape as _minhash_verified_pairs —
-        # prune site-default OFF (A/B-measured net-negative there)
-        bm = _bitmap_prune_on(site_default=False)
-        sa = sigs.select(
-            F.col("doc_id").alias("da"), F.col("tids").alias("ta"),
-            F.col("n").alias("na"),
-            *(_bitmap_cols("tids", "_pa") if bm else []),
-        )
-        sb = sigs.select(
-            F.col("doc_id").alias("db"), F.col("tids").alias("tb"),
-            F.col("n").alias("nb"),
-            *(_bitmap_cols("tids", "_pb") if bm else []),
-        )
-        inter = F.size(F.array_intersect("ta", "tb"))
-        if bm:
-            inter = _bitmap_guard(
-                _bitmap_keep_jaccard("_pa", "_pb", JACCARD_THRESHOLD), inter
-            )
     return (
         cand.join(sa, "da")
         .join(sb, "db")

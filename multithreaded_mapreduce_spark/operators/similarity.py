@@ -1383,10 +1383,14 @@ def _pq_best(m: int, cents_m: dict):
     sub = F.slice(F.col("v"), m * PQ_SUBDIM + 1, PQ_SUBDIM)
     # ONE nested-array Literal per subspace instead of a K×dim
     # scalar-literal struct tree; centroid id = transform index (keys
-    # are 0..K-1 by construction — enumerate-seeded, asserted). Same
+    # are 0..K-1 by construction — enumerate-seeded, checked). Same
     # r11 plan-cost note as lloyd_dist_array.
     ks = sorted(cents_m)
-    assert ks == list(range(len(ks))), "codebook keys must be 0..K-1"
+    if ks != list(range(len(ks))):
+        raise ValueError(
+            f"codebook keys must be exactly 0..K-1 (the cluster id is the "
+            f"literal's transform index); got {ks}"
+        )
     cent_lit = F.lit([[float(c) for c in cents_m[k]] for k in ks])
     dists = F.transform(
         cent_lit,

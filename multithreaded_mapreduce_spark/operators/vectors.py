@@ -299,9 +299,13 @@ def lloyd_dist_array(cents: dict[int, list[float]]):
     per reference, which dominated the small-result kNN queries'
     wall-clock (knn_ivf_exact_ann/knn_pq_ann ~2.3-2.6 s of plan time at
     sf0.1). The cluster id comes from the transform INDEX: centroid
-    keys are 0..K-1 by construction (enumerate-seeded), asserted."""
+    keys are 0..K-1 by construction (enumerate-seeded), checked."""
     ks = sorted(cents)
-    assert ks == list(range(len(ks))), "centroid keys must be 0..K-1"
+    if ks != list(range(len(ks))):
+        raise ValueError(
+            f"centroid keys must be exactly 0..K-1 (the cluster id is the "
+            f"literal's transform index); got {ks}"
+        )
     cent_lit = F.lit([[float(c) for c in cents[k]] for k in ks])
     return F.transform(
         cent_lit,

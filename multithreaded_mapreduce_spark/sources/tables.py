@@ -10,7 +10,6 @@ and predicate pushdown available to every downstream query.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -154,6 +153,11 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+#: suffixes of Hadoop codecs that cannot split, so Spark reads each such
+#: file as ONE task whatever its size (bzip2 is absent: its codec splits)
+_NON_SPLITTABLE = (".gz", ".deflate", ".lz4", ".snappy", ".zst")
+
+
 def _est_scan_splits(df: DataFrame) -> int | None:
     """Estimate how many scan tasks ``df``'s file sources resolve to,
     from the file list and the session's split-packing knobs — the
@@ -168,24 +172,30 @@ def _est_scan_splits(df: DataFrame) -> int | None:
     if not files:
         return None
 
-    conf = df.sparkSession.conf
+    spark = df.sparkSession
 
     def _size_conf(key: str, default: int) -> int:
+        # Spark's own byte-string parser: "128m" is 128 MiB, a bare
+        # number is bytes
         try:
-            raw = str(conf.get(key))
+            raw = str(spark.conf.get(key))
         except Exception:
             return default
-        m = re.match(r"(\d+)", raw)
-        return int(m.group(1)) if m else default
+        return int(spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw))
 
     max_bytes = _size_conf("spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
     open_cost = _size_conf("spark.sql.files.openCostInBytes", 4 * 1024 * 1024)
     total = 0
+    whole_files = 0
     for f in files:
         if not f.startswith("file:"):
             # non-local filesystem: sizes aren't cheaply readable here;
             # the file count alone is a fine lower bound on splits
             return len(files)
+        if f.endswith(_NON_SPLITTABLE):
+            # one task however large the file is
+            whole_files += 1
+            continue
         try:
             # "file:///p" and "file:/p" both resolve: extra leading
             # slashes are harmless to the OS path lookup
@@ -193,7 +203,7 @@ def _est_scan_splits(df: DataFrame) -> int | None:
         except OSError:
             return len(files)
         total += sz + open_cost
-    return max(1, -(-total // max_bytes))
+    return max(1, whole_files + -(-total // max_bytes))
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -81,3 +81,22 @@ def test_survey_registry_index_is_exact():
     # rows-only marking is exact
     rows_only = {n for n, q in qs.items() if not q.oracle}
     assert starred == rows_only, (starred ^ rows_only)
+
+
+def test_readme_knob_table_matches_package_env_reads():
+    """The README's environment-knob table lists exactly the MMR_*
+    variables the package source reads — a new knob must be documented,
+    a deleted one must leave the table (ROADMAP: knob creep)."""
+    import pathlib
+
+    pkg = pathlib.Path(f"{REPO}/multithreaded_mapreduce_spark")
+    read = set()
+    for f in pkg.rglob("*.py"):
+        read |= set(re.findall(r"""["'](MMR_[A-Z0-9_]+)["']""", f.read_text()))
+    readme = open(f"{REPO}/README.md").read()
+    start = readme.index("## Environment knobs")
+    end = readme.index("\n## ", start + 1)
+    table = set(re.findall(r"^\| `(MMR_[A-Z0-9_]+)` \|", readme[start:end], re.M))
+    assert table == read, (
+        f"undocumented: {sorted(read - table)}; stale: {sorted(table - read)}"
+    )

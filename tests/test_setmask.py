@@ -1,18 +1,30 @@
-"""r10 optimization-round tests: the fixed-width set-bitmask compare
-(operators/dedup.py, the setmask block) and the literal-rows helper
+"""The set-compare encoding of the five dedup verify sites
+(operators/dedup.py, ``_set_compare``) and the literal-rows helper
 (functions/rows.py).
 
-The bitmask path replaces array_intersect with W AND+popcounts when
-the corpus' distinct token-id universe fits SETMASK_MAX_VOCAB bit
-positions. The engaged single-word (W=1) path is already exercised
-against the DuckDB oracle by every dedup row of the adversarial
-edge-docs sweep (vocab ~30 there); what needs its own coverage is
+Each verify site asks ``_set_compare`` for its two join sides and the
+intersection size ``c``. One memoized decision per (corpus, site)
+collects at most SETMASK_MAX_VOCAB + 1 distinct token ids and picks:
 
-* the MULTI-word path (vocab > 64 → W >= 2, the shape a 10× corpus
-  takes under the disjoint-replica-vocabulary generator),
-* the off/on value identity that makes the knob a pure plan decision,
-* the sampled-variant skip (the A/B-measured gate), and
-* the kill switch / cap disengage.
+* the EXACT branch (vocabulary at or under the cap): dense-rank bit
+  positions, c = popcount(a & b) over ceil(n/64) words;
+* the HASHED branch (over the cap, or MMR_SETMASK=off): the exact
+  array_intersect, CASE-guarded at the |G|²-candidate sites by a
+  pmod(id, 1024) bitmap upper bound on |A∩B|.
+
+What needs coverage:
+
+* off (hashed) and auto (exact) return the same rows at all five sites,
+  on the 31-token corpus (W = 1) and on a ~90-token corpus (W = 2);
+* the hashed branch matches the DuckDB oracle at every oracle-bearing
+  site, and the W = 2 exact branch does too;
+* the cap boundary: exactly SETMASK_MAX_VOCAB ids is exact, one more is
+  hashed; the kill switch forces hashed;
+* bit positions cross the 64-bit word boundary correctly;
+* the union bound is an upper bound however ids collide, and the
+  guard's −1 sentinel never passes a threshold;
+* an id outside the collected vocabulary raises instead of setting no
+  bit.
 """
 
 from __future__ import annotations
@@ -36,11 +48,18 @@ from .oracle import compare_query
 
 _Q = all_queries()
 
+#: one query per verify site (dedup_jaccard_pairs and dedup_components
+#: share the nested group cross)
+_SITE_QUERIES = [
+    "dedup_jaccard_pairs", "dedup_components", "dedup_containment",
+    "dedup_minhash_verified", "dedup_minhash_lsh", "dedup_incremental_neardup",
+]
+
 
 @pytest.fixture(scope="module")
 def wide_vocab_dir(tmp_path_factory, spark) -> str:
     """sf0.001 with documents rewritten over a ~90-token vocabulary so
-    the setmask decision lands on W = 2 words — near-dup structure is
+    the exact branch lands on W = 2 words — near-dup structure is
     preserved (clone pairs per base doc) so the pair relations are
     non-trivial."""
     d = str(tmp_path_factory.mktemp("wide_vocab_sf"))
@@ -74,40 +93,73 @@ def _snapshot(spark, name: str, sf_dir: str):
     return sorted(tuple(r) for r in _Q[name].builder(spark, sf_dir).collect())
 
 
+def _off_auto(spark, name: str, sf_dir: str, monkeypatch):
+    monkeypatch.setenv("MMR_SETMASK", "off")
+    dd._ENCODING_DECISION_CACHE.clear()
+    off = _snapshot(spark, name, sf_dir)
+    assert dd.LAST_ENCODING_DECISION["exact"] is False
+    monkeypatch.setenv("MMR_SETMASK", "auto")
+    dd._ENCODING_DECISION_CACHE.clear()
+    on = _snapshot(spark, name, sf_dir)
+    assert dd.LAST_ENCODING_DECISION["exact"], dd.LAST_ENCODING_DECISION
+    return off, on
+
+
+@pytest.mark.parametrize("name", _SITE_QUERIES)
+def test_off_auto_identity_narrow(spark, name, monkeypatch):
+    """31-token corpus: the W = 1 exact branch and the hashed branch
+    return the identical row multiset — the encoding is a pure plan
+    decision."""
+    off, on = _off_auto(spark, name, SF_DIR, monkeypatch)
+    assert dd.LAST_ENCODING_DECISION["n_words"] == 1, dd.LAST_ENCODING_DECISION
+    assert off == on
+    assert len(on) > 0
+
+
 @pytest.mark.parametrize(
     "name",
     ["dedup_jaccard_pairs", "dedup_minhash_verified", "dedup_components",
-     "dedup_containment", "dedup_incremental_neardup"],
+     "dedup_containment", "dedup_incremental_neardup", "dedup_minhash_lsh"],
 )
 def test_multiword_mask_off_on_identity(spark, wide_vocab_dir, name, monkeypatch):
-    """W=2 engaged path returns the identical row multiset as the
-    array path — the optimization is a pure plan decision."""
-    monkeypatch.setenv("MMR_SETMASK", "off")
-    dd._SETMASK_DECISION_CACHE.clear()
-    off = _snapshot(spark, name, wide_vocab_dir)
-    monkeypatch.setenv("MMR_SETMASK", "auto")
-    dd._SETMASK_DECISION_CACHE.clear()
-    on = _snapshot(spark, name, wide_vocab_dir)
-    assert dd.LAST_SETMASK_DECISION["engage"], dd.LAST_SETMASK_DECISION
-    assert dd.LAST_SETMASK_DECISION["n_words"] >= 2, dd.LAST_SETMASK_DECISION
+    """W = 2 exact branch returns the identical row multiset as the
+    hashed branch."""
+    off, on = _off_auto(spark, name, wide_vocab_dir, monkeypatch)
+    assert dd.LAST_ENCODING_DECISION["n_words"] >= 2, dd.LAST_ENCODING_DECISION
     assert off == on
     assert len(on) > 0  # the fixture plants real dup/near-dup pairs
 
 
 def test_multiword_mask_oracle_parity(spark, wide_vocab_dir):
-    """The engaged W=2 path also matches the registered DuckDB oracle
+    """The W = 2 exact branch also matches the registered DuckDB oracle
     (value hash, not just self-consistency)."""
-    dd._SETMASK_DECISION_CACHE.clear()
+    dd._ENCODING_DECISION_CACHE.clear()
     for name in ("dedup_jaccard_pairs", "dedup_minhash_verified"):
         compare_query(spark, wide_vocab_dir, _Q[name].builder, _Q[name].oracle)
-    assert dd.LAST_SETMASK_DECISION["engage"]
+    assert dd.LAST_ENCODING_DECISION["exact"]
 
 
-def test_sampled_variants_literal_only_and_identical(spark, monkeypatch):
-    """The eval-sampled pair relations are bounded by construction and
-    measured SLOWER with the JOIN-based mask build — they may engage
-    only the zero-extra-stage LITERAL path (vocab ≤ 64), and the
-    engaged output must equal the array path's."""
+@pytest.mark.parametrize(
+    "name",
+    ["dedup_jaccard_pairs", "dedup_components", "dedup_containment",
+     "dedup_minhash_verified", "dedup_incremental_neardup"],
+)
+def test_hashed_branch_oracle_parity(spark, name, monkeypatch):
+    """Every oracle-bearing site on the hashed branch (the real-corpus
+    branch: guarded intersect at the cross/containment sites, plain
+    intersect at the banding sites) matches DuckDB."""
+    monkeypatch.setenv("MMR_SETMASK", "off")
+    release_tracked()
+    release_result_memos()
+    compare_query(spark, SF_DIR, _Q[name].builder, _Q[name].oracle)
+    assert dd.LAST_ENCODING_DECISION.get("forced") == "off"
+
+
+def test_sampled_variants_identical(spark, monkeypatch):
+    """The eval-sampled pair relation takes the exact branch like the
+    full one (every exact bitmap is a pure projection), under a
+    decision keyed by the sample modulus, and equals the hashed
+    branch's output."""
     monkeypatch.setattr(dd, "EVAL_SAMPLE_TARGET_DOCS", 100)  # force k > 1
     dd._EVAL_SAMPLE_CACHE.clear()
 
@@ -118,78 +170,121 @@ def test_sampled_variants_literal_only_and_identical(spark, monkeypatch):
         return sorted(tuple(r) for r in dd._eval_pairs(spark, SF_DIR).collect())
 
     monkeypatch.setenv("MMR_SETMASK", "off")
-    dd._SETMASK_DECISION_CACHE.clear()
+    dd._ENCODING_DECISION_CACHE.clear()
     off = eval_pairs_rows()
     monkeypatch.setenv("MMR_SETMASK", "auto")
-    dd._SETMASK_DECISION_CACHE.clear()
+    dd._ENCODING_DECISION_CACHE.clear()
     on = eval_pairs_rows()
     assert off == on and len(on) > 0
-    # the sampled site engaged via literal positions (vocab fits 64
-    # here); had the vocab exceeded the literal cap, the sampled path
-    # must fall back to arrays, never the join build — pinned below
+    k = dd._eval_sample_decision(spark, SF_DIR)["modulus"]
+    assert k > 1
     sampled = [
-        d
-        for (_s, site), d in dd._SETMASK_DECISION_CACHE.items()
-        if site.startswith("jaccard_groupssample")
+        d for (_s, site), d in dd._ENCODING_DECISION_CACHE.items()
+        if site == f"jaccard_groupssample{k}"
     ]
-    assert sampled and all("vocab_ids" in d for d in sampled), sampled
-    # simulate a wide-vocab corpus: literal cap 0 → sampled variants
-    # must NOT take the join-mask branch (use_masks False)
-    monkeypatch.setattr(dd, "SETMASK_LITERAL_MAX_VOCAB", 0)
-    dd._SETMASK_DECISION_CACHE.clear()
-    wide = eval_pairs_rows()
-    assert wide == off
-    sampled = [
-        d
-        for (_s, site), d in dd._SETMASK_DECISION_CACHE.items()
-        if site.startswith("jaccard_groupssample")
-    ]
-    assert sampled and all("vocab_ids" not in d for d in sampled), sampled
+    assert sampled and all(d["exact"] for d in sampled), sampled
 
 
 def test_cap_and_kill_switch_disengage(spark, monkeypatch):
+    """Exactly SETMASK_MAX_VOCAB distinct ids take the exact branch at
+    full width; one more id takes the hashed branch; MMR_SETMASK=off
+    forces the hashed branch without measuring."""
+    assert dd.SETMASK_MAX_VOCAB == 64 * dd.BITMAP_WORDS == 1024
     monkeypatch.setenv("MMR_SETMASK", "off")
-    dd._SETMASK_DECISION_CACHE.clear()
-    sm = dd._setmask_decision(
-        spark, SF_DIR, spark.range(3).select(F.col("id")), "t1"
-    )
-    assert sm["engage"] is False and sm.get("forced") == "off"
+    dd._ENCODING_DECISION_CACHE.clear()
+    d = dd._encoding_decision(SF_DIR, spark.range(3).select(F.col("id")), "t1")
+    assert d["exact"] is False and d.get("forced") == "off"
+    assert not dd._ENCODING_DECISION_CACHE
     monkeypatch.setenv("MMR_SETMASK", "auto")
-    monkeypatch.setattr(dd, "SETMASK_MAX_VOCAB", 2)
-    dd._SETMASK_DECISION_CACHE.clear()
-    sm = dd._setmask_decision(
-        spark, SF_DIR, spark.range(3).select(F.col("id")), "t2"
+    cap = dd.SETMASK_MAX_VOCAB
+    d = dd._encoding_decision(SF_DIR, spark.range(cap).select(F.col("id")), "t_cap")
+    assert d["exact"] and d["n_vocab"] == cap and d["n_words"] == dd.BITMAP_WORDS
+    assert d["vocab"] == list(range(cap))
+    d = dd._encoding_decision(SF_DIR, spark.range(cap + 1).select(F.col("id")), "t_over")
+    assert d["exact"] is False and d["n_vocab"] == cap + 1
+    assert d["n_words"] == dd.BITMAP_WORDS and d["vocab"] is None
+
+
+def _sets_df(spark, sets):
+    return spark.createDataFrame(sets, "sid long, toks array<long>").select(
+        "sid", "toks", F.size("toks").alias("n")
     )
-    assert sm["engage"] is False and sm["n_vocab"] == 3
 
 
 def test_mask_words_cover_vocab_boundaries(spark):
-    """Bit assignment crosses the 64-bit word boundary correctly: 70
-    ids -> W=2, and a set containing ids on both sides of the boundary
-    intersects exactly."""
-    ids = spark.range(70).select(F.col("id"))
-    vocab = dd._setmask_vocab(ids)
-    rows = vocab.collect()
-    assert sorted(r.pos for r in rows) == list(range(70))
-    # two sets: {0..69} and {60..69} -> intersection 10
-    sets_df = spark.createDataFrame(
-        [(1, list(range(70))), (2, list(range(60, 70)))], "sid int, members array<int>"
-    ).select("sid", F.explode("members").alias("id"))
-    masked = (
-        sets_df.join(vocab, "id")
-        .groupBy("sid")
-        .agg(*dd._mask_word_aggs(2))
+    """Bit assignment fills both 64-bit words exactly: 128 ids -> W = 2
+    with no spare bit (a shifted position would fall off the end), and
+    sets spanning the word boundary intersect exactly."""
+    dd._ENCODING_DECISION_CACHE.clear()
+    rel = _sets_df(spark, [(1, list(range(128))), (2, list(range(60, 128)))])
+    a, b, c = dd._set_compare(
+        SF_DIR, rel, "toks", "t_boundary", {"sid": "s{}", "n": "n{}"}
     )
-    a = masked.filter("sid = 1").select(
-        *[F.col(f"_m{w}").alias(f"_a{w}") for w in range(2)]
+    d = dd.LAST_ENCODING_DECISION
+    assert d["exact"] and d["n_words"] == 2 and d["vocab"] == list(range(128))
+    got = {
+        (r.sa, r.sb): r.c
+        for r in a.crossJoin(b).select("sa", "sb", c.alias("c")).collect()
+    }
+    assert got == {(1, 1): 128, (1, 2): 68, (2, 1): 68, (2, 2): 68}
+
+
+def test_out_of_vocabulary_id_raises(spark):
+    """An id missing from the collected vocabulary fails loudly (the
+    exact branch never drops it as a missing bit)."""
+    dd._ENCODING_DECISION_CACHE.clear()
+    dd._encoding_decision(SF_DIR, spark.range(1, 4).select(F.col("id")), "t_oov")
+    rel = _sets_df(spark, [(1, [1, 2]), (2, [2, 3, 4])])
+    a, b, c = dd._set_compare(SF_DIR, rel, "toks", "t_oov", {"sid": "s{}", "n": "n{}"})
+    with pytest.raises(Exception, match="outside the vocabulary"):
+        a.crossJoin(b).select(c.alias("c")).collect()
+
+
+def test_union_bound_is_exact_upper_bound_under_collisions(spark):
+    """Ids that collide in the 1024-bit hashed bitmap: for every pair,
+    na + nb − popcount(bm_a|bm_b) >= |A∩B| — collisions only raise the
+    bound."""
+    nbits = 64 * dd.BITMAP_WORDS
+    sets = [
+        (1, [i * nbits for i in range(40)]),  # all 40 ids share bit 0
+        (2, [i * nbits for i in range(20)] + [i * 131 + 7 for i in range(20)]),
+        (3, [i * 131 + 7 for i in range(40)]),
+        (4, list(range(nbits))),              # saturates every word
+        (5, [-(i * 97) for i in range(40)]),  # negative ids → pmod path
+    ]
+    df = _sets_df(spark, sets).select("*", *dd._bitmap_cols("toks", "_p"))
+
+    def side(s):
+        return df.select(
+            F.col("toks").alias(f"t{s}"), F.col("n").alias(f"n{s}"),
+            *[F.col(f"_p{w}").alias(f"_p{s}{w}") for w in range(dd.BITMAP_WORDS)],
+        )
+
+    rows = (
+        side("a").crossJoin(side("b"))
+        .select(
+            dd._bitmap_intersect_ub("_pa", "_pb").alias("ub"),
+            F.size(F.array_intersect("ta", "tb")).alias("c"),
+        )
+        .collect()
     )
-    b = masked.filter("sid = 2").select(
-        *[F.col(f"_m{w}").alias(f"_b{w}") for w in range(2)]
+    assert len(rows) == 25 and all(r.ub >= r.c for r in rows), rows
+    assert any(r.ub > r.c for r in rows)  # the collisions are real
+
+
+def test_guard_sentinel_never_reaches_threshold(spark):
+    """_bitmap_guard's −1 sentinel: the jaccard and containment ratios
+    on c = −1 are strictly negative, and the integer threshold filters
+    the sites actually run reject it."""
+    df = spark.createDataFrame([(10, 12, -1)], "na int, nb int, c int").select(
+        (F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))).alias("jac"),
+        (F.col("c").cast("double") / F.col("na")).alias("cont"),
+        dd._jaccard_ge_int(dd.JACCARD_THRESHOLD).alias("jac_keep"),
+        dd._ratio_ge_int("c", F.col("na"), dd.CONTAINMENT_THRESHOLD).alias("cont_keep"),
     )
-    got = a.crossJoin(b).select(
-        dd._mask_intersect_size(2, "_a", "_b").alias("c")
-    ).first()["c"]
-    assert got == 10
+    r = df.first()
+    assert r.jac < 0 and r.cont < 0
+    assert r.jac_keep is False and r.cont_keep is False
 
 
 def test_literal_rows_df_roundtrip(spark):

@@ -3,6 +3,8 @@ for rank correctness; this measures the recall/cost trade)."""
 
 from __future__ import annotations
 
+import pytest
+
 from multithreaded_mapreduce_spark.plans.registry import all_queries
 
 Q = all_queries()
@@ -282,3 +284,16 @@ def test_hard_negatives_cross_label_only(spark, sf_dir):
         )
         want = min(HARD_NEG_K, n_cross)
         assert sorted(rnks) == list(range(1, want + 1)), (q, rnks)
+
+
+def test_centroid_key_contract_is_checked_under_python_O(spark):
+    """The literal-centroid builders read the cluster id off the
+    transform index, so keys other than exactly 0..K-1 raise a
+    ValueError naming the contract (a bare assert vanishes under -O)."""
+    from multithreaded_mapreduce_spark.operators.similarity import _pq_best
+    from multithreaded_mapreduce_spark.operators.vectors import lloyd_dist_array
+
+    with pytest.raises(ValueError, match="0..K-1"):
+        lloyd_dist_array({0: [0.0, 1.0], 2: [1.0, 0.0]})
+    with pytest.raises(ValueError, match="0..K-1"):
+        _pq_best(0, {0: [0.0, 1.0], 2: [1.0, 0.0]})

@@ -6,6 +6,8 @@ cluster the redundant full-relation exchange never happens."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from multithreaded_mapreduce_spark.sources.tables import (
@@ -58,3 +60,35 @@ def test_non_file_source_keeps_historical_spread(spark):
     rng = spark.range(100).select(F.col("id"))
     assert _est_scan_splits(rng) is None
     assert "RoundRobinPartitioning" in _plan(spread(rng))
+
+
+def test_unit_suffixed_max_partition_bytes(spark):
+    """A unit-suffixed byte conf parses as Spark parses it: 128m is
+    128 MiB (one split for a small file), not 128 bytes."""
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id")
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
+        assert _est_scan_splits(docs) == 1
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_gzip_file_is_one_split(spark, tmp_path):
+    """A gzip file over maxPartitionBytes is still one scan task — gzip
+    cannot split — so it counts as one split, not size/maxPartitionBytes."""
+    import gzip
+
+    path = tmp_path / "lines.txt.gz"
+    with gzip.open(path, "wt") as fh:
+        for i in range(20000):
+            fh.write(f"{i} {i * 7919 % 10007}\n")
+    df = spark.read.text(str(path))
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+        assert os.path.getsize(path) > 4 * 1024
+        assert _est_scan_splits(df) == 1
+        assert df.rdd.getNumPartitions() == 1
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
