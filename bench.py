@@ -20,6 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from multithreaded_mapreduce_spark.plans import decisions  # noqa: E402
 from multithreaded_mapreduce_spark.plans.caching import (  # noqa: E402
     release_result_memos,
     release_tracked,
@@ -162,13 +163,11 @@ SCALE_SWEEP_RUNS = 2
 
 def _scale_sweep(spark, sf_dir: str, queries) -> dict:
     """Min-of-N timings for SCALE_SWEEP_QUERIES at the deterministic
-    10× replica of ``sf_dir``, with MMR_SETMASK=off (the branch any
-    real-vocabulary corpus executes). The replica is derived input
-    data (scripts/gen_scale_data.py), generated once on disk and
-    reused; cold-run hygiene matches the headline loop."""
+    10× replica of ``sf_dir``, with the hashed set-compare branch forced
+    (the branch any real-vocabulary corpus executes). The replica is
+    derived input data (scripts/gen_scale_data.py), generated once on
+    disk and reused; cold-run hygiene matches the headline loop."""
     import subprocess
-
-    import multithreaded_mapreduce_spark.operators.dedup as _dd
 
     # keyed by the benched corpus' basename so a replica generated from
     # one SF can never be mistaken for another's (default sf0.1 →
@@ -194,29 +193,24 @@ def _scale_sweep(spark, sf_dir: str, queries) -> dict:
             check=True, capture_output=True, timeout=600,
         )
         gen_s = round(time.perf_counter() - t0, 1)
-    saved = os.environ.get("MMR_SETMASK")
-    os.environ["MMR_SETMASK"] = "off"
+    decisions.clear()
     try:
         timings: dict[str, float] = {}
-        for name in SCALE_SWEEP_QUERIES:
-            runs = []
-            for _ in range(SCALE_SWEEP_RUNS):
-                release_tracked()
-                release_result_memos()
-                spark.catalog.clearCache()
-                _dd._ENCODING_DECISION_CACHE.clear()
-                t0 = time.perf_counter()
-                queries[name].builder(spark, scale_dir).write.mode(
-                    "overwrite"
-                ).format("noop").save()
-                runs.append(time.perf_counter() - t0)
-            timings[name] = round(min(runs), 3)
+        with decisions.forced(encoding={"exact": False}):
+            for name in SCALE_SWEEP_QUERIES:
+                runs = []
+                for _ in range(SCALE_SWEEP_RUNS):
+                    release_tracked()
+                    release_result_memos()
+                    spark.catalog.clearCache()
+                    t0 = time.perf_counter()
+                    queries[name].builder(spark, scale_dir).write.mode(
+                        "overwrite"
+                    ).format("noop").save()
+                    runs.append(time.perf_counter() - t0)
+                timings[name] = round(min(runs), 3)
     finally:
-        if saved is None:
-            os.environ.pop("MMR_SETMASK", None)
-        else:
-            os.environ["MMR_SETMASK"] = saved
-        _dd._ENCODING_DECISION_CACHE.clear()
+        decisions.clear()
         release_tracked()
         release_result_memos()
         spark.catalog.clearCache()
@@ -230,47 +224,63 @@ def _scale_sweep(spark, sf_dir: str, queries) -> dict:
     }
 
 
-def _decision_stamps() -> dict:
-    """Copies of the memoized per-corpus decisions (LSH hot-bucket,
-    containment candidate path, jaccard broadcast guard, zscore chunk
-    width, ngram df-cut, eval-sample modulus, skew join, CC broadcast),
-    stamped for drift tracking across rounds (VERDICT r4 task 8 / r5
-    task 8)."""
-    from multithreaded_mapreduce_spark.operators import anomaly as _anomaly
-    from multithreaded_mapreduce_spark.operators import dedup as _dedup
-    from multithreaded_mapreduce_spark.operators import skew as _skew
-
-    def copy(d):
-        return None if d is None else dict(d)
-
-    return {
-        "lsh_auto_decision": copy(_dedup.LAST_LSH_DECISION),
-        "containment_auto_decision": copy(_dedup.LAST_CONTAINMENT_DECISION),
-        "jaccard_auto_decision": copy(_dedup.LAST_JACCARD_DECISION),
-        "zscore_auto_decision": copy(_anomaly.LAST_ZSCORE_DECISION),
-        "ngram_dfcut_auto_decision": copy(_dedup.LAST_NGRAM_DFCUT_DECISION),
-        # md5-uniform eval-sample modulus for the ground-truth-bound
-        # eval queries (k = 1 → identity; k > 1 → 1-in-k doc sample)
-        "eval_sample_decision": copy(_dedup.LAST_EVAL_SAMPLE_DECISION),
-        # measured straggler factor → plain / aqe / salted join choice
-        "skew_auto_decision": copy(_skew.LAST_SKEW_JOIN_DECISION),
-        # label-sized CC relations broadcast vs shuffle (node ceiling)
-        "cc_bcast_auto_decision": copy(_dedup.LAST_CC_BCAST_DECISION),
-    }
+#: bench stamp -> (the headline query whose record it reads, decision
+#: site); each stamp describes the benched corpus at its own query's
+#: parameters, whatever runs later in the session
+DECISION_STAMPS = {
+    "lsh_auto_decision": ("dedup_minhash_lsh", "lsh"),
+    "containment_auto_decision": ("dedup_containment", "containment"),
+    "jaccard_auto_decision": ("dedup_components", "jaccard"),
+    "zscore_auto_decision": ("events_zscore_anomalies", "zscore"),
+    "ngram_dfcut_auto_decision": ("dedup_ngram_jaccard", "ngram_dfcut"),
+    # md5-uniform eval-sample modulus for the ground-truth-bound eval
+    # queries (k = 1 → identity; k > 1 → 1-in-k doc sample)
+    "eval_sample_decision": ("dedup_threshold_sweep", "eval_sample"),
+    # measured straggler factor → plain / aqe / salted join choice
+    "skew_auto_decision": ("skew_auto_join", "skew_join"),
+    # label-sized CC relations broadcast vs shuffle (node ceiling)
+    "cc_bcast_auto_decision": ("dedup_components", "cc_bcast"),
+}
 
 
-def _stamps_then_sweep(spark, sf_dir: str, queries) -> tuple[dict, dict]:
-    """(decision stamps, scale-sweep stamp). The stamps are read FIRST:
-    the sweep re-runs dedup builders on the 10× replica, which overwrite
-    the LAST_* decision globals with that corpus' values."""
-    stamps = _decision_stamps()
-    sweep: dict = {"skipped": "off"}
-    if os.environ.get("MMR_BENCH_SCALE_SWEEP", "auto") != "off":
-        try:
-            sweep = _scale_sweep(spark, sf_dir, queries)
-        except Exception as ex:  # noqa: BLE001 — informational stamp only
-            sweep = {"skipped": repr(ex)[:200]}
-    return stamps, sweep
+def _decision_stamps(records: dict[str, dict]) -> dict:
+    """Copies of the measured decisions from the headline runs'
+    per-query decision records (``records``: query -> its last run's
+    ``decisions.record()``), stamped for drift tracking across rounds
+    (VERDICT r4 task 8 / r5 task 8)."""
+    out = {}
+    for stamp, (name, site) in DECISION_STAMPS.items():
+        d = records.get(name, {}).get(site)
+        out[stamp] = None if d is None else dict(d)
+    return out
+
+
+def _time_headline(spark, sf_dir: str, queries, per_pass: int):
+    """Two temporally-separated sweeps of ``per_pass`` cold runs per
+    HEADLINE query. Returns (per-pass run times, query -> the decision
+    record of its last run)."""
+    pass_runs: list[dict[str, list[float]]] = []
+    records: dict[str, dict] = {}
+    for _pass in range(2):
+        this_pass: dict[str, list[float]] = {}
+        for name in HEADLINE:
+            q = queries[name]
+            runs: list[float] = []
+            for _ in range(per_pass):
+                release_tracked()  # builder-internal persists from the prior run
+                # evict the cross-query result memos (the shared CC
+                # labels) so every timed run pays the FULL cold plan —
+                # keeps per-query numbers comparable round-over-round;
+                # the warm memo-hit cost is measured separately below
+                release_result_memos()
+                spark.catalog.clearCache()
+                t0 = time.perf_counter()
+                q.builder(spark, sf_dir).write.mode("overwrite").format("noop").save()
+                runs.append(time.perf_counter() - t0)
+                records[name] = decisions.record()
+            this_pass[name] = runs
+        pass_runs.append(this_pass)
+    return pass_runs, records
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -335,25 +345,8 @@ def main() -> None:
             "value would silently change the effective sample count)"
         )
     per_pass = n_runs // 2
-    pass_runs: list[dict[str, list[float]]] = []
-    for _pass in range(2):
-        this_pass: dict[str, list[float]] = {}
-        for name in HEADLINE:
-            q = queries[name]
-            runs: list[float] = []
-            for _ in range(per_pass):
-                release_tracked()  # builder-internal persists from the prior run
-                # evict the cross-query result memos (the shared CC
-                # labels) so every timed run pays the FULL cold plan —
-                # keeps per-query numbers comparable round-over-round;
-                # the warm memo-hit cost is measured separately below
-                release_result_memos()
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                q.builder(spark, sf_dir).write.mode("overwrite").format("noop").save()
-                runs.append(time.perf_counter() - t0)
-            this_pass[name] = runs
-        pass_runs.append(this_pass)
+    pass_runs, records = _time_headline(spark, sf_dir, queries, per_pass)
+    decision_stamps = _decision_stamps(records)
 
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
@@ -417,7 +410,7 @@ def main() -> None:
         "plain_seconds": cc_plain_s,
         "k1_memo_build_seconds": cc_memo_build_s,
         "seeded_seconds": cc_seeded_s,
-        "decision": dict(_dedup.LAST_CC_SEED_DECISION),
+        "decision": dict(decisions.record()["cc_seed"]),
     }
     release_result_memos()
 
@@ -482,13 +475,9 @@ def main() -> None:
     # full relations are genuinely different, so no share is possible
     # or claimed there. Outside headline totals, like the other memo
     # stamps.
-    import multithreaded_mapreduce_spark.operators.dedup as _ddmod
-
     release_tracked()
     spark.catalog.clearCache()
-    saved_target = _ddmod.EVAL_SAMPLE_TARGET_DOCS
-    _ddmod.EVAL_SAMPLE_TARGET_DOCS = 1 << 60  # disengage: k = 1
-    try:
+    with decisions.forced(eval_sample={"modulus": 1, "engaged": False}):
         band_before = {
             m: result_memo_stats(m)
             for m in ("jaccard_pairs", "minhash_verified_pairs")
@@ -506,11 +495,6 @@ def main() -> None:
             "k1_pair_total": round(sum(band_warm.values()), 3),
             "k1_pair_stats": _memo_deltas(band_before),
         }
-    finally:
-        _ddmod.EVAL_SAMPLE_TARGET_DOCS = saved_target
-    # re-point LAST_EVAL_SAMPLE_DECISION at the NATURAL modulus (the
-    # forced k=1 probe above clobbered it); memoized, so this is free
-    _ddmod._eval_sample_decision(spark, sf_dir)
     release_result_memos()
 
     # Quality-gates memo measurement (r11, VERDICT r10 task 3): the
@@ -557,7 +541,12 @@ def main() -> None:
     # corpus executes, and the one the r11 lossy-bitmap prune targets.
     # OUTSIDE the headline totals; any failure degrades to a skipped
     # stamp, never a bench failure. MMR_BENCH_SCALE_SWEEP=off disables.
-    decision_stamps, scale_sweep_stamp = _stamps_then_sweep(spark, sf_dir, queries)
+    scale_sweep_stamp: dict = {"skipped": "off"}
+    if os.environ.get("MMR_BENCH_SCALE_SWEEP", "auto") != "off":
+        try:
+            scale_sweep_stamp = _scale_sweep(spark, sf_dir, queries)
+        except Exception as ex:  # noqa: BLE001 — informational stamp only
+            scale_sweep_stamp = {"skipped": repr(ex)[:200]}
 
     total = round(sum(timings.values()), 3)
     r3_set = HEADLINE[: HEADLINE.index("kmeans_lloyd")]
@@ -586,7 +575,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "queries_median": medians,
-        # the memoized per-corpus decisions, read before the 10× sweep
+        # the measured decisions from the headline runs' records
         **decision_stamps,
         # shared-CC memo: first entry cold (miss), the next two are
         # memo hits — the pipeline-shaped cost of the components trio

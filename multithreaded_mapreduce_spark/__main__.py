@@ -52,8 +52,8 @@ def main(argv: list[str] | None = None) -> int:
 
     p_explain = sub.add_parser(
         "explain",
-        help="print a registered query's physical plan and shuffle count "
-        "without executing it",
+        help="print a registered query's physical plan, shuffle count and "
+        "measured plan decisions without executing it",
     )
     p_explain.add_argument("name")
     p_explain.add_argument("sf_dir", nargs="?", default=DEFAULT_SF_DIR)
@@ -152,6 +152,11 @@ def main(argv: list[str] | None = None) -> int:
                 n_exchanges = len(_re.findall(r"[+:]- Exchange\b", plan))
             print(f"-- shuffles (hash/range exchanges): {n_exchanges}")
             print(f"-- broadcast exchanges: {n_bcast}")
+            import json
+
+            from .plans.decisions import record
+
+            print(f"-- decisions: {json.dumps(record())}")
         elif args.cmd == "verify":
             if args.name not in queries:
                 print(f"unknown query {args.name!r}; see `list`", file=sys.stderr)

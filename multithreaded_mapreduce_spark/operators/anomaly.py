@@ -25,14 +25,13 @@ type.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.numeric import DEC
+from ..plans.decisions import decide
 from ..plans.registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_stamp
 
 HOUR_US = 3_600_000_000
 DAY_US = 24 * HOUR_US
@@ -51,41 +50,27 @@ MIN_N = 5
 #: pytest-asserted at both granularities).
 ZSCORE_HOUR_CHUNK_FLOOR = 1_000_000
 
-#: memoized per-corpus probe decisions — one tiny aggregate per corpus
-#: epoch, not per build (the LSH auto-threshold pattern, dedup.py).
-#: A chunk-key choice can never change results, only the plan.
-_ZSCORE_DECISION_CACHE: dict[tuple, dict] = {}
-LAST_ZSCORE_DECISION: dict = {}
-
-
-def _zscore_chunk_us(ev: DataFrame, cache_key: tuple | None = None) -> int:
+def _zscore_chunk_us(ev: DataFrame, key: tuple) -> int:
     """Measure max rows per (event_type, day) and return the chunk
-    width: DAY_US normally, HOUR_US for day-chunks past the floor."""
-    global LAST_ZSCORE_DECISION
-    env = os.environ.get("MMR_ZSCORE_CHUNK", "")
-    if env == "day":
-        return DAY_US
-    if env == "hour":
-        return HOUR_US
-    if cache_key is not None and cache_key in _ZSCORE_DECISION_CACHE:
-        LAST_ZSCORE_DECISION = _ZSCORE_DECISION_CACHE[cache_key]
-        return LAST_ZSCORE_DECISION["chunk_us"]
-    row = (
-        ev.groupBy("event_type", F.floor(F.unix_micros("ts") / DAY_US))
-        .count()
-        .agg(F.max("count").alias("mx"))
-        .first()
-    )
-    mx = int(row["mx"]) if row is not None and row["mx"] is not None else 0
-    decision = {
-        "max_rows_per_type_day": mx,
-        "chunk_us": HOUR_US if mx >= ZSCORE_HOUR_CHUNK_FLOOR else DAY_US,
-        "floor": ZSCORE_HOUR_CHUNK_FLOOR,
-    }
-    if cache_key is not None:
-        _ZSCORE_DECISION_CACHE[cache_key] = decision
-    LAST_ZSCORE_DECISION = decision
-    return decision["chunk_us"]
+    width: DAY_US normally, HOUR_US for day-chunks past the floor
+    (decision site ``zscore``; one tiny aggregate per corpus, memoized —
+    a chunk-key choice can never change results, only the plan)."""
+
+    def measure() -> dict:
+        row = (
+            ev.groupBy("event_type", F.floor(F.unix_micros("ts") / DAY_US))
+            .count()
+            .agg(F.max("count").alias("mx"))
+            .first()
+        )
+        mx = int(row["mx"]) if row is not None and row["mx"] is not None else 0
+        return {
+            "max_rows_per_type_day": mx,
+            "chunk_us": HOUR_US if mx >= ZSCORE_HOUR_CHUNK_FLOOR else DAY_US,
+            "floor": ZSCORE_HOUR_CHUNK_FLOOR,
+        }
+
+    return decide("zscore", key, measure)["chunk_us"]
 
 
 @register(
@@ -136,7 +121,7 @@ def events_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The chunk width is DENSITY-DERIVED (day vs hour — see
     # _zscore_chunk_us), so oversized day chunks cannot pin a task.
     chunk_us = _zscore_chunk_us(
-        ev, cache_key=(os.path.realpath(sf_dir), ZSCORE_HOUR_CHUNK_FLOOR)
+        ev, (table_stamp(sf_dir, "events"), ZSCORE_HOUR_CHUNK_FLOOR)
     )
     us = F.unix_micros("ts")
     base = ev.select(

@@ -33,11 +33,10 @@ Scale notes (local[32] today, 1000 executors tomorrow):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.decisions import note
 from ..plans.registry import register
 from ..sources.tables import load_table
 from .textstats import _sql_tokens, _tokens
@@ -532,9 +531,8 @@ def pretraining_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this cache cold and re-ran the tokenize + 37-count + md5 + bigram
     # scan ~3× per run (profiled ~26 of 48 exec-s redundant). Wall-
     # neutral at sf0.1 (redundant jobs back-fill idle cores), CPU-saving
-    # at saturation — same gate as doc_quality_composite's.
-    if os.environ.get("MMR_EAGER_SHARED_SCAN", "on") != "off":
-        staged.count()
+    # at saturation — same barrier as doc_quality_composite's.
+    staged.count()
     agg1 = staged.agg(
         F.count(F.lit(1)).alias("n_raw"),
         F.sum(F.col("f2").cast("int")).alias("n_nonempty"),
@@ -608,15 +606,12 @@ def pretraining_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------------------
 
 BPE_MERGE_ROUNDS = 5
-#: last _bpe_train path decision (driver loop vs distributed rounds),
-#: stamped like the other measured per-corpus knobs
-LAST_BPE_TRAIN_DECISION: dict = {}
 #: training-state rows per partition for the per-round jobs — the
 #: measured vocab count divided by this picks the state width (≥1,
-#: ≤32); env-overridable like the other memoized per-corpus knobs.
-_BPE_ROWS_PER_STATE_PART = int(
-    os.environ.get("SPARK_GRAFT_BPE_ROWS_PER_STATE_PART", "300000")
-)
+#: ≤32)
+_BPE_ROWS_PER_STATE_PART = 300_000
+#: largest measured vocabulary the driver-side merge loop takes
+BPE_DRIVER_VOCAB_MAX = 65536
 #: only lowercase-ASCII alphanumeric words enter training: the char-
 #: level symbol split must be byte-identical across engines (Spark
 #: splits UTF-16 code units, DuckDB splits UTF-8 graphemes — ASCII is
@@ -788,19 +783,17 @@ def _bpe_train(
     # persisted words as one chained fold projection, so downstream
     # aggregates (encode/pack/fertility) read cluster-side data. Above
     # the ceiling (a real corpus vocabulary) the distributed loop runs
-    # unchanged. Kill switch MMR_BPE_DRIVER=off; parity pytest-pinned.
-    global LAST_BPE_TRAIN_DECISION
-    driver_max = int(os.environ.get("MMR_BPE_DRIVER_VOCAB_MAX", "65536"))
-    use_driver = (
-        os.environ.get("MMR_BPE_DRIVER", "auto") != "off" and n_vocab <= driver_max
+    # unchanged. Decision site ``bpe_driver``; parity pytest-pinned.
+    d = note(
+        "bpe_driver",
+        {
+            "n_vocab": n_vocab,
+            "driver_vocab_max": BPE_DRIVER_VOCAB_MAX,
+            "driver_loop": n_vocab <= BPE_DRIVER_VOCAB_MAX,
+        },
     )
-    LAST_BPE_TRAIN_DECISION = {
-        "n_vocab": n_vocab,
-        "driver_vocab_max": driver_max,
-        "driver_loop": use_driver,
-    }
     merges: list[tuple[int, str, str, int]] = []
-    if use_driver:
+    if d["driver_loop"]:
         state = [
             (list(r["syms"]), int(r["cnt"])) for r in words.select("syms", "cnt").collect()
         ]

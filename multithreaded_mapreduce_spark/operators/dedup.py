@@ -20,8 +20,6 @@ document text.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,8 +31,9 @@ from ..plans.caching import (
     tracked_local_checkpoint,
     tracked_persist,
 )
+from ..plans.decisions import decide, note
 from ..plans.registry import register
-from ..sources.tables import load_table, spread
+from ..sources.tables import load_table, spread, table_stamp
 
 JACCARD_THRESHOLD = 0.8
 #: shingle width shared by the ngram-jaccard family and the novelty
@@ -198,8 +197,8 @@ def _group_relation(
 #   bit-identical to the array intersect. A pure projection — no extra
 #   join/window/aggregate stage enters any consumer plan. An id outside
 #   the collected vocabulary raises (never a silently missing bit).
-# * hashed (n above the cap, any real corpus vocabulary, or the kill
-#   switch MMR_SETMASK=off): the exact array_intersect stays the
+# * hashed (n above the cap, any real corpus vocabulary, or forced
+#   with encoding={"exact": False}): the exact array_intersect stays the
 #   verify. At the |G|²-candidate sites (nested cross, containment,
 #   LSH) each side also carries a lossy BITMAP_WORDS-long bitmap (bit =
 #   pmod(id, 64·W), collisions allowed). popcount(bm_a | bm_b) <=
@@ -220,41 +219,32 @@ def _group_relation(
 #: same 1024 bit positions
 BITMAP_WORDS = 16
 SETMASK_MAX_VOCAB = 64 * BITMAP_WORDS
-_ENCODING_DECISION_CACHE: dict[tuple, dict] = {}
-LAST_ENCODING_DECISION: dict = {}
 
 
 def _encoding_decision(sf_dir: str, ids: DataFrame, site: str) -> dict:
-    """Measured per-(corpus, site) branch choice (memoized, the
-    LSH/jaccard pattern): collect at most SETMASK_MAX_VOCAB + 1
-    distinct ids of ``ids`` in one action; at or under the cap the
-    sorted ids are the exact branch's vocabulary. ``n_vocab`` of
-    SETMASK_MAX_VOCAB + 1 means "over the cap". Both branches yield
-    identical values (pytest-asserted), so the cached choice only
-    affects the physical plan. A site that builds over a sample carries
-    the sample modulus in ``site`` (ADVICE r10): two samples never
-    share a vocabulary."""
-    global LAST_ENCODING_DECISION
-    if os.environ.get("MMR_SETMASK", "auto") == "off":
-        LAST_ENCODING_DECISION = {
-            "site": site, "forced": "off", "exact": False, "n_words": BITMAP_WORDS,
-        }
-        return LAST_ENCODING_DECISION
-    key = (_docs_stamp(sf_dir), site)
-    if key not in _ENCODING_DECISION_CACHE:
+    """Measured per-(corpus, site) branch choice (decision site
+    ``encoding``): collect at most SETMASK_MAX_VOCAB + 1 distinct ids
+    of ``ids`` in one action; at or under the cap the sorted ids are
+    the exact branch's vocabulary. ``n_vocab`` of SETMASK_MAX_VOCAB + 1
+    means "over the cap". Both branches yield identical values
+    (pytest-asserted), so the memoized choice only affects the physical
+    plan. A site that builds over a sample carries the sample modulus
+    in ``site`` (ADVICE r10): two samples never share a vocabulary."""
+
+    def measure() -> dict:
         vocab = sorted(
             r["id"] for r in ids.distinct().limit(SETMASK_MAX_VOCAB + 1).collect()
         )
         exact = 0 < len(vocab) <= SETMASK_MAX_VOCAB
-        _ENCODING_DECISION_CACHE[key] = {
+        return {
             "site": site,
             "n_vocab": len(vocab),
             "exact": exact,
             "n_words": (len(vocab) + 63) // 64 if exact else BITMAP_WORDS,
             "vocab": vocab if exact else None,
         }
-    LAST_ENCODING_DECISION = _ENCODING_DECISION_CACHE[key]
-    return LAST_ENCODING_DECISION
+
+    return decide("encoding", (table_stamp(sf_dir, "documents"), site), measure)
 
 
 def _bitmap_cols(arr_col: str, prefix: str, n_words: int = BITMAP_WORDS, bit=None) -> list:
@@ -377,7 +367,7 @@ def _bitmap_guard(keep_cond, exact_intersect):
     JOIN's condition — and PushPredicateThroughJoin prepends it, so the
     pushed exact filter evaluated BEFORE the prune conjunct and every
     candidate pair still paid the array_intersect (measured at the 10×
-    corpus with MMR_SETMASK=off: dedup_components' pairwise stage only
+    corpus on the hashed branch: dedup_components' pairwise stage only
     5084 → 4304 exec-s). SQL CASE semantics guarantee the THEN branch
     is only evaluated when the guard holds, no matter where the
     optimizer moves the enclosing expression. The −1 sentinel yields a
@@ -608,51 +598,26 @@ def _pairs_from_group_cross(groups: DataFrame, cross: DataFrame) -> DataFrame:
 #: queries. 2000 keeps ~2M candidate token-set pairs worst-case —
 #: bounded eval cost at ANY corpus size — while pair/recall estimates
 #: keep two-digit precision (the reports estimate rates, not inventory)
-EVAL_SAMPLE_TARGET_DOCS = int(os.environ.get("MMR_EVAL_SAMPLE_TARGET_DOCS", "2000"))
+EVAL_SAMPLE_TARGET_DOCS = 2000
 EVAL_SAMPLE_HEX_DIGITS = 8
-
-_EVAL_SAMPLE_CACHE: dict[tuple, dict] = {}
-LAST_EVAL_SAMPLE_DECISION: dict = {}
-
-#: whether the last _doc_components build was seeded from a warm
-#: jaccard_pairs memo (bench stamps this next to cc_memo_decision)
-LAST_CC_SEED_DECISION: dict = {"seeded": False, "source": "plain"}
 
 
 def _eval_sample_decision(spark: SparkSession, sf_dir: str, target: int | None = None) -> dict:
-    """Measured per-corpus sampling decision (memoized, the LSH
-    pattern): one count of the documents table fixes the modulus
-    ``k = ceil(n / target)`` by pure integer math — exactly the
+    """Measured per-corpus sampling decision (decision site
+    ``eval_sample``): one count of the documents table fixes the
+    modulus ``k = ceil(n / target)`` by pure integer math — exactly the
     arithmetic the oracle CTE runs inline, so both engines draw the
-    same sample."""
-    global LAST_EVAL_SAMPLE_DECISION
-    from ..sources.tables import _dataset_mtime_ns, table_path
-
+    same sample. The oracle recomputes k from the CURRENT table on
+    every run, so the table stamp in the key re-probes a fixture
+    rewritten in-process (ADVICE r9)."""
     t = EVAL_SAMPLE_TARGET_DOCS if target is None else target
-    # mtime check (ADVICE r9): the oracle CTE recomputes k from the
-    # CURRENT table on every run, so a fixture rewritten in-process
-    # under the same path must re-probe or the two engines would draw
-    # different samples near the k boundary. The mtime lives in the
-    # VALUE, not the key (the _SCHEMA_CACHE convention): a rewrite
-    # supersedes the stale entry instead of accumulating beside it,
-    # keeping the cache bounded at one entry per (dir, target).
-    key = (os.path.realpath(sf_dir), t)
-    mtime = _dataset_mtime_ns(table_path(sf_dir, "documents"))
-    hit = _EVAL_SAMPLE_CACHE.get(key)
-    if hit is None or hit[0] != mtime:
+
+    def measure() -> dict:
         n = load_table(spark, sf_dir, "documents").count()
         k = max(1, (n + t - 1) // t)
-        _EVAL_SAMPLE_CACHE[key] = (
-            mtime,
-            {
-                "n_docs": int(n),
-                "target_docs": t,
-                "modulus": int(k),
-                "engaged": k > 1,
-            },
-        )
-    LAST_EVAL_SAMPLE_DECISION = _EVAL_SAMPLE_CACHE[key][1]
-    return LAST_EVAL_SAMPLE_DECISION
+        return {"n_docs": int(n), "target_docs": t, "modulus": int(k), "engaged": k > 1}
+
+    return decide("eval_sample", (table_stamp(sf_dir, "documents"), t), measure)
 
 
 def _eval_sampled_docs(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
@@ -685,30 +650,13 @@ def _eval_sample_ctes(target: int | None = None) -> str:
 )"""
 
 
-def _docs_stamp(sf_dir: str) -> str:
-    """Corpus identity for memo keys: path + dataset mtime, so a
-    fixture rewritten in-process under the same path evicts instead of
-    serving a stale checkpointed relation (ADVICE r9 — the oracle
-    always reads the CURRENT table)."""
-    from ..sources.tables import _dataset_mtime_ns, table_path
-
-    return (
-        f"{os.path.realpath(sf_dir)}"
-        f"@{_dataset_mtime_ns(table_path(sf_dir, 'documents'))}"
-    )
-
-
 def _jaccard_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL exact pair relation, checkpoint-memoized per corpus
     (VERDICT r7 task 3): the sweep/eval consumers share one build in a
-    pipeline-shaped session instead of each re-deriving it. The key
-    carries the path-decision knobs so the forced-path equivalence
-    tests still exercise both plans."""
-    key = (
-        f"{_docs_stamp(sf_dir)}|k=1"
-        f"|path={os.environ.get('MMR_JACCARD_PATH', '')}"
-        f"|budget={_BROADCAST_BUDGET_BYTES}"
-    )
+    pipeline-shaped session instead of each re-deriving it. Both
+    jaccard paths return the same rows (pytest-asserted), so the key
+    is the corpus alone."""
+    key = f"{table_stamp(sf_dir, 'documents')}|k=1"
 
     def build() -> DataFrame:
         groups, cross = _jaccard_group_cross(spark, sf_dir)
@@ -727,11 +675,7 @@ def _eval_pairs(spark: SparkSession, sf_dir: str, target: int | None = None) -> 
     k = d["modulus"]
     if k <= 1:
         return _jaccard_pairs_memo(spark, sf_dir)
-    key = (
-        f"{_docs_stamp(sf_dir)}|k={k}"
-        f"|path={os.environ.get('MMR_JACCARD_PATH', '')}"
-        f"|budget={_BROADCAST_BUDGET_BYTES}"
-    )
+    key = f"{table_stamp(sf_dir, 'documents')}|k={k}"
 
     def build() -> DataFrame:
         docs = _eval_sampled_docs(spark, sf_dir, k)
@@ -996,21 +940,13 @@ ORDER BY contained_id, container_id
 """
 
 
-#: memoized per-corpus candidate-path decisions (the LSH/zscore
-#: pattern): either path yields the identical verified pair set
-#: (pytest-asserted), so a cached choice can only affect the plan.
-_CONTAIN_DECISION_CACHE: dict[tuple, dict] = {}
-LAST_CONTAINMENT_DECISION: dict = {}
-
 #: byte budget for auditor-role group-relation broadcasts (VERDICT r5
 #: "what's wrong" #2 / ADVICE r5): broadcasts are gated on a MEASURED
 #: bytes estimate, not row counts — rows say nothing about the token
 #: arrays riding along. 256 MB default: comfortably inside a 4 GB
 #: driver/executor and far above any corpus where the pairwise auditor
 #: path is the right plan at all.
-_BROADCAST_BUDGET_BYTES = int(
-    os.environ.get("MMR_BROADCAST_BUDGET_BYTES", str(256 * 1024 * 1024))
-)
+_BROADCAST_BUDGET_BYTES = 256 * 1024 * 1024
 #: absolute group-count cap for the containment nested-loop path: at
 #: |G| > this the |G|² candidate stream is wrong REGARDLESS of what the
 #: witness estimate says (witness >= |G|² is reachable at |G| ~ 1e6 on
@@ -1018,27 +954,19 @@ _BROADCAST_BUDGET_BYTES = int(
 #: broadcasts) — above the cap the prefix path is forced. The cap also
 #: makes the nested path's (gid, n) broadcast provably tiny:
 #: 65536 × 16 B = 1 MB.
-_NESTED_MAX_GROUPS = int(os.environ.get("MMR_NESTED_MAX_GROUPS", "65536"))
-
-_JACCARD_DECISION_CACHE: dict[tuple, dict] = {}
-LAST_JACCARD_DECISION: dict = {}
+_NESTED_MAX_GROUPS = 65536
 
 
 def _jaccard_path_decision(groups: DataFrame, sf_dir: str, tag: str = "") -> dict:
     """Measured per-corpus path decision for dedup_jaccard_pairs
-    (memoized, the LSH pattern): estimate the serialized size of the
+    (decision site ``jaccard``): estimate the serialized size of the
     collapsed-group relation — n_groups row overheads plus 8 B per
     token hash and per member id — and pick the broadcast pairwise
     path only under the byte budget. Above it the query switches to
     the token-postings equi-join (the oracle's own shuffle-safe
     shape); both paths are value-identical (pytest-asserted)."""
-    global LAST_JACCARD_DECISION
-    env = os.environ.get("MMR_JACCARD_PATH", "")
-    key = (os.path.realpath(sf_dir), JACCARD_THRESHOLD, tag)
-    if env in ("broadcast", "postings"):
-        LAST_JACCARD_DECISION = {"forced": env, "use_broadcast": env == "broadcast"}
-        return LAST_JACCARD_DECISION
-    if key not in _JACCARD_DECISION_CACHE:
+
+    def measure() -> dict:
         row = groups.agg(
             F.count(F.lit(1)).alias("n_groups"),
             F.coalesce(F.sum("n"), F.lit(0)).alias("total_tokens"),
@@ -1049,14 +977,16 @@ def _jaccard_path_decision(groups: DataFrame, sf_dir: str, tag: str = "") -> dic
             + int(row["total_tokens"]) * 8
             + int(row["total_members"]) * 8
         )
-        _JACCARD_DECISION_CACHE[key] = {
+        return {
             "n_groups": int(row["n_groups"]),
             "est_bytes": est_bytes,
             "budget_bytes": _BROADCAST_BUDGET_BYTES,
             "use_broadcast": est_bytes <= _BROADCAST_BUDGET_BYTES,
         }
-    LAST_JACCARD_DECISION = _JACCARD_DECISION_CACHE[key]
-    return LAST_JACCARD_DECISION
+
+    return decide(
+        "jaccard", (table_stamp(sf_dir, "documents"), JACCARD_THRESHOLD, tag), measure
+    )
 
 
 @register(
@@ -1135,15 +1065,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabulary every posting list is hot and the witness stream
     # EXCEEDS |G|² (measured 27 s vs 2.7 s at sf0.1) — so measure both
     # estimates with two slim aggregates and pick per corpus.
-    global LAST_CONTAINMENT_DECISION
-    env = os.environ.get("MMR_CONTAINMENT_PATH", "")
-    key = (os.path.realpath(sf_dir), CONTAINMENT_THRESHOLD)
-    if env in ("prefix", "nested"):
-        use_prefix = env == "prefix"
-    elif key in _CONTAIN_DECISION_CACHE:
-        LAST_CONTAINMENT_DECISION = _CONTAIN_DECISION_CACHE[key]
-        use_prefix = LAST_CONTAINMENT_DECISION["use_prefix"]
-    else:
+    def measure() -> dict:
         n_groups = groups.count()
         est_row = (
             prefixes.join(F.broadcast(freq), "token")
@@ -1157,7 +1079,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         # hot vocabulary, where BOTH paths are quadratic — prefix at
         # least never broadcasts), and the cap keeps the nested path's
         # (gid, n) broadcast provably bounded at cap × 16 B = 1 MB
-        decision = {
+        return {
             "n_groups": n_groups,
             "witness_rows": witness,
             "nested_pairs": n_groups * n_groups,
@@ -1165,9 +1087,12 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             "use_prefix": (witness < n_groups * n_groups)
             or n_groups > _NESTED_MAX_GROUPS,
         }
-        _CONTAIN_DECISION_CACHE[key] = decision
-        LAST_CONTAINMENT_DECISION = decision
-        use_prefix = decision["use_prefix"]
+
+    use_prefix = decide(
+        "containment",
+        (table_stamp(sf_dir, "documents"), CONTAINMENT_THRESHOLD),
+        measure,
+    )["use_prefix"]
     needed = F.ceil(F.col("na") * F.lit(CONTAINMENT_THRESHOLD))
     if use_prefix:
         pa = prefixes.select(
@@ -1252,7 +1177,7 @@ NGRAM_JACCARD_THRESHOLD = 0.5
 #: pair join. The cut is an exact integer fraction (df·DEN > n_docs·NUM)
 #: rather than an interpolated df-quantile so DuckDB replays the
 #: decision bit-for-bit; 1/2 is the classic "more than half the corpus"
-#: boilerplate bar. Disable with MMR_NGRAM_DF_CUT=off (test knob — the
+#: boilerplate bar. Forced off with ngram_dfcut={"engage": False} (the
 #: cut-fires fixture and the no-op-equality test exercise both sides).
 NGRAM_DF_CUT_NUM = 1
 NGRAM_DF_CUT_DEN = 2
@@ -1276,13 +1201,11 @@ NGRAM_DF_CUT_DEN = 2
 #: stands: a true-boilerplate shingle (df > 1/2 of docs) sampling
 #: under 1/4 on a ≥200-doc sample has probability
 #: exp(-2·200·0.0625) ≈ 1e-11 — an accepted driver-gate risk, as is
-#: the same residual divergence when MMR_NGRAM_DF_CUT=off is forced
-#: while some shingle truly crosses (the oracle always applies the
-#: exact cut; the knob exists for plan A/Bs, not production).
+#: the same residual divergence when ngram_dfcut={"engage": False} is
+#: forced while some shingle truly crosses (the oracle always applies
+#: the exact cut; forcing exists for plan A/Bs, not production).
 _NGRAM_PROBE_MOD = 16
 _NGRAM_PROBE_MIN_DOCS = 200
-_NGRAM_DFCUT_DECISION_CACHE: dict[tuple, dict] = {}
-LAST_NGRAM_DFCUT_DECISION: dict = {}
 
 NGRAM_JACCARD_ORACLE = f"""
 WITH toks AS (
@@ -1373,67 +1296,53 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # left-anti prune of the shingle stream; the df aggregate is one
     # extra map-side-combined pass over the (already persisted) stream
     # — the price that caps the pair join's O(df²) hot-posting blowup
-    global LAST_NGRAM_DFCUT_DECISION
-    cut_env = os.environ.get("MMR_NGRAM_DF_CUT", "")
-    if cut_env == "force":
-        engage = True
-        LAST_NGRAM_DFCUT_DECISION = {"forced": "force", "engage": True}
-    elif cut_env == "off":
-        engage = False
-        LAST_NGRAM_DFCUT_DECISION = {"forced": "off", "engage": False}
-    else:
-        key = (os.path.realpath(sf_dir), NGRAM_DF_CUT_NUM, NGRAM_DF_CUT_DEN)
-        if key not in _NGRAM_DFCUT_DECISION_CACHE:
-            # doc_id is a scan column, so the sample predicate pushes
-            # BELOW the tokenize chain — the probe scans 1/16 of the
-            # corpus, once per corpus (memoized)
-            sample = sh.filter(
-                F.pmod(F.xxhash64(F.col("doc_id")), F.lit(_NGRAM_PROBE_MOD)) == 0
-            )
-            sd = int(
-                sample.agg(F.count_distinct("doc_id").alias("d")).first()["d"]
-            )
-            mdf_row = (
-                sample.groupBy("shingle")
+    def measure() -> dict:
+        # doc_id is a scan column, so the sample predicate pushes BELOW
+        # the tokenize chain — the probe scans 1/16 of the corpus, once
+        # per corpus (memoized)
+        sample = sh.filter(
+            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(_NGRAM_PROBE_MOD)) == 0
+        )
+        sd = int(sample.agg(F.count_distinct("doc_id").alias("d")).first()["d"])
+        mdf_row = (
+            sample.groupBy("shingle")
+            .agg(F.count_distinct("doc_id").alias("df"))
+            .agg(F.max("df").alias("m"))
+            .first()
+        )
+        mdf = int(mdf_row["m"] or 0)
+        decision = {
+            "sample_docs": sd,
+            "sample_max_df": mdf,
+            "engage": sd < _NGRAM_PROBE_MIN_DOCS
+            or mdf * NGRAM_DF_CUT_DEN * 2 >= sd * NGRAM_DF_CUT_NUM,
+        }
+        if not decision["engage"] and mdf * NGRAM_DF_CUT_DEN * 4 >= sd * NGRAM_DF_CUT_NUM:
+            # margin confirm (ADVICE r6): the sample disengaged but its
+            # max df is within a factor 2 of the trigger — pay the exact
+            # full pass once and decide on the truth
+            fmax_row = (
+                sh.groupBy("shingle")
                 .agg(F.count_distinct("doc_id").alias("df"))
                 .agg(F.max("df").alias("m"))
                 .first()
             )
-            mdf = int(mdf_row["m"] or 0)
-            decision = {
-                "sample_docs": sd,
-                "sample_max_df": mdf,
-                "engage": sd < _NGRAM_PROBE_MIN_DOCS
-                or mdf * NGRAM_DF_CUT_DEN * 2 >= sd * NGRAM_DF_CUT_NUM,
-            }
-            if (
-                not decision["engage"]
-                and mdf * NGRAM_DF_CUT_DEN * 4 >= sd * NGRAM_DF_CUT_NUM
-            ):
-                # margin confirm (ADVICE r6): the sample disengaged but
-                # its max df is within a factor 2 of the trigger — pay
-                # the exact full pass once and decide on the truth
-                fmax_row = (
-                    sh.groupBy("shingle")
-                    .agg(F.count_distinct("doc_id").alias("df"))
-                    .agg(F.max("df").alias("m"))
-                    .first()
-                )
-                fmax = int(fmax_row["m"] or 0)
-                fnd = int(
-                    sh.agg(F.count_distinct("doc_id").alias("d")).first()["d"]
-                )
-                decision.update(
-                    {
-                        "confirm_full_max_df": fmax,
-                        "confirm_n_docs": fnd,
-                        "engage": fmax * NGRAM_DF_CUT_DEN
-                        > fnd * NGRAM_DF_CUT_NUM,
-                    }
-                )
-            _NGRAM_DFCUT_DECISION_CACHE[key] = decision
-        LAST_NGRAM_DFCUT_DECISION = _NGRAM_DFCUT_DECISION_CACHE[key]
-        engage = LAST_NGRAM_DFCUT_DECISION["engage"]
+            fmax = int(fmax_row["m"] or 0)
+            fnd = int(sh.agg(F.count_distinct("doc_id").alias("d")).first()["d"])
+            decision.update(
+                {
+                    "confirm_full_max_df": fmax,
+                    "confirm_n_docs": fnd,
+                    "engage": fmax * NGRAM_DF_CUT_DEN > fnd * NGRAM_DF_CUT_NUM,
+                }
+            )
+        return decision
+
+    engage = decide(
+        "ngram_dfcut",
+        (table_stamp(sf_dir, "documents"), NGRAM_DF_CUT_NUM, NGRAM_DF_CUT_DEN),
+        measure,
+    )["engage"]
     if engage:
         sh = sh.transform(tracked_persist)
         dfc = sh.groupBy("shingle").agg(F.count_distinct("doc_id").alias("df"))
@@ -1487,62 +1396,40 @@ LSH_AUTO_HOT_FLOOR = 8192
 LSH_AUTO_HOT_FACTOR = 32
 
 
-#: Memoized auto-decisions, keyed per corpus epoch (realpath of sf_dir +
-#: the rule's parameters). The decision is a pure PLAN choice — either
-#: path yields the identical verified pair set (pytest-asserted), so a
-#: stale entry can never change results; it only spares repeat
-#: invocations (benchmark reruns, composed pipelines) the sampling job
-#: the plain-join path would otherwise pay just to hear "no"
-#: (VERDICT r4 "what's wrong" #1). The most recent decision is kept in
-#: LAST_LSH_DECISION so bench.py can stamp (threshold, max, median)
-#: into its JSON for drift tracking.
-_LSH_DECISION_CACHE: dict[tuple, dict] = {}
-LAST_LSH_DECISION: dict = {}
-
-
-def clear_lsh_decision_cache() -> None:
-    _LSH_DECISION_CACHE.clear()
-
-
-def _lsh_auto_hot_threshold(bands: DataFrame, cache_key: tuple | None = None) -> int:
-    """AQE-style runtime decision (VERDICT r3 task 5): measure the
-    band-bucket size distribution with one tiny aggregate over the
-    (persisted-parent) bands relation and return the per-bucket
-    chunking threshold, or 0 for the plain self-join.
+def _lsh_auto_hot_threshold(bands: DataFrame, key: tuple) -> int:
+    """AQE-style runtime decision (VERDICT r3 task 5, decision site
+    ``lsh``): measure the band-bucket size distribution with one tiny
+    aggregate over the (persisted-parent) bands relation and return the
+    per-bucket chunking threshold, or 0 for the plain self-join.
 
     Any threshold yields the same verified pair set (pytest-asserted
     equivalence of the two paths), so the exact-median determinism here
     only stabilizes the PLAN, never the result — which is also why the
-    per-corpus memo above is safe."""
-    global LAST_LSH_DECISION
-    if cache_key is not None and cache_key in _LSH_DECISION_CACHE:
-        LAST_LSH_DECISION = _LSH_DECISION_CACHE[cache_key]
-        return LAST_LSH_DECISION["threshold"]
-    stats = bands.groupBy("band", "band_hash").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    row = stats.agg(
-        F.max("c").alias("mx"), F.expr("percentile(c, 0.5)").alias("med")
-    ).first()
-    if row is None or row["mx"] is None:
-        decision = {"threshold": 0, "max": 0, "median": 0.0, "cutoff": 0}
-    else:
+    per-corpus memo is safe: it only spares repeat invocations
+    (benchmark reruns, composed pipelines) the sampling job the plain
+    join would otherwise pay just to hear "no" (VERDICT r4)."""
+
+    def measure() -> dict:
+        stats = bands.groupBy("band", "band_hash").agg(F.count(F.lit(1)).alias("c"))
+        row = stats.agg(
+            F.max("c").alias("mx"), F.expr("percentile(c, 0.5)").alias("med")
+        ).first()
+        if row is None or row["mx"] is None:
+            return {"threshold": 0, "max": 0, "median": 0.0, "cutoff": 0}
         cutoff = max(LSH_AUTO_HOT_FLOOR, int(LSH_AUTO_HOT_FACTOR * (row["med"] or 1)))
-        decision = {
+        return {
             "threshold": cutoff if row["mx"] >= cutoff else 0,
             "max": int(row["mx"]),
             "median": float(row["med"] or 0.0),
             "cutoff": cutoff,
         }
-    if cache_key is not None:
-        _LSH_DECISION_CACHE[cache_key] = decision
-    LAST_LSH_DECISION = decision
-    return decision["threshold"]
+
+    return decide("lsh", key, measure)["threshold"]
 
 
 def _lsh_chunked_candidates(bands: DataFrame, hot_threshold: int) -> DataFrame:
     """Two-path LSH candidate generation for boilerplate-hot corpora
-    (enabled via MMR_LSH_HOT_BUCKET; see the caller's comment).
+    (see the caller's comment).
 
     Buckets <= hot_threshold use the plain self-join; bigger buckets
     split into gid-ordered chunks of LSH_CHUNK so the pair fan-out
@@ -1699,23 +1586,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # when a single task's fan-out would actually hurt. At sf0.1 the
     # largest bucket is 1.6k members (1.3M pairs), far below the floor,
     # so the auto rule keeps the A/B-measured-2×-faster plain join.
-    # MMR_LSH_HOT_BUCKET overrides: > 0 forces that threshold, < 0
-    # forces the plain join (skips the sampling pass too); equivalence
-    # of the two paths is pytest-asserted.
-    env_knob = int(os.environ.get("MMR_LSH_HOT_BUCKET", "0"))
-    if env_knob > 0:
-        hot_threshold = env_knob
-    elif env_knob < 0:
-        hot_threshold = 0
-    else:
-        hot_threshold = _lsh_auto_hot_threshold(
-            bands,
-            cache_key=(
-                os.path.realpath(sf_dir),
-                LSH_AUTO_HOT_FLOOR,
-                LSH_AUTO_HOT_FACTOR,
-            ),
-        )
+    # Forcing lsh={"threshold": t} skips the sampling pass: t > 0 is
+    # the chunking threshold, 0 the plain join; equivalence of the two
+    # paths is pytest-asserted.
+    hot_threshold = _lsh_auto_hot_threshold(
+        bands,
+        (table_stamp(sf_dir, "documents"), LSH_AUTO_HOT_FLOOR, LSH_AUTO_HOT_FACTOR),
+    )
     if hot_threshold <= 0:
         cand = (
             bands.alias("x")
@@ -1899,7 +1776,7 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured ~25-30% of the build at the edge-bound 10x scale,
     # where pair volume grows 10x)
     hit = peek_result_memo(
-        "minhash_verified_pairs", f"{_docs_stamp(sf_dir)}|k=1"
+        "minhash_verified_pairs", f"{table_stamp(sf_dir, 'documents')}|k=1"
     )
     return hit if hit is not None else _minhash_verified_pairs(spark, sf_dir)
 
@@ -2013,12 +1890,7 @@ def _minhash_verified_pairs(
 #: BROADCAST instead of shuffle-joined. 2M nodes of two longs hash to
 #: well under the 256 MB broadcast budget shared with the jaccard
 #: guard; past it every join falls back to the shuffle path unchanged.
-#: Env-overridable for the path-equivalence test.
 CC_BCAST_MAX_NODES = 2_000_000
-
-#: last broadcast decision, stamped into bench_result.json like the
-#: LSH/containment/jaccard/zscore/ngram decisions
-LAST_CC_BCAST_DECISION: dict | None = None
 
 
 def _contracted_components(pairs: DataFrame, extra_nodes=None) -> DataFrame:
@@ -2068,18 +1940,16 @@ def _contracted_components(pairs: DataFrame, extra_nodes=None) -> DataFrame:
     # broadcast instead — same plans, same output, exchange-free joins.
     # The labels checkpoint is already materialized, so the count is a
     # cheap cached scan, not an extra pass over the pair relation.
-    global LAST_CC_BCAST_DECISION
     n_nodes = labels.count()
-    bcast_max = int(
-        os.environ.get("SPARK_GRAFT_CC_BCAST_MAX_NODES", CC_BCAST_MAX_NODES)
+    d = note(
+        "cc_bcast",
+        {
+            "n_nodes": n_nodes,
+            "max_nodes": CC_BCAST_MAX_NODES,
+            "broadcast": n_nodes <= CC_BCAST_MAX_NODES,
+        },
     )
-    use_bcast = n_nodes <= bcast_max
-    LAST_CC_BCAST_DECISION = {
-        "n_nodes": n_nodes,
-        "max_nodes": bcast_max,
-        "broadcast": use_bcast,
-    }
-    _b = F.broadcast if use_bcast else (lambda df: df)
+    _b = F.broadcast if d["broadcast"] else (lambda df: df)
     converged = False
     for _ in range(20):
         nbr = (
@@ -2211,18 +2081,20 @@ def _doc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-level oracle merges components through that id."""
 
     def build() -> DataFrame:
-        global LAST_CC_SEED_DECISION
-        pairs_key = (
-            f"{_docs_stamp(sf_dir)}|k=1"
-            f"|path={os.environ.get('MMR_JACCARD_PATH', '')}"
-            f"|budget={_BROADCAST_BUDGET_BYTES}"
+        pairs_hit = peek_result_memo(
+            "jaccard_pairs", f"{table_stamp(sf_dir, 'documents')}|k=1"
         )
-        pairs_hit = (
-            None
-            if os.environ.get("MMR_CC_SEED", "auto") == "off"
-            else peek_result_memo("jaccard_pairs", pairs_key)
+        seeded = pairs_hit is not None
+        d = note(
+            "cc_seed",
+            {"seeded": seeded, "source": "jaccard_pairs" if seeded else "plain"},
         )
-        if pairs_hit is not None:
+        if d["seeded"] and not seeded:
+            raise ValueError(
+                "cc_seed forced seeded, but no jaccard_pairs memo is warm for "
+                f"{sf_dir}"
+            )
+        if d["seeded"]:
             # SEEDED (VERDICT r9 task 7): a calibration session already
             # checkpointed the full doc-level pair relation — derive the
             # group edge set from it (two id-keyed joins over 2-long
@@ -2248,12 +2120,10 @@ def _doc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .distinct()
             )
-            LAST_CC_SEED_DECISION = {"seeded": True, "source": "jaccard_pairs"}
         else:
             groups, cross = _jaccard_group_cross(spark, sf_dir)
             mem = groups.select("gid", F.explode("members").alias("m"))
             cross_e = cross.select("ga", "gb")
-            LAST_CC_SEED_DECISION = {"seeded": False, "source": "plain"}
         bridge = (
             mem.alias("x")
             .join(mem.alias("y"), "m")
@@ -2281,7 +2151,9 @@ def _doc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    return memoized_result_checkpoint("jaccard_doc_components", _docs_stamp(sf_dir), build)
+    return memoized_result_checkpoint(
+        "jaccard_doc_components", table_stamp(sf_dir, "documents"), build
+    )
 
 
 @register(
@@ -2478,42 +2350,28 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embedding-cosine near-dup (oracle-able)
 # ------------------------------------------------------------------
 
-_EMB_BLOCK_DECISION_CACHE: dict[tuple, dict] = {}
-LAST_EMB_BLOCK_DECISION: dict = {}
-
-
 def _emb_block_decision(spark: SparkSession, sf_dir: str, emb: DataFrame) -> dict:
     """Measured per-corpus path decision for the label-blocked pairwise
-    cosine (memoized, the _jaccard_path_decision pattern): estimate the
-    serialized embedding relation — row overhead plus 4 B per float32
-    element — and broadcast the build side only under the shared byte
-    budget. Either path returns the identical pair multiset; the choice
-    only affects the physical plan."""
-    global LAST_EMB_BLOCK_DECISION
-    env = os.environ.get("MMR_EMB_BLOCK_PATH", "")
-    if env in ("broadcast", "shuffle"):
-        LAST_EMB_BLOCK_DECISION = {"forced": env, "use_broadcast": env == "broadcast"}
-        return LAST_EMB_BLOCK_DECISION
-    from ..sources.tables import _dataset_mtime_ns, table_path
+    cosine (decision site ``emb_block``): estimate the serialized
+    embedding relation — row overhead plus 4 B per float32 element —
+    and broadcast the build side only under the shared byte budget.
+    Either path returns the identical pair multiset; the choice only
+    affects the physical plan."""
 
-    key = (
-        os.path.realpath(sf_dir),
-        _dataset_mtime_ns(table_path(sf_dir, "embeddings")),
-    )
-    if key not in _EMB_BLOCK_DECISION_CACHE:
+    def measure() -> dict:
         row = emb.agg(
             F.count(F.lit(1)).alias("n_vecs"),
             F.coalesce(F.sum(F.size("embedding")), F.lit(0)).alias("n_elems"),
         ).first()
         est_bytes = int(row["n_vecs"]) * 64 + int(row["n_elems"]) * 4
-        _EMB_BLOCK_DECISION_CACHE[key] = {
+        return {
             "n_vecs": int(row["n_vecs"]),
             "est_bytes": est_bytes,
             "budget_bytes": _BROADCAST_BUDGET_BYTES,
             "use_broadcast": est_bytes <= _BROADCAST_BUDGET_BYTES,
         }
-    LAST_EMB_BLOCK_DECISION = _EMB_BLOCK_DECISION_CACHE[key]
-    return LAST_EMB_BLOCK_DECISION
+
+    return decide("emb_block", (table_stamp(sf_dir, "embeddings"),), measure)
 
 
 EMBEDDING_COSINE_ORACLE = f"""
@@ -3318,7 +3176,7 @@ def _verified_pairs_memo(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     ONCE (VERDICT r8 task 6), while a standalone dedup_minhash_verified
     run pays neither the build twice nor the eager checkpoint
     materialization."""
-    key = f"{_docs_stamp(sf_dir)}|k={k}"
+    key = f"{table_stamp(sf_dir, 'documents')}|k={k}"
 
     def build() -> DataFrame:
         docs = _eval_sampled_docs(spark, sf_dir, k) if k > 1 else None

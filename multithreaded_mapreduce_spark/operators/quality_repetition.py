@@ -23,7 +23,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 from operator import add
 
@@ -36,7 +35,7 @@ from ..plans.caching import (
     tracked_persist,
 )
 from ..plans.registry import register
-from ..sources.tables import load_table, spread
+from ..sources.tables import load_table, spread, table_stamp
 from .textstats import _sql_tokens, _tokens
 
 #: repetition gates (Gopher-style): a document fails when any single
@@ -799,13 +798,11 @@ def _quality_gates_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     OPTIMIZATION_r11.md). Bench cold runs evict this memo before every
     timed query (release_result_memos), so headline numbers stay cold;
     the warm-trio pipeline cost is stamped separately."""
-    from .dedup import _docs_stamp
-
     def build() -> DataFrame:
         return _quality_gates_build(spark, sf_dir)
 
     return memoized_result_checkpoint(
-        "quality_gates", _docs_stamp(sf_dir), build
+        "quality_gates", table_stamp(sf_dir, "documents"), build
     )
 
 
@@ -864,8 +861,7 @@ def _quality_gates_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Wall-neutral at sf0.1 (the redundant jobs back-fill idle cores)
     # but saves ~2/3 of the scan CPU — the win appears when cores are
     # saturated (measured at 10×, see OPTIMIZATION_r10.md).
-    if os.environ.get("MMR_EAGER_SHARED_SCAN", "on") != "off":
-        base.count()
+    base.count()
     tok = base.select("doc_id", F.explode("ts").alias("token"))
     v = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c")).transform(
         tracked_persist

@@ -22,15 +22,15 @@ no numeric types beyond int counts (reference 1.cpp:18-21).
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_exact, dot_fast, norm_sq_fast
+from ..plans.decisions import decide
 from ..plans.registry import register
-from ..sources.tables import load_table, spread
+from ..sources.tables import load_table, spread, table_stamp
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
@@ -64,49 +64,29 @@ HAMMING_RADIUS = 4
 #: bounded eval cost at ANY corpus size, and a mean over 64 uniform
 #: per-query recalls has a standard error under ~0.06 even for
 #: worst-case p=0.5 per-hit variance (the report estimates a rate)
-ANN_EVAL_TARGET_QUERIES = int(os.environ.get("MMR_ANN_EVAL_TARGET_QUERIES", "64"))
+ANN_EVAL_TARGET_QUERIES = 64
 ANN_EVAL_HEX_DIGITS = 8
-
-_ANN_EVAL_CACHE: dict[tuple, dict] = {}
-LAST_ANN_EVAL_DECISION: dict = {}
 
 
 def _ann_eval_decision(spark: SparkSession, sf_dir: str, target: int | None = None) -> dict:
-    """Measured per-corpus query-sampling decision (memoized, the
-    dedup eval-sample pattern): one count of the registered query set
-    fixes the modulus ``k = ceil(n / target)`` by the same integer
-    math the oracle CTE runs inline."""
-    global LAST_ANN_EVAL_DECISION
-    from ..sources.tables import _dataset_mtime_ns, table_path
-
+    """Measured per-corpus query-sampling decision (decision site
+    ``ann_eval``): one count of the registered query set fixes the
+    modulus ``k = ceil(n / target)`` by the same integer math the
+    oracle CTE runs inline. The oracle recomputes k from the CURRENT
+    table on every run, so the table stamp in the key re-probes a
+    fixture rewritten in-process (ADVICE r9)."""
     t = ANN_EVAL_TARGET_QUERIES if target is None else target
-    # mtime check (ADVICE r9): the oracle CTE recomputes k from the
-    # CURRENT table on every run, so a fixture rewritten in-process
-    # under the same path must re-probe or the two engines would draw
-    # different query sets near the k boundary. Mtime in the VALUE,
-    # not the key (the _SCHEMA_CACHE convention): a rewrite supersedes
-    # the stale entry instead of accumulating beside it.
-    key = (os.path.realpath(sf_dir), t)
-    mtime = _dataset_mtime_ns(table_path(sf_dir, "embeddings"))
-    hit = _ANN_EVAL_CACHE.get(key)
-    if hit is None or hit[0] != mtime:
+
+    def measure() -> dict:
         n = (
             load_table(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") < N_QUERIES)
             .count()
         )
         k = max(1, (n + t - 1) // t)
-        _ANN_EVAL_CACHE[key] = (
-            mtime,
-            {
-                "n_queries": int(n),
-                "target_queries": t,
-                "modulus": int(k),
-                "engaged": k > 1,
-            },
-        )
-    LAST_ANN_EVAL_DECISION = _ANN_EVAL_CACHE[key][1]
-    return LAST_ANN_EVAL_DECISION
+        return {"n_queries": int(n), "target_queries": t, "modulus": int(k), "engaged": k > 1}
+
+    return decide("ann_eval", (table_stamp(sf_dir, "embeddings"), t), measure)
 
 
 def _ann_query_sample_pred(k: int) -> Column:

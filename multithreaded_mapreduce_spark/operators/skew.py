@@ -22,14 +22,13 @@ last worker (reference 1.cpp:274-280), with no skew handling.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import DEC
+from ..plans.decisions import decide
 from ..plans.registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_stamp
 
 N_SALTS = 8
 
@@ -186,24 +185,14 @@ def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 SKEW_AQE_MIN_X = 4.0
 SKEW_SALT_MIN_X = 16.0
 
-_SKEW_JOIN_DECISION_CACHE: dict[str, dict] = {}
-LAST_SKEW_JOIN_DECISION: dict = {}
-
-
 def _skew_join_decision(spark: SparkSession, sf_dir: str) -> dict:
-    """Measured per-corpus join-strategy decision (memoized, the LSH
-    pattern): one pass over events.user_id yields the max straggler
-    factor max(n_rows)·ndv/total — exactly the x_uniform statistic
-    join_key_skew_report publishes — and the thresholds above pick
-    plain / aqe / salted. Env-forceable via MMR_SKEW_JOIN_PATH for the
-    path-equivalence tests."""
-    global LAST_SKEW_JOIN_DECISION
-    env = os.environ.get("MMR_SKEW_JOIN_PATH", "")
-    if env in ("plain", "aqe", "salted"):
-        LAST_SKEW_JOIN_DECISION = {"forced": env, "path": env}
-        return LAST_SKEW_JOIN_DECISION
-    key = os.path.realpath(sf_dir)
-    if key not in _SKEW_JOIN_DECISION_CACHE:
+    """Measured per-corpus join-strategy decision (decision site
+    ``skew_join``): one pass over events.user_id yields the max
+    straggler factor max(n_rows)·ndv/total — exactly the x_uniform
+    statistic join_key_skew_report publishes — and the thresholds above
+    pick plain / aqe / salted."""
+
+    def measure() -> dict:
         per = (
             load_table(spark, sf_dir, "events")
             .groupBy("user_id")
@@ -221,7 +210,7 @@ def _skew_join_decision(spark: SparkSession, sf_dir: str) -> dict:
             if max_x >= SKEW_SALT_MIN_X
             else ("aqe" if max_x >= SKEW_AQE_MIN_X else "plain")
         )
-        _SKEW_JOIN_DECISION_CACHE[key] = {
+        return {
             "max_key_rows": max_n,
             "ndv": ndv,
             "total": total,
@@ -230,8 +219,8 @@ def _skew_join_decision(spark: SparkSession, sf_dir: str) -> dict:
             "salt_min_x": SKEW_SALT_MIN_X,
             "path": path,
         }
-    LAST_SKEW_JOIN_DECISION = _SKEW_JOIN_DECISION_CACHE[key]
-    return LAST_SKEW_JOIN_DECISION
+
+    return decide("skew_join", (table_stamp(sf_dir, "events"),), measure)
 
 
 @register(

@@ -83,8 +83,9 @@ _BUILD_DEPTH = 0
 
 
 def _with_cache_release(fn: Builder) -> Builder:
-    """Release the previous query's tracked caches at each top-level
-    registry build (see plans/caching.py for the contract). Nested
+    """Release the previous query's tracked caches and start a new
+    decision record at each top-level registry build (see
+    plans/caching.py and plans/decisions.py for the contracts). Nested
     builder composition calls raw module-level functions, not registry
     entries, but the depth guard makes a release mid-build impossible
     even if one ever does."""
@@ -92,9 +93,11 @@ def _with_cache_release(fn: Builder) -> Builder:
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         global _BUILD_DEPTH
         from .caching import release_tracked
+        from .decisions import new_record
 
         if _BUILD_DEPTH == 0:
             release_tracked()
+            new_record()
         _BUILD_DEPTH += 1
         try:
             return fn(spark, sf_dir)

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.decisions import note
+
 TABLES: tuple[str, ...] = (
     "region",
     "nation",
@@ -81,6 +83,13 @@ def _dataset_mtime_ns(path: str) -> int:
         except OSError:
             pass
     return newest
+
+
+def table_stamp(sf_dir: str, table: str) -> str:
+    """Identity of one table's current contents for memo keys: realpath
+    plus dataset mtime, so a table rewritten in place under the same
+    path is a new key (the oracle always reads the CURRENT table)."""
+    return f"{os.path.realpath(sf_dir)}@{_dataset_mtime_ns(table_path(sf_dir, table))}"
 
 
 def _read_parquet_cached_schema(
@@ -225,14 +234,16 @@ def spread(df: DataFrame) -> DataFrame:
     Single-file inputs — concatenated dumps, gzip logs — are a real
     production shape whose standard remedy is exactly this
     redistribute-before-expensive-work step. Measured on the
-    shingle-join dedup at sf0.1: 3.4× end to end. Kill switch:
-    MMR_SPREAD=always|off (default auto)."""
-    mode = os.environ.get("MMR_SPREAD", "auto")
-    if mode == "off":
-        return df
+    shingle-join dedup at sf0.1: 3.4× end to end. Decision site
+    ``spread`` (plans/decisions.py), noted per call."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    if mode != "always":
-        splits = _est_scan_splits(df)
-        if splits is not None and splits > max(1, par // 4):
-            return df
-    return df.repartition(par)
+    splits = _est_scan_splits(df)
+    d = note(
+        "spread",
+        {
+            "splits": splits,
+            "parallelism": par,
+            "spread": splits is None or splits <= max(1, par // 4),
+        },
+    )
+    return df.repartition(par) if d["spread"] else df

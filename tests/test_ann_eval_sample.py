@@ -14,6 +14,7 @@ from __future__ import annotations
 import hashlib
 
 import multithreaded_mapreduce_spark.operators.similarity as sim
+from multithreaded_mapreduce_spark.plans import decisions
 from multithreaded_mapreduce_spark.plans.registry import all_queries
 from multithreaded_mapreduce_spark.plans.verification import (
     compare_query,
@@ -70,7 +71,7 @@ def test_decision_is_memoized_per_corpus(spark, sf_dir):
     first = sim._ann_eval_decision(spark, sf_dir, target=FORCED_TARGET)
     again = sim._ann_eval_decision(spark, sf_dir, target=FORCED_TARGET)
     assert again is first
-    assert sim.LAST_ANN_EVAL_DECISION is first
+    assert decisions.record()["ann_eval"] is first
 
 
 def test_sampled_query_ids_match_python_md5(spark, sf_dir):

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 import multithreaded_mapreduce_spark.operators.corpus_ops as co
+from multithreaded_mapreduce_spark.plans import decisions
 from multithreaded_mapreduce_spark.plans.caching import (
     release_result_memos,
     release_tracked,
@@ -29,18 +30,17 @@ def _rows(spark, name, sf_dir):
 
 
 @pytest.mark.parametrize("name", ["bpe_learn_merges", "bpe_encode_corpus"])
-def test_driver_loop_matches_distributed(spark, name, monkeypatch):
-    monkeypatch.setenv("MMR_BPE_DRIVER", "off")
-    off = _rows(spark, name, SF_DIR)
-    assert co.LAST_BPE_TRAIN_DECISION["driver_loop"] is False
-    monkeypatch.setenv("MMR_BPE_DRIVER", "auto")
+def test_driver_loop_matches_distributed(spark, name):
+    with decisions.forced(bpe_driver={"driver_loop": False}):
+        off = _rows(spark, name, SF_DIR)
+    assert decisions.record()["bpe_driver"]["driver_loop"] is False
     on = _rows(spark, name, SF_DIR)
-    assert co.LAST_BPE_TRAIN_DECISION["driver_loop"] is True
+    assert decisions.record()["bpe_driver"]["driver_loop"] is True
     assert off == on and len(on) > 0
 
 
 def test_vocab_ceiling_disengages(spark, monkeypatch):
-    monkeypatch.setenv("MMR_BPE_DRIVER_VOCAB_MAX", "0")
+    monkeypatch.setattr(co, "BPE_DRIVER_VOCAB_MAX", 0)
     got = _rows(spark, "bpe_learn_merges", SF_DIR)
-    assert co.LAST_BPE_TRAIN_DECISION["driver_loop"] is False
+    assert decisions.record()["bpe_driver"]["driver_loop"] is False
     assert len(got) == co.BPE_MERGE_ROUNDS

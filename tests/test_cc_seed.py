@@ -5,16 +5,16 @@ joins) instead of re-running the pairwise token-set compare. Measured
 at sf0.1: dedup_components 7.8 -> 5.6 s with a warm memo; the cold
 path is untouched (peek, never pay). These pin the contract: seeded
 and plain labels are multiset-identical, the seeded path still
-hash-matches the DuckDB oracle, and the env kill-switch forces plain.
+hash-matches the DuckDB oracle, and forcing cc_seed plain keeps the
+plain path under a warm memo.
 """
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 import multithreaded_mapreduce_spark.operators.dedup as dd
+from multithreaded_mapreduce_spark.plans import decisions
 from multithreaded_mapreduce_spark.plans.caching import (
     release_result_memos,
     release_tracked,
@@ -41,7 +41,7 @@ def _clean_memos():
 
 def test_cold_session_stays_plain(spark, sf_dir):
     got = _multiset(Q["dedup_components"].builder(spark, sf_dir))
-    assert dd.LAST_CC_SEED_DECISION == {"seeded": False, "source": "plain"}
+    assert decisions.record()["cc_seed"] == {"seeded": False, "source": "plain"}
     assert got
 
 
@@ -52,7 +52,7 @@ def test_seeded_equals_plain_and_oracle(spark, sf_dir):
     dd._jaccard_pairs_memo(spark, sf_dir).count()  # calibration build
     release_tracked()
     seeded = _multiset(Q["dedup_components"].builder(spark, sf_dir))
-    assert dd.LAST_CC_SEED_DECISION["seeded"] is True
+    assert decisions.record()["cc_seed"]["seeded"] is True
     assert seeded == plain
     # the full trio rides the same CC memo; spot-check one consumer
     # and the registered oracle under the seeded labels
@@ -62,16 +62,15 @@ def test_seeded_equals_plain_and_oracle(spark, sf_dir):
     release_tracked()
     q = Q["dedup_components"]
     compare_query(spark, sf_dir, q.builder, q.oracle)
-    assert dd.LAST_CC_SEED_DECISION["seeded"] is True
+    assert decisions.record()["cc_seed"]["seeded"] is True
 
 
 def test_env_kill_switch_forces_plain(spark, sf_dir):
     dd._jaccard_pairs_memo(spark, sf_dir).count()
     release_tracked()
-    os.environ["MMR_CC_SEED"] = "off"
-    try:
+    with decisions.forced(cc_seed={"seeded": False, "source": "plain"}):
         got = _multiset(Q["dedup_components"].builder(spark, sf_dir))
-        assert dd.LAST_CC_SEED_DECISION == {"seeded": False, "source": "plain"}
-        assert got
-    finally:
-        del os.environ["MMR_CC_SEED"]
+    assert decisions.record()["cc_seed"] == {
+        "seeded": False, "source": "plain", "forced": True,
+    }
+    assert got

@@ -46,3 +46,15 @@ def test_cli_verify_subcommand(capsys, spark, sf_dir):
     assert main(["verify", "dedup_minhash_lsh", sf_dir]) == 0
     assert "rows-only" in capsys.readouterr().out
     assert main(["verify", "nosuch"]) == 2
+
+
+def test_cli_explain_prints_decision_record(capsys, spark, sf_dir):
+    """`explain` ends with the build's decision record as one JSON line."""
+    import json
+
+    assert main(["explain", "dedup_containment", sf_dir]) == 0
+    (line,) = [
+        ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("-- decisions: ")
+    ]
+    record = json.loads(line[len("-- decisions: "):])
+    assert "use_prefix" in record["containment"]

@@ -3,6 +3,7 @@ against the exact Jaccard query (the oracle-checked ground truth)."""
 
 from __future__ import annotations
 
+from multithreaded_mapreduce_spark.plans import decisions
 from multithreaded_mapreduce_spark.plans.registry import all_queries
 
 Q = all_queries()
@@ -23,21 +24,21 @@ def test_minhash_lsh_is_sound_and_recalls(spark, sf_dir):
         assert recall >= 0.5, f"LSH recall too low: {recall:.2f} ({len(lsh)}/{len(exact)})"
 
 
-def test_minhash_hot_bucket_path_is_equivalent(spark, sf_dir, monkeypatch):
-    """The MMR_LSH_HOT_BUCKET chunked candidate route (the escape hatch
-    for boilerplate-dominated band buckets) must produce EXACTLY the
-    default plan's output — threshold 2 forces every bucket hot."""
+def test_minhash_hot_bucket_path_is_equivalent(spark, sf_dir):
+    """The chunked candidate route (the escape hatch for
+    boilerplate-dominated band buckets) must produce EXACTLY the default
+    plan's output — a forced threshold of 2 makes every bucket hot."""
     plain = _pairs(Q["dedup_minhash_lsh"].builder(spark, sf_dir))
-    monkeypatch.setenv("MMR_LSH_HOT_BUCKET", "2")
-    forced = _pairs(Q["dedup_minhash_lsh"].builder(spark, sf_dir))
-    assert plain == forced
+    with decisions.forced(lsh={"threshold": 2}):
+        chunked = _pairs(Q["dedup_minhash_lsh"].builder(spark, sf_dir))
+    assert plain == chunked
 
 
 def test_lsh_auto_hot_bucket_engages_on_boilerplate(spark, tmp_path, monkeypatch):
     """AQE-style auto decision (VERDICT r3 task 5): on a corpus where
     one boilerplate band bucket is ≥100× the median bucket size, the
-    chunked candidate route must engage WITHOUT the env knob, and its
-    pair set must equal the forced-plain path's exactly."""
+    chunked candidate route must engage WITHOUT forcing, and its pair
+    set must equal the forced-plain path's exactly."""
     import multithreaded_mapreduce_spark.operators.dedup as dd
 
     # 120 near-identical boilerplate docs (30 shared tokens + 1 unique
@@ -53,7 +54,6 @@ def test_lsh_auto_hot_bucket_engages_on_boilerplate(spark, tmp_path, monkeypatch
         "overwrite"
     ).parquet(str(tmp_path / "documents.parquet"))
     fixture_dir = str(tmp_path)
-    monkeypatch.delenv("MMR_LSH_HOT_BUCKET", raising=False)
     # scale the absolute floor down to fixture size; the ≥FACTOR×median
     # skew rule is what the fixture exercises
     monkeypatch.setattr(dd, "LSH_AUTO_HOT_FLOOR", 16)
@@ -67,8 +67,8 @@ def test_lsh_auto_hot_bucket_engages_on_boilerplate(spark, tmp_path, monkeypatch
     monkeypatch.setattr(dd, "_lsh_chunked_candidates", spy)
     auto = _pairs(Q["dedup_minhash_lsh"].builder(spark, fixture_dir))
     assert engaged.get("thr", 0) >= 16, "chunked path did not auto-engage"
-    monkeypatch.setenv("MMR_LSH_HOT_BUCKET", "-1")  # force plain
-    plain = _pairs(Q["dedup_minhash_lsh"].builder(spark, fixture_dir))
+    with decisions.forced(lsh={"threshold": 0}):  # plain join
+        plain = _pairs(Q["dedup_minhash_lsh"].builder(spark, fixture_dir))
     assert auto == plain
     assert len(auto) >= 100  # the boilerplate clique is actually found
 
@@ -78,7 +78,6 @@ def test_lsh_auto_stays_plain_on_ordinary_corpus(spark, sf_dir, monkeypatch):
     auto rule must keep the measured-faster plain self-join."""
     import multithreaded_mapreduce_spark.operators.dedup as dd
 
-    monkeypatch.delenv("MMR_LSH_HOT_BUCKET", raising=False)
     engaged: dict[str, int] = {}
     monkeypatch.setattr(
         dd,
@@ -89,7 +88,7 @@ def test_lsh_auto_stays_plain_on_ordinary_corpus(spark, sf_dir, monkeypatch):
     assert "thr" not in engaged
 
 
-def test_lsh_auto_decision_is_memoized_per_corpus(spark, sf_dir, monkeypatch):
+def test_lsh_auto_decision_is_memoized_per_corpus(spark, sf_dir):
     """Repeat invocations on the same corpus must not re-pay the
     bucket-stats sampling job (VERDICT r4 'what's wrong' #1): the
     decision is memoized per (corpus, rule-params) epoch. Proven by
@@ -97,7 +96,7 @@ def test_lsh_auto_decision_is_memoized_per_corpus(spark, sf_dir, monkeypatch):
     missed, the probe would touch it and blow up."""
     import multithreaded_mapreduce_spark.operators.dedup as dd
 
-    dd.clear_lsh_decision_cache()
+    decisions.clear()
     bands_like = (
         Q["dedup_minhash_lsh"]
         .builder(spark, sf_dir)
@@ -107,25 +106,22 @@ def test_lsh_auto_decision_is_memoized_per_corpus(spark, sf_dir, monkeypatch):
         .withColumn("n", dd.F.lit(1))
     )
     key = ("k", dd.LSH_AUTO_HOT_FLOOR, dd.LSH_AUTO_HOT_FACTOR)
-    first = dd._lsh_auto_hot_threshold(bands_like, cache_key=key)
+    first = dd._lsh_auto_hot_threshold(bands_like, key)
 
     class Poisoned:
         def groupBy(self, *a, **k):  # pragma: no cover - must not run
             raise AssertionError("sampling job ran despite memo")
 
-    second = dd._lsh_auto_hot_threshold(Poisoned(), cache_key=key)
+    second = dd._lsh_auto_hot_threshold(Poisoned(), key)
     assert second == first
-    assert dd.LAST_LSH_DECISION["threshold"] == first
+    assert decisions.record()["lsh"]["threshold"] == first
     # and the end-to-end builder actually uses the memo: run it twice,
     # the second build must reuse the cached decision object
-    dd.clear_lsh_decision_cache()
-    monkeypatch.delenv("MMR_LSH_HOT_BUCKET", raising=False)
+    decisions.clear()
     Q["dedup_minhash_lsh"].builder(spark, sf_dir).count()
-    cached = dict(dd.LAST_LSH_DECISION)
-    assert len(dd._LSH_DECISION_CACHE) == 1
+    cached = decisions.record()["lsh"]
     Q["dedup_minhash_lsh"].builder(spark, sf_dir).count()
-    assert dd.LAST_LSH_DECISION == cached
-    assert len(dd._LSH_DECISION_CACHE) == 1
+    assert decisions.record()["lsh"] is cached
 
 
 def test_minhash_verified_subset_of_exact_with_high_recall(spark, sf_dir):
@@ -256,31 +252,30 @@ def test_containment_catches_jaccard_invisible_subsets(spark, tmp_path):
         assert (da, db) in got or (db, da) in got
 
 
-def test_containment_paths_are_equivalent_and_auto_decides(spark, sf_dir, monkeypatch):
+def test_containment_paths_are_equivalent_and_auto_decides(spark, sf_dir):
     """The prefix-filter and nested-loop candidate paths must produce
     the identical directed pair set; the auto decision must pick the
     nested loop on this hot-vocabulary corpus (witness stream exceeds
     |G|^2) and memoize per corpus."""
-    import multithreaded_mapreduce_spark.operators.dedup as dd
-
     def triples(df):
         return sorted(tuple(r) for r in df.collect())
 
-    monkeypatch.setenv("MMR_CONTAINMENT_PATH", "prefix")
-    via_prefix = triples(Q["dedup_containment"].builder(spark, sf_dir))
-    monkeypatch.setenv("MMR_CONTAINMENT_PATH", "nested")
-    via_nested = triples(Q["dedup_containment"].builder(spark, sf_dir))
+    with decisions.forced(containment={"use_prefix": True}):
+        via_prefix = triples(Q["dedup_containment"].builder(spark, sf_dir))
+    with decisions.forced(containment={"use_prefix": False}):
+        via_nested = triples(Q["dedup_containment"].builder(spark, sf_dir))
     assert via_prefix == via_nested
     assert len(via_prefix) > 0
-    monkeypatch.delenv("MMR_CONTAINMENT_PATH", raising=False)
-    dd._CONTAIN_DECISION_CACHE.clear()
+    decisions.clear()
     auto = triples(Q["dedup_containment"].builder(spark, sf_dir))
     assert auto == via_nested
-    d = dd.LAST_CONTAINMENT_DECISION
+    d = decisions.record()["containment"]
     assert d["use_prefix"] is (
         (d["witness_rows"] < d["nested_pairs"]) or d["nested_capped"]
     )
-    assert len(dd._CONTAIN_DECISION_CACHE) == 1
+    # memoized: a second build reuses the stored decision
+    Q["dedup_containment"].builder(spark, sf_dir)
+    assert decisions.record()["containment"] is d
 
 
 def test_containment_nested_cap_forces_prefix(spark, sf_dir, monkeypatch):
@@ -294,14 +289,13 @@ def test_containment_nested_cap_forces_prefix(spark, sf_dir, monkeypatch):
     def triples(df):
         return sorted(tuple(r) for r in df.collect())
 
-    monkeypatch.setenv("MMR_CONTAINMENT_PATH", "nested")
-    via_nested = triples(Q["dedup_containment"].builder(spark, sf_dir))
-    monkeypatch.delenv("MMR_CONTAINMENT_PATH", raising=False)
+    with decisions.forced(containment={"use_prefix": False}):
+        via_nested = triples(Q["dedup_containment"].builder(spark, sf_dir))
     monkeypatch.setattr(dd, "_NESTED_MAX_GROUPS", 1)
-    dd._CONTAIN_DECISION_CACHE.clear()
+    decisions.clear()
     capped = triples(Q["dedup_containment"].builder(spark, sf_dir))
-    d = dd.LAST_CONTAINMENT_DECISION
-    dd._CONTAIN_DECISION_CACHE.clear()
+    d = decisions.record()["containment"]
+    decisions.clear()
     assert d["nested_capped"] is True
     assert d["use_prefix"] is True
     assert capped == via_nested
@@ -318,30 +312,29 @@ def test_jaccard_broadcast_guard_both_sides(spark, sf_dir, monkeypatch):
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
 
-    monkeypatch.setenv("MMR_JACCARD_PATH", "broadcast")
-    via_broadcast = rows(Q["dedup_jaccard_pairs"].builder(spark, sf_dir))
-    monkeypatch.setenv("MMR_JACCARD_PATH", "postings")
-    via_postings = rows(Q["dedup_jaccard_pairs"].builder(spark, sf_dir))
+    with decisions.forced(jaccard={"use_broadcast": True}):
+        via_broadcast = rows(Q["dedup_jaccard_pairs"].builder(spark, sf_dir))
+    with decisions.forced(jaccard={"use_broadcast": False}):
+        via_postings = rows(Q["dedup_jaccard_pairs"].builder(spark, sf_dir))
     assert via_broadcast == via_postings
     assert len(via_broadcast) > 0
-    monkeypatch.delenv("MMR_JACCARD_PATH", raising=False)
     # under the default budget this corpus broadcasts
-    dd._JACCARD_DECISION_CACHE.clear()
+    decisions.clear()
     auto = rows(Q["dedup_jaccard_pairs"].builder(spark, sf_dir))
     assert auto == via_broadcast
-    assert dd.LAST_JACCARD_DECISION["use_broadcast"] is True
-    assert dd.LAST_JACCARD_DECISION["est_bytes"] > 0
+    assert decisions.record()["jaccard"]["use_broadcast"] is True
+    assert decisions.record()["jaccard"]["est_bytes"] > 0
     # over budget: the decision flips, output is unchanged
     monkeypatch.setattr(dd, "_BROADCAST_BUDGET_BYTES", 1)
-    dd._JACCARD_DECISION_CACHE.clear()
+    decisions.clear()
     fallback = rows(Q["dedup_jaccard_pairs"].builder(spark, sf_dir))
-    d = dd.LAST_JACCARD_DECISION
-    dd._JACCARD_DECISION_CACHE.clear()
+    d = decisions.record()["jaccard"]
+    decisions.clear()
     assert d["use_broadcast"] is False
     assert fallback == via_broadcast
 
 
-def test_ngram_df_cut_noop_when_no_shingle_crosses(spark, sf_dir, monkeypatch):
+def test_ngram_df_cut_noop_when_no_shingle_crosses(spark, sf_dir):
     """VERDICT r5 task 4: on a corpus where no shingle's doc frequency
     crosses NUM/DEN of the docs (the production sf fixtures — word-soup
     trigram diversity keeps every df tiny), the df-cut must be a pure
@@ -351,15 +344,13 @@ def test_ngram_df_cut_noop_when_no_shingle_crosses(spark, sf_dir, monkeypatch):
         return sorted(tuple(r) for r in df.collect())
 
     with_cut = rows(Q["dedup_ngram_jaccard"].builder(spark, sf_dir))
-    monkeypatch.setenv("MMR_NGRAM_DF_CUT", "off")
-    without = rows(Q["dedup_ngram_jaccard"].builder(spark, sf_dir))
+    with decisions.forced(ngram_dfcut={"engage": False}):
+        without = rows(Q["dedup_ngram_jaccard"].builder(spark, sf_dir))
     assert with_cut == without
     assert len(with_cut) > 0
 
 
-def test_ngram_df_cut_fires_on_boilerplate_and_matches_oracle(
-    spark, tmp_path, monkeypatch
-):
+def test_ngram_df_cut_fires_on_boilerplate_and_matches_oracle(spark, tmp_path):
     """When a boilerplate phrase rides in EVERY document, its shingles
     alone push unrelated docs over the 0.5 jaccard bar (3 shared of 5
     shingles = 0.6). The df-cut must remove exactly those pairs while
@@ -380,9 +371,8 @@ def test_ngram_df_cut_fires_on_boilerplate_and_matches_oracle(
     # only the genuine duplicate pair survives the cut
     assert got == [(100, 101, 1.0)]
     # without the cut the boilerplate manufactures all 45 cross pairs
-    monkeypatch.setenv("MMR_NGRAM_DF_CUT", "off")
-    uncut = sorted(tuple(r) for r in q.builder(spark, str(tmp_path)).collect())
-    monkeypatch.delenv("MMR_NGRAM_DF_CUT", raising=False)
+    with decisions.forced(ngram_dfcut={"engage": False}):
+        uncut = sorted(tuple(r) for r in q.builder(spark, str(tmp_path)).collect())
     assert len(uncut) == 45 + 1
     # the registered oracle replays the same cut
     con = duckdb.connect()
@@ -393,7 +383,7 @@ def test_ngram_df_cut_fires_on_boilerplate_and_matches_oracle(
     assert [tuple(r) for r in con.execute(q.oracle).fetchall()] == [(100, 101, 1.0)]
 
 
-def test_ngram_df_cut_probe_engages_and_disengages(spark, tmp_path, monkeypatch):
+def test_ngram_df_cut_probe_engages_and_disengages(spark, tmp_path):
     """The memoized sampling probe must (a) DISENGAGE the df pass on a
     large corpus with no hot shingle — the plan then equals the cut-off
     plan — and (b) ENGAGE on a large corpus where boilerplate rides in
@@ -409,19 +399,18 @@ def test_ngram_df_cut_probe_engages_and_disengages(spark, tmp_path, monkeypatch)
     spark.createDataFrame(
         uniq, "doc_id long, text string, lang string, source string"
     ).write.mode("overwrite").parquet(str(d_a / "documents.parquet"))
-    dd._NGRAM_DFCUT_DECISION_CACHE.clear()
+    decisions.clear()
     got = rows(Q["dedup_ngram_jaccard"].builder(spark, str(d_a)))
-    dec = dict(dd.LAST_NGRAM_DFCUT_DECISION)
+    stored = decisions.record()["ngram_dfcut"]
+    dec = dict(stored)
     assert dec["engage"] is False, dec
     assert dec["sample_docs"] >= dd._NGRAM_PROBE_MIN_DOCS
-    monkeypatch.setenv("MMR_NGRAM_DF_CUT", "off")
-    assert got == rows(Q["dedup_ngram_jaccard"].builder(spark, str(d_a)))
-    monkeypatch.delenv("MMR_NGRAM_DF_CUT", raising=False)
-    # memoized: a second build must reuse the cached decision
-    assert len(dd._NGRAM_DFCUT_DECISION_CACHE) == 1
+    with decisions.forced(ngram_dfcut={"engage": False}):
+        assert got == rows(Q["dedup_ngram_jaccard"].builder(spark, str(d_a)))
+    # memoized: a second build must reuse the stored decision
     Q["dedup_ngram_jaccard"].builder(spark, str(d_a)).count()
-    assert len(dd._NGRAM_DFCUT_DECISION_CACHE) == 1
-    assert dd.LAST_NGRAM_DFCUT_DECISION == dec
+    assert decisions.record()["ngram_dfcut"] is stored
+    assert stored == dec
 
     # (b) 4000 docs sharing a boilerplate phrase + unique tails: without
     # the cut every cross pair scores 3/5 = 0.6; the probe must fire the
@@ -431,10 +420,10 @@ def test_ngram_df_cut_probe_engages_and_disengages(spark, tmp_path, monkeypatch)
     spark.createDataFrame(
         boiler, "doc_id long, text string, lang string, source string"
     ).write.mode("overwrite").parquet(str(d_b / "documents.parquet"))
-    dd._NGRAM_DFCUT_DECISION_CACHE.clear()
+    decisions.clear()
     got_b = rows(Q["dedup_ngram_jaccard"].builder(spark, str(d_b)))
-    dec_b = dict(dd.LAST_NGRAM_DFCUT_DECISION)
-    dd._NGRAM_DFCUT_DECISION_CACHE.clear()
+    dec_b = dict(decisions.record()["ngram_dfcut"])
+    decisions.clear()
     assert dec_b["engage"] is True, dec_b
     assert dec_b["sample_max_df"] * 2 * dd.NGRAM_DF_CUT_DEN >= (
         dec_b["sample_docs"] * dd.NGRAM_DF_CUT_NUM
@@ -442,7 +431,7 @@ def test_ngram_df_cut_probe_engages_and_disengages(spark, tmp_path, monkeypatch)
     assert got_b == []
 
 
-def test_ngram_df_cut_margin_confirm_decision_shape(spark, tmp_path, monkeypatch):
+def test_ngram_df_cut_margin_confirm_decision_shape(spark, tmp_path):
     """VERDICT r7 task 8: pin the decision dict's exact shape on BOTH
     sides of the margin-confirm branch (ADVICE r6). The fixtures are
     built sample-aware — boilerplate membership is assigned per doc
@@ -492,12 +481,11 @@ def test_ngram_df_cut_margin_confirm_decision_shape(spark, tmp_path, monkeypatch
         ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
         return str(d)
 
-    monkeypatch.delenv("MMR_NGRAM_DF_CUT", raising=False)
     # (a) sampled fraction 0.18 (margin), full fraction ~0.18 (< 1/2)
     d_a = build("margin_disengage", 0.18, 0.18)
-    dd._NGRAM_DFCUT_DECISION_CACHE.clear()
+    decisions.clear()
     Q["dedup_ngram_jaccard"].builder(spark, d_a).count()
-    dec = dict(dd.LAST_NGRAM_DFCUT_DECISION)
+    dec = dict(decisions.record()["ngram_dfcut"])
     assert set(dec) == {
         "sample_docs",
         "sample_max_df",
@@ -519,10 +507,10 @@ def test_ngram_df_cut_margin_confirm_decision_shape(spark, tmp_path, monkeypatch
     # (b) same sampled fraction, but 60% of UNSAMPLED docs boilerplate:
     # the confirm pass must catch the true crossing the sample missed
     d_b = build("margin_engage", 0.18, 0.60)
-    dd._NGRAM_DFCUT_DECISION_CACHE.clear()
+    decisions.clear()
     Q["dedup_ngram_jaccard"].builder(spark, d_b).count()
-    dec_b = dict(dd.LAST_NGRAM_DFCUT_DECISION)
-    dd._NGRAM_DFCUT_DECISION_CACHE.clear()
+    dec_b = dict(decisions.record()["ngram_dfcut"])
+    decisions.clear()
     assert set(dec_b) == set(dec)
     assert dec_b["engage"] is True, dec_b
     assert (
@@ -537,10 +525,10 @@ def test_ngram_df_cut_margin_confirm_decision_shape(spark, tmp_path, monkeypatch
     spark.createDataFrame(
         uniq, "doc_id long, text string, lang string, source string"
     ).write.mode("overwrite").parquet(str(d_c / "documents.parquet"))
-    dd._NGRAM_DFCUT_DECISION_CACHE.clear()
+    decisions.clear()
     Q["dedup_ngram_jaccard"].builder(spark, str(d_c)).count()
-    dec_c = dict(dd.LAST_NGRAM_DFCUT_DECISION)
-    dd._NGRAM_DFCUT_DECISION_CACHE.clear()
+    dec_c = dict(decisions.record()["ngram_dfcut"])
+    decisions.clear()
     assert set(dec_c) == {"sample_docs", "sample_max_df", "engage"}
     assert dec_c["engage"] is False
 

@@ -83,20 +83,47 @@ def test_survey_registry_index_is_exact():
     assert starred == rows_only, (starred ^ rows_only)
 
 
-def test_readme_knob_table_matches_package_env_reads():
-    """The README's environment-knob table lists exactly the MMR_*
-    variables the package source reads — a new knob must be documented,
-    a deleted one must leave the table (ROADMAP: knob creep)."""
+def _package_sources() -> dict[str, str]:
     import pathlib
 
     pkg = pathlib.Path(f"{REPO}/multithreaded_mapreduce_spark")
+    return {str(f): f.read_text() for f in pkg.rglob("*.py")}
+
+
+def test_readme_knob_table_matches_package_env_reads():
+    """The package reads no ``MMR_*`` environment variable and the
+    README lists none (ROADMAP: knob creep): a measured site is forced
+    in-process through ``plans.decisions.forced``, and tuning values
+    are module constants."""
     read = set()
-    for f in pkg.rglob("*.py"):
-        read |= set(re.findall(r"""["'](MMR_[A-Z0-9_]+)["']""", f.read_text()))
+    for text in _package_sources().values():
+        read |= set(re.findall(r"""["'](MMR_[A-Z0-9_]+)["']""", text))
+    assert not read, f"package reads env knobs: {sorted(read)}"
     readme = open(f"{REPO}/README.md").read()
-    start = readme.index("## Environment knobs")
+    assert not re.findall(r"^\| `MMR_[A-Z0-9_]+` \|", readme, re.M)
+
+
+def test_readme_decision_sites_match_package():
+    """The README's decision-site table lists exactly the site names the
+    package passes to ``decide``/``note`` — a new site must be
+    documented, a deleted one must leave the table."""
+    used = set()
+    for text in _package_sources().values():
+        used |= set(re.findall(r'\b(?:decide|note)\(\s*"([a-z_]+)"', text))
+    readme = open(f"{REPO}/README.md").read()
+    start = readme.index("## Decision sites")
     end = readme.index("\n## ", start + 1)
-    table = set(re.findall(r"^\| `(MMR_[A-Z0-9_]+)` \|", readme[start:end], re.M))
-    assert table == read, (
-        f"undocumented: {sorted(read - table)}; stale: {sorted(table - read)}"
-    )
+    table = set(re.findall(r"^\| `([a-z_]+)` \|", readme[start:end], re.M))
+    assert table == used, f"undocumented: {sorted(used - table)}; stale: {sorted(table - used)}"
+    assert len(used) == 14
+
+
+def test_no_module_defines_last_globals():
+    """Decisions live in the per-query record, not in module globals
+    read after the fact."""
+    defined = [
+        (f, m)
+        for f, text in _package_sources().items()
+        for m in re.findall(r"^(LAST_[A-Z0-9_]*)\s*[:=]", text, re.M)
+    ]
+    assert not defined, defined

@@ -16,6 +16,7 @@ import hashlib
 import pytest
 
 import multithreaded_mapreduce_spark.operators.dedup as dd
+from multithreaded_mapreduce_spark.plans import decisions
 from multithreaded_mapreduce_spark.plans.registry import all_queries
 from multithreaded_mapreduce_spark.plans.verification import (
     compare_query,
@@ -68,7 +69,7 @@ def test_decision_is_memoized_per_corpus(spark, sf_dir):
     first = dd._eval_sample_decision(spark, sf_dir, target=FORCED_TARGET)
     again = dd._eval_sample_decision(spark, sf_dir, target=FORCED_TARGET)
     assert again is first
-    assert dd.LAST_EVAL_SAMPLE_DECISION is first
+    assert decisions.record()["eval_sample"] is first
 
 
 def test_sampled_docs_match_python_md5(spark, sf_dir):
@@ -149,8 +150,8 @@ def test_forced_sampling_full_query_parity(spark, sf_dir, name, monkeypatch):
     driver applies to the k=1 path."""
     monkeypatch.setattr(dd, "EVAL_SAMPLE_TARGET_DOCS", FORCED_TARGET)
     compare_query(spark, sf_dir, Q[name].builder, _force_target_oracle(name))
-    assert dd.LAST_EVAL_SAMPLE_DECISION["engaged"] is True
-    assert dd.LAST_EVAL_SAMPLE_DECISION["modulus"] == 5
+    assert decisions.record()["eval_sample"]["engaged"] is True
+    assert decisions.record()["eval_sample"]["modulus"] == 5
 
 
 def test_pair_memo_is_shared_across_eval_consumers(spark, sf_dir):
@@ -220,5 +221,5 @@ def test_engaged_modulus_parity_at_sf01(spark, name):
     if not os.path.isdir(sf01):
         pytest.skip("sf0.1 data not present")
     compare_query(spark, sf01, Q[name].builder, Q[name].oracle)
-    assert dd.LAST_EVAL_SAMPLE_DECISION["modulus"] == 3
-    assert dd.LAST_EVAL_SAMPLE_DECISION["engaged"] is True
+    assert decisions.record()["eval_sample"]["modulus"] == 3
+    assert decisions.record()["eval_sample"]["engaged"] is True

@@ -129,11 +129,12 @@ def test_pack_prefix_sum_matches_python_simulation(spark):
 
 def test_contracted_components_bcast_and_shuffle_paths_agree(spark, monkeypatch):
     """r7 path equivalence: the label-relation broadcast decision
-    (SPARK_GRAFT_CC_BCAST_MAX_NODES) is plan-only — forcing the
+    (dedup.CC_BCAST_MAX_NODES) is plan-only — forcing the
     shuffle path (ceiling 0) and the broadcast path (huge ceiling)
     must label a random graph identically, and the stamped decision
     must reflect each forced path."""
     from multithreaded_mapreduce_spark.operators import dedup as D
+    from multithreaded_mapreduce_spark.plans import decisions
     from multithreaded_mapreduce_spark.plans.caching import release_tracked
 
     rng = random.Random(271828)
@@ -143,14 +144,14 @@ def test_contracted_components_bcast_and_shuffle_paths_agree(spark, monkeypatch)
         edges.add((min(a, b), max(a, b)))
     pairs = spark.createDataFrame(sorted(edges), "ga long, gb long")
 
-    monkeypatch.setenv("SPARK_GRAFT_CC_BCAST_MAX_NODES", "0")
+    monkeypatch.setattr(D, "CC_BCAST_MAX_NODES", 0)
     shuffled = {r.node: r.label for r in D._contracted_components(pairs).collect()}
-    assert D.LAST_CC_BCAST_DECISION["broadcast"] is False
+    assert decisions.record()["cc_bcast"]["broadcast"] is False
     release_tracked()
 
-    monkeypatch.setenv("SPARK_GRAFT_CC_BCAST_MAX_NODES", "10000000")
+    monkeypatch.setattr(D, "CC_BCAST_MAX_NODES", 10_000_000)
     bcast = {r.node: r.label for r in D._contracted_components(pairs).collect()}
-    assert D.LAST_CC_BCAST_DECISION["broadcast"] is True
+    assert decisions.record()["cc_bcast"]["broadcast"] is True
     release_tracked()
 
     assert shuffled == bcast

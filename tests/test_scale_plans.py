@@ -11,6 +11,7 @@ from contextlib import redirect_stdout
 from pyspark.sql import functions as F
 
 from multithreaded_mapreduce_spark.operators.skew import salted_join
+from multithreaded_mapreduce_spark.plans import decisions
 from multithreaded_mapreduce_spark.plans.registry import all_queries
 from multithreaded_mapreduce_spark.sinks import format_console, write_csv, write_parquet
 from multithreaded_mapreduce_spark.sources.tables import load_table
@@ -241,7 +242,7 @@ def test_salted_join_correct_under_adversarial_hot_key(spark):
     assert max(counts) < 2 * min(counts), counts
 
 
-def test_skew_auto_join_paths_equivalent_and_plain_on_uniform(spark, sf_dir, monkeypatch):
+def test_skew_auto_join_paths_equivalent_and_plain_on_uniform(spark, sf_dir):
     """VERDICT r7 task 4: the measured skew decision. All three forced
     paths (plain / AQE-shuffled / salted) return identical rows, and on
     the near-uniform fixture events (max straggler factor ~1.3) the
@@ -253,29 +254,27 @@ def test_skew_auto_join_paths_equivalent_and_plain_on_uniform(spark, sf_dir, mon
 
     got = {}
     for path in ("plain", "aqe", "salted"):
-        monkeypatch.setenv("MMR_SKEW_JOIN_PATH", path)
-        got[path] = rows(Q["skew_auto_join"].builder(spark, sf_dir))
-        assert sk.LAST_SKEW_JOIN_DECISION == {"forced": path, "path": path}
+        with decisions.forced(skew_join={"path": path}):
+            got[path] = rows(Q["skew_auto_join"].builder(spark, sf_dir))
+        assert decisions.record()["skew_join"] == {"forced": True, "path": path}
     assert got["plain"] == got["aqe"] == got["salted"]
     assert len(got["plain"]) > 0
-    monkeypatch.delenv("MMR_SKEW_JOIN_PATH", raising=False)
-    sk._SKEW_JOIN_DECISION_CACHE.clear()
+    decisions.clear()
     auto = rows(Q["skew_auto_join"].builder(spark, sf_dir))
-    d = sk.LAST_SKEW_JOIN_DECISION
+    d = decisions.record()["skew_join"]
     assert auto == got["plain"]
     assert d["path"] == "plain"
     assert 0 < d["max_x_uniform"] < sk.SKEW_AQE_MIN_X
     assert d["ndv"] > 0 and d["total"] >= d["ndv"]
     # memoized: a second build must reuse the cached decision object
     again = rows(Q["skew_auto_join"].builder(spark, sf_dir))
-    assert again == auto and sk.LAST_SKEW_JOIN_DECISION is d
-    assert len(sk._SKEW_JOIN_DECISION_CACHE) == 1
+    assert again == auto and decisions.record()["skew_join"] is d
 
 
-def test_skew_auto_join_engages_salted_on_hot_key(spark, tmp_path, monkeypatch):
+def test_skew_auto_join_engages_salted_on_hot_key(spark, tmp_path):
     """On a corpus where one user carries ~95% of the events (straggler
     factor far past SALT_MIN_X) the auto rule must pick the salted
-    rewrite WITHOUT the env knob — and its answer must equal the
+    rewrite WITHOUT forcing — and its answer must equal the
     forced-plain join's exactly."""
     from pyspark.sql import functions as F
 
@@ -297,15 +296,14 @@ def test_skew_auto_join_engages_salted_on_hot_key(spark, tmp_path, monkeypatch):
     customer.write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
     fixture = str(tmp_path)
 
-    monkeypatch.delenv("MMR_SKEW_JOIN_PATH", raising=False)
-    sk._SKEW_JOIN_DECISION_CACHE.clear()
+    decisions.clear()
     auto = sorted(tuple(r) for r in Q["skew_auto_join"].builder(spark, fixture).collect())
-    d = dict(sk.LAST_SKEW_JOIN_DECISION)
+    d = dict(decisions.record()["skew_join"])
     assert d["path"] == "salted", d
     assert d["max_x_uniform"] >= sk.SKEW_SALT_MIN_X
-    monkeypatch.setenv("MMR_SKEW_JOIN_PATH", "plain")
-    plain = sorted(tuple(r) for r in Q["skew_auto_join"].builder(spark, fixture).collect())
-    sk._SKEW_JOIN_DECISION_CACHE.clear()
+    with decisions.forced(skew_join={"path": "plain"}):
+        plain = sorted(tuple(r) for r in Q["skew_auto_join"].builder(spark, fixture).collect())
+    decisions.clear()
     assert auto == plain and len(auto) > 0
 
 

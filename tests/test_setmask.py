@@ -8,18 +8,19 @@ collects at most SETMASK_MAX_VOCAB + 1 distinct token ids and picks:
 
 * the EXACT branch (vocabulary at or under the cap): dense-rank bit
   positions, c = popcount(a & b) over ceil(n/64) words;
-* the HASHED branch (over the cap, or MMR_SETMASK=off): the exact
+* the HASHED branch (over the cap, or forced with
+  ``decisions.forced(encoding={"exact": False})``): the exact
   array_intersect, CASE-guarded at the |G|²-candidate sites by a
   pmod(id, 1024) bitmap upper bound on |A∩B|.
 
 What needs coverage:
 
-* off (hashed) and auto (exact) return the same rows at all five sites,
+* forced hashed and auto (exact) return the same rows at all five sites,
   on the 31-token corpus (W = 1) and on a ~90-token corpus (W = 2);
 * the hashed branch matches the DuckDB oracle at every oracle-bearing
   site, and the W = 2 exact branch does too;
 * the cap boundary: exactly SETMASK_MAX_VOCAB ids is exact, one more is
-  hashed; the kill switch forces hashed;
+  hashed; forcing takes the hashed branch without measuring;
 * bit positions cross the 64-bit word boundary correctly;
 * the union bound is an upper bound however ids collide, and the
   guard's −1 sentinel never passes a threshold;
@@ -36,6 +37,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import multithreaded_mapreduce_spark.operators.dedup as dd
+from multithreaded_mapreduce_spark.plans import decisions
 from multithreaded_mapreduce_spark.plans.caching import (
     release_result_memos,
     release_tracked,
@@ -93,25 +95,31 @@ def _snapshot(spark, name: str, sf_dir: str):
     return sorted(tuple(r) for r in _Q[name].builder(spark, sf_dir).collect())
 
 
-def _off_auto(spark, name: str, sf_dir: str, monkeypatch):
-    monkeypatch.setenv("MMR_SETMASK", "off")
-    dd._ENCODING_DECISION_CACHE.clear()
-    off = _snapshot(spark, name, sf_dir)
-    assert dd.LAST_ENCODING_DECISION["exact"] is False
-    monkeypatch.setenv("MMR_SETMASK", "auto")
-    dd._ENCODING_DECISION_CACHE.clear()
+_HASHED = {"encoding": {"exact": False}}
+
+
+def _encoding() -> dict:
+    return decisions.record()["encoding"]
+
+
+def _off_auto(spark, name: str, sf_dir: str):
+    decisions.clear()
+    with decisions.forced(**_HASHED):
+        off = _snapshot(spark, name, sf_dir)
+    assert _encoding()["exact"] is False
+    decisions.clear()
     on = _snapshot(spark, name, sf_dir)
-    assert dd.LAST_ENCODING_DECISION["exact"], dd.LAST_ENCODING_DECISION
+    assert _encoding()["exact"], _encoding()
     return off, on
 
 
 @pytest.mark.parametrize("name", _SITE_QUERIES)
-def test_off_auto_identity_narrow(spark, name, monkeypatch):
+def test_off_auto_identity_narrow(spark, name):
     """31-token corpus: the W = 1 exact branch and the hashed branch
     return the identical row multiset — the encoding is a pure plan
     decision."""
-    off, on = _off_auto(spark, name, SF_DIR, monkeypatch)
-    assert dd.LAST_ENCODING_DECISION["n_words"] == 1, dd.LAST_ENCODING_DECISION
+    off, on = _off_auto(spark, name, SF_DIR)
+    assert _encoding()["n_words"] == 1, _encoding()
     assert off == on
     assert len(on) > 0
 
@@ -121,11 +129,11 @@ def test_off_auto_identity_narrow(spark, name, monkeypatch):
     ["dedup_jaccard_pairs", "dedup_minhash_verified", "dedup_components",
      "dedup_containment", "dedup_incremental_neardup", "dedup_minhash_lsh"],
 )
-def test_multiword_mask_off_on_identity(spark, wide_vocab_dir, name, monkeypatch):
+def test_multiword_mask_off_on_identity(spark, wide_vocab_dir, name):
     """W = 2 exact branch returns the identical row multiset as the
     hashed branch."""
-    off, on = _off_auto(spark, name, wide_vocab_dir, monkeypatch)
-    assert dd.LAST_ENCODING_DECISION["n_words"] >= 2, dd.LAST_ENCODING_DECISION
+    off, on = _off_auto(spark, name, wide_vocab_dir)
+    assert _encoding()["n_words"] >= 2, _encoding()
     assert off == on
     assert len(on) > 0  # the fixture plants real dup/near-dup pairs
 
@@ -133,10 +141,10 @@ def test_multiword_mask_off_on_identity(spark, wide_vocab_dir, name, monkeypatch
 def test_multiword_mask_oracle_parity(spark, wide_vocab_dir):
     """The W = 2 exact branch also matches the registered DuckDB oracle
     (value hash, not just self-consistency)."""
-    dd._ENCODING_DECISION_CACHE.clear()
+    decisions.clear()
     for name in ("dedup_jaccard_pairs", "dedup_minhash_verified"):
         compare_query(spark, wide_vocab_dir, _Q[name].builder, _Q[name].oracle)
-    assert dd.LAST_ENCODING_DECISION["exact"]
+    assert _encoding()["exact"]
 
 
 @pytest.mark.parametrize(
@@ -144,15 +152,15 @@ def test_multiword_mask_oracle_parity(spark, wide_vocab_dir):
     ["dedup_jaccard_pairs", "dedup_components", "dedup_containment",
      "dedup_minhash_verified", "dedup_incremental_neardup"],
 )
-def test_hashed_branch_oracle_parity(spark, name, monkeypatch):
+def test_hashed_branch_oracle_parity(spark, name):
     """Every oracle-bearing site on the hashed branch (the real-corpus
     branch: guarded intersect at the cross/containment sites, plain
     intersect at the banding sites) matches DuckDB."""
-    monkeypatch.setenv("MMR_SETMASK", "off")
     release_tracked()
     release_result_memos()
-    compare_query(spark, SF_DIR, _Q[name].builder, _Q[name].oracle)
-    assert dd.LAST_ENCODING_DECISION.get("forced") == "off"
+    with decisions.forced(**_HASHED):
+        compare_query(spark, SF_DIR, _Q[name].builder, _Q[name].oracle)
+    assert _encoding() == {"exact": False, "forced": True}
 
 
 def test_sampled_variants_identical(spark, monkeypatch):
@@ -161,7 +169,6 @@ def test_sampled_variants_identical(spark, monkeypatch):
     decision keyed by the sample modulus, and equals the hashed
     branch's output."""
     monkeypatch.setattr(dd, "EVAL_SAMPLE_TARGET_DOCS", 100)  # force k > 1
-    dd._EVAL_SAMPLE_CACHE.clear()
 
     def eval_pairs_rows():
         release_tracked()
@@ -169,33 +176,29 @@ def test_sampled_variants_identical(spark, monkeypatch):
         spark.catalog.clearCache()
         return sorted(tuple(r) for r in dd._eval_pairs(spark, SF_DIR).collect())
 
-    monkeypatch.setenv("MMR_SETMASK", "off")
-    dd._ENCODING_DECISION_CACHE.clear()
-    off = eval_pairs_rows()
-    monkeypatch.setenv("MMR_SETMASK", "auto")
-    dd._ENCODING_DECISION_CACHE.clear()
+    decisions.clear()
+    with decisions.forced(**_HASHED):
+        off = eval_pairs_rows()
+    decisions.clear()
     on = eval_pairs_rows()
+    sampled = _encoding()
     assert off == on and len(on) > 0
     k = dd._eval_sample_decision(spark, SF_DIR)["modulus"]
     assert k > 1
-    sampled = [
-        d for (_s, site), d in dd._ENCODING_DECISION_CACHE.items()
-        if site == f"jaccard_groupssample{k}"
-    ]
-    assert sampled and all(d["exact"] for d in sampled), sampled
+    assert sampled["site"] == f"jaccard_groupssample{k}" and sampled["exact"], sampled
 
 
-def test_cap_and_kill_switch_disengage(spark, monkeypatch):
+def test_cap_and_kill_switch_disengage(spark):
     """Exactly SETMASK_MAX_VOCAB distinct ids take the exact branch at
-    full width; one more id takes the hashed branch; MMR_SETMASK=off
-    forces the hashed branch without measuring."""
+    full width; one more id takes the hashed branch; forcing the hashed
+    branch skips the measurement and is never memoized."""
     assert dd.SETMASK_MAX_VOCAB == 64 * dd.BITMAP_WORDS == 1024
-    monkeypatch.setenv("MMR_SETMASK", "off")
-    dd._ENCODING_DECISION_CACHE.clear()
+    decisions.clear()
+    with decisions.forced(**_HASHED):
+        d = dd._encoding_decision(SF_DIR, spark.range(3).select(F.col("id")), "t1")
+    assert d == {"exact": False, "forced": True}
     d = dd._encoding_decision(SF_DIR, spark.range(3).select(F.col("id")), "t1")
-    assert d["exact"] is False and d.get("forced") == "off"
-    assert not dd._ENCODING_DECISION_CACHE
-    monkeypatch.setenv("MMR_SETMASK", "auto")
+    assert d["exact"] and d["n_vocab"] == 3 and "forced" not in d
     cap = dd.SETMASK_MAX_VOCAB
     d = dd._encoding_decision(SF_DIR, spark.range(cap).select(F.col("id")), "t_cap")
     assert d["exact"] and d["n_vocab"] == cap and d["n_words"] == dd.BITMAP_WORDS
@@ -215,12 +218,12 @@ def test_mask_words_cover_vocab_boundaries(spark):
     """Bit assignment fills both 64-bit words exactly: 128 ids -> W = 2
     with no spare bit (a shifted position would fall off the end), and
     sets spanning the word boundary intersect exactly."""
-    dd._ENCODING_DECISION_CACHE.clear()
+    decisions.clear()
     rel = _sets_df(spark, [(1, list(range(128))), (2, list(range(60, 128)))])
     a, b, c = dd._set_compare(
         SF_DIR, rel, "toks", "t_boundary", {"sid": "s{}", "n": "n{}"}
     )
-    d = dd.LAST_ENCODING_DECISION
+    d = _encoding()
     assert d["exact"] and d["n_words"] == 2 and d["vocab"] == list(range(128))
     got = {
         (r.sa, r.sb): r.c
@@ -232,7 +235,7 @@ def test_mask_words_cover_vocab_boundaries(spark):
 def test_out_of_vocabulary_id_raises(spark):
     """An id missing from the collected vocabulary fails loudly (the
     exact branch never drops it as a missing bit)."""
-    dd._ENCODING_DECISION_CACHE.clear()
+    decisions.clear()
     dd._encoding_decision(SF_DIR, spark.range(1, 4).select(F.col("id")), "t_oov")
     rel = _sets_df(spark, [(1, [1, 2]), (2, [2, 3, 4])])
     a, b, c = dd._set_compare(SF_DIR, rel, "toks", "t_oov", {"sid": "s{}", "n": "n{}"})

@@ -72,28 +72,30 @@ def test_zscore_day_and_hour_chunks_are_bit_identical(spark, sf_dir, monkeypatch
     import os
 
     import multithreaded_mapreduce_spark.operators.anomaly as an
+    from multithreaded_mapreduce_spark.plans import decisions
 
     q = Q["events_zscore_anomalies"]
     # sf0.001 flags no outliers (equality would be vacuous) — use the
     # driver's sf0.01 when present
     driver_sf = "/root/testdata/sf0.01"
     sf_dir = driver_sf if os.path.isdir(driver_sf) else sf_dir
-    monkeypatch.setenv("MMR_ZSCORE_CHUNK", "day")
-    day = sorted(tuple(r) for r in q.builder(spark, sf_dir).collect())
-    monkeypatch.setenv("MMR_ZSCORE_CHUNK", "hour")
-    hour = sorted(tuple(r) for r in q.builder(spark, sf_dir).collect())
+    with decisions.forced(zscore={"chunk_us": an.DAY_US}):
+        day = sorted(tuple(r) for r in q.builder(spark, sf_dir).collect())
+    with decisions.forced(zscore={"chunk_us": an.HOUR_US}):
+        hour = sorted(tuple(r) for r in q.builder(spark, sf_dir).collect())
     assert day == hour
     assert len(day) > 0  # the fixture corpus actually has outliers
     # auto path: probe runs once, decides day, and memoizes
-    monkeypatch.delenv("MMR_ZSCORE_CHUNK", raising=False)
-    an._ZSCORE_DECISION_CACHE.clear()
+    decisions.clear()
     q.builder(spark, sf_dir).count()
-    assert an.LAST_ZSCORE_DECISION["chunk_us"] == an.DAY_US
-    assert 0 < an.LAST_ZSCORE_DECISION["max_rows_per_type_day"] < an.ZSCORE_HOUR_CHUNK_FLOOR
-    assert len(an._ZSCORE_DECISION_CACHE) == 1
+    d = decisions.record()["zscore"]
+    assert d["chunk_us"] == an.DAY_US
+    assert 0 < d["max_rows_per_type_day"] < an.ZSCORE_HOUR_CHUNK_FLOOR
+    q.builder(spark, sf_dir)
+    assert decisions.record()["zscore"] is d
     # forced-low floor flips the decision to hour chunks — same rows
     monkeypatch.setattr(an, "ZSCORE_HOUR_CHUNK_FLOOR", 1)
-    an._ZSCORE_DECISION_CACHE.clear()
+    decisions.clear()
     flipped = sorted(tuple(r) for r in q.builder(spark, sf_dir).collect())
-    assert an.LAST_ZSCORE_DECISION["chunk_us"] == an.HOUR_US
+    assert decisions.record()["zscore"]["chunk_us"] == an.HOUR_US
     assert flipped == day

@@ -10,6 +10,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from multithreaded_mapreduce_spark.plans import decisions
 from multithreaded_mapreduce_spark.sources.tables import (
     _est_scan_splits,
     load_table,
@@ -29,7 +30,7 @@ def test_single_file_input_still_spreads(spark):
     assert "RoundRobinPartitioning" in _plan(spread(docs))
 
 
-def test_wide_scan_returns_input_unchanged(spark, tmp_path, monkeypatch):
+def test_wide_scan_returns_input_unchanged(spark, tmp_path):
     src = str(tmp_path / "wide")
     spark.range(5000).select(
         F.col("id"), F.md5(F.col("id").cast("string")).alias("s")
@@ -46,12 +47,12 @@ def test_wide_scan_returns_input_unchanged(spark, tmp_path, monkeypatch):
         out = spread(df)
         assert out is df
         assert "RoundRobinPartitioning" not in _plan(out)
-        # kill switches: always forces the exchange, off never adds it
-        monkeypatch.setenv("MMR_SPREAD", "always")
-        assert "RoundRobinPartitioning" in _plan(spread(df))
-        monkeypatch.setenv("MMR_SPREAD", "off")
-        docs = load_table(spark, SF_DIR, "documents")
-        assert spread(docs) is docs
+        # forcing: spread=True always adds the exchange, False never
+        with decisions.forced(spread={"spread": True}):
+            assert "RoundRobinPartitioning" in _plan(spread(df))
+        with decisions.forced(spread={"spread": False}):
+            docs = load_table(spark, SF_DIR, "documents")
+            assert spread(docs) is docs
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
