@@ -133,7 +133,7 @@ HEADLINE = (
     # to streaming_ewma_daily's replay+state plan class, which already
     # regression-tracks it — SCALE.md probe row instead, same policy as
     # dedup_cluster_keep_best)
-    "skew_auto_join",                # measured plain/AQE/salted decision
+    "skew_auto_join",                # plain events x customer segment rollup
     "events_holt_daily",             # coupled level+trend forecast fold
     "media_png_roundtrip",           # oracle-checked PNG codec round trip
     # r9: operators above the 0.4 s bar, appended after every subtotal
@@ -228,16 +228,12 @@ def _scale_sweep(spark, sf_dir: str, queries) -> dict:
 #: site); each stamp describes the benched corpus at its own query's
 #: parameters, whatever runs later in the session
 DECISION_STAMPS = {
-    "lsh_auto_decision": ("dedup_minhash_lsh", "lsh"),
     "containment_auto_decision": ("dedup_containment", "containment"),
     "jaccard_auto_decision": ("dedup_components", "jaccard"),
-    "zscore_auto_decision": ("events_zscore_anomalies", "zscore"),
     "ngram_dfcut_auto_decision": ("dedup_ngram_jaccard", "ngram_dfcut"),
     # md5-uniform eval-sample modulus for the ground-truth-bound eval
     # queries (k = 1 → identity; k > 1 → 1-in-k doc sample)
     "eval_sample_decision": ("dedup_threshold_sweep", "eval_sample"),
-    # measured straggler factor → plain / aqe / salted join choice
-    "skew_auto_decision": ("skew_auto_join", "skew_join"),
     # label-sized CC relations broadcast vs shuffle (node ceiling)
     "cc_bcast_auto_decision": ("dedup_components", "cc_bcast"),
 }

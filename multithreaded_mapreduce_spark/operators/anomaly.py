@@ -12,15 +12,13 @@ tree in Spark and DuckDB. Event times compare in integer MICROSECONDS
 (``unix_micros`` / ``epoch_us``) — casting timestamps to epoch seconds
 truncates in Spark but rounds in DuckDB, a real cross-engine trap.
 
-Scale notes: the z-score window partitions by (event_type, chunk)
-with a replicated 1-hour context tail per chunk, where the chunk
-width (day vs hour) is derived from a measured rows-per-(type, day)
-probe — parallelism scales with time × types instead of capping at
-|types|, no single chunk can outgrow a task, and the frame (≤1 h back)
-sees identical history, so results are bit-identical to the monolithic
-window (oracle-checked). No self-join, no shuffle beyond the
-partitioning. The TWA is lead() + one partial-aggregated groupBy per
-type.
+Scale notes: the z-score window partitions by (event_type, day) with
+a replicated 1-hour context tail per day — parallelism scales with
+time × types instead of capping at |types|, the window's row buffer
+spills, and the frame (≤1 h back) sees identical history, so results
+are bit-identical to the monolithic window (oracle-checked). No
+self-join, no shuffle beyond the partitioning. The TWA is lead() + one
+partial-aggregated groupBy per type.
 """
 
 from __future__ import annotations
@@ -29,48 +27,13 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.numeric import DEC
-from ..plans.decisions import decide
 from ..plans.registry import register
-from ..sources.tables import load_table, table_stamp
+from ..sources.tables import load_table
 
 HOUR_US = 3_600_000_000
 DAY_US = 24 * HOUR_US
 Z_CUT = 2.5
 MIN_N = 5
-
-#: density-adaptive chunk key (VERDICT r4 task 5): the z-score window
-#: chunks by (event_type, DAY) by default; when the measured max rows
-#: per (type, day) reaches this floor, one chunk is more than a single
-#: task should window-sort/buffer in memory, and the chunk key drops to
-#: (event_type, HOUR). Hour chunks replicate every row once (the whole
-#: previous hour is the context tail) — a 2× row cost that only pays
-#: for itself when day chunks are genuinely oversized, hence a floor at
-#: task-memory scale rather than a balance heuristic. Either key gives
-#: the bit-identical result (decimal sums are order-exact; equality is
-#: pytest-asserted at both granularities).
-ZSCORE_HOUR_CHUNK_FLOOR = 1_000_000
-
-def _zscore_chunk_us(ev: DataFrame, key: tuple) -> int:
-    """Measure max rows per (event_type, day) and return the chunk
-    width: DAY_US normally, HOUR_US for day-chunks past the floor
-    (decision site ``zscore``; one tiny aggregate per corpus, memoized —
-    a chunk-key choice can never change results, only the plan)."""
-
-    def measure() -> dict:
-        row = (
-            ev.groupBy("event_type", F.floor(F.unix_micros("ts") / DAY_US))
-            .count()
-            .agg(F.max("count").alias("mx"))
-            .first()
-        )
-        mx = int(row["mx"]) if row is not None and row["mx"] is not None else 0
-        return {
-            "max_rows_per_type_day": mx,
-            "chunk_us": HOUR_US if mx >= ZSCORE_HOUR_CHUNK_FLOOR else DAY_US,
-            "floor": ZSCORE_HOUR_CHUNK_FLOOR,
-        }
-
-    return decide("zscore", key, measure)["chunk_us"]
 
 
 @register(
@@ -99,13 +62,11 @@ ORDER BY event_type, ts, event_id
     description="Trailing 1-hour z-score outliers per event_type: each "
     "event scored against the mean/stddev of its type's previous hour "
     "(inclusive), flagged at |z| ≥ 2.5 with ≥5 supporting points. One "
-    "window pass partitioned by (event_type, chunk) with a replicated "
-    "1-hour context tail; the chunk width is density-derived (day, or "
-    "hour when a measured (type, day) cell exceeds the task-memory "
-    "floor) — parallelism scales with the data, results "
-    "bit-identical to the monolithic per-type window. Sums exact in "
-    "decimal, timestamps compared in integer microseconds; no "
-    "self-join.",
+    "window pass partitioned by (event_type, day) with a replicated "
+    "1-hour context tail per day — parallelism scales with the time "
+    "range, results bit-identical to the monolithic per-type window. "
+    "Sums exact in decimal, timestamps compared in integer "
+    "microseconds; no self-join.",
     tags=("timeseries", "anomaly", "zscore", "events"),
 )
 def events_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -118,18 +79,16 @@ def events_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     # context row (scored but discarded), giving each chunk exactly the
     # history its own rows' frames need. Decimal sums are order-exact,
     # so the chunked result is bit-identical to the monolithic window.
-    # The chunk width is DENSITY-DERIVED (day vs hour — see
-    # _zscore_chunk_us), so oversized day chunks cannot pin a task.
-    chunk_us = _zscore_chunk_us(
-        ev, (table_stamp(sf_dir, "events"), ZSCORE_HOUR_CHUNK_FLOOR)
-    )
+    # A chunk is one day: the densest (type, day) cell measured 86 /
+    # 739 / 7277 rows at sf0.01 / sf0.1 / the 10× replica, and the
+    # window's row buffer spills past its in-memory threshold.
     us = F.unix_micros("ts")
     base = ev.select(
         "event_id", "ts", "event_type", "value", us.alias("us"),
-        F.floor(us / chunk_us).alias("chunk"),
+        F.floor(us / DAY_US).alias("chunk"),
     )
     ctx = (
-        base.filter(F.col("us") % chunk_us >= chunk_us - HOUR_US)
+        base.filter(F.col("us") % DAY_US >= DAY_US - HOUR_US)
         .withColumn("chunk", F.col("chunk") + 1)
         .withColumn("is_ctx", F.lit(1))
     )

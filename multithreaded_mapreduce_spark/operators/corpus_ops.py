@@ -749,8 +749,8 @@ def _bpe_train(
         .select("w", F.split("w", "").alias("syms"), "cnt")
         .transform(tracked_persist)
     )
-    # Measured state-width decision (same memoized-knob pattern as the
-    # LSH hot-bucket and zscore chunk width): the expensive corpus scan
+    # Measured state-width decision (same measured-input pattern as
+    # the other decision sites): the expensive corpus scan
     # materializes the persist at full parallelism via this count, then
     # the 5 training rounds iterate on a state coalesced to match its
     # MEASURED vocab size — a 31-word synthetic vocab collapses to one

@@ -587,7 +587,7 @@ def _pairs_from_group_cross(groups: DataFrame, cross: DataFrame) -> DataFrame:
 # every driver/test fixture) the predicate is the identity — the
 # sampled queries are bit-identical to their full-relation r7 shapes.
 # The modulus is a MEASURED probe (one count per corpus, memoized like
-# the LSH hot-bucket knob) on the Spark side and an inline aggregate in
+# the other decision sites) on the Spark side and an inline aggregate in
 # the oracle CTE; both compute the same integer, so the sample sets
 # agree document-for-document. NULL-id docs are dropped when sampling
 # engages (no identity to hash) — they never form pairs anyway
@@ -1385,106 +1385,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 N_HASHES = 16
 N_BANDS = 4  # bands of 4 signatures each
-LSH_CHUNK = 128  # hot-bucket chunk size: caps one task's pair fan-out at C²
-#: auto hot-bucket rule (r4): the chunked path engages iff the LARGEST
-#: band bucket reaches max(FLOOR, FACTOR × median bucket size). FLOOR
-#: marks where a single task's pair fan-out (n²/2) stops being
-#: comfortable — 8192 members ≈ 33M pairs; FACTOR keeps ordinary
-#: (non-boilerplate) corpora on the measured-2×-faster plain join even
-#: if their max bucket creeps over a small floor.
-LSH_AUTO_HOT_FLOOR = 8192
-LSH_AUTO_HOT_FACTOR = 32
-
-
-def _lsh_auto_hot_threshold(bands: DataFrame, key: tuple) -> int:
-    """AQE-style runtime decision (VERDICT r3 task 5, decision site
-    ``lsh``): measure the band-bucket size distribution with one tiny
-    aggregate over the (persisted-parent) bands relation and return the
-    per-bucket chunking threshold, or 0 for the plain self-join.
-
-    Any threshold yields the same verified pair set (pytest-asserted
-    equivalence of the two paths), so the exact-median determinism here
-    only stabilizes the PLAN, never the result — which is also why the
-    per-corpus memo is safe: it only spares repeat invocations
-    (benchmark reruns, composed pipelines) the sampling job the plain
-    join would otherwise pay just to hear "no" (VERDICT r4)."""
-
-    def measure() -> dict:
-        stats = bands.groupBy("band", "band_hash").agg(F.count(F.lit(1)).alias("c"))
-        row = stats.agg(
-            F.max("c").alias("mx"), F.expr("percentile(c, 0.5)").alias("med")
-        ).first()
-        if row is None or row["mx"] is None:
-            return {"threshold": 0, "max": 0, "median": 0.0, "cutoff": 0}
-        cutoff = max(LSH_AUTO_HOT_FLOOR, int(LSH_AUTO_HOT_FACTOR * (row["med"] or 1)))
-        return {
-            "threshold": cutoff if row["mx"] >= cutoff else 0,
-            "max": int(row["mx"]),
-            "median": float(row["med"] or 0.0),
-            "cutoff": cutoff,
-        }
-
-    return decide("lsh", key, measure)["threshold"]
-
-
-def _lsh_chunked_candidates(bands: DataFrame, hot_threshold: int) -> DataFrame:
-    """Two-path LSH candidate generation for boilerplate-hot corpora
-    (see the caller's comment).
-
-    Buckets <= hot_threshold use the plain self-join; bigger buckets
-    split into gid-ordered chunks of LSH_CHUNK so the pair fan-out
-    distributes. A bucket is wholly small or wholly hot, so the union
-    loses no pairs; chunks are gid-ordered, so cx < cy already implies
-    a.gid < b.gid and only same-chunk pairs need the id inequality."""
-    from pyspark.sql import Window as W
-
-    sized = bands.withColumn(
-        "bn", F.count(F.lit(1)).over(W.partitionBy("band", "band_hash"))
-    )
-    small = sized.filter(F.col("bn") <= hot_threshold)
-    hot = sized.filter(F.col("bn") > hot_threshold)
-    cand_small = (
-        small.alias("x")
-        .join(
-            small.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.band_hash") == F.col("y.band_hash"))
-            & (F.col("x.gid") < F.col("y.gid"))
-            & (F.col("x.n") <= F.floor(F.col("y.n") / JACCARD_THRESHOLD))
-            & (F.col("y.n") <= F.floor(F.col("x.n") / JACCARD_THRESHOLD)),
-        )
-        .select(F.col("x.gid").alias("ga"), F.col("y.gid").alias("gb"))
-    )
-    chunk_w = W.partitionBy("band", "band_hash").orderBy("gid")
-    chunks = (
-        hot.withColumn("ck", ((F.row_number().over(chunk_w) - 1) / LSH_CHUNK).cast("int"))
-        .groupBy("band", "band_hash", "ck")
-        .agg(F.collect_list(F.struct("gid", "n")).alias("ms"))
-    )
-    chunk_pairs = (
-        chunks.select("band", "band_hash", F.col("ck").alias("cx"), F.col("ms").alias("ma"))
-        .join(
-            chunks.select(
-                "band", "band_hash", F.col("ck").alias("cy"), F.col("ms").alias("mb")
-            ),
-            ["band", "band_hash"],
-        )
-        .filter(F.col("cx") <= F.col("cy"))
-        # the exchange that actually spreads the fan-out: without it the
-        # explode below runs in the (skewed) join output partitioning
-        .repartition("band", "band_hash", "cx", "cy")
-    )
-    cand_hot = (
-        chunk_pairs.select("cx", "cy", F.explode("ma").alias("a"), "mb")
-        .select("cx", "cy", "a", F.explode("mb").alias("b"))
-        .filter((F.col("cx") < F.col("cy")) | (F.col("a.gid") < F.col("b.gid")))
-        .filter(
-            (F.col("a.n") <= F.floor(F.col("b.n") / JACCARD_THRESHOLD))
-            & (F.col("b.n") <= F.floor(F.col("a.n") / JACCARD_THRESHOLD))
-        )
-        .select(F.col("a.gid").alias("ga"), F.col("b.gid").alias("gb"))
-    )
-    return cand_small.unionByName(cand_hot).distinct()
 
 
 @register(
@@ -1547,8 +1447,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gid", "n", *[_minhash(i).alias(f"s{i}") for i in range(N_HASHES)]
     )
     rows_per_band = N_HASHES // N_BANDS
-    # persisted (r4): three consumers — the auto hot-bucket decision
-    # pass and both sides of the candidate self-join — would otherwise
+    # persisted: both sides of the candidate self-join would otherwise
     # each recompute the 16-hash minhash projection over the cached
     # groups; the relation is 4 slim rows (3 longs + int) per unique
     # set, far smaller than its compute
@@ -1572,43 +1471,22 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prune (jaccard >= t requires the smaller set to be >= t x the
     # larger) drops hopeless pairs before the distinct, and a pair
     # colliding in several bands deduplicates BEFORE any array work.
-    #
-    # Hot-bucket escape hatch: one boilerplate band_hash capturing 1e6
-    # groups would put that bucket's 5e11 pairs on ONE core (a single
-    # join key cannot be split by AQE). The two-path plan — buckets
-    # above a threshold split into gid-ordered chunks of LSH_CHUNK, the
-    # self-join runs at CHUNK level, and the C^2 pair fan-out happens
-    # AFTER a repartition, spreading a hot bucket over (|m|/C)^2/2
-    # tasks — now engages AUTOMATICALLY (r4): a one-aggregate sampling
-    # pass over the bands relation measures the bucket-size
-    # distribution, and chunking turns on per-bucket only when the max
-    # bucket reaches max(LSH_AUTO_HOT_FLOOR, FACTOR × median) — i.e.
-    # when a single task's fan-out would actually hurt. At sf0.1 the
-    # largest bucket is 1.6k members (1.3M pairs), far below the floor,
-    # so the auto rule keeps the A/B-measured-2×-faster plain join.
-    # Forcing lsh={"threshold": t} skips the sampling pass: t > 0 is
-    # the chunking threshold, 0 the plain join; equivalence of the two
-    # paths is pytest-asserted.
-    hot_threshold = _lsh_auto_hot_threshold(
-        bands,
-        (table_stamp(sf_dir, "documents"), LSH_AUTO_HOT_FLOOR, LSH_AUTO_HOT_FACTOR),
-    )
-    if hot_threshold <= 0:
-        cand = (
-            bands.alias("x")
-            .join(
-                bands.alias("y"),
-                (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.band_hash") == F.col("y.band_hash"))
-                & (F.col("x.gid") < F.col("y.gid"))
-                & (F.col("x.n") <= F.floor(F.col("y.n") / JACCARD_THRESHOLD))
-                & (F.col("y.n") <= F.floor(F.col("x.n") / JACCARD_THRESHOLD)),
-            )
-            .select(F.col("x.gid").alias("ga"), F.col("y.gid").alias("gb"))
-            .distinct()
+    # One plain band self-join: the largest band bucket measured 212 /
+    # 1640 / 1748 members at sf0.01 / sf0.1 / 10× (≤ 1.5M pairs in one
+    # task), and the join is a sort-merge join whose buffers spill.
+    cand = (
+        bands.alias("x")
+        .join(
+            bands.alias("y"),
+            (F.col("x.band") == F.col("y.band"))
+            & (F.col("x.band_hash") == F.col("y.band_hash"))
+            & (F.col("x.gid") < F.col("y.gid"))
+            & (F.col("x.n") <= F.floor(F.col("y.n") / JACCARD_THRESHOLD))
+            & (F.col("y.n") <= F.floor(F.col("x.n") / JACCARD_THRESHOLD)),
         )
-    else:
-        cand = _lsh_chunked_candidates(bands, hot_threshold)
+        .select(F.col("x.gid").alias("ga"), F.col("y.gid").alias("gb"))
+        .distinct()
+    )
     # exact Jaccard verification on candidate group pairs under the
     # measured set-compare encoding (see _set_compare): no shuffle of
     # exploded tokens, no string comparisons. The group table joins by

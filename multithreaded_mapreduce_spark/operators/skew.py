@@ -1,4 +1,5 @@
-"""Skew-handling joins: key salting, plus the AQE runtime fallback.
+"""Skew-handling joins: explicit key salting, and a join-key skew
+report.
 
 A shuffled join hash-partitions both sides on the key; one hot key
 sends its entire row population to a single reducer, and at 100 TB the
@@ -6,10 +7,11 @@ job runs at the speed of that one straggler. Salting splits each hot
 key into ``n`` sub-keys: the fact side gets a deterministic salt in
 [0, n) per row, the (smaller) build side is replicated once per salt,
 and the join runs on (key, salt) — fan-out n on the small side buys
-n-way parallelism on the hot keys. AQE's skew-join splitting
-(``spark.sql.adaptive.skewJoin``) handles moderate skew at runtime;
-explicit salting is the belt-and-braces path for the pathological keys
-a pipeline knows about in advance.
+n-way parallelism on the hot keys. It is the explicit path for the
+pathological keys a pipeline knows about in advance; moderate skew in
+a shuffled join is split at runtime by the session's
+``spark.sql.adaptive.skewJoin.enabled``, and a join against a
+broadcastable dim never skews.
 
 Salting is semantically transparent, so the registered query carries a
 plain-join DuckDB oracle — the correctness gate proves the rewrite
@@ -26,9 +28,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import DEC
-from ..plans.decisions import decide
 from ..plans.registry import register
-from ..sources.tables import load_table, table_stamp
+from ..sources.tables import load_table
 
 N_SALTS = 8
 
@@ -133,10 +134,10 @@ ORDER BY t.n_rows DESC, t.user_id
     description=f"Join-key skew probe: the top {SKEW_TOP_N} heaviest "
     "event user_ids with each key's share of all rows and its multiple "
     "of the uniform per-key load (n_rows·ndv/total — the straggler "
-    "factor a plain hash join would suffer). This is the measurement "
-    "that decides between a plain shuffle join, AQE skew splitting, "
-    "and explicit salting (skew_salted_event_user_totals) BEFORE the "
-    "join runs. Map-side-combinable per-key counts, a distributed "
+    "factor a plain hash join would suffer), measured BEFORE a join "
+    "runs: the statistic that tells a pipeline whether a key needs "
+    "explicit salting (skew_salted_event_user_totals). "
+    "Map-side-combinable per-key counts, a distributed "
     f"top-{SKEW_TOP_N} (TakeOrderedAndProject — no global sort), and a "
     "one-row totals aggregate broadcast back; no driver collects.",
     tags=("skew", "report", "aggregate", "join"),
@@ -170,59 +171,6 @@ def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# skew_auto_join: the probe above wired into an automatic join-strategy
-# decision (VERDICT r7 task 4)
-# ---------------------------------------------------------------------------
-
-#: straggler-factor thresholds for the auto decision: under AQE_MIN_X
-#: the key distribution is near-uniform and the default plan (Catalyst
-#: is free to broadcast the dim) is right; between them a forced
-#: shuffled sort-merge join lets AQE's runtime skew-splitting handle
-#: moderate hot keys; at or past SALT_MIN_X one reducer would carry
-#: >= 16x the uniform load and the explicit 8-way salt is the plan a
-#: pipeline should pick BEFORE launching the job.
-SKEW_AQE_MIN_X = 4.0
-SKEW_SALT_MIN_X = 16.0
-
-def _skew_join_decision(spark: SparkSession, sf_dir: str) -> dict:
-    """Measured per-corpus join-strategy decision (decision site
-    ``skew_join``): one pass over events.user_id yields the max
-    straggler factor max(n_rows)·ndv/total — exactly the x_uniform
-    statistic join_key_skew_report publishes — and the thresholds above
-    pick plain / aqe / salted."""
-
-    def measure() -> dict:
-        per = (
-            load_table(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        row = per.agg(
-            F.max("n").alias("max_n"),
-            F.sum("n").alias("total"),
-            F.count(F.lit(1)).alias("ndv"),
-        ).first()
-        max_n, total, ndv = int(row["max_n"] or 0), int(row["total"] or 0), int(row["ndv"] or 0)
-        max_x = (max_n * ndv / total) if total else 0.0
-        path = (
-            "salted"
-            if max_x >= SKEW_SALT_MIN_X
-            else ("aqe" if max_x >= SKEW_AQE_MIN_X else "plain")
-        )
-        return {
-            "max_key_rows": max_n,
-            "ndv": ndv,
-            "total": total,
-            "max_x_uniform": round(max_x, 4),
-            "aqe_min_x": SKEW_AQE_MIN_X,
-            "salt_min_x": SKEW_SALT_MIN_X,
-            "path": path,
-        }
-
-    return decide("skew_join", (table_stamp(sf_dir, "events"),), measure)
-
-
 @register(
     "skew_auto_join",
     oracle=f"""
@@ -235,36 +183,22 @@ JOIN customer c ON e.user_id = c.c_custkey
 GROUP BY c.c_mktsegment
 ORDER BY c_mktsegment
 """,
-    description="events ⋈ customer with the join strategy chosen by the "
-    "MEASURED key-skew probe (the statistic join_key_skew_report "
-    "publishes, wired into a decision): max straggler factor "
-    f"max(n)·ndv/total under {SKEW_AQE_MIN_X} → plain join (Catalyst "
-    f"free to broadcast), under {SKEW_SALT_MIN_X} → forced shuffled "
-    "sort-merge join so AQE's runtime skew-splitting can act, past it "
-    "→ the explicit 8-way salted join (skew_salted_event_user_totals' "
-    "rewrite). The probe is one map-side-combinable aggregate, "
-    "memoized per corpus and stamped into bench_result.json; all three "
-    "paths are value-identical (pytest-asserted against each other and "
-    "this plain-join oracle), so the decision can only change the "
-    "plan, never the answer. Per-segment revenue rollup output.",
-    tags=("join", "skew", "salting", "aqe", "scale", "auto-decision"),
+    description="events ⋈ customer per-segment revenue rollup as one "
+    "plain join: the customer dim is broadcastable, and a broadcast join "
+    "cannot skew. The straggler factor join_key_skew_report publishes "
+    "measured 1.29 at sf0.01 and 1.485 at sf0.1 and 10×; past the "
+    "broadcast limit the session's AQE skew-join splitting handles hot "
+    "partitions at runtime. Its answer equals the 8-way salted join's "
+    "(skew_salted_event_user_totals' rewrite; pytest-asserted on a "
+    "hot-key fixture) and this plain-join oracle.",
+    tags=("join", "skew", "scale"),
 )
 def skew_auto_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     customer = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    path = _skew_join_decision(spark, sf_dir)["path"]
-    if path == "salted":
-        joined = salted_join(
-            events, customer, "user_id", salt_source=F.xxhash64("event_id")
-        )
-    elif path == "aqe":
-        # forced shuffled SMJ: a broadcast join cannot skew, so pin the
-        # exchange and let AQE's skewJoin split hot partitions at runtime
-        joined = events.join(customer.hint("merge"), "user_id")
-    else:
-        joined = events.join(customer, "user_id")
+    joined = events.join(customer, "user_id")
     return (
         joined.groupBy("c_mktsegment")
         .agg(

@@ -127,11 +127,12 @@ def assert_type_parity(spark_schema, arrow_schema: pa.Schema) -> None:
         ac = _arrow_type_class(f.type)
         if sc != ac:
             mismatches.append(f"{f.name}: spark={sc} duckdb-arrow={ac} ({f.type})")
-    assert not mismatches, (
-        "oracle type mismatch (driver hash is type-sensitive; CAST the oracle "
-        "side — e.g. CAST(sum(x) AS BIGINT) for HUGEINT sums): "
-        + "; ".join(mismatches)
-    )
+    if mismatches:
+        raise AssertionError(
+            "oracle type mismatch (the value hash is type-sensitive; CAST the oracle "
+            "side — e.g. CAST(sum(x) AS BIGINT) for HUGEINT sums): "
+            + "; ".join(mismatches)
+        )
 
 
 def rows_multiset(cols: list[str], rows: list[tuple]) -> list[str]:
@@ -153,13 +154,15 @@ def compare_query(spark, sf_dir: str, builder, oracle: str) -> None:
     d_cols = list(tbl.schema.names)
     d_rows = [tuple(r.values()) for r in tbl.to_pylist()]
 
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"column mismatch: spark={sorted(s_cols)} duckdb={sorted(d_cols)}"
-    )
+    if sorted(s_cols) != sorted(d_cols):
+        raise AssertionError(
+            f"column mismatch: spark={sorted(s_cols)} duckdb={sorted(d_cols)}"
+        )
     assert_type_parity(sdf.schema, tbl.schema)
-    assert len(s_rows) == len(d_rows), (
-        f"row count mismatch: spark={len(s_rows)} duckdb={len(d_rows)}"
-    )
+    if len(s_rows) != len(d_rows):
+        raise AssertionError(
+            f"row count mismatch: spark={len(s_rows)} duckdb={len(d_rows)}"
+        )
     s_ms = rows_multiset(s_cols, s_rows)
     d_ms = rows_multiset(d_cols, d_rows)
     if s_ms != d_ms:

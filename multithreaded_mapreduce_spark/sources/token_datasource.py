@@ -253,7 +253,11 @@ def ensure_staged_text(spark, sf_dir: str) -> str:
         .text(out_dir)
     )
     parts = sorted(glob.glob(os.path.join(out_dir, "part-*")))
-    assert len(parts) == 1, f"expected one staged part file, got {parts}"
+    if len(parts) != 1:
+        raise RuntimeError(
+            "token source staging contract broken: coalesce(1) must write "
+            f"exactly one part file under {out_dir}, got {parts}"
+        )
     os.replace(parts[0], path)
     shutil.rmtree(out_dir, ignore_errors=True)
     return path

@@ -22,6 +22,11 @@ Reading the output:
   persisted relation).
 - `hash`/`range`/`bcast` count exchange nodes; iterative queries
   (token_pagerank) legitimately repeat their per-iteration exchange.
+- the closing `decisions` section prints, for each query whose build
+  went through a decision site, the JSON of its
+  ``decisions.record()`` (which arm each site picked and the measured
+  inputs), without the exact encoding's vocabulary list. It is the
+  source of the per-corpus picks in README "Decision sites".
 
 Usage::
 
@@ -30,11 +35,13 @@ Usage::
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from multithreaded_mapreduce_spark.plans import decisions  # noqa: E402
 from multithreaded_mapreduce_spark.plans.registry import all_queries  # noqa: E402
 from multithreaded_mapreduce_spark.session import get_spark  # noqa: E402
 
@@ -62,9 +69,14 @@ def main() -> int:
     )
 
     rows = []
+    records = {}
     for name, q in all_queries().items():
         try:
             rows.append((name, plan_counts(spark, q.builder, sf_dir)))
+            records[name] = {
+                site: {k: v for k, v in d.items() if k != "vocab"}
+                for site, d in decisions.record().items()
+            }
         except Exception as ex:  # streaming-only builders etc.
             print(f"{name:40s} ERR {str(ex)[:60]}", file=sys.stderr)
         finally:
@@ -80,6 +92,10 @@ def main() -> int:
         )
     leaked = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     print(f"persistent RDDs after sweep: {leaked}" + (" <-- CACHE LEAK" if leaked else ""))
+    print("decisions")
+    for name, rec in sorted(records.items()):
+        if rec:
+            print(f"{name:40s} {json.dumps(rec, sort_keys=True)}")
     spark.stop()
     return 1 if leaked else 0
 

@@ -64,7 +64,14 @@ def test_stamps_are_read_before_the_scale_sweep(monkeypatch, tmp_path):
     )
     stamps = bench._decision_stamps(records)
     assert stamps["jaccard_auto_decision"] == {"n_groups": 7, "use_broadcast": True}
-    assert stamps["lsh_auto_decision"] is None  # its query never ran
+    assert set(stamps) == {
+        "containment_auto_decision",
+        "jaccard_auto_decision",
+        "ngram_dfcut_auto_decision",
+        "eval_sample_decision",
+        "cc_bcast_auto_decision",
+    }
+    assert stamps["containment_auto_decision"] is None  # its query never ran
 
     # an existing replica marker skips generation
     (tmp_path / "embeddings.parquet").write_text("")

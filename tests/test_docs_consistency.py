@@ -115,7 +115,7 @@ def test_readme_decision_sites_match_package():
     end = readme.index("\n## ", start + 1)
     table = set(re.findall(r"^\| `([a-z_]+)` \|", readme[start:end], re.M))
     assert table == used, f"undocumented: {sorted(used - table)}; stale: {sorted(table - used)}"
-    assert len(used) == 14
+    assert len(used) == 11
 
 
 def test_no_module_defines_last_globals():

@@ -60,42 +60,3 @@ def test_cooccurrence_counts_consistent(spark, sf_dir):
         assert r.token_a < r.token_b
         assert r.c_ab <= min(r.c_a, r.c_b)
         assert r.c_ab >= 5
-
-
-def test_zscore_day_and_hour_chunks_are_bit_identical(spark, sf_dir, monkeypatch):
-    """Density-adaptive chunk key (VERDICT r4 task 5): the day- and
-    hour-chunked window evaluations must produce the IDENTICAL flagged
-    set (decimal sums are order-exact, context tails replicate the full
-    frame history), and the auto probe must pick day chunks on this
-    corpus (densities far below the task-memory floor) and memoize the
-    decision per corpus."""
-    import os
-
-    import multithreaded_mapreduce_spark.operators.anomaly as an
-    from multithreaded_mapreduce_spark.plans import decisions
-
-    q = Q["events_zscore_anomalies"]
-    # sf0.001 flags no outliers (equality would be vacuous) — use the
-    # driver's sf0.01 when present
-    driver_sf = "/root/testdata/sf0.01"
-    sf_dir = driver_sf if os.path.isdir(driver_sf) else sf_dir
-    with decisions.forced(zscore={"chunk_us": an.DAY_US}):
-        day = sorted(tuple(r) for r in q.builder(spark, sf_dir).collect())
-    with decisions.forced(zscore={"chunk_us": an.HOUR_US}):
-        hour = sorted(tuple(r) for r in q.builder(spark, sf_dir).collect())
-    assert day == hour
-    assert len(day) > 0  # the fixture corpus actually has outliers
-    # auto path: probe runs once, decides day, and memoizes
-    decisions.clear()
-    q.builder(spark, sf_dir).count()
-    d = decisions.record()["zscore"]
-    assert d["chunk_us"] == an.DAY_US
-    assert 0 < d["max_rows_per_type_day"] < an.ZSCORE_HOUR_CHUNK_FLOOR
-    q.builder(spark, sf_dir)
-    assert decisions.record()["zscore"] is d
-    # forced-low floor flips the decision to hour chunks — same rows
-    monkeypatch.setattr(an, "ZSCORE_HOUR_CHUNK_FLOOR", 1)
-    decisions.clear()
-    flipped = sorted(tuple(r) for r in q.builder(spark, sf_dir).collect())
-    assert decisions.record()["zscore"]["chunk_us"] == an.HOUR_US
-    assert flipped == day
