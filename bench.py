@@ -279,6 +279,99 @@ def _time_headline(spark, sf_dir: str, queries, per_pass: int):
     return pass_runs, records
 
 
+def _memo_chain(spark, sf_dir: str, queries, names, memos=(), cold=True):
+    """Time the builds of ``names`` back to back with the result memos
+    kept between them (only per-build persists are released), starting
+    from released memos and an empty SQL cache unless ``cold`` is False.
+    Returns (query -> seconds, their total, memo -> the hits and misses
+    of this chain alone)."""
+    if cold:
+        release_result_memos()
+        spark.catalog.clearCache()
+    before = {m: result_memo_stats(m) or {"hits": 0, "misses": 0} for m in memos}
+    seconds: dict[str, float] = {}
+    for name in names:
+        release_tracked()
+        t0 = time.perf_counter()
+        queries[name].builder(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        seconds[name] = round(time.perf_counter() - t0, 3)
+    stats = {}
+    for m in memos:
+        now = result_memo_stats(m) or {"hits": 0, "misses": 0}
+        stats[m] = {c: now[c] - before[m][c] for c in ("hits", "misses")}
+    return seconds, round(sum(seconds.values()), 3), stats
+
+
+def _memo_stamps(spark, sf_dir: str, queries) -> dict:
+    """The result-memo stamps. Each times a chain of queries that share
+    a memo in one session (a real pipeline), outside the headline
+    totals, whose runs release every memo first and so stay cold."""
+    from multithreaded_mapreduce_spark.operators import dedup
+
+    out = {}
+    # shared-CC memo (VERDICT r6 task 5): first entry cold (miss), the
+    # next two are memo hits — the pipeline-shaped cost of the trio
+    cc = "jaccard_doc_components"
+    s, total, stats = _memo_chain(
+        spark, sf_dir, queries,
+        ("dedup_components", "cluster_aware_split", "dedup_cluster_keep_best"), (cc,),
+    )
+    out["cc_memo_decision"] = {"trio_seconds": s, "trio_total": total, "stats": stats[cc]}
+
+    # seeded CC (VERDICT r9 task 7): with the FULL k=1 pair relation
+    # memoized by a calibration build, _doc_components derives its group
+    # edges from it via two id-keyed joins instead of re-running the
+    # pairwise token-set compare (a cold session peeks and stays plain).
+    # Output is pytest-pinned hash-identical either way.
+    plain, _, _ = _memo_chain(spark, sf_dir, queries, ("dedup_components",))
+    release_result_memos()
+    release_tracked()
+    t0 = time.perf_counter()
+    dedup._jaccard_pairs_memo(spark, sf_dir).count()  # the calibration build
+    build_s = round(time.perf_counter() - t0, 3)
+    seeded, _, _ = _memo_chain(spark, sf_dir, queries, ("dedup_components",), cold=False)
+    out["cc_seed_decision"] = {
+        "plain_seconds": plain["dedup_components"],
+        "k1_memo_build_seconds": build_s,
+        "seeded_seconds": seeded["dedup_components"],
+        "decision": dict(decisions.record()["cc_seed"]),
+    }
+
+    # shared pair-relation memo (VERDICT r7 task 3): the sweep misses,
+    # the leakage audit and the recall report hit; the recall report
+    # also memoizes the banding-survivor relation
+    pair_memos = ("jaccard_pairs", "minhash_verified_pairs")
+    s, total, stats = _memo_chain(
+        spark, sf_dir, queries,
+        ("dedup_threshold_sweep", "kfold_leakage_report", "lsh_recall_report"), pair_memos,
+    )
+    out["pairs_memo_decision"] = {"trio_seconds": s, "trio_total": total, "trio_stats": stats}
+
+    # banding-relation share (VERDICT r8 task 6): lsh_recall_report's
+    # caught side memoizes the k=1 banding relation and the registered
+    # dedup_minhash_verified peeks it. Sampling is forced off, the k=1
+    # session the share exists for: at the natural sf0.1 modulus the
+    # sampled and full relations differ, so no share is possible there.
+    with decisions.forced(eval_sample={"modulus": 1, "engaged": False}):
+        s, total, stats = _memo_chain(
+            spark, sf_dir, queries, ("lsh_recall_report", "dedup_minhash_verified"), pair_memos
+        )
+    out["banding_memo_decision"] = {
+        "k1_pair_seconds": s, "k1_pair_total": total, "k1_pair_stats": stats,
+    }
+
+    # shared quality-gates memo (r11): composite misses, agreement and
+    # weighted-sample hit
+    q = "quality_gates"
+    s, total, stats = _memo_chain(
+        spark, sf_dir, queries,
+        ("doc_quality_composite", "quality_gate_agreement", "quality_weighted_sample"), (q,),
+    )
+    out["quality_memo_decision"] = {"trio_seconds": s, "trio_total": total, "trio_stats": stats[q]}
+    release_result_memos()
+    return out
+
+
 def _sf_from_dir(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     return float(m.group(1)) if m else -1.0
@@ -351,181 +444,7 @@ def main() -> None:
         timings[name] = round(runs[0], 3)
         medians[name] = round(runs[len(runs) // 2], 3)
 
-    # CC-memo measurement (VERDICT r6 task 5): the three components
-    # consumers share one memoized label pass when run back-to-back in
-    # a session (the driver gate / a real pipeline) — time the trio
-    # once cold-then-warm, OUTSIDE the headline totals, and stamp it.
-    cc_trio = ("dedup_components", "cluster_aware_split", "dedup_cluster_keep_best")
-    release_tracked()
-    release_result_memos()
-    spark.catalog.clearCache()
-    cc_warm: dict[str, float] = {}
-    for name in cc_trio:
-        release_tracked()  # keep per-build persists released; memo stays
-        t0 = time.perf_counter()
-        queries[name].builder(spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        cc_warm[name] = round(time.perf_counter() - t0, 3)
-    cc_memo_stamp = {
-        "trio_seconds": cc_warm,
-        "trio_total": round(sum(cc_warm.values()), 3),
-        "stats": result_memo_stats("jaccard_doc_components"),
-    }
-    release_result_memos()
-
-    # CC-seed measurement (VERDICT r9 task 7): when a sampling-
-    # disengaged calibration session left the FULL k=1 pair relation
-    # checkpointed, _doc_components derives its group edges from it
-    # via two id-keyed joins instead of re-running the pairwise
-    # token-set compare (peek-never-pay: a cold session is unaffected).
-    # Timed plain-then-seeded OUTSIDE the headline totals; output is
-    # pytest-pinned hash-identical either way.
-    from multithreaded_mapreduce_spark.operators import dedup as _dedup
-
-    release_tracked()
-    release_result_memos()
-    spark.catalog.clearCache()
-    t0 = time.perf_counter()
-    queries["dedup_components"].builder(spark, sf_dir).write.mode(
-        "overwrite"
-    ).format("noop").save()
-    cc_plain_s = round(time.perf_counter() - t0, 3)
-    release_result_memos()
-    release_tracked()
-    t0 = time.perf_counter()
-    _dedup._jaccard_pairs_memo(spark, sf_dir).count()  # the calibration build
-    cc_memo_build_s = round(time.perf_counter() - t0, 3)
-    release_tracked()
-    t0 = time.perf_counter()
-    queries["dedup_components"].builder(spark, sf_dir).write.mode(
-        "overwrite"
-    ).format("noop").save()
-    cc_seeded_s = round(time.perf_counter() - t0, 3)
-    cc_seed_stamp = {
-        "plain_seconds": cc_plain_s,
-        "k1_memo_build_seconds": cc_memo_build_s,
-        "seeded_seconds": cc_seeded_s,
-        "decision": dict(decisions.record()["cc_seed"]),
-    }
-    release_result_memos()
-
-    # Pair-relation memo measurement (VERDICT r7 task 3): the three
-    # ground-truth-bound eval queries share ONE memoized build of the
-    # exact pair relation when run back-to-back in a session (a real
-    # calibration pipeline); the recall report additionally memoizes
-    # the banding-survivor relation. Timed cold-then-warm OUTSIDE the
-    # headline totals, exactly like the CC trio above.
-    pairs_trio = (
-        "dedup_threshold_sweep",
-        "kfold_leakage_report",
-        "lsh_recall_report",
-    )
-    release_tracked()
-    release_result_memos()
-    spark.catalog.clearCache()
-
-    def _memo_deltas(before: dict) -> dict:
-        """Trio-scoped hit/miss DELTAS — the cumulative process-wide
-        counters would fold in every earlier headline run's misses and
-        obscure the one-build claim this stamp exists to evidence."""
-        out = {}
-        for memo in ("jaccard_pairs", "minhash_verified_pairs"):
-            now = result_memo_stats(memo) or {"hits": 0, "misses": 0}
-            base = before.get(memo) or {"hits": 0, "misses": 0}
-            out[memo] = {
-                "hits": now["hits"] - base["hits"],
-                "misses": now["misses"] - base["misses"],
-            }
-        return out
-
-    pairs_before = {
-        m: result_memo_stats(m)
-        for m in ("jaccard_pairs", "minhash_verified_pairs")
-    }
-    pairs_warm: dict[str, float] = {}
-    for name in pairs_trio:
-        release_tracked()  # keep per-build persists released; memo stays
-        t0 = time.perf_counter()
-        queries[name].builder(spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        pairs_warm[name] = round(time.perf_counter() - t0, 3)
-    pairs_memo_stamp = {
-        "trio_seconds": pairs_warm,
-        "trio_total": round(sum(pairs_warm.values()), 3),
-        "trio_stats": _memo_deltas(pairs_before),
-    }
-    release_result_memos()
-
-    # Banding-relation share (VERDICT r8 task 6): lsh_recall_report's
-    # caught side memoizes the banding relation, and the registered
-    # dedup_minhash_verified builder opportunistically PEEKS the k=1
-    # slot — a calibration session that ran the recall report hands the
-    # production relation over for free, while a standalone
-    # dedup_minhash_verified run stays the plain lazy plan (no eager
-    # checkpoint materialization — measured ~25-30% of the build at the
-    # edge-bound 10x scale). Evidence the share here by running the
-    # pair recall-first with sampling forced off (the k=1 session the
-    # share exists for); at the natural sf0.1 modulus the sampled and
-    # full relations are genuinely different, so no share is possible
-    # or claimed there. Outside headline totals, like the other memo
-    # stamps.
-    release_tracked()
-    spark.catalog.clearCache()
-    with decisions.forced(eval_sample={"modulus": 1, "engaged": False}):
-        band_before = {
-            m: result_memo_stats(m)
-            for m in ("jaccard_pairs", "minhash_verified_pairs")
-        }
-        band_warm: dict[str, float] = {}
-        for name in ("lsh_recall_report", "dedup_minhash_verified"):
-            release_tracked()
-            t0 = time.perf_counter()
-            queries[name].builder(spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            band_warm[name] = round(time.perf_counter() - t0, 3)
-        banding_memo_stamp = {
-            "k1_pair_seconds": band_warm,
-            "k1_pair_total": round(sum(band_warm.values()), 3),
-            "k1_pair_stats": _memo_deltas(band_before),
-        }
-    release_result_memos()
-
-    # Quality-gates memo measurement (r11, VERDICT r10 task 3): the
-    # composite / agreement / weighted-sample trio shares ONE memoized
-    # build of the per-doc gate relation when run back-to-back in a
-    # session — first entry cold (miss), the next two warm. Timed
-    # OUTSIDE the headline totals, exactly like the CC trio; headline
-    # runs stay cold (release_result_memos before every timed run).
-    quality_trio = (
-        "doc_quality_composite",
-        "quality_gate_agreement",
-        "quality_weighted_sample",
-    )
-    release_tracked()
-    release_result_memos()
-    spark.catalog.clearCache()
-    q_before = result_memo_stats("quality_gates") or {"hits": 0, "misses": 0}
-    quality_warm: dict[str, float] = {}
-    for name in quality_trio:
-        release_tracked()  # keep per-build persists released; memo stays
-        t0 = time.perf_counter()
-        queries[name].builder(spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        quality_warm[name] = round(time.perf_counter() - t0, 3)
-    q_now = result_memo_stats("quality_gates") or {"hits": 0, "misses": 0}
-    quality_memo_stamp = {
-        "trio_seconds": quality_warm,
-        "trio_total": round(sum(quality_warm.values()), 3),
-        "trio_stats": {
-            "hits": q_now["hits"] - q_before["hits"],
-            "misses": q_now["misses"] - q_before["misses"],
-        },
-    }
-    release_result_memos()
+    memo_stamps = _memo_stamps(spark, sf_dir, queries)
 
     # 10×-corpus scale sweep (r11, VERDICT r10 task 8): sf0.1 can no
     # longer measure parallelism or the at-scale dedup path (59/87
@@ -573,19 +492,8 @@ def main() -> None:
         "queries_median": medians,
         # the measured decisions from the headline runs' records
         **decision_stamps,
-        # shared-CC memo: first entry cold (miss), the next two are
-        # memo hits — the pipeline-shaped cost of the components trio
-        "cc_memo_decision": cc_memo_stamp,
-        # seeded CC: group edges derived from a warm k=1 pair memo
-        "cc_seed_decision": cc_seed_stamp,
-        # shared pair-relation memo: sweep cold, leakage + recall warm
-        "pairs_memo_decision": pairs_memo_stamp,
-        # banding-relation share: dedup_minhash_verified cold, then
-        # lsh_recall_report's caught side HITS the same k=1 memo slot
-        "banding_memo_decision": banding_memo_stamp,
-        # shared quality-gates memo: composite cold, agreement +
-        # weighted-sample warm (r11)
-        "quality_memo_decision": quality_memo_stamp,
+        # result-memo chains, timed outside the headline totals
+        **memo_stamps,
         # 10×-replica sweep with the setmask disabled — the at-scale
         # dedup branch the r11 bitmap prune targets (r11)
         "scale_sweep": scale_sweep_stamp,

@@ -650,19 +650,23 @@ def _eval_sample_ctes(target: int | None = None) -> str:
 )"""
 
 
+def _pairs_memo_key(sf_dir: str, k: int) -> str:
+    """Memo key of a pair relation over the 1-in-k eval sample of the
+    corpus (k = 1: the full corpus) — seeds and peeks must agree on it."""
+    return f"{table_stamp(sf_dir, 'documents')}|k={k}"
+
+
 def _jaccard_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL exact pair relation, checkpoint-memoized per corpus
     (VERDICT r7 task 3): the sweep/eval consumers share one build in a
     pipeline-shaped session instead of each re-deriving it. Both
     jaccard paths return the same rows (pytest-asserted), so the key
     is the corpus alone."""
-    key = f"{table_stamp(sf_dir, 'documents')}|k=1"
-
     def build() -> DataFrame:
         groups, cross = _jaccard_group_cross(spark, sf_dir)
         return _pairs_from_group_cross(groups, cross)
 
-    return memoized_result_checkpoint("jaccard_pairs", key, build)
+    return memoized_result_checkpoint("jaccard_pairs", _pairs_memo_key(sf_dir, 1), build)
 
 
 def _eval_pairs(spark: SparkSession, sf_dir: str, target: int | None = None) -> DataFrame:
@@ -675,7 +679,6 @@ def _eval_pairs(spark: SparkSession, sf_dir: str, target: int | None = None) -> 
     k = d["modulus"]
     if k <= 1:
         return _jaccard_pairs_memo(spark, sf_dir)
-    key = f"{table_stamp(sf_dir, 'documents')}|k={k}"
 
     def build() -> DataFrame:
         docs = _eval_sampled_docs(spark, sf_dir, k)
@@ -684,7 +687,7 @@ def _eval_pairs(spark: SparkSession, sf_dir: str, target: int | None = None) -> 
         )
         return _pairs_from_group_cross(groups, cross)
 
-    return memoized_result_checkpoint("jaccard_pairs", key, build)
+    return memoized_result_checkpoint("jaccard_pairs", _pairs_memo_key(sf_dir, k), build)
 
 
 # ------------------------------------------------------------------
@@ -1650,12 +1653,9 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # opportunistic share of the k=1 banding memo: if a calibration
     # session (lsh_recall_report with sampling disengaged) already
     # built this exact relation, reuse it; otherwise run the plain
-    # lazy plan — NEVER pay the eager checkpoint materialization here
-    # (measured ~25-30% of the build at the edge-bound 10x scale,
-    # where pair volume grows 10x)
-    hit = peek_result_memo(
-        "minhash_verified_pairs", f"{table_stamp(sf_dir, 'documents')}|k=1"
-    )
+    # plan — seeding the memo here, even lazily, measured slower than
+    # the plain plan (SCALE.md, "Banding-memo share")
+    hit = peek_result_memo("minhash_verified_pairs", _pairs_memo_key(sf_dir, 1))
     return hit if hit is not None else _minhash_verified_pairs(spark, sf_dir)
 
 
@@ -1959,9 +1959,7 @@ def _doc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-level oracle merges components through that id."""
 
     def build() -> DataFrame:
-        pairs_hit = peek_result_memo(
-            "jaccard_pairs", f"{table_stamp(sf_dir, 'documents')}|k=1"
-        )
+        pairs_hit = peek_result_memo("jaccard_pairs", _pairs_memo_key(sf_dir, 1))
         seeded = pairs_hit is not None
         d = note(
             "cc_seed",
@@ -3052,15 +3050,15 @@ def _verified_pairs_memo(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     dedup_minhash_verified builder opportunistically reuses it via
     peek_result_memo — so a calibration session builds the relation
     ONCE (VERDICT r8 task 6), while a standalone dedup_minhash_verified
-    run pays neither the build twice nor the eager checkpoint
-    materialization."""
-    key = f"{table_stamp(sf_dir, 'documents')}|k={k}"
+    run pays neither the build twice nor the checkpoint's block writes."""
 
     def build() -> DataFrame:
         docs = _eval_sampled_docs(spark, sf_dir, k) if k > 1 else None
         return _minhash_verified_pairs(spark, sf_dir, docs=docs, sample_k=k)
 
-    return memoized_result_checkpoint("minhash_verified_pairs", key, build)
+    return memoized_result_checkpoint(
+        "minhash_verified_pairs", _pairs_memo_key(sf_dir, k), build
+    )
 
 
 def _eval_verified_pairs(spark: SparkSession, sf_dir: str, target: int | None = None) -> DataFrame:

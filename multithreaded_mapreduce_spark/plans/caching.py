@@ -34,6 +34,16 @@ lineage by design), so a PREVIOUS query's returned DataFrame must not
 be re-collected after the next top-level build starts — rebuild it
 through the registry instead. That is exactly how the driver, bench,
 oracle gate, and tests consume the catalog.
+
+Named result memos (``quality_gates``, ``jaccard_pairs``,
+``jaccard_doc_components``, ``minhash_verified_pairs``) share one
+intermediate across the top-level queries of a session and follow one
+policy. A miss registers the build as a LAZY local checkpoint, so the
+memo runs no job of its own: the first consumer's action fills it. A
+filled entry is served across builds; an unfilled one only within the
+build that seeded it, and is evicted at the first lookup after that.
+Seeding consumers (:func:`memoized_result_checkpoint`) and peeking ones
+(:func:`peek_result_memo`, which never build) share one lookup.
 """
 
 from __future__ import annotations
@@ -42,6 +52,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
+
+from . import decisions
 
 _TRACKED: list[DataFrame] = []
 #: (SparkSession, rdd_id) pairs for localCheckpoint block caches, which
@@ -168,15 +180,11 @@ def _persistent_rdd_ids(spark) -> set[int]:
     return {int(i) for i in jmap.keySet().toArray()}
 
 
-def tracked_persist(df: DataFrame, level: Optional[StorageLevel] = None) -> DataFrame:
-    """``df.persist()`` + enrol the relation for later release."""
-    out = df.persist(level) if level is not None else df.persist()
-    _TRACKED.append(out)
-    return out
-
-
-def tracked_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint()`` + enrol its cached RDD blocks.
+def _local_checkpoint(
+    df: DataFrame, eager: bool
+) -> tuple[DataFrame, list[tuple[object, int]]]:
+    """``df.localCheckpoint(eager)`` and the (session, rdd_id) pairs of
+    the block caches it registered.
 
     localCheckpoint materializes into RDD block caches that the
     CacheManager doesn't know about — DataFrame.unpersist can't reach
@@ -186,8 +194,36 @@ def tracked_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     spark = df.sparkSession
     before = _persistent_rdd_ids(spark)
     out = df.localCheckpoint(eager=eager)
-    for rid in _persistent_rdd_ids(spark) - before:
-        _TRACKED_RDD_IDS.append((spark, rid))
+    return out, [(spark, rid) for rid in _persistent_rdd_ids(spark) - before]
+
+
+def _unpersist(rids, blocking: bool = False) -> int:
+    """RDD-level unpersist of (session, rdd_id) pairs; returns how many
+    were still resident."""
+    n = 0
+    for spark, rid in rids:
+        try:
+            jrdd = spark.sparkContext._jsc.getPersistentRDDs().get(rid)
+            if jrdd is not None:
+                jrdd.unpersist(blocking)
+                n += 1
+        except Exception:
+            pass  # session stopped or blocks already evicted
+    return n
+
+
+def tracked_persist(df: DataFrame, level: Optional[StorageLevel] = None) -> DataFrame:
+    """``df.persist()`` + enrol the relation for later release."""
+    out = df.persist(level) if level is not None else df.persist()
+    _TRACKED.append(out)
+    return out
+
+
+def tracked_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint()`` + enrol its cached RDD blocks for
+    release."""
+    out, rids = _local_checkpoint(df, eager)
+    _TRACKED_RDD_IDS.extend(rids)
     return out
 
 
@@ -208,15 +244,8 @@ def release_tracked(blocking: bool = False) -> int:
             n += 1
         except Exception:
             pass  # session stopped or cache already evicted
-    while _TRACKED_RDD_IDS:
-        spark, rid = _TRACKED_RDD_IDS.pop()
-        try:
-            jrdd = spark.sparkContext._jsc.getPersistentRDDs().get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(blocking)
-                n += 1
-        except Exception:
-            pass
+    n += _unpersist(_TRACKED_RDD_IDS, blocking)
+    _TRACKED_RDD_IDS.clear()
     return n
 
 
@@ -228,24 +257,34 @@ def tracked_count() -> int:
 # Named result memos (VERDICT r6 task 5)
 # --------------------------------------------------------------------------
 
-#: name -> (key, checkpointed result frame, its RDD block ids). Result
-#: memos live OUTSIDE the release ledger on purpose: the jaccard
+#: name -> (key, lazily checkpointed result frame, its RDD block ids,
+#: the epoch it was last seeded or served in). Result memos live
+#: OUTSIDE the release ledger on purpose: the jaccard
 #: connected-components labels are consumed by THREE top-level queries
 #: (dedup_components, cluster_aware_split, dedup_cluster_keep_best),
 #: and the per-build release_tracked() would otherwise force each to
-#: recompute the full CC pass. Residency stays bounded: exactly one
-#: checkpoint per memo name (a key change evicts the stale entry), and
-#: the relation memoized is the label mapping — two ids per document —
-#: never text or pair edges. At cluster scale the same memo would be a
-#: reliable checkpoint (HDFS/S3) instead of executor-local blocks so an
-#: executor loss can't invalidate it.
-_RESULT_MEMO: dict[str, tuple[str, DataFrame, list[tuple[object, int]]]] = {}
-#: per-name hit/miss counters for the bench decision stamp
+#: recompute the full CC pass. One policy serves all four memos: a miss
+#: registers ``build().localCheckpoint(eager=False)`` and runs no job of
+#: its own — the first consumer's action fills the blocks (any action over the
+#: frame, ``limit`` included, completes the checkpoint). An entry is
+#: served while its checkpoint is filled, or within the build that
+#: seeded it (same epoch, lineage intact); an unfilled entry from an
+#: earlier epoch is evicted, because its lineage can read tracked
+#: checkpoint blocks that release_tracked() has since dropped (after an
+#: ``explain``, or any build whose action never ran). Residency stays
+#: bounded: one checkpoint per memo name (a key change replaces the
+#: entry, and unpersists it unless the current build seeded or was
+#: served it), and every memoized relation is label-sized — never text
+#: or token arrays. At cluster scale the same memo would be a reliable
+#: checkpoint (HDFS/S3) instead of executor-local blocks so an executor
+#: loss can't invalidate it.
+_RESULT_MEMO: dict[str, tuple[str, DataFrame, list[tuple[object, int]], int]] = {}
+#: per-name hit/miss counters (the perfbench memo metrics read them)
 _MEMO_STATS: dict[str, dict] = {}
 
 
 def _memo_session_state(df: DataFrame) -> str:
-    """Classify a memo hit's owning session: ``"ok"`` (the process's
+    """Classify a memo entry's owning session: ``"ok"`` (the process's
     active session — safe to serve), ``"stale"`` (alive but not the
     active session, e.g. a second concurrent session or a thread where
     the thread-scoped ``getActiveSession()`` returns None — do NOT
@@ -269,78 +308,72 @@ def _memo_session_state(df: DataFrame) -> str:
         return "dead"
 
 
-def _memo_session_live(df: DataFrame) -> bool:
-    return _memo_session_state(df) == "ok"
-
-
-def memoized_result_checkpoint(name: str, key: str, build) -> DataFrame:
-    """Return the memoized checkpointed result for (name, key), or run
-    ``build()`` and checkpoint it. The returned frame's lineage is
-    truncated, so it stays valid across release_tracked() epochs until
-    the memo itself is evicted (key change, dead session, or
-    release_result_memos)."""
-    stats = _MEMO_STATS.setdefault(name, {"key": key, "hits": 0, "misses": 0})
-    hit = _RESULT_MEMO.get(name)
-    if hit is not None and hit[0] == key and _memo_session_live(hit[1]):
-        stats["hits"] += 1
-        return hit[1]
-    if hit is not None:
-        # only a DEAD owner's blocks may be unpersisted — a live
-        # non-active session's consumers may still hold the handle
-        # (its blocks stay resident until that session stops; the
-        # overwrite below drops our bookkeeping for them, an accepted
-        # bounded leak in the rare concurrent-sessions case)
-        if _memo_session_state(hit[1]) == "dead":
-            _unpersist_memo_blocks(hit[2])
-        del _RESULT_MEMO[name]
-    stats["key"] = key
-    stats["misses"] += 1
-    df = build()
-    spark = df.sparkSession
-    before = _persistent_rdd_ids(spark)
-    out = df.localCheckpoint(eager=True)
-    rids = [(spark, rid) for rid in _persistent_rdd_ids(spark) - before]
-    _RESULT_MEMO[name] = (key, out, rids)
-    return out
+def _memo_filled(rids) -> bool:
+    """Whether a consumer's action has filled the memo's checkpoint."""
+    try:
+        for spark, rid in rids:
+            jrdd = spark.sparkContext._jsc.getPersistentRDDs().get(rid)
+            if jrdd is not None and jrdd.isCheckpointed():
+                return True
+    except Exception:
+        pass
+    return False
 
 
 def peek_result_memo(name: str, key: str) -> DataFrame | None:
-    """Return the memoized checkpointed result for (name, key) if one
-    is already warm, WITHOUT building or materializing anything on a
-    miss. For consumers whose plain plan is already optimal (no reuse
-    of their own) but that can opportunistically ride a calibration
-    session's artifact: a hit costs nothing and saves the full build;
-    a miss costs nothing at all — in particular no eager localCheckpoint
-    materialization, which measures ~25-30% of the build at the
-    edge-bound 10x scale for the pair relations. A hit whose session
-    has died is evicted and reported as a miss (the caller's plain
-    lazy plan is always a correct fallback)."""
-    hit = _RESULT_MEMO.get(name)
-    if hit is not None and hit[0] == key:
-        state = _memo_session_state(hit[1])
+    """The memoized frame for (name, key) if it can be served, else
+    None — never builds anything. This is the lookup both kinds of
+    consumer share: :func:`memoized_result_checkpoint` seeds the memo
+    on a miss, while a consumer whose plain plan is already optimal
+    peeks and runs that plan on a miss. An entry whose session has died
+    is unpersisted and evicted; one owned by a live non-active session
+    is a miss and stays; an unfilled one from an earlier epoch is
+    unpersisted and evicted. A hit stamps the entry with the current
+    epoch, as read by this build. The outcome (``"hit"``, ``"miss"`` or
+    ``"unfilled-evicted"``) goes into the current build's decision
+    record under ``"memo"`` — the first lookup of a name in a build
+    wins."""
+    outcome = "miss"
+    entry = _RESULT_MEMO.get(name)
+    if entry is not None:
+        entry_key, df, rids, epoch = entry
+        state = _memo_session_state(df)
         if state == "dead":
-            _unpersist_memo_blocks(hit[2])
+            _unpersist(rids)
             del _RESULT_MEMO[name]
-            return None
-        if state == "stale":
-            # alive-but-not-active owner: miss WITHOUT evicting — the
-            # owning session's consumers may still use the handle, and
-            # it becomes servable again when that session is active
-            return None
-        stats = _MEMO_STATS.setdefault(name, {"key": key, "hits": 0, "misses": 0})
-        stats["hits"] += 1
-        return hit[1]
-    return None
+        elif state == "ok" and epoch != _EPOCH and not _memo_filled(rids):
+            _unpersist(rids)
+            del _RESULT_MEMO[name]
+            outcome = "unfilled-evicted"
+        elif state == "ok" and entry_key == key:
+            outcome = "hit"
+            _RESULT_MEMO[name] = (entry_key, df, rids, _EPOCH)
+            _MEMO_STATS.setdefault(name, {"key": key, "hits": 0, "misses": 0})["hits"] += 1
+    decisions.record().setdefault("memo", {}).setdefault(name, outcome)
+    return entry[1] if outcome == "hit" else None
 
 
-def _unpersist_memo_blocks(rids, blocking: bool = False) -> None:
-    for spark, rid in rids:
-        try:
-            jrdd = spark.sparkContext._jsc.getPersistentRDDs().get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(blocking)
-        except Exception:
-            pass  # session stopped or blocks already evicted
+def memoized_result_checkpoint(name: str, key: str, build) -> DataFrame:
+    """The memoized frame for (name, key); on a miss, ``build()``
+    registered as a lazy local checkpoint that the first consumer's
+    action fills. Once filled, the frame's lineage is truncated, so it
+    stays valid across release_tracked() epochs until the memo itself
+    is evicted (key change, dead session, or release_result_memos)."""
+    hit = peek_result_memo(name, key)
+    if hit is not None:
+        return hit
+    stats = _MEMO_STATS.setdefault(name, {"key": key, "hits": 0, "misses": 0})
+    stats["key"] = key
+    stats["misses"] += 1
+    # a replaced entry this build neither seeded nor read has no live
+    # reader, so its blocks go; one it did, or a non-active session's,
+    # keeps them, since a consumer may still hold it — a bounded leak
+    old = _RESULT_MEMO.pop(name, None)
+    if old is not None and old[3] != _EPOCH and _memo_session_state(old[1]) == "ok":
+        _unpersist(old[2])
+    out, rids = _local_checkpoint(build(), eager=False)
+    _RESULT_MEMO[name] = (key, out, rids, _EPOCH)
+    return out
 
 
 def release_result_memos(blocking: bool = False) -> int:
@@ -352,14 +385,12 @@ def release_result_memos(blocking: bool = False) -> int:
         return 0
     _EPOCH += 1
     n = len(_RESULT_MEMO)
-    for _key, _df, rids in _RESULT_MEMO.values():
-        _unpersist_memo_blocks(rids, blocking)
+    _unpersist([r for _k, _df, rids, _e in _RESULT_MEMO.values() for r in rids], blocking)
     _RESULT_MEMO.clear()
     return n
 
 
 def result_memo_stats(name: str) -> dict | None:
-    """Hit/miss counters for one memo name (bench stamps these next to
-    the other per-corpus plan decisions)."""
+    """Hit/miss counters for one memo name."""
     s = _MEMO_STATS.get(name)
     return dict(s) if s is not None else None

@@ -25,8 +25,10 @@ Reading the output:
 - the closing `decisions` section prints, for each query whose build
   went through a decision site, the JSON of its
   ``decisions.record()`` (which arm each site picked and the measured
-  inputs), without the exact encoding's vocabulary list. It is the
-  source of the per-corpus picks in README "Decision sites".
+  inputs, and under ``memo`` each result memo's lookup outcome — a
+  miss, since the audit releases the memos before every query),
+  without the exact encoding's vocabulary list. It is the source of
+  the per-corpus picks in README "Decision sites".
 
 Usage::
 

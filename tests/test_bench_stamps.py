@@ -1,7 +1,9 @@
 """bench.py's decision stamps come from the headline runs' per-query
 decision records, so nothing the session runs later — the 10× scale
-sweep included — can change them. No SparkSession needed: the queries
-are stubs that record decisions through the real registry wrapper."""
+sweep included — can change them, and its memo stamps count the hits
+and misses of their own chain. No SparkSession needed: the queries are
+stubs that record decisions and memo lookups through the real registry
+wrapper."""
 
 from __future__ import annotations
 
@@ -9,7 +11,7 @@ import importlib.util
 import os
 from types import SimpleNamespace
 
-from multithreaded_mapreduce_spark.plans import decisions
+from multithreaded_mapreduce_spark.plans import caching, decisions
 from multithreaded_mapreduce_spark.plans.registry import _with_cache_release
 
 BENCH_PY = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py")
@@ -91,3 +93,71 @@ def test_record_is_frozen_after_its_build():
     second_q.builder(None, "sf")
     assert first == {"jaccard": {"n_groups": 7, "use_broadcast": True}}
     assert decisions.record() == {"jaccard": {"n_groups": 70, "use_broadcast": False}}
+
+
+def _memo_query(outcomes: dict[str, str], cc_seed: bool = False) -> SimpleNamespace:
+    """A registered-query stub whose build counts one memo lookup per
+    entry of ``outcomes`` (memo name -> "hits" or "misses")."""
+
+    def build(spark, sf_dir):
+        for memo, outcome in outcomes.items():
+            caching._MEMO_STATS.setdefault(memo, {"key": "k", "hits": 0, "misses": 0})[outcome] += 1
+        if cc_seed:
+            decisions.note("cc_seed", {"seeded": False, "source": "plain"})
+        return _Sink()
+
+    return SimpleNamespace(builder=_with_cache_release(build))
+
+
+def test_memo_stamps_count_their_own_chain(monkeypatch):
+    """Each memo stamp keeps its key set and reports the hits and
+    misses of its own chain, not the process-wide counters (which here
+    start at 9 misses, as after a headline sweep)."""
+    from multithreaded_mapreduce_spark.operators import dedup
+
+    bench = _bench()
+    monkeypatch.setattr(caching, "_MEMO_STATS", {
+        m: {"key": "k", "hits": 0, "misses": 9}
+        for m in ("jaccard_doc_components", "jaccard_pairs", "minhash_verified_pairs", "quality_gates")
+    })
+    monkeypatch.setattr(dedup, "_jaccard_pairs_memo", lambda spark, sf_dir: SimpleNamespace(count=lambda: 0))
+    miss, hit = "misses", "hits"
+    queries = {
+        "dedup_components": _memo_query({"jaccard_doc_components": miss}, cc_seed=True),
+        "cluster_aware_split": _memo_query({"jaccard_doc_components": hit}),
+        "dedup_cluster_keep_best": _memo_query({"jaccard_doc_components": hit}),
+        "dedup_threshold_sweep": _memo_query({"jaccard_pairs": miss}),
+        "kfold_leakage_report": _memo_query({"jaccard_pairs": hit}),
+        "lsh_recall_report": _memo_query({"jaccard_pairs": hit, "minhash_verified_pairs": miss}),
+        "dedup_minhash_verified": _memo_query({"minhash_verified_pairs": hit}),
+        "doc_quality_composite": _memo_query({"quality_gates": miss}),
+        "quality_gate_agreement": _memo_query({"quality_gates": hit}),
+        "quality_weighted_sample": _memo_query({"quality_gates": hit}),
+    }
+    stamps = bench._memo_stamps(_SPARK, "sf", queries)
+    assert {k: set(v) for k, v in stamps.items()} == {
+        "cc_memo_decision": {"trio_seconds", "trio_total", "stats"},
+        "cc_seed_decision": {"plain_seconds", "k1_memo_build_seconds", "seeded_seconds", "decision"},
+        "pairs_memo_decision": {"trio_seconds", "trio_total", "trio_stats"},
+        "banding_memo_decision": {"k1_pair_seconds", "k1_pair_total", "k1_pair_stats"},
+        "quality_memo_decision": {"trio_seconds", "trio_total", "trio_stats"},
+    }
+    assert list(stamps) == [
+        "cc_memo_decision", "cc_seed_decision", "pairs_memo_decision",
+        "banding_memo_decision", "quality_memo_decision",
+    ]
+    one_miss_two_hits = {"hits": 2, "misses": 1}
+    assert stamps["cc_memo_decision"]["stats"] == one_miss_two_hits
+    assert set(stamps["cc_memo_decision"]["trio_seconds"]) == {
+        "dedup_components", "cluster_aware_split", "dedup_cluster_keep_best",
+    }
+    assert stamps["cc_seed_decision"]["decision"] == {"seeded": False, "source": "plain"}
+    assert stamps["pairs_memo_decision"]["trio_stats"] == {
+        "jaccard_pairs": one_miss_two_hits,
+        "minhash_verified_pairs": {"hits": 0, "misses": 1},
+    }
+    assert stamps["banding_memo_decision"]["k1_pair_stats"] == {
+        "jaccard_pairs": {"hits": 1, "misses": 0},
+        "minhash_verified_pairs": {"hits": 1, "misses": 1},
+    }
+    assert stamps["quality_memo_decision"]["trio_stats"] == one_miss_two_hits

@@ -144,11 +144,11 @@ def test_dead_session_memo_hit_is_evicted(spark, sf_dir):
             raise RuntimeError("session stopped")
 
     release_result_memos()
-    C._RESULT_MEMO["zombie"] = ("k", _DeadSessionFrame(), [])
+    C._RESULT_MEMO["zombie"] = ("k", _DeadSessionFrame(), [], C._EPOCH)
     assert C.peek_result_memo("zombie", "k") is None
     assert "zombie" not in C._RESULT_MEMO  # evicted, not retried forever
 
-    C._RESULT_MEMO["zombie2"] = ("k", _DeadSessionFrame(), [])
+    C._RESULT_MEMO["zombie2"] = ("k", _DeadSessionFrame(), [], C._EPOCH)
     from multithreaded_mapreduce_spark.sources.tables import load_table
 
     out = C.memoized_result_checkpoint(
@@ -159,14 +159,21 @@ def test_dead_session_memo_hit_is_evicted(spark, sf_dir):
 
 
 def test_live_session_memo_still_hits(spark, sf_dir):
-    """The liveness guard must not turn real hits into rebuilds."""
+    """The liveness guard must not turn real hits into rebuilds: a
+    second request in the same build, before any action, gets the same
+    frame; once an action has filled it, a later build hits too. A key
+    change in a later build replaces the entry and unpersists its
+    blocks."""
+    from multithreaded_mapreduce_spark.plans import decisions
     from multithreaded_mapreduce_spark.plans.caching import (
+        _RESULT_MEMO,
         memoized_result_checkpoint,
         result_memo_stats,
     )
     from multithreaded_mapreduce_spark.sources.tables import load_table
 
     release_result_memos()
+    decisions.new_record()
     build_calls = []
 
     def build():
@@ -177,4 +184,61 @@ def test_live_session_memo_still_hits(spark, sf_dir):
     b = memoized_result_checkpoint("live_probe", "k", build)
     assert len(build_calls) == 1 and a is b
     assert result_memo_stats("live_probe")["hits"] == 1
+    assert decisions.record()["memo"] == {"live_probe": "miss"}
+    assert a.count() == 5  # the consumer's action fills the checkpoint
+    release_tracked()  # the next top-level build's release
+    decisions.new_record()
+    assert memoized_result_checkpoint("live_probe", "k", build) is a
+    assert len(build_calls) == 1
+    assert decisions.record()["memo"] == {"live_probe": "hit"}
+    old_ids = {rid for _s, rid in _RESULT_MEMO["live_probe"][2]}
+    release_tracked()
+    memoized_result_checkpoint("live_probe", "k2", build).count()
+    assert len(build_calls) == 2
+    assert not old_ids & _persistent_ids(spark)
     release_result_memos()
+
+
+def test_memo_miss_runs_no_job_before_the_consumer_action(spark):
+    """A miss registers a lazy checkpoint: over a plan with no shuffle
+    the memo starts no Spark job of its own, and the consumer's action
+    fills it."""
+    from multithreaded_mapreduce_spark.plans import caching as C
+
+    release_result_memos()
+    sc = spark.sparkContext
+    sc.setJobGroup("lazy-memo-probe", "lazy memo miss")
+    try:
+        out = C.memoized_result_checkpoint(
+            "lazy_probe", "k", lambda: spark.range(1000).selectExpr("id", "id % 7 AS r")
+        )
+        assert list(sc.statusTracker().getJobIdsForGroup("lazy-memo-probe")) == []
+        assert not C._memo_filled(C._RESULT_MEMO["lazy_probe"][2])
+        assert out.filter("r = 0").count() == 143
+        assert C._memo_filled(C._RESULT_MEMO["lazy_probe"][2])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        release_result_memos()
+
+
+def test_unfilled_memo_from_an_earlier_build_is_rebuilt(spark, sf_dir):
+    """A memo whose seeding build never ran its action is evicted at the
+    next build: its lineage reads CC checkpoint blocks that build's
+    release drops, so serving it can die with a missing-block error.
+    The next consumer records the eviction, rebuilds and still matches
+    its oracle."""
+    from multithreaded_mapreduce_spark.plans import decisions
+    from multithreaded_mapreduce_spark.plans.caching import result_memo_stats
+
+    from .oracle import compare_query
+
+    release_tracked()
+    release_result_memos()
+    Q["dedup_components"].builder(spark, sf_dir)  # no action
+    misses = result_memo_stats("jaccard_doc_components")["misses"]
+    q = Q["cluster_aware_split"]
+    compare_query(spark, sf_dir, q.builder, q.oracle)
+    assert decisions.record()["memo"]["jaccard_doc_components"] == "unfilled-evicted"
+    assert result_memo_stats("jaccard_doc_components")["misses"] == misses + 1
+    release_result_memos()
+    release_tracked()

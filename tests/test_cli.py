@@ -49,12 +49,19 @@ def test_cli_verify_subcommand(capsys, spark, sf_dir):
 
 
 def test_cli_explain_prints_decision_record(capsys, spark, sf_dir):
-    """`explain` ends with the build's decision record as one JSON line."""
+    """`explain` ends with the build's decision record as one JSON line,
+    memo outcomes included."""
     import json
 
-    assert main(["explain", "dedup_containment", sf_dir]) == 0
-    (line,) = [
-        ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("-- decisions: ")
-    ]
-    record = json.loads(line[len("-- decisions: "):])
-    assert "use_prefix" in record["containment"]
+    from multithreaded_mapreduce_spark.plans.caching import release_result_memos
+
+    def explained_record(name: str) -> dict:
+        assert main(["explain", name, sf_dir]) == 0
+        (line,) = [
+            ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("-- decisions: ")
+        ]
+        return json.loads(line[len("-- decisions: "):])
+
+    assert "use_prefix" in explained_record("dedup_containment")["containment"]
+    release_result_memos()
+    assert explained_record("doc_quality_composite")["memo"] == {"quality_gates": "miss"}
