@@ -6,6 +6,7 @@ distributed decode/resize/energy paths."""
 from __future__ import annotations
 
 import hashlib
+import os
 import struct
 
 import numpy as np
@@ -48,6 +49,13 @@ PNG_GOLDENS = (
         (672, 558, 4),
         "61ec7030952bfe1c6239c9f8ae98d922357f7d356ef6dc31053ad11be6d74be2",
     ),
+)
+
+#: the screenshots exist only in the reference checkout
+_MISSING_GOLDENS = [path for path, _, _ in PNG_GOLDENS if not os.path.exists(path)]
+needs_png_goldens = pytest.mark.skipif(
+    bool(_MISSING_GOLDENS),
+    reason=f"reference screenshots missing: {', '.join(_MISSING_GOLDENS)}",
 )
 
 
@@ -239,6 +247,7 @@ def test_png_rejects_bad_magic_crc_and_interlace():
         decode_png(bad)
 
 
+@needs_png_goldens
 def test_png_reference_goldens_decode_exactly():
     """The reference repo's own PNG inputs decode to the pinned
     dimensions and pixel digests; all three are fully opaque RGBA
@@ -428,6 +437,7 @@ def test_spark_png_features_are_pixel_histograms(spark):
         assert not np.array_equal(want, (rh / rh.sum()).astype(np.float32))
 
 
+@needs_png_goldens
 def test_media_decode_metadata_on_reference_goldens(spark):
     """Drive the registered decode operator over a media table built
     from the reference repo's own .png files — dims/channels must match
