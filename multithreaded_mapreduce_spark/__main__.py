@@ -52,8 +52,10 @@ def main(argv: list[str] | None = None) -> int:
 
     p_explain = sub.add_parser(
         "explain",
-        help="print a registered query's physical plan, shuffle count and "
-        "measured plan decisions without executing it",
+        help="build a registered query and print its physical plan, shuffle "
+        "count, measured plan decisions and the number of Spark jobs the "
+        "build itself ran (decision probes, memo checkpoints); the query's "
+        "own action is not run",
     )
     p_explain.add_argument("name")
     p_explain.add_argument("sf_dir", nargs="?", default=DEFAULT_SF_DIR)
@@ -134,7 +136,18 @@ def main(argv: list[str] | None = None) -> int:
             if args.name not in queries:
                 print(f"unknown query {args.name!r}; see `list`", file=sys.stderr)
                 return 2
-            df = queries[args.name].builder(spark, args.sf_dir)
+            # builders run jobs of their own (decision probes, memo
+            # checkpoints executing AQE stages); count them by job group
+            import uuid
+
+            sc = spark.sparkContext
+            group = f"explain-build-{uuid.uuid4().hex}"
+            sc.setLocalProperty("spark.jobGroup.id", group)
+            try:
+                df = queries[args.name].builder(spark, args.sf_dir)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            n_build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     args.mode
@@ -152,6 +165,7 @@ def main(argv: list[str] | None = None) -> int:
                 n_exchanges = len(_re.findall(r"[+:]- Exchange\b", plan))
             print(f"-- shuffles (hash/range exchanges): {n_exchanges}")
             print(f"-- broadcast exchanges: {n_bcast}")
+            print(f"-- build jobs: {n_build_jobs}")
             import json
 
             from .plans.decisions import record

@@ -144,8 +144,9 @@ def _group_relation(
 ) -> DataFrame:
     """The collapsed distinct-token-set relation (gid = min member
     doc_id, member list, hashed token array, set size) — the CHEAP half
-    of the jaccard graph (scan + one groupBy), shared by the pairwise
-    compare and the memo-seeded CC path."""
+    of the jaccard graph (scan + one groupBy), shared by both jaccard
+    arms, dedup_prefix_filter, dedup_containment and the memo-seeded
+    CC path."""
     # the no-token filter runs against the RAW text (any non-whitespace
     # char ⟺ non-empty token set): a predicate over the computed token
     # array would be pushed into the FileScan and re-run the whole
@@ -177,6 +178,33 @@ def _group_relation(
         )
         .transform(tracked_persist)
     )
+
+
+def _rarity_prefixes(groups: DataFrame, plen):
+    """PPJoin's prefix filter over the collapsed groups, shared by the
+    jaccard prefix arm and dedup_containment: returns ``(tok, freq,
+    prefixes)`` — the persisted (gid, n, token) postings, each token's
+    group frequency, and the (gid, n, token, pos) rows of each set's
+    first ``plen`` tokens in global rarity order (freq asc, token-hash
+    asc: arbitrary but consistent across sets). ``plen`` is a column
+    over ``n`` short enough that any pair reaching the site's threshold
+    provably shares a prefix token, so the candidate join touches the
+    rare tail of the posting lists instead of the full token×token
+    blowup."""
+    from pyspark.sql import Window as W
+
+    tok = groups.select("gid", "n", F.explode("toks_h").alias("token")).transform(
+        tracked_persist
+    )
+    freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
+    pos = F.row_number().over(W.partitionBy("gid").orderBy("freq", "token"))
+    prefixes = (
+        tok.join(F.broadcast(freq), "token")
+        .select("gid", "n", "token", pos.alias("pos"), plen.alias("plen"))
+        .filter(F.col("pos") <= F.col("plen"))
+        .select("gid", "n", "token", "pos")
+    )
+    return tok, freq, prefixes
 
 
 # ------------------------------------------------------------------
@@ -346,15 +374,18 @@ def _ratio_ge_int(c_col: str, denom, threshold: float):
     return F.col(c_col) * F.lit(fr.denominator) >= denom * F.lit(fr.numerator)
 
 
-def _jaccard_ge_int(threshold: float, c: str = "c", na: str = "na", nb: str = "nb"):
+def _jaccard_ge_int(threshold: float, c="c", na: str = "na", nb: str = "nb"):
     """c·(p+q) >= p·(na+nb) ⟺ q·c >= p·(na+nb−c) ⟺ jaccard >= p/q —
     the rearranged form references c exactly ONCE (the union-size form
-    would smuggle a second reference back in); see _ratio_ge_int."""
+    would smuggle a second reference back in); see _ratio_ge_int. ``c``
+    is a column name or an integer overlap expression (the prefix arm's
+    positional bound)."""
     from fractions import Fraction
 
     fr = Fraction(str(threshold))
     p, q = fr.numerator, fr.denominator
-    return F.col(c) * F.lit(p + q) >= (F.col(na) + F.col(nb)) * F.lit(p)
+    c = F.col(c) if isinstance(c, str) else c
+    return c * F.lit(p + q) >= (F.col(na) + F.col(nb)) * F.lit(p)
 
 
 def _bitmap_guard(keep_cond, exact_intersect):
@@ -439,88 +470,110 @@ def _jaccard_group_cross(
     dedup_components: returns ``(groups, cross)`` where ``groups`` is
     the distinct-token-set relation (gid = min member doc_id) and
     ``cross`` carries (ga, gb, m_a, m_b, jaccard) for distinct group
-    pairs at or over the threshold.
+    pairs at or over the threshold. Under the byte budget the groups
+    compare pairwise over a broadcast; above it through the prefix
+    filter (see _jaccard_cross).
 
     ``docs`` (optional) restricts the graph to a pre-filtered document
     relation (the md5-uniform eval sample); ``decision_tag`` keys the
-    broadcast-vs-postings path memo separately for such variants."""
-    # The oracle's shape (exploded token equi-join) materializes
-    # Σ_token freq² rows — ~400M at sf0.1 on this 31-token vocabulary.
-    # Equivalent but ~10× cheaper here: collapse docs to unique
-    # distinct-token sets, compare sets pairwise with array_intersect
-    # under a size-ratio prune (jaccard >= t needs min(na,nb)/max >= t),
-    # then expand members. All counts are integers, so the jaccard
-    # doubles are bit-identical to the oracle's c/(na+nb-c).
+    pairwise-vs-prefix path memo separately for such variants."""
     groups = _group_relation(spark, sf_dir, docs)
+    pairwise = _jaccard_path_decision(groups, sf_dir, tag=decision_tag)["use_broadcast"]
+    return groups, _jaccard_cross(sf_dir, groups, decision_tag, pairwise)
+
+
+def _jaccard_cross(sf_dir: str, groups: DataFrame, tag: str, pairwise: bool) -> DataFrame:
+    """(ga, gb, m_a, m_b, jaccard) for the group pairs of ``groups`` at
+    or over the threshold, from one of two candidate generators feeding
+    one verify under the measured set-compare encoding (``tag`` keys
+    that encoding per variant).
+
+    The oracle's shape (exploded token equi-join) materializes
+    Σ_token freq² rows — ~400M at sf0.1 on its 31-token vocabulary.
+    Both arms instead compare collapsed distinct-token sets under a
+    size-ratio prune (jaccard >= t needs min(na,nb)/max >= t) and then
+    expand members. All counts are integers, so the jaccard doubles are
+    bit-identical to the oracle's c/(na+nb-c)."""
     # size-ratio prune: |A∩B| <= min(na,nb), so jaccard can only
     # reach t when the smaller set is >= t × the larger
     ratio_prune = (F.col("na") <= F.floor(F.col("nb") / JACCARD_THRESHOLD)) & (
         F.col("nb") <= F.floor(F.col("na") / JACCARD_THRESHOLD)
     )
-    jac = (
-        F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
-    ).alias("jaccard")
-    if _jaccard_path_decision(groups, sf_dir, tag=decision_tag)["use_broadcast"]:
-        # pairwise path: broadcast the collapsed-group relation (byte-
-        # guarded above — the gate is a measured bytes estimate, not a
-        # row count) and compare every gid-ordered pair under the
-        # size-ratio prune. Exact branch: W AND+popcounts per pair
-        # (profiled 93 → ~8 exec-s on the components edge stage at
-        # sf0.1). Hashed branch: the intersect is CASE-guarded by the
-        # cheap conjuncts — gid order, size-ratio prune, union bound —
-        # so a sub-threshold pair never evaluates array_intersect, even
-        # after Catalyst pushes the threshold filter into the join
-        # condition (see _bitmap_guard)
-        a, b, c = _set_compare(
-            sf_dir, groups, "toks_h", f"jaccard_groups{decision_tag}",
-            {"gid": "g{}", "members": "m_{}", "n": "n{}"},
-            keep=lambda ub: (F.col("ga") < F.col("gb"))
-            & ratio_prune
-            & _bitmap_keep_jaccard(ub, JACCARD_THRESHOLD),
-        )
-        cross = (
-            F.broadcast(a)
-            .join(b, (F.col("ga") < F.col("gb")) & ratio_prune)
-            .select("ga", "gb", "m_a", "m_b", "na", "nb", c.alias("c"))
-            # threshold filter in the single-c integer form BEFORE the
-            # ratio projection: the pushed-down join-condition copy then
-            # evaluates the intersect once per pair, not twice
-            # (_ratio_ge_int; survivors re-evaluate c for the output)
-            .filter(_jaccard_ge_int(JACCARD_THRESHOLD))
-            .select("ga", "gb", "m_a", "m_b", jac)
-        )
+    # Exact branch: W AND+popcounts per pair (profiled 93 → ~8 exec-s
+    # on the components edge stage at sf0.1). Hashed branch: the
+    # intersect is CASE-guarded by the cheap conjuncts — gid order,
+    # size-ratio prune, union bound — so a sub-threshold pair never
+    # evaluates array_intersect, even after Catalyst pushes the
+    # threshold filter into the join condition (see _bitmap_guard)
+    a, b, c = _set_compare(
+        sf_dir, groups, "toks_h", f"jaccard_groups{tag}",
+        {"gid": "g{}", "members": "m_{}", "n": "n{}"},
+        keep=lambda ub: (F.col("ga") < F.col("gb"))
+        & ratio_prune
+        & _bitmap_keep_jaccard(ub, JACCARD_THRESHOLD),
+    )
+    if pairwise:
+        # broadcast the collapsed-group relation (byte-guarded by the
+        # caller — a measured bytes estimate, not a row count) and
+        # compare every gid-ordered pair under the size-ratio prune
+        cand = F.broadcast(a).join(b, (F.col("ga") < F.col("gb")) & ratio_prune)
     else:
-        # over-budget fallback: the oracle's own token-postings
-        # equi-join — the exploded (gid, token) stream exchanges on the
-        # 8-byte token hash (never text, never full arrays), so it
-        # shuffles cleanly at any corpus size; intersection sizes come
-        # from the shared-token count over distinct-token postings
-        tokl = groups.select("gid", "n", F.explode("toks_h").alias("token"))
-        pa = tokl.select(
-            F.col("gid").alias("ga"), F.col("n").alias("na"), "token"
+        # PPJoin prefix filter (Xiao et al., WWW'08): a pair with
+        # J >= t shares >= t/(1+t)·(na+nb) tokens, so its first shared
+        # token lies in each side's first n−⌈t·n⌉+1 rarest. Candidates
+        # equi-join the prefixes under the size-ratio prune and PPJoin's
+        # positional prune: the first shared token at (pos_a, pos_b)
+        # caps the overlap at 1 + min(na−pos_a, nb−pos_b), which must
+        # reach that bound — a JOIN residual, so the failing witnesses
+        # never shuffle. The bound is compared in _jaccard_ge_int's
+        # integer form: as a double, t/(1+t)·(na+nb) rounds up past the
+        # integer at na+nb = 63, 117, … and would prune pairs at exactly
+        # J = t. Only slim (gid, n, token, pos) rows move before the
+        # verify, whose joins stay plain shuffles: this arm is the
+        # memory guard past the broadcast budget.
+        _, _, prefixes = _rarity_prefixes(
+            groups,
+            (F.col("n") - F.ceil(F.col("n") * F.lit(JACCARD_THRESHOLD)) + 1).cast("int"),
         )
-        pb = tokl.select(
-            F.col("gid").alias("gb"), F.col("n").alias("nb"), "token"
+        pa = prefixes.select(
+            F.col("gid").alias("ga"), F.col("n").alias("na"),
+            "token", F.col("pos").alias("pos_a"),
         )
-        shared = (
-            pa.join(pb, "token")
-            .filter((F.col("ga") < F.col("gb")) & ratio_prune)
-            .groupBy("ga", "gb", "na", "nb")
-            .agg(F.count(F.lit(1)).alias("c"))
+        pb = prefixes.select(
+            F.col("gid").alias("gb"), F.col("n").alias("nb"),
+            "token", F.col("pos").alias("pos_b"),
         )
-        cross = (
-            shared.filter(_jaccard_ge_int(JACCARD_THRESHOLD))
-            .join(
-                groups.select(F.col("gid").alias("ga"), F.col("members").alias("m_a")),
-                "ga",
+        ubound = 1 + F.least(F.col("na") - F.col("pos_a"), F.col("nb") - F.col("pos_b"))
+        cand = (
+            pa.join(
+                pb,
+                (pa["token"] == pb["token"])
+                & (F.col("ga") < F.col("gb"))
+                & ratio_prune
+                & _jaccard_ge_int(JACCARD_THRESHOLD, c=ubound),
             )
-            .join(
-                groups.select(F.col("gid").alias("gb"), F.col("members").alias("m_b")),
-                "gb",
-            )
-            .select("ga", "gb", "m_a", "m_b", jac)
+            .select("ga", "gb")
+            .distinct()
+            .join(a, "ga")
+            .join(b, "gb")
         )
-    return groups, cross
+    return (
+        cand.select("ga", "gb", "m_a", "m_b", "na", "nb", c.alias("c"))
+        # threshold filter in the single-c integer form BEFORE the
+        # ratio projection: the pushed-down join-condition copy then
+        # evaluates the intersect once per pair, not twice
+        # (_ratio_ge_int; survivors re-evaluate c for the output)
+        .filter(_jaccard_ge_int(JACCARD_THRESHOLD))
+        .select(
+            "ga",
+            "gb",
+            "m_a",
+            "m_b",
+            (F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))).alias(
+                "jaccard"
+            ),
+        )
+    )
 
 
 @register(
@@ -966,8 +1019,8 @@ def _jaccard_path_decision(groups: DataFrame, sf_dir: str, tag: str = "") -> dic
     collapsed-group relation — n_groups row overheads plus 8 B per
     token hash and per member id — and pick the broadcast pairwise
     path only under the byte budget. Above it the query switches to
-    the token-postings equi-join (the oracle's own shuffle-safe
-    shape); both paths are value-identical (pytest-asserted)."""
+    the prefix filter, whose joins all shuffle (see _jaccard_cross);
+    both paths are value-identical (pytest-asserted)."""
 
     def measure() -> dict:
         row = groups.agg(
@@ -999,11 +1052,14 @@ def _jaccard_path_decision(groups: DataFrame, sf_dir: str, tag: str = "") -> dic
     f"token set is >= {CONTAINMENT_THRESHOLD:.0%} covered by another "
     "document's — the asymmetric complement of Jaccard that catches a "
     "short doc quoted inside a long one (the union term hides it from "
-    "jaccard >= 0.8). Candidate generation is a MEASURED per-corpus "
-    "decision between two paths (memoized, the LSH-pattern): the "
-    "asymmetric PREFIX filter — the contained side indexes its "
-    "na−⌈t·na⌉+1 globally-rarest tokens against full posting lists, an "
-    "overlap >= ⌈t·na⌉ provably shares a prefix token — wins on real "
+    "jaccard >= 0.8). Documents collapse to the same distinct-token-"
+    "set groups as the jaccard queries. Candidate generation is a "
+    "MEASURED per-corpus decision between two paths (memoized, one "
+    "action sizes both): the asymmetric PREFIX filter — the contained "
+    "side indexes its na−⌈t·na⌉+1 globally-rarest tokens (the rarity-"
+    "prefix generator dedup_prefix_filter also runs) against full "
+    "posting lists, an overlap >= ⌈t·na⌉ provably shares a prefix "
+    "token — wins on real "
     "heavy-tailed vocabularies; the size-pruned nested loop wins when "
     "a degenerate hot vocabulary makes the witness stream exceed "
     "|G|² (this synthetic ~31-word corpus — measured 27 s vs 2.4 s at "
@@ -1015,49 +1071,14 @@ def _jaccard_path_decision(groups: DataFrame, sf_dir: str, tag: str = "") -> dic
     tags=("dedup", "neardup", "containment", "prefix-filter"),
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    docs = spread(
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("text").rlike(r"\S"))
-    )
-    tokset = docs.select(
-        "doc_id",
-        F.array_sort(
-            F.array_distinct(F.filter(F.split("text", r"\s+"), lambda t: F.length(t) > 0))
-        ).alias("toks"),
-    )
-    groups = (
-        tokset.groupBy("toks")
-        .agg(F.min("doc_id").alias("gid"), F.collect_list("doc_id").alias("members"))
-        .select(
-            "gid",
-            "members",
-            F.transform("toks", lambda t: F.xxhash64(t)).alias("toks_h"),
-            F.size("toks").alias("n"),
-        )
-        .transform(tracked_persist)
-    )
-    # posting list over collapsed sets + global rarity order (freq asc,
-    # token-hash asc — arbitrary-but-consistent, same as
-    # dedup_prefix_filter). The CONTAINED side indexes only its prefix;
-    # the CONTAINER side is the full posting list.
-    tok = groups.select("gid", "n", F.explode("toks_h").alias("token")).transform(
-        tracked_persist
-    )
-    freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
-    pos = F.row_number().over(W.partitionBy("gid").orderBy("freq", "token"))
+    groups = _group_relation(spark, sf_dir)
     # overlap needed for C(A→B) >= t is ⌈t·na⌉; at most na−⌈t·na⌉ of
     # A's tokens can miss B, so A's first na−⌈t·na⌉+1 rarest tokens
-    # must intersect B
-    plen = (
-        F.col("n") - F.ceil(F.col("n") * F.lit(CONTAINMENT_THRESHOLD)) + 1
-    ).cast("int")
-    prefixes = (
-        tok.join(F.broadcast(freq), "token")
-        .select("gid", "n", "token", pos.alias("pos"), plen.alias("plen"))
-        .filter(F.col("pos") <= F.col("plen"))
+    # must intersect B. The CONTAINED side indexes only its prefix; the
+    # CONTAINER side is the full posting list ``tok``.
+    tok, freq, prefixes = _rarity_prefixes(
+        groups,
+        (F.col("n") - F.ceil(F.col("n") * F.lit(CONTAINMENT_THRESHOLD)) + 1).cast("int"),
     )
     # ---- AQE-style candidate-path decision (memoized per corpus):
     # the PREFIX join's work is the witness stream Σ_prefix-rows
@@ -1067,15 +1088,19 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (10× probe: exp 0.26 vs 1.33); on this synthetic ~31-word
     # vocabulary every posting list is hot and the witness stream
     # EXCEEDS |G|² (measured 27 s vs 2.7 s at sf0.1) — so measure both
-    # estimates with two slim aggregates and pick per corpus.
+    # estimates in one action (two 1-row aggregates) and pick per corpus.
     def measure() -> dict:
-        n_groups = groups.count()
-        est_row = (
-            prefixes.join(F.broadcast(freq), "token")
-            .agg(F.sum("freq").alias("witness_rows"))
+        row = (
+            groups.agg(F.count(F.lit(1)).alias("n_groups"))
+            .crossJoin(
+                prefixes.join(F.broadcast(freq), "token").agg(
+                    F.sum("freq").alias("witness_rows")
+                )
+            )
             .first()
         )
-        witness = int(est_row["witness_rows"] or 0)
+        n_groups = int(row["n_groups"])
+        witness = int(row["witness_rows"] or 0)
         # absolute cap (ADVICE r5): past |G| = _NESTED_MAX_GROUPS the
         # |G|² candidate stream is wrong no matter what the witness
         # estimate says (witness >= |G|² is reachable at |G| ~ 1e6 on a

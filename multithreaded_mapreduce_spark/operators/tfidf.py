@@ -14,7 +14,9 @@ broadcast. The prefix filter sorts each doc's tokens by global rarity
 and indexes only the first |set|−⌈t·|set|⌉+1 of them — any pair with
 Jaccard ≥ t provably shares a prefix token, so the candidate join
 touches the rare tail of the posting lists instead of the full
-token×token blowup, and the exact verify runs only on candidates.
+token×token blowup, and the exact verify runs only on candidates. It
+is the ``jaccard`` decision site's over-budget arm in ``dedup.py``
+(``_jaccard_cross``); ``dedup_prefix_filter`` runs that arm directly.
 """
 
 from __future__ import annotations
@@ -22,10 +24,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..plans.caching import tracked_persist
 from ..plans.registry import register
 from ..sources.tables import load_table
-from .dedup import JACCARD_ORACLE, JACCARD_THRESHOLD
+from .dedup import (
+    JACCARD_ORACLE,
+    _group_relation,
+    _jaccard_cross,
+    _pairs_from_group_cross,
+)
 
 TOP_TERMS = 3
 
@@ -230,149 +236,18 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_prefix_filter",
     oracle=JACCARD_ORACLE,
     description="Exact-threshold Jaccard join via PPJoin-style prefix "
-    "filtering — same output as dedup_jaccard_pairs, different (at-"
-    "scale) candidate generation: tokens of each collapsed set are "
-    "ordered by global rarity, only the first n−⌈t·n⌉+1 are indexed, "
-    "and candidates come from equi-joining those prefixes (any pair "
-    "with J ≥ t provably shares a prefix token since the overlap must "
-    "reach t·max(na,nb)). Candidates then verify exactly with "
-    "array_intersect. On a heavy-tailed vocabulary this touches only "
-    "rare posting lists instead of the full token×token join.",
+    "filtering — same output as dedup_jaccard_pairs, whose over-budget "
+    "arm it always runs: tokens of each collapsed set are ordered by "
+    "global rarity, only the first n−⌈t·n⌉+1 are indexed, and "
+    "candidates come from equi-joining those prefixes under size-ratio "
+    "and positional prunes (any pair with J ≥ t provably shares a "
+    "prefix token since the overlap must reach t·max(na,nb)). "
+    "Candidates then verify exactly under the measured set-compare "
+    "encoding, over shuffled joins. On a heavy-tailed vocabulary this "
+    "touches only rare posting lists instead of the full token×token "
+    "join.",
     tags=("dedup", "neardup", "jaccard", "prefix-filter"),
 )
 def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # cheap raw-text no-token prune; see dedup_jaccard_pairs on why a
-    # size(toks) predicate would drag the tokenize chain into the scan
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").rlike(r"\S"))
-    tokset = docs.select(
-        "doc_id",
-        F.array_sort(
-            F.array_distinct(
-                F.filter(F.split("text", r"\s+"), lambda t: F.length(t) > 0)
-            )
-        ).alias("toks"),
-    )
-    # tokens hash to 8-byte longs once here: the posting-list join, the
-    # frequency count, and the pairwise verify all run over fixed-width
-    # longs instead of variable-length strings (same counts absent
-    # 64-bit collisions; the rarity order just uses (freq, hash) as its
-    # arbitrary-but-consistent total order)
-    groups = (
-        tokset.groupBy("toks")
-        .agg(F.min("doc_id").alias("gid"), F.collect_list("doc_id").alias("members"))
-        .select(
-            "gid",
-            "members",
-            F.transform("toks", lambda t: F.xxhash64(t)).alias("toks_h"),
-            F.size("toks").alias("n"),
-        )
-        .transform(tracked_persist)
-    )
-    # global rarity order (freq asc, token-hash asc) over collapsed sets
-    tok = groups.select(F.col("gid"), F.col("n"), F.explode("toks_h").alias("token"))
-    freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
-    pos = F.row_number().over(W.partitionBy("gid").orderBy("freq", "token"))
-    prefix_len = (F.col("n") - F.ceil(F.col("n") * F.lit(JACCARD_THRESHOLD)) + 1).cast(
-        "int"
-    )
-    prefixes = (
-        tok.join(F.broadcast(freq), "token")
-        .select("gid", "n", "token", pos.alias("pos"), prefix_len.alias("plen"))
-        .filter(F.col("pos") <= F.col("plen"))
-        .select("gid", "n", "token", "pos")
-    )
-    pa = prefixes.select(
-        F.col("gid").alias("ga"), F.col("n").alias("na"),
-        "token", F.col("pos").alias("pos_a"),
-    )
-    pb = prefixes.select(
-        F.col("gid").alias("gb"), F.col("n").alias("nb"),
-        "token", F.col("pos").alias("pos_b"),
-    )
-    # candidates: shared prefix token, with PPJoin's two cheap prunes
-    # applied BEFORE anything fat moves — (1) size-ratio inside the
-    # join condition (J >= t forces min(na,nb) >= t·max(na,nb)); (2)
-    # the positional prune after: a witness token at (pos_a, pos_b)
-    # caps the overlap at 1 + min(na−pos_a, nb−pos_b), which must reach
-    # ⌈t/(1+t)·(na+nb)⌉ — keep a pair only if its best witness passes.
-    # The groupBy doubles as the dedup `distinct` would have done, so
-    # the prune rides the same shuffle of slim int rows.
-    ubound = 1 + F.least(
-        F.col("na") - F.col("pos_a"), F.col("nb") - F.col("pos_b")
-    )
-    needed = F.ceil(
-        (F.col("na") + F.col("nb"))
-        * F.lit(JACCARD_THRESHOLD / (1.0 + JACCARD_THRESHOLD))
-    )
-    cand = (
-        pa.join(
-            pb,
-            (pa["token"] == pb["token"])
-            & (F.col("ga") < F.col("gb"))
-            & (F.col("na") <= F.floor(F.col("nb") / JACCARD_THRESHOLD))
-            & (F.col("nb") <= F.floor(F.col("na") / JACCARD_THRESHOLD))
-            # positional prune as a JOIN residual, not just post-agg: a
-            # pair survives iff SOME witness's bound passes, and a
-            # witness failing its own bound can never be that witness —
-            # so dropping failing rows before the (ga, gb) aggregate is
-            # exact and cuts the shuffled candidate stream (most prefix
-            # collisions at t=0.8 sit too deep in the prefix to pass)
-            & (ubound >= needed),
-        )
-        .groupBy("ga", "gb")
-        .agg(F.max(ubound).alias("best_ubound"), F.first(needed).alias("needed"))
-        .filter(F.col("best_ubound") >= F.col("needed"))
-        .select("ga", "gb")
-    )
-    a = groups.select(
-        F.col("gid").alias("ga"), F.col("toks_h").alias("ta"),
-        F.col("members").alias("m_a"), F.col("n").alias("na"),
-    )
-    b = groups.select(
-        F.col("gid").alias("gb"), F.col("toks_h").alias("tb"),
-        F.col("members").alias("m_b"), F.col("n").alias("nb"),
-    )
-    c = F.size(F.array_intersect("ta", "tb"))
-    # threshold filter in the single-c integer form BEFORE the ratio
-    # projection (r11): the copy Catalyst pushes into the verify join's
-    # condition then evaluates the intersect once per candidate, not
-    # twice — see dedup._ratio_ge_int for the exactness argument
-    from .dedup import _jaccard_ge_int
-
-    verified = (
-        cand.join(F.broadcast(a), "ga")
-        .join(F.broadcast(b), "gb")
-        .select("m_a", "m_b", "na", "nb", c.alias("c"))
-        .filter(_jaccard_ge_int(JACCARD_THRESHOLD))
-        .select(
-            "m_a",
-            "m_b",
-            (F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))).alias(
-                "jaccard"
-            ),
-        )
-    )
-    pairs = (
-        verified.select(F.explode("m_a").alias("da"), "m_b", "jaccard")
-        .select("da", F.explode("m_b").alias("db"), "jaccard")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
-    )
-    within = (
-        groups.filter(F.size("members") >= 2)
-        .select(F.explode("members").alias("da"), "members")
-        .select("da", F.explode("members").alias("db"))
-        .filter(F.col("da") < F.col("db"))
-        .select(
-            F.col("da").alias("doc_a"),
-            F.col("db").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    # no global output sort: the pair set is ~millions of rows and the
-    # driver's comparison is order-insensitive — a total order on the
-    # output would be the single most expensive stage of the plan
-    return pairs.unionByName(within)
+    groups = _group_relation(spark, sf_dir)
+    return _pairs_from_group_cross(groups, _jaccard_cross(sf_dir, groups, "", pairwise=False))

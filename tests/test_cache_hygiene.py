@@ -224,9 +224,10 @@ def test_memo_miss_runs_no_job_before_the_consumer_action(spark):
 def test_unfilled_memo_from_an_earlier_build_is_rebuilt(spark, sf_dir):
     """A memo whose seeding build never ran its action is evicted at the
     next build: its lineage reads CC checkpoint blocks that build's
-    release drops, so serving it can die with a missing-block error.
-    The next consumer records the eviction, rebuilds and still matches
-    its oracle."""
+    release drops (synchronously here, so the drop has finished before
+    the consumer runs), so serving it can die with a missing-block
+    error. The next consumer records the eviction, rebuilds and still
+    matches its oracle."""
     from multithreaded_mapreduce_spark.plans import decisions
     from multithreaded_mapreduce_spark.plans.caching import result_memo_stats
 
@@ -236,6 +237,7 @@ def test_unfilled_memo_from_an_earlier_build_is_rebuilt(spark, sf_dir):
     release_result_memos()
     Q["dedup_components"].builder(spark, sf_dir)  # no action
     misses = result_memo_stats("jaccard_doc_components")["misses"]
+    release_tracked(blocking=True)
     q = Q["cluster_aware_split"]
     compare_query(spark, sf_dir, q.builder, q.oracle)
     assert decisions.record()["memo"]["jaccard_doc_components"] == "unfilled-evicted"

@@ -65,3 +65,25 @@ def test_cli_explain_prints_decision_record(capsys, spark, sf_dir):
     assert "use_prefix" in explained_record("dedup_containment")["containment"]
     release_result_memos()
     assert explained_record("doc_quality_composite")["memo"] == {"quality_gates": "miss"}
+
+
+def test_cli_explain_counts_build_jobs(capsys, spark):
+    """`explain` builds the query but not its action, and reports the
+    jobs the build ran: a memo consumer's lazy checkpoint still executes
+    AQE stages at build time, a plain aggregate runs none (both on the
+    CLI's default sf0.01 corpus). The first build loads ``documents``;
+    a table's first load in a process runs one parquet schema job, so
+    the aggregate is built second."""
+    from multithreaded_mapreduce_spark.plans.caching import release_result_memos
+
+    def build_jobs(name: str) -> int:
+        assert main(["explain", name]) == 0
+        (line,) = [
+            ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("-- build jobs: ")
+        ]
+        return int(line[len("-- build jobs: "):])
+
+    release_result_memos()
+    assert build_jobs("doc_quality_composite") > 0
+    assert build_jobs("wordcount") == 0
+    release_result_memos()

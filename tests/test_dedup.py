@@ -3,6 +3,8 @@ against the exact Jaccard query (the oracle-checked ground truth)."""
 
 from __future__ import annotations
 
+import pytest
+
 from multithreaded_mapreduce_spark.plans import decisions
 from multithreaded_mapreduce_spark.plans.registry import all_queries
 
@@ -227,8 +229,9 @@ def test_jaccard_broadcast_guard_both_sides(spark, sf_dir, monkeypatch):
     """VERDICT r6 task 3: the pairwise broadcast path is gated on a
     MEASURED bytes estimate of the collapsed-group relation. Forced
     paths must agree; a 1-byte budget must flip the auto decision to
-    the token-postings equi-join (value-identical by construction —
-    same integer c/na/nb feeding the same double)."""
+    the prefix filter (value-identical by construction — same integer
+    c/na/nb feeding the same double), whose plan broadcasts no part of
+    the group relation."""
     import multithreaded_mapreduce_spark.operators.dedup as dd
 
     def rows(df):
@@ -237,8 +240,8 @@ def test_jaccard_broadcast_guard_both_sides(spark, sf_dir, monkeypatch):
     with decisions.forced(jaccard={"use_broadcast": True}):
         via_broadcast = rows(Q["dedup_jaccard_pairs"].builder(spark, sf_dir))
     with decisions.forced(jaccard={"use_broadcast": False}):
-        via_postings = rows(Q["dedup_jaccard_pairs"].builder(spark, sf_dir))
-    assert via_broadcast == via_postings
+        via_prefix = rows(Q["dedup_jaccard_pairs"].builder(spark, sf_dir))
+    assert via_broadcast == via_prefix
     assert len(via_broadcast) > 0
     # under the default budget this corpus broadcasts
     decisions.clear()
@@ -246,14 +249,127 @@ def test_jaccard_broadcast_guard_both_sides(spark, sf_dir, monkeypatch):
     assert auto == via_broadcast
     assert decisions.record()["jaccard"]["use_broadcast"] is True
     assert decisions.record()["jaccard"]["est_bytes"] > 0
-    # over budget: the decision flips, output is unchanged
+    # over budget: the decision flips, output is unchanged. Spark's own
+    # size-based broadcast is off for this build, so only an explicit
+    # broadcast hint could put the group relation in a broadcast.
     monkeypatch.setattr(dd, "_BROADCAST_BUDGET_BYTES", 1)
     decisions.clear()
-    fallback = rows(Q["dedup_jaccard_pairs"].builder(spark, sf_dir))
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        df = Q["dedup_jaccard_pairs"].builder(spark, sf_dir)
+        fallback = rows(df)
+        broadcasts = _broadcast_outputs(df)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     d = decisions.record()["jaccard"]
     decisions.clear()
     assert d["use_broadcast"] is False
     assert fallback == via_broadcast
+    # the group relation's array columns (members, toks_h under any
+    # alias) never ride a broadcast; the token-frequency one may
+    assert broadcasts, "expected the rarity-order freq broadcast"
+    assert all(t != "array" for out in broadcasts for _, t in out), broadcasts
+
+
+def _broadcast_outputs(df) -> list:
+    """(name, type) outputs of every BroadcastExchange in ``df``'s
+    executed plan (run an action first: AQE's final plan)."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        p = stack.pop()
+        name = p.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(p.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(p.plan())
+            continue
+        if name == "BroadcastExchange":
+            attrs = p.output()
+            out.append(
+                [(attrs.apply(i).name(), attrs.apply(i).dataType().typeName())
+                 for i in range(attrs.size())]
+            )
+        kids = p.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+@pytest.mark.parametrize("exact", [True, False], ids=["exact", "hashed"])
+def test_jaccard_arms_and_prefix_filter_match_oracle(spark, sf_dir, exact):
+    """Both arms of the ``jaccard`` site and dedup_prefix_filter (the
+    prefix arm, run directly) match the DuckDB oracle under both
+    set-compare encodings, on the full corpus and on the forced eval
+    sample (the ``decision_tag`` variant)."""
+    import multithreaded_mapreduce_spark.operators.dedup as dd
+    from multithreaded_mapreduce_spark.plans.caching import (
+        release_result_memos,
+        release_tracked,
+    )
+
+    from .oracle import compare_query, duck_connection, rows_multiset
+
+    target = 100  # 500 docs -> a 1-in-5 sample on the sf0.001 fixture
+    encoding = {} if exact else {"encoding": {"exact": False}}
+    sampled_sql = (
+        "WITH " + dd._eval_sample_ctes(target=target)
+        + ",\nep AS (" + dd._jaccard_pairs_oracle("sampled_documents")
+        + ")\nSELECT * FROM ep"
+    )
+    con = duck_connection(sf_dir)
+    tbl = con.execute(sampled_sql).fetch_arrow_table()
+    con.close()
+    sampled_oracle = rows_multiset(
+        list(tbl.schema.names), [tuple(r.values()) for r in tbl.to_pylist()]
+    )
+    decisions.clear()
+    for pairwise in (True, False):
+        with decisions.forced(jaccard={"use_broadcast": pairwise}, **encoding):
+            compare_query(
+                spark, sf_dir, Q["dedup_jaccard_pairs"].builder, dd.JACCARD_ORACLE
+            )
+            assert decisions.record()["jaccard"]["use_broadcast"] is pairwise
+            assert decisions.record()["encoding"]["exact"] is exact
+            release_result_memos()
+            release_tracked()
+            sdf = dd._eval_pairs(spark, sf_dir, target=target)
+            got = rows_multiset(list(sdf.columns), [tuple(r) for r in sdf.collect()])
+            release_result_memos()
+        assert got == sampled_oracle
+        assert decisions.record()["eval_sample"]["modulus"] > 1
+    with decisions.forced(**encoding):
+        compare_query(
+            spark, sf_dir, Q["dedup_prefix_filter"].builder, dd.JACCARD_ORACLE
+        )
+    rec = decisions.record()
+    assert "jaccard" not in rec and rec["encoding"]["exact"] is exact
+    decisions.clear()
+
+
+def test_prefix_arm_keeps_a_pair_at_exactly_the_threshold(spark, tmp_path):
+    """A pair at J = 28/35 = 0.8 with na + nb = 63, whose first shared
+    token bounds the overlap at exactly 28: the positional prune must
+    keep it. As a double, 0.8/1.8 · 63 is 28.000000000000004, so a
+    float-ceil bound of 29 dropped this pair (one such pair sits in the
+    seed-1 Zipf benchmark corpus)."""
+    shared = [f"s{i}" for i in range(28)]
+    docs = [
+        (0, " ".join(shared + [f"a{i}" for i in range(4)])),  # 4 rarer tokens first
+        (1, " ".join(shared + [f"b{i}" for i in range(3)])),
+    ]
+    spark.createDataFrame(docs, "doc_id long, text string").write.mode(
+        "overwrite"
+    ).parquet(str(tmp_path / "documents.parquet"))
+    fixture_dir = str(tmp_path)
+
+    def rows(name):
+        return [tuple(r) for r in Q[name].builder(spark, fixture_dir).collect()]
+
+    for pairwise in (True, False):
+        with decisions.forced(jaccard={"use_broadcast": pairwise}):
+            assert rows("dedup_jaccard_pairs") == [(0, 1, 0.8)], pairwise
+    assert rows("dedup_prefix_filter") == [(0, 1, 0.8)]
 
 
 def test_ngram_df_cut_noop_when_no_shingle_crosses(spark, sf_dir):

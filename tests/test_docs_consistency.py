@@ -127,3 +127,32 @@ def test_no_module_defines_last_globals():
         for m in re.findall(r"^(LAST_[A-Z0-9_]*)\s*[:=]", text, re.M)
     ]
     assert not defined, defined
+
+
+def test_collapsed_groups_and_rarity_prefixes_are_built_once():
+    """The near-dup family builds its collapsed distinct-token-set
+    relation in one function and its rarity-ordered prefixes in one
+    other: a second copy of either is a fork of the pipeline the
+    jaccard arms, dedup_prefix_filter and dedup_containment share."""
+    import ast
+
+    owners = {
+        r"""\.groupBy\(\s*["']toks["']\s*\)""": "_group_relation",
+        r"""row_number\(\)\s*\.over\(.*orderBy\(\s*["']freq["'],\s*["']token["']\s*\)""":
+            "_rarity_prefixes",
+    }
+    for pattern, owner in owners.items():
+        found = []
+        for path, text in _package_sources().items():
+            n = len(re.findall(pattern, text))
+            if not n:
+                continue
+            defs = [
+                node.name
+                for node in ast.parse(text).body
+                if isinstance(node, ast.FunctionDef)
+                for _ in re.findall(pattern, ast.get_source_segment(text, node))
+            ]
+            assert len(defs) == n, f"{pattern} outside a function in {path}"
+            found += defs
+        assert found == [owner], f"{pattern} built in {found}, expected only in {owner}"
