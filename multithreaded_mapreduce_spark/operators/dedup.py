@@ -145,8 +145,10 @@ def _group_relation(
     """The collapsed distinct-token-set relation (gid = min member
     doc_id, member list, hashed token array, set size) — the CHEAP half
     of the jaccard graph (scan + one groupBy), shared by both jaccard
-    arms, dedup_prefix_filter, dedup_containment and the memo-seeded
-    CC path."""
+    arms, dedup_prefix_filter, dedup_containment, the memo-seeded CC
+    path and dedup_minhash_lsh (whose signatures, bands and verify read
+    ``toks_h``). Documents without a token (empty, whitespace-only or
+    NULL text) form no group, so no consumer pairs them."""
     # the no-token filter runs against the RAW text (any non-whitespace
     # char ⟺ non-empty token set): a predicate over the computed token
     # array would be pushed into the FileScan and re-run the whole
@@ -208,9 +210,12 @@ def _rarity_prefixes(groups: DataFrame, plen):
 
 
 # ------------------------------------------------------------------
-# Set-compare encoding: ONE bitmap helper behind the five verify sites
-# (the nested group cross, containment, the LSH verify, the minhash
-# banding verify and the incremental banding verify). Every site
+# Set-compare encoding: ONE bitmap helper behind the five verify sites:
+# the group cross of both jaccard arms (_jaccard_cross), containment and
+# the LSH verify, all three over _group_relation's hashed token arrays,
+# plus the minhash and incremental banding verifies, which share one
+# builder (_minhash_bands) and one verify tail (_banded_verified_pairs)
+# over per-doc cross-engine token ids. Every site
 # reduces to |A∩B| over two distinct-token-id sets; Spark's
 # array_intersect builds a hash set per ROW PAIR (profiled ~93
 # executor-seconds on the pairwise group compare at sf0.1), while a
@@ -482,6 +487,13 @@ def _jaccard_group_cross(
     return groups, _jaccard_cross(sf_dir, groups, decision_tag, pairwise)
 
 
+def _size_ratio_prune(na, nb):
+    """Size-ratio prune: |A∩B| <= min(na,nb), so jaccard can only reach
+    the threshold when the smaller set is >= t × the larger. Removes
+    only sub-threshold pairs, so every verified output is unchanged."""
+    return (na <= F.floor(nb / JACCARD_THRESHOLD)) & (nb <= F.floor(na / JACCARD_THRESHOLD))
+
+
 def _jaccard_cross(sf_dir: str, groups: DataFrame, tag: str, pairwise: bool) -> DataFrame:
     """(ga, gb, m_a, m_b, jaccard) for the group pairs of ``groups`` at
     or over the threshold, from one of two candidate generators feeding
@@ -494,11 +506,7 @@ def _jaccard_cross(sf_dir: str, groups: DataFrame, tag: str, pairwise: bool) -> 
     size-ratio prune (jaccard >= t needs min(na,nb)/max >= t) and then
     expand members. All counts are integers, so the jaccard doubles are
     bit-identical to the oracle's c/(na+nb-c)."""
-    # size-ratio prune: |A∩B| <= min(na,nb), so jaccard can only
-    # reach t when the smaller set is >= t × the larger
-    ratio_prune = (F.col("na") <= F.floor(F.col("nb") / JACCARD_THRESHOLD)) & (
-        F.col("nb") <= F.floor(F.col("na") / JACCARD_THRESHOLD)
-    )
+    ratio_prune = _size_ratio_prune(F.col("na"), F.col("nb"))
     # Exact branch: W AND+popcounts per pair (profiled 93 → ~8 exec-s
     # on the components edge stage at sf0.1). Hashed branch: the
     # intersect is CASE-guarded by the cheap conjuncts — gid order,
@@ -866,6 +874,25 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------------------
 
 
+def _shingle_hashes(ts):
+    """The distinct NGRAM_N-token shingles of the token array ``ts`` as
+    an xxhash64 array (empty under NGRAM_N tokens), shared by
+    dedup_ngram_jaccard and shingle_novelty_scores: positions
+    1..len-(N-1), each a 1-based slice of N tokens joined by space.
+    Shingles hash to 64-bit inside the transform so the exploded rows
+    and the join shuffle carry 8-byte longs instead of ~60-byte strings
+    (collision odds ~|shingles|²/2⁶⁴ — nil)."""
+    return F.when(
+        F.size(ts) >= NGRAM_N,
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), F.size(ts) - (NGRAM_N - 1)),
+                lambda i: F.xxhash64(F.concat_ws(" ", F.slice(ts, i, NGRAM_N))),
+            )
+        ),
+    ).otherwise(F.array().cast("array<bigint>"))
+
+
 @register(
     "shingle_novelty_scores",
     oracle=f"""
@@ -922,16 +949,7 @@ def shingle_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.filter(F.split("text", r"\s+"), lambda t: F.length(t) > 0).alias("ts"),
     )
-    ts = F.col("ts")
-    shingle_arr = F.when(
-        F.size(ts) >= NGRAM_N,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(ts) - (NGRAM_N - 1)),
-                lambda i: F.xxhash64(F.concat_ws(" ", F.slice(ts, i, NGRAM_N))),
-            )
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
+    shingle_arr = _shingle_hashes(F.col("ts"))
     # distinct collapses the duplicate-id fixture's repeated rows the
     # same way the oracle's SELECT DISTINCT does
     sh = (
@@ -1295,20 +1313,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.filter(F.split("text", r"\s+"), lambda t: F.length(t) > 0).alias("ts"),
     )
-    ts = F.col("ts")
-    # positions 1..len-(N-1), 1-based slice of N tokens joined by space;
-    # shingles hash to 64-bit inside the transform so the exploded rows
-    # and the join shuffle carry 8-byte longs instead of ~60-byte strings
-    # (collision odds ~|shingles|²/2⁶⁴ — nil)
-    shingle_arr = F.when(
-        F.size(ts) >= NGRAM_N,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(ts) - (NGRAM_N - 1)),
-                lambda i: F.xxhash64(F.concat_ws(" ", F.slice(ts, i, NGRAM_N))),
-            )
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
+    shingle_arr = _shingle_hashes(F.col("ts"))
     # NOTE (measured, kept on purpose): carrying n = size(shingle set)
     # with the exploded rows to prune inside the join LOOKS cheaper than
     # this separate sizes aggregate, but any join predicate over n lets
@@ -1420,50 +1425,26 @@ N_BANDS = 4  # bands of 4 signatures each
     oracle=None,
     description="MinHash(16)+LSH(4 bands × 4 rows) candidate generation, "
     "then exact Jaccard verification >= 0.8. Docs are first collapsed by "
-    "identical distinct-token set (exact-dup collapse — the standard first "
-    "step of a near-dup pass), signatures are computed per unique set "
-    "straight from its hashed-token array (no explode shuffle), candidates "
-    "only form inside equal band-hash buckets under a size-ratio prune, "
-    "and verification is an array_intersect/array_union over fixed-width "
-    "token-hash arrays — strings are hashed once at ingest and never "
-    "compared again. xxhash64 signatures are Spark-deterministic but "
-    "engine-specific → rows-only check; the Jaccard verify step ties its "
-    "output to dedup_jaccard_pairs semantics (asserted in tests).",
+    "identical distinct-token set through the collapsed-group relation "
+    "dedup_jaccard_pairs also reads (exact-dup collapse — the standard "
+    "first step of a near-dup pass; token-less docs form no set), "
+    "signatures are computed per unique set straight from its hashed-"
+    "token array (no explode shuffle), candidates only form inside equal "
+    "band-hash buckets under a size-ratio prune, verification compares "
+    "fixed-width token-hash sets under the measured set-compare "
+    "encoding, and verified set pairs expand back to member documents "
+    "the same way as dedup_jaccard_pairs. xxhash64 signatures are "
+    "Spark-deterministic but engine-specific → rows-only check; the "
+    "Jaccard verify step ties its output to dedup_jaccard_pairs "
+    "semantics (asserted in tests).",
     tags=("dedup", "neardup", "minhash", "lsh"),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    # distinct-token-HASH set per doc: one scan, no shuffle. Tokens are
-    # hashed to 64-bit values IN the scan projection, so the identical-
-    # set collapse below exchanges sorted long arrays, never strings —
-    # the first shuffle was the query's widest before this (string
-    # payloads ~3× the 8-byte hashes at sf0.1). Hash-array equality
-    # standing in for set equality needs a per-position 64-bit
-    # collision — negligible, and this op is the engine-hash-seeded
-    # (rows-only) variant by declaration.
-    tokset = docs.select(
-        "doc_id",
-        F.array_sort(
-            F.array_distinct(
-                F.transform(
-                    F.filter(F.split("text", r"\s+"), lambda t: F.length(t) > 0),
-                    lambda t: F.xxhash64(t),
-                )
-            )
-        ).alias("toks_h"),
-    )
-    # collapse identical sets: pairs within a group are jaccard 1.0 by
-    # definition (and identical sets always share every band hash), so
-    # MinHash/LSH/verify only needs to run once per unique set.
-    # persist: four branches (signatures, both verify sides, within-group
-    # expansion) consume this small relation; without it Spark recomputes
-    # the scan+groupBy per branch (column pruning defeats ReusedExchange)
-    groups = (
-        tokset.groupBy("toks_h")
-        .agg(F.min("doc_id").alias("gid"), F.collect_list("doc_id").alias("members"))
-        .select("gid", "members", "toks_h", F.size("toks_h").alias("n"))
-        .transform(tracked_persist)
-    )
+    # identical distinct-token sets collapse through the shared group
+    # relation: pairs within a group are jaccard 1.0 by definition (and
+    # identical sets always share every band hash), so MinHash/LSH/verify
+    # only runs once per unique set, over its hashed-token array
+    groups = _group_relation(spark, sf_dir)
 
     def _minhash(i: int):
         # re-hash the 8-byte token hash with the family index — far
@@ -1509,8 +1490,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("x.band") == F.col("y.band"))
             & (F.col("x.band_hash") == F.col("y.band_hash"))
             & (F.col("x.gid") < F.col("y.gid"))
-            & (F.col("x.n") <= F.floor(F.col("y.n") / JACCARD_THRESHOLD))
-            & (F.col("y.n") <= F.floor(F.col("x.n") / JACCARD_THRESHOLD)),
+            & _size_ratio_prune(F.col("x.n"), F.col("y.n")),
         )
         .select(F.col("x.gid").alias("ga"), F.col("y.gid").alias("gb"))
         .distinct()
@@ -1543,31 +1523,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    # expand group pairs back to doc pairs (output-bound work only)
-    cross = (
-        verified.select(F.explode("m_a").alias("da"), "m_b", "jaccard")
-        .select("da", F.explode("m_b").alias("db"), "jaccard")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
-    )
-    within = (
-        groups.filter(F.size("members") >= 2)
-        .select(F.explode("members").alias("da"), "members")
-        .select("da", F.explode("members").alias("db"))
-        .filter(F.col("da") < F.col("db"))
-        .select(
-            F.col("da").alias("doc_a"),
-            F.col("db").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
     # within-partition sort only: a global orderBy would range-shuffle the
     # full (large) pair output for presentation alone — at 100 TB the
     # consumer of a near-dup pair list never needs a total order
-    return cross.unionByName(within).sortWithinPartitions("doc_a", "doc_b")
+    return _pairs_from_group_cross(groups, verified).sortWithinPartitions("doc_a", "doc_b")
 
 
 # ------------------------------------------------------------------
@@ -1611,7 +1570,16 @@ MINHASH_COEFFS = (
 MINHASH_BANDS = 8  # 8 bands × 2 rows: P(candidate | J=0.8) ≈ 0.9997
 
 
-def _minhash_verified_oracle(doc_rel: str = "documents") -> str:
+def _minhash_verified_oracle(
+    doc_rel: str = "documents",
+    cand: str = "FROM sig x JOIN sig y ON x.doc_id < y.doc_id\n   AND ({band_pred})",
+    names: tuple = ("doc_a", "doc_b"),
+    sides: str = "",
+) -> str:
+    """The cross-engine MinHash oracle over ``doc_rel``, shared with the
+    incremental query: ``cand`` is the candidate join's FROM clause
+    (formatted with the OR-of-band-equalities ``band_pred``), ``names``
+    the output pair columns and ``sides`` extra CTEs ``cand`` reads."""
     sig_cols = ",\n         ".join(
         f"min((tid*{a}+{b}) % {MINHASH_P}) AS s{i}"
         for i, (a, b) in enumerate(MINHASH_COEFFS)
@@ -1620,6 +1588,7 @@ def _minhash_verified_oracle(doc_rel: str = "documents") -> str:
         f"(x.s{2 * b} = y.s{2 * b} AND x.s{2 * b + 1} = y.s{2 * b + 1})"
         for b in range(MINHASH_BANDS)
     )
+    a, b = names
     return rf"""
 WITH toks AS (
   SELECT doc_id, unnest(list_distinct(string_split_regex(text, '\s+'))) AS token
@@ -1628,14 +1597,13 @@ WITH toks AS (
   SELECT * FROM toks WHERE length(token) > 0
 ), dt AS (
   SELECT DISTINCT doc_id, {_ORACLE_TID} AS tid FROM tc
-), sig AS (
+){sides}, sig AS (
   SELECT doc_id, count(*) AS n,
          {sig_cols}
   FROM dt GROUP BY doc_id
 ), cand AS (
   SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-  FROM sig x JOIN sig y ON x.doc_id < y.doc_id
-   AND ({band_pred})
+  {cand.format(band_pred=band_pred)}
 ), inter AS (
   SELECT c.da, c.db, count(*) AS cnt
   FROM cand c
@@ -1643,13 +1611,13 @@ WITH toks AS (
   JOIN dt b ON b.doc_id = c.db AND b.tid = a.tid
   GROUP BY c.da, c.db
 )
-SELECT i.da AS doc_a, i.db AS doc_b,
+SELECT i.da AS {a}, i.db AS {b},
        CAST(i.cnt AS DOUBLE) / (sa.n + sb.n - i.cnt) AS jaccard
 FROM inter i
 JOIN sig sa ON i.da = sa.doc_id
 JOIN sig sb ON i.db = sb.doc_id
 WHERE CAST(i.cnt AS DOUBLE) / (sa.n + sb.n - i.cnt) >= {JACCARD_THRESHOLD}
-ORDER BY doc_a, doc_b
+ORDER BY {a}, {b}
 """
 
 
@@ -1694,12 +1662,26 @@ def _minhash_verified_pairs(
     that produced ``docs`` — it keys the set-compare decision memo so
     two builds with different moduli in one process can never reuse
     each other's vocabulary (ADVICE r10)."""
-    docs_is_full = docs is None
+    site = "minhash_tids" if docs is None else f"minhash_tids_sampled{sample_k}"
     if docs is None:
         docs = load_table(spark, sf_dir, "documents")
-    docs = spread(
-        docs.select("doc_id", "text").filter(F.col("text").rlike(r"\S"))
+    sigs, bands = _minhash_bands(docs.select("doc_id", "text"))
+    # no global output sort: the pair set is the query's largest
+    # relation and the driver's comparison is order-insensitive (the
+    # oracle's ORDER BY only stabilizes ITS display order)
+    return _banded_verified_pairs(
+        sf_dir, sigs, bands, F.col("x.doc_id") < F.col("y.doc_id"), site, ("doc_a", "doc_b")
     )
+
+
+def _minhash_bands(docs: DataFrame, *extra):
+    """The cross-engine MinHash banding of ``docs`` (doc_id, text and
+    any columns ``extra`` reads), shared by dedup_minhash_verified and
+    dedup_incremental_neardup: returns the persisted ``sigs`` (doc_id,
+    tids, n, extra…, s0…s15) and the ``bands`` (doc_id, n, extra…,
+    band, bh). Each ``extra`` is a per-doc aggregate column over the
+    document rows (the incremental query's is_batch side)."""
+    docs = spread(docs.filter(F.col("text").rlike(r"\S")))
     toks = docs.select(
         "doc_id",
         F.explode(
@@ -1715,6 +1697,13 @@ def _minhash_verified_pairs(
     dsets = dt.groupBy("doc_id").agg(
         F.array_distinct(F.collect_list("tid")).alias("tids")
     )
+    if extra:
+        # aggregated over the document rows and joined, not folded into
+        # the id-set aggregate: that carried the extra inputs through
+        # every exploded token row and measured slower at sf0.1
+        dsets = dsets.join(docs.groupBy("doc_id").agg(*extra), "doc_id")
+    carried = dsets.columns[2:]
+
     def _mh(a: int, b: int):
         return F.array_min(
             F.transform("tids", lambda t: (t * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P))
@@ -1722,7 +1711,7 @@ def _minhash_verified_pairs(
 
     sig_cols = [_mh(a, b).alias(f"s{i}") for i, (a, b) in enumerate(MINHASH_COEFFS)]
     sigs = dsets.select(
-        "doc_id", "tids", F.size("tids").alias("n"), *sig_cols
+        "doc_id", "tids", F.size("tids").alias("n"), *carried, *sig_cols
     ).transform(tracked_persist)
     # band key = (band index, the band's 2 signature values) as a struct —
     # exact equality, no re-hash, so the candidate set is literally the
@@ -1730,6 +1719,7 @@ def _minhash_verified_pairs(
     bands = sigs.select(
         "doc_id",
         "n",
+        *carried,
         F.posexplode(
             F.array(
                 *[
@@ -1741,31 +1731,33 @@ def _minhash_verified_pairs(
             )
         ).alias("band", "bh"),
     )
+    return sigs, bands
+
+
+def _banded_verified_pairs(
+    sf_dir: str, sigs: DataFrame, bands: DataFrame, pred, site: str, names: tuple
+) -> DataFrame:
+    """(names[0], names[1], jaccard) for the band-bucket pairs x × y of
+    :func:`_minhash_bands`' ``bands`` that satisfy ``pred`` (over the
+    x./y. columns) and verify at exact Jaccard >= the threshold."""
     cand = (
         bands.alias("x")
         .join(
             bands.alias("y"),
             (F.col("x.band") == F.col("y.band"))
             & (F.col("x.bh") == F.col("y.bh"))
-            & (F.col("x.doc_id") < F.col("y.doc_id"))
-            # size-ratio prune (Spark-only; removes only sub-threshold
-            # pairs, so the verified output is unchanged vs the oracle)
-            & (F.col("x.n") <= F.floor(F.col("y.n") / JACCARD_THRESHOLD))
-            & (F.col("y.n") <= F.floor(F.col("x.n") / JACCARD_THRESHOLD)),
+            & pred
+            # Spark-only: removes only sub-threshold pairs, so the
+            # verified output is unchanged vs the oracle
+            & _size_ratio_prune(F.col("x.n"), F.col("y.n")),
         )
         .select(F.col("x.doc_id").alias("da"), F.col("y.doc_id").alias("db"))
         .distinct()
     )
     # verify under the measured set-compare encoding (see _set_compare);
     # banding survivors are mostly true near-dups, so the hashed branch
-    # runs the plain intersect (no union-bound guard). The sampled site
-    # carries the modulus (ADVICE r10): a build at another k never
-    # reuses this sample's vocabulary.
-    sa, sb, inter = _set_compare(
-        sf_dir, sigs, "tids",
-        "minhash_tids" if docs_is_full else f"minhash_tids_sampled{sample_k}",
-        {"doc_id": "d{}", "n": "n{}"},
-    )
+    # runs the plain intersect (no union-bound guard)
+    sa, sb, inter = _set_compare(sf_dir, sigs, "tids", site, {"doc_id": "d{}", "n": "n{}"})
     return (
         cand.join(sa, "da")
         .join(sb, "db")
@@ -1775,16 +1767,12 @@ def _minhash_verified_pairs(
         # candidate, not twice (_ratio_ge_int)
         .filter(_jaccard_ge_int(JACCARD_THRESHOLD, c="cnt"))
         .select(
-            F.col("da").alias("doc_a"),
-            F.col("db").alias("doc_b"),
+            F.col("da").alias(names[0]),
+            F.col("db").alias(names[1]),
             (F.col("cnt").cast("double") / (F.col("na") + F.col("nb") - F.col("cnt"))).alias(
                 "jaccard"
             ),
         )
-        # no global output sort: the pair set is the query's largest
-        # relation and the driver's comparison is order-insensitive —
-        # same reasoning as dedup_minhash_lsh's unsorted output (the
-        # oracle's ORDER BY only stabilizes ITS display order)
     )
 
 
@@ -2166,23 +2154,20 @@ SIMHASH_CHUNKS = 4  # Hamming <= 3 guarantees >= 1 equal 16-bit chunk
 HAMMING_MAX = 3
 
 
-def _simhash(docs: DataFrame) -> DataFrame:
-    """64-bit SimHash per doc over its distinct token set: bit k of the
-    fingerprint is the sign of Σ_tokens (±1 by bit k of xxhash64(token)).
+def _simhash_pairs(votes: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, hamming) for the documents of ``votes`` (doc_id,
+    v0…v63 — per-bit vote sums) whose 64-bit SimHash fingerprints (bit
+    k set ⟺ v_k > 0) differ in at most HAMMING_MAX bits. The pair stage
+    of both SimHash queries, which differ only in how tokens vote.
 
-    Both the 64 vote aggregates and the 64-term fingerprint assembly
-    are built as parsed SQL strings — composing them Column-by-Column
-    costs several Py4J round-trips per term (~1 s of driver time per
-    plan build; see functions/vectors.dot_fast)."""
-    toks = _doc_tokens(docs).withColumn("h", F.xxhash64("token"))
-    votes = toks.groupBy("doc_id").agg(
-        *[
-            F.expr(
-                f"sum(CASE WHEN (shiftright(h, {k}) & 1) = 1 THEN 1 ELSE -1 END)"
-            ).alias(f"v{k}")
-            for k in range(SIMHASH_BITS)
-        ]
-    )
+    Fingerprints band into SIMHASH_CHUNKS × 16-bit chunks and only
+    chunk-equal pairs are verified: pigeonhole makes that lossless for
+    Hamming <= 3, and the blocking join carries 8 bytes per doc, never
+    text. The 64-term fingerprint assembly is one parsed SQL string —
+    composing it Column-by-Column costs several Py4J round-trips per
+    term (~1 s of driver time per plan build; see
+    functions/vectors.dot_fast)."""
+
     # bit 63 of a signed long is the sign bit: 1<<63 wraps to LONG_MIN,
     # which has no SQL literal (unary minus of 2⁶³ overflows the
     # parser) — spell it as -(2⁶³-1) - 1
@@ -2195,20 +2180,7 @@ def _simhash(docs: DataFrame) -> DataFrame:
             for k in range(SIMHASH_BITS)
         )
     )
-    return votes.select("doc_id", fingerprint.alias("simhash"))
-
-
-@register(
-    "dedup_simhash",
-    oracle=None,
-    description="SimHash near-dup: 64-bit token-vote fingerprints, banded "
-    "into 4×16-bit chunks (any Hamming<=3 pair shares a chunk), verified "
-    "by bit_count(xor) <= 3. Fingerprints are 8 bytes/doc — the blocking "
-    "join never touches text. Engine-specific hash → rows-only check.",
-    tags=("dedup", "neardup", "simhash"),
-)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fp = _simhash(spread(load_table(spark, sf_dir, "documents")))
+    fp = votes.select("doc_id", fingerprint.alias("simhash"))
     chunk_bits = SIMHASH_BITS // SIMHASH_CHUNKS
     mask = (1 << chunk_bits) - 1
     chunks = fp.select(
@@ -2245,6 +2217,33 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("hamming") <= HAMMING_MAX)
         # no global output sort — order-insensitive compare, large relation
     )
+
+
+@register(
+    "dedup_simhash",
+    oracle=None,
+    description="SimHash near-dup: 64-bit token-vote fingerprints, banded "
+    "into 4×16-bit chunks (any Hamming<=3 pair shares a chunk), verified "
+    "by bit_count(xor) <= 3. Fingerprints are 8 bytes/doc — the blocking "
+    "join never touches text. Engine-specific hash → rows-only check.",
+    tags=("dedup", "neardup", "simhash"),
+)
+def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # bit k of a token's vote is bit k of xxhash64(token), ±1 per
+    # distinct token; the 64 vote aggregates are parsed SQL strings
+    # for the same Py4J reason as the fingerprint (_simhash_pairs)
+    toks = _doc_tokens(spread(load_table(spark, sf_dir, "documents"))).withColumn(
+        "h", F.xxhash64("token")
+    )
+    votes = toks.groupBy("doc_id").agg(
+        *[
+            F.expr(
+                f"sum(CASE WHEN (shiftright(h, {k}) & 1) = 1 THEN 1 ELSE -1 END)"
+            ).alias(f"v{k}")
+            for k in range(SIMHASH_BITS)
+        ]
+    )
+    return _simhash_pairs(votes)
 
 
 # ------------------------------------------------------------------
@@ -2585,53 +2584,7 @@ def dedup_simhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(*[F.sum(f"b{k}").alias(f"v{k}") for k in range(SIMHASH_BITS)])
     )
-
-    def _bit_literal(k: int) -> str:
-        return f"{1 << k}L" if k < 63 else "(-9223372036854775807L - 1L)"
-
-    fingerprint = F.expr(
-        " + ".join(
-            f"(CASE WHEN v{k} > 0 THEN {_bit_literal(k)} ELSE 0L END)"
-            for k in range(SIMHASH_BITS)
-        )
-    )
-    fp = votes.select("doc_id", fingerprint.alias("simhash"))
-    chunk_bits = SIMHASH_BITS // SIMHASH_CHUNKS
-    mask = (1 << chunk_bits) - 1
-    chunks = fp.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("simhash"), i * chunk_bits).bitwiseAND(F.lit(mask))
-                    for i in range(SIMHASH_CHUNKS)
-                ]
-            )
-        ).alias("chunk_idx", "chunk"),
-    )
-    pairs = (
-        chunks.alias("x")
-        .join(
-            chunks.alias("y"),
-            (F.col("x.chunk_idx") == F.col("y.chunk_idx"))
-            & (F.col("x.chunk") == F.col("y.chunk"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.simhash").alias("sim_a"),
-            F.col("y.simhash").alias("sim_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("int")
-    return (
-        pairs.select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= HAMMING_MAX)
-        # no global output sort — order-insensitive compare, large relation
-    )
+    return _simhash_pairs(votes)
 
 
 # ------------------------------------------------------------------
@@ -3175,58 +3128,25 @@ def lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_neardup_oracle() -> str:
-    """dedup_minhash_verified's oracle shape with the candidate join
+    """dedup_minhash_verified's oracle with the candidate join
     restricted to (batch side) × (corpus side): x must be a new-batch
     document, y an existing-corpus one — no corpus-corpus or
     batch-batch pairs are ever materialized."""
-    sig_cols = ",\n         ".join(
-        f"min((tid*{a}+{b}) % {MINHASH_P}) AS s{i}"
-        for i, (a, b) in enumerate(MINHASH_COEFFS)
-    )
-    band_pred = "\n        OR ".join(
-        f"(x.s{2 * b} = y.s{2 * b} AND x.s{2 * b + 1} = y.s{2 * b + 1})"
-        for b in range(MINHASH_BANDS)
-    )
-    return rf"""
-WITH toks AS (
-  SELECT doc_id, unnest(list_distinct(string_split_regex(text, '\s+'))) AS token
-  FROM documents
-), tc AS (
-  SELECT * FROM toks WHERE length(token) > 0
-), dt AS (
-  SELECT DISTINCT doc_id, {_ORACLE_TID} AS tid FROM tc
-), sideof AS (
+    return _minhash_verified_oracle(
+        cand="""FROM sig x
+  JOIN sideof sx ON x.doc_id = sx.doc_id AND sx.is_batch = 1
+  JOIN sig y ON ({band_pred})
+  JOIN sideof sy ON y.doc_id = sy.doc_id AND sy.is_batch = 0""",
+        names=("batch_doc_id", "corpus_doc_id"),
+        sides=f""", sideof AS (
   -- a duplicated doc_id spanning both sides counts as batch (max):
   -- deterministic and identical in both engines
   SELECT doc_id,
          max(CASE WHEN source = '{_INC_BATCH_SOURCE}' THEN 1 ELSE 0 END)
              AS is_batch
   FROM documents GROUP BY doc_id
-), sig AS (
-  SELECT doc_id, count(*) AS n,
-         {sig_cols}
-  FROM dt GROUP BY doc_id
-), cand AS (
-  SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-  FROM sig x
-  JOIN sideof sx ON x.doc_id = sx.doc_id AND sx.is_batch = 1
-  JOIN sig y ON ({band_pred})
-  JOIN sideof sy ON y.doc_id = sy.doc_id AND sy.is_batch = 0
-), inter AS (
-  SELECT c.da, c.db, count(*) AS cnt
-  FROM cand c
-  JOIN dt a ON a.doc_id = c.da
-  JOIN dt b ON b.doc_id = c.db AND b.tid = a.tid
-  GROUP BY c.da, c.db
-)
-SELECT i.da AS batch_doc_id, i.db AS corpus_doc_id,
-       CAST(i.cnt AS DOUBLE) / (sa.n + sb.n - i.cnt) AS jaccard
-FROM inter i
-JOIN sig sa ON i.da = sa.doc_id
-JOIN sig sb ON i.db = sb.doc_id
-WHERE CAST(i.cnt AS DOUBLE) / (sa.n + sb.n - i.cnt) >= {JACCARD_THRESHOLD}
-ORDER BY batch_doc_id, corpus_doc_id
-"""
+)""",
+    )
 
 
 #: the ingest-batch marker shared with dedup_incremental_batch /
@@ -3251,84 +3171,18 @@ _INC_BATCH_SOURCE = "src19"
     tags=("dedup", "neardup", "minhash", "lsh", "incremental", "pipeline"),
 )
 def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread(
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text", "source")
-        .filter(F.col("text").rlike(r"\S"))
-    )
-    side = docs.groupBy("doc_id").agg(
+    # a duplicated doc_id spanning both sides counts as batch (max), as
+    # in the oracle's sideof CTE
+    sigs, bands = _minhash_bands(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text", "source"),
         F.max(
             F.when(F.col("source") == _INC_BATCH_SOURCE, F.lit(1)).otherwise(F.lit(0))
-        ).alias("is_batch")
-    )
-    toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(F.filter(F.split("text", r"\s+"), lambda t: F.length(t) > 0))
-        ).alias("token"),
-    )
-    dt = toks.select("doc_id", _token_hash_id().alias("tid"))
-    dsets = dt.groupBy("doc_id").agg(
-        F.array_distinct(F.collect_list("tid")).alias("tids")
-    )
-
-    def _mh(a: int, b: int):
-        return F.array_min(
-            F.transform("tids", lambda t: (t * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P))
-        )
-
-    sig_cols = [_mh(a, b).alias(f"s{i}") for i, (a, b) in enumerate(MINHASH_COEFFS)]
-    sigs = (
-        dsets.join(side, "doc_id")
-        .select("doc_id", "tids", F.size("tids").alias("n"), "is_batch", *sig_cols)
-        .transform(tracked_persist)
-    )
-    bands = sigs.select(
-        "doc_id",
-        "n",
-        "is_batch",
-        F.posexplode(
-            F.array(
-                *[
-                    F.struct(
-                        F.col(f"s{2 * b}").alias("lo"), F.col(f"s{2 * b + 1}").alias("hi")
-                    )
-                    for b in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("band", "bh"),
+        ).alias("is_batch"),
     )
     # asymmetric banding join: new-batch docs probe the corpus side
-    # only; the size-ratio prune removes only sub-threshold pairs
-    cand = (
-        bands.filter(F.col("is_batch") == 1)
-        .alias("x")
-        .join(
-            bands.filter(F.col("is_batch") == 0).alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bh") == F.col("y.bh"))
-            & (F.col("x.n") <= F.floor(F.col("y.n") / JACCARD_THRESHOLD))
-            & (F.col("y.n") <= F.floor(F.col("x.n") / JACCARD_THRESHOLD)),
-        )
-        .select(F.col("x.doc_id").alias("da"), F.col("y.doc_id").alias("db"))
-        .distinct()
-    )
-    # verify under the measured set-compare encoding — same banding-
-    # survivor shape as _minhash_verified_pairs (plain hashed intersect)
-    sa, sb, inter = _set_compare(
-        sf_dir, sigs, "tids", "incremental_tids", {"doc_id": "d{}", "n": "n{}"}
-    )
-    return (
-        cand.join(sa, "da")
-        .join(sb, "db")
-        .select("da", "db", "na", "nb", inter.alias("cnt"))
-        # single-c integer form — see _ratio_ge_int
-        .filter(_jaccard_ge_int(JACCARD_THRESHOLD, c="cnt"))
-        .select(
-            F.col("da").alias("batch_doc_id"),
-            F.col("db").alias("corpus_doc_id"),
-            (F.col("cnt").cast("double") / (F.col("na") + F.col("nb") - F.col("cnt"))).alias(
-                "jaccard"
-            ),
-        )
+    # only (each side's filter pushes below the join)
+    return _banded_verified_pairs(
+        sf_dir, sigs, bands,
+        (F.col("x.is_batch") == 1) & (F.col("y.is_batch") == 0),
+        "incremental_tids", ("batch_doc_id", "corpus_doc_id"),
     )

@@ -708,3 +708,73 @@ def test_lsh_recall_is_total_at_jaccard_one(spark, sf_dir):
         assert r.n_caught <= r.n_true_pairs, r
         if r.bucket_lo == 1.0:
             assert r.recall == 1.0, r
+
+
+def test_no_pair_involves_a_document_without_tokens(spark, tmp_path):
+    """Empty, whitespace-only and NULL-text documents have no token
+    set, so no pair producer may report them — not even as identical
+    (jaccard 1.0) sets of nothing. Only the one real near-dup pair
+    (same distinct tokens, different order) is reported, and the LSH
+    output stays inside the exact jaccard pairs."""
+    texts = [
+        "",
+        "   ",
+        "alpha beta gamma delta epsilon",
+        "epsilon delta gamma beta alpha alpha",
+        None,
+        None,
+        "\t\n ",
+    ]
+    rows = [(i, t, "en", "src0") for i, t in enumerate(texts, 1)]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string"
+    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    got = {
+        name: _pairs(Q[name].builder(spark, str(tmp_path)))
+        for name in (
+            "dedup_jaccard_pairs", "dedup_prefix_filter", "dedup_minhash_lsh",
+            "dedup_minhash_verified", "dedup_simhash", "dedup_simhash_verified",
+        )
+    }
+    for name, pairs in got.items():
+        assert pairs == {(3, 4)}, f"{name}: {sorted(pairs)}"
+    assert got["dedup_minhash_lsh"] <= got["dedup_jaccard_pairs"]
+
+
+@pytest.mark.parametrize("sf_name", ["sf0.001", "sf0.01"])
+def test_incremental_neardup_is_the_cross_side_slice_of_minhash_verified(
+    spark, sf_dir, sf_name
+):
+    """Both cross-engine MinHash queries band the same signatures and
+    verify the same way, so the incremental rows are exactly the
+    dedup_minhash_verified pairs with one new-batch (src19) side, as
+    (batch, corpus, jaccard) triples; a doc_id spanning both sides
+    counts as batch."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from multithreaded_mapreduce_spark.operators.dedup import _INC_BATCH_SOURCE
+
+    d = os.path.join(os.path.dirname(sf_dir), sf_name)
+    if not os.path.isdir(d):
+        pytest.skip(f"no {sf_name} corpus next to {sf_dir}")
+    batch = {
+        r.doc_id: r.b
+        for r in spark.read.parquet(f"{d}/documents.parquet")
+        .groupBy("doc_id")
+        .agg(F.max((F.col("source") == _INC_BATCH_SOURCE).cast("int")).alias("b"))
+        .collect()
+    }
+    want = set()
+    for r in Q["dedup_minhash_verified"].builder(spark, d).collect():
+        if batch[r.doc_a] != batch[r.doc_b]:
+            b, c = (r.doc_a, r.doc_b) if batch[r.doc_a] else (r.doc_b, r.doc_a)
+            want.add((b, c, r.jaccard))
+    got = [
+        (r.batch_doc_id, r.corpus_doc_id, r.jaccard)
+        for r in Q["dedup_incremental_neardup"].builder(spark, d).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    assert want, "the corpus has cross-side near-dups by construction"

@@ -130,16 +130,19 @@ def test_no_module_defines_last_globals():
 
 
 def test_collapsed_groups_and_rarity_prefixes_are_built_once():
-    """The near-dup family builds its collapsed distinct-token-set
-    relation in one function and its rarity-ordered prefixes in one
-    other: a second copy of either is a fork of the pipeline the
-    jaccard arms, dedup_prefix_filter and dedup_containment share."""
+    """The near-dup family builds each shared stage in one function: the
+    collapsed distinct-token-set relation (any token-array groupBy), the
+    rarity-ordered prefixes, the cross-engine MinHash signature fold and
+    the SimHash fingerprint assembly. A second copy of any of them is a
+    fork of the pipeline its consumers share."""
     import ast
 
     owners = {
-        r"""\.groupBy\(\s*["']toks["']\s*\)""": "_group_relation",
+        r"""\.groupBy\(\s*["']toks\w*["']\s*\)""": "_group_relation",
         r"""row_number\(\)\s*\.over\(.*orderBy\(\s*["']freq["'],\s*["']token["']\s*\)""":
             "_rarity_prefixes",
+        r"""array_min\(\s*F\.transform\(.*%\s*F\.lit\(MINHASH_P\)""": "_minhash_bands",
+        r"""-9223372036854775807L""": "_simhash_pairs",
     }
     for pattern, owner in owners.items():
         found = []
