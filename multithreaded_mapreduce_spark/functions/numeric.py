@@ -27,6 +27,8 @@ where stage 1 would emit |groups × partitions| rows and erase the win.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -46,6 +48,24 @@ def dround(col: Column | str, scale: int = 2) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.round(c.cast(DEC), scale).cast("double")
+
+
+def snap6(c: Column) -> Column:
+    """The catalog's 6-dp float snap: cast to DECIMAL(30,12), round to 6
+    dp, back to double. Oracle pattern::
+
+        CAST(round(CAST(x AS DECIMAL(30,12)), 6) AS DOUBLE)
+    """
+    return F.round(c.cast("decimal(30,12)"), 6).cast("double")
+
+
+def snap6_value(x: float) -> float:
+    """:func:`snap6` on one Python float, bit-identical to the engine:
+    the double→DECIMAL(30,12) cast reads the shortest round-trip repr
+    (java BigDecimal.valueOf == Python repr) with HALF_UP, and so does
+    the round to 6 dp."""
+    d = Decimal(repr(x)).quantize(Decimal("1e-12"), ROUND_HALF_UP)
+    return float(d.quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
 
 def dsum(col: Column | str, scale: int = 2) -> Column:

@@ -22,7 +22,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.numeric import DEC
+from ..functions.numeric import DEC, snap6
 from ..plans.registry import register
 from ..sources.tables import load_table, spread
 
@@ -180,9 +180,6 @@ def orders_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("digit")
     )
     n = d.agg(F.count(F.lit(1)).alias("total"))
-
-    def snap6(c):
-        return F.round(c.cast("decimal(30,12)"), 6).cast("double")
 
     expected = F.log10(1.0 + 1.0 / F.col("digit").cast("int"))
     return (

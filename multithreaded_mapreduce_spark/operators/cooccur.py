@@ -17,18 +17,15 @@ here the 31-token corpus needs no cap.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.numeric import snap6
 from ..plans.caching import tracked_persist
 from ..plans.registry import register
 from ..sources.tables import load_table
 
 MIN_PAIR_DOCS = 5
-
-
-def _snap6(c: Column) -> Column:
-    return F.round(c.cast("decimal(30,12)"), 6).cast("double")
 
 
 @register(
@@ -104,7 +101,7 @@ def token_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.join(F.broadcast(ma), "token_a")
         .join(F.broadcast(mb), "token_b")
         .crossJoin(F.broadcast(n))
-        .select("token_a", "token_b", "c_ab", "c_a", "c_b", _snap6(pmi).alias("pmi"))
+        .select("token_a", "token_b", "c_ab", "c_a", "c_b", snap6(pmi).alias("pmi"))
         .orderBy("token_a", "token_b")
     )
 
@@ -193,8 +190,8 @@ def brand_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n))
         .select(
             "brand_a", "brand_b", "c_ab", "c_a", "c_b",
-            _snap6(support).alias("support"),
-            _snap6(lift).alias("lift"),
+            snap6(support).alias("support"),
+            snap6(lift).alias("lift"),
         )
         .orderBy("brand_a", "brand_b")
     )

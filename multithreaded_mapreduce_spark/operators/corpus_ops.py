@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.numeric import snap6
 from ..plans.decisions import note
 from ..plans.registry import register
 from ..sources.tables import load_table
@@ -475,7 +476,6 @@ def pretraining_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         rep_bigrams_expr,
         rep_dup_frac_expr,
         rep_top_cnt_expr,
-        snap6,
     )
 
     # every gate expression is the SAME helper the standalone operators

@@ -24,14 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.numeric import snap6
 from ..plans.registry import register
 from ..sources.tables import load_table
 
 WEEK_SECONDS = 7 * 24 * 3600
-
-
-def _snap6(c) -> F.Column:  # type: ignore[name-defined]
-    return F.round(c.cast("decimal(30,12)"), 6).cast("double")
 
 
 @register(
@@ -149,7 +146,7 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         # nullif: an empty funnel (top stage = 0 users) yields NULL
         # conversion rates in both engines instead of an ANSI
         # divide-by-zero error
-        _snap6(
+        snap6(
             F.col("s.users").cast("double") / F.nullif(F.col("top_users"), F.lit(0))
         ).alias("conv_from_first"),
     ).orderBy("stage_no")
@@ -207,7 +204,7 @@ def cohort_weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             "week_offset",
             "cohort_size",
             "n_active",
-            _snap6(F.col("n_active").cast("double") / F.col("cohort_size")).alias(
+            snap6(F.col("n_active").cast("double") / F.col("cohort_size")).alias(
                 "retention"
             ),
         )

@@ -29,6 +29,7 @@ from operator import add
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.numeric import snap6
 from ..plans.caching import (
     guard_checkpoint_result,
     memoized_result_checkpoint,
@@ -43,11 +44,6 @@ from .textstats import _sql_tokens, _tokens
 #: share exceeds DUP_BIGRAM_MAX.
 TOP_TOKEN_MAX = 0.20
 DUP_BIGRAM_MAX = 0.25
-
-
-def snap6(c):
-    """The catalog's 6-dp float snap (DECIMAL(30,12) then round)."""
-    return F.round(c.cast("decimal(30,12)"), 6).cast("double")
 
 
 # ---- shared gate expressions -------------------------------------
@@ -976,9 +972,6 @@ def quality_gate_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     one = flags.agg(*aggs)
 
-    def _snap6(c):
-        return F.round(c.cast("decimal(30,12)"), 6).cast("double")
-
     rows = []
     for a, b in _GATE_PAIRS:
         pa = F.try_divide(F.col(f"s_{a}") * 1.0, F.nullif(F.col("n"), F.lit(0)))
@@ -993,9 +986,9 @@ def quality_gate_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(a).alias("gate_a"),
                 F.lit(b).alias("gate_b"),
                 F.col("n").alias("n_docs"),
-                _snap6(po).alias("po"),
-                _snap6(pe).alias("pe"),
-                _snap6(kappa).alias("kappa"),
+                snap6(po).alias("po"),
+                snap6(pe).alias("pe"),
+                snap6(kappa).alias("kappa"),
             )
         )
     # plan reads the memoized gates checkpoint — stale-handle fail-fast

@@ -23,9 +23,10 @@ min/max), so binning composes with pushdown and stays in one stage.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.numeric import snap6
 from ..plans.registry import register
 from ..sources.tables import load_table
 
@@ -33,10 +34,6 @@ from ..sources.tables import load_table
 DEC38 = "decimal(38,0)"
 
 BUCKET_WIDTH = 25_000.0
-
-
-def _snap6(c: Column) -> Column:
-    return F.round(c.cast("decimal(30,12)"), 6).cast("double")
 
 
 @register(
@@ -110,19 +107,19 @@ def lineitem_moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sums.select(
         "l_returnflag",
         "n",
-        _snap6(sx / nd).alias("mean_qty"),
-        _snap6(F.sqrt(F.try_divide(syy - sy * sy / nd, nd - 1))).alias(
+        snap6(sx / nd).alias("mean_qty"),
+        snap6(F.sqrt(F.try_divide(syy - sy * sy / nd, nd - 1))).alias(
             "stddev_price"
         ),
-        _snap6(F.try_divide(sxy - sx * sy / nd, nd - 1)).alias("covar_qty_price"),
-        _snap6(
+        snap6(F.try_divide(sxy - sx * sy / nd, nd - 1)).alias("covar_qty_price"),
+        snap6(
             F.try_divide(
                 nd * sxy - sx * sy,
                 F.sqrt((nd * sxx - sx * sx) * (nd * syy - sy * sy)),
             )
         ).alias("corr_qty_price"),
-        _snap6(slope).alias("regr_slope"),
-        _snap6((sy - slope * sx) / nd).alias("regr_intercept"),
+        snap6(slope).alias("regr_slope"),
+        snap6((sy - slope * sx) / nd).alias("regr_intercept"),
     ).orderBy("l_returnflag")
 
 

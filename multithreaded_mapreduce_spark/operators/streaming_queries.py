@@ -20,6 +20,14 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.numeric import DEC
 from ..operators.corpus_ops import NEW_BATCH_SOURCE
 from ..operators.event_windows import _SESSION_GAP_US
+from ..operators.timeseries import (
+    CUSUM_DAILY_ORACLE,
+    EWMA_DAILY_ORACLE,
+    HOLT_DAILY_ORACLE,
+    cusum_chain,
+    ewma_chain,
+    holt_chain,
+)
 from ..plans.registry import register
 from ..streaming.events import (
     enriched_segment_stream,
@@ -27,9 +35,10 @@ from ..streaming.events import (
     sessionized_stream,
     sliding_counts_stream,
     stream_events,
+    stream_events_multibatch,
     tumbling_counts_stream,
 )
-from ..streaming.stateful import running_user_totals
+from ..streaming.stateful import running_daily_fold, running_user_totals
 
 
 @register(
@@ -408,14 +417,40 @@ def streaming_incremental_admission(spark: SparkSession, sf_dir: str) -> DataFra
     return out.orderBy("doc_id")
 
 
+def _streaming_daily(
+    spark: SparkSession, sf_dir: str, name: str, chain, fields: str
+) -> DataFrame:
+    """The streaming twin of a daily recurrence: replay ``events`` as 4
+    micro-batches (a day may straddle batches), fold each type's day
+    totals with ``chain`` in group state (``running_daily_fold``), and
+    keep each (type, day)'s latest emission — update mode re-emits a
+    type's whole chain per batch, so the highest version is the final
+    value."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    typed = (
+        stream_events_multibatch(spark, sf_dir, n_files=4)
+        .filter(F.col("ts").isNotNull())
+        .select("event_type", F.col("ts").cast("date").alias("day"), "value")
+    )
+    updates = run_stream_to_memory(
+        running_daily_fold(typed, chain, fields), name, output_mode="update"
+    )
+    latest = Window.partitionBy("event_type", "day").orderBy(F.desc("version"))
+    return (
+        updates.withColumn("_rn", F.row_number().over(latest))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "version")
+        .orderBy("event_type", "day")
+    )
+
+
 @register(
     "streaming_ewma_daily",
     # the batch twin's recursive-CTE oracle, verbatim: the stream's
     # final per-(type, day) state must reproduce the batch EWMA chain
-    oracle=__import__(
-        "multithreaded_mapreduce_spark.operators.timeseries",
-        fromlist=["EWMA_DAILY_ORACLE"],
-    ).EWMA_DAILY_ORACLE,
+    oracle=EWMA_DAILY_ORACLE,
     description="Custom stateful streaming twin of events_ewma_daily: "
     "per-type group state accumulates exact 1e-6-unit day totals "
     "across micro-batches (a day may straddle batches — the 4-file "
@@ -430,40 +465,15 @@ def streaming_incremental_admission(spark: SparkSession, sf_dir: str) -> DataFra
     tags=("streaming", "stateful", "pandas-udf", "timeseries"),
 )
 def streaming_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from ..streaming.events import stream_events_multibatch
-    from ..streaming.stateful import running_type_ewma
-
-    typed = (
-        stream_events_multibatch(spark, sf_dir, n_files=4)
-        .filter(F.col("ts").isNotNull())
-        .select(
-            "event_type", F.col("ts").cast("date").alias("day"), "value"
-        )
-    )
-    updates = run_stream_to_memory(
-        running_type_ewma(typed), "q_streaming_ewma_daily", output_mode="update"
-    )
-    # update mode re-emits every day of a type's chain per batch; the
-    # final chain is each (type, day)'s highest-version emission
-    latest = Window.partitionBy("event_type", "day").orderBy(F.desc("version"))
-    return (
-        updates.withColumn("_rn", F.row_number().over(latest))
-        .filter(F.col("_rn") == 1)
-        .select("event_type", "day", "daily_total", "ewma")
-        .orderBy("event_type", "day")
+    return _streaming_daily(
+        spark, sf_dir, "q_streaming_ewma_daily", ewma_chain, "ewma double"
     )
 
 
 @register(
     "streaming_holt_daily",
     # the batch twin's recursive-CTE oracle, verbatim
-    oracle=__import__(
-        "multithreaded_mapreduce_spark.operators.timeseries",
-        fromlist=["HOLT_DAILY_ORACLE"],
-    ).HOLT_DAILY_ORACLE,
+    oracle=HOLT_DAILY_ORACLE,
     description="Custom stateful streaming twin of events_holt_daily — "
     "completing the stateful-recurrence trilogy (EWMA: prefix "
     "recurrence; CUSUM: global-statistic recurrence; Holt: COUPLED "
@@ -478,40 +488,19 @@ def streaming_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "pandas-udf", "timeseries", "forecast"),
 )
 def streaming_holt_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from ..streaming.events import stream_events_multibatch
-    from ..streaming.stateful import running_type_holt
-
-    typed = (
-        stream_events_multibatch(spark, sf_dir, n_files=4)
-        .filter(F.col("ts").isNotNull())
-        .select(
-            "event_type", F.col("ts").cast("date").alias("day"), "value"
-        )
-    )
-    updates = run_stream_to_memory(
-        running_type_holt(typed), "q_streaming_holt_daily", output_mode="update"
-    )
-    latest = Window.partitionBy("event_type", "day").orderBy(F.desc("version"))
-    return (
-        updates.withColumn("_rn", F.row_number().over(latest))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "event_type", "day", "daily_total", "level", "trend", "forecast_next"
-        )
-        .orderBy("event_type", "day")
+    return _streaming_daily(
+        spark,
+        sf_dir,
+        "q_streaming_holt_daily",
+        holt_chain,
+        "level double, trend double, forecast_next double",
     )
 
 
 @register(
     "streaming_cusum_daily",
     # the batch twin's recursive-CTE oracle, verbatim
-    oracle=__import__(
-        "multithreaded_mapreduce_spark.operators.timeseries",
-        fromlist=["CUSUM_DAILY_ORACLE"],
-    ).CUSUM_DAILY_ORACLE,
+    oracle=CUSUM_DAILY_ORACLE,
     description="Custom stateful streaming twin of events_cusum_daily "
     "— the streaming DRIFT detector beside streaming_ewma_daily's "
     "smoother: per-type group state accumulates exact 1e-6-unit day "
@@ -527,26 +516,6 @@ def streaming_holt_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "pandas-udf", "timeseries", "anomaly"),
 )
 def streaming_cusum_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from ..streaming.events import stream_events_multibatch
-    from ..streaming.stateful import running_type_cusum
-
-    typed = (
-        stream_events_multibatch(spark, sf_dir, n_files=4)
-        .filter(F.col("ts").isNotNull())
-        .select(
-            "event_type", F.col("ts").cast("date").alias("day"), "value"
-        )
-    )
-    updates = run_stream_to_memory(
-        running_type_cusum(typed), "q_streaming_cusum_daily", output_mode="update"
-    )
-    latest = Window.partitionBy("event_type", "day").orderBy(F.desc("version"))
-    return (
-        updates.withColumn("_rn", F.row_number().over(latest))
-        .filter(F.col("_rn") == 1)
-        .select("event_type", "day", "daily_total", "cusum", "drift_flag")
-        .orderBy("event_type", "day")
+    return _streaming_daily(
+        spark, sf_dir, "q_streaming_cusum_daily", cusum_chain, "cusum double, drift_flag int"
     )

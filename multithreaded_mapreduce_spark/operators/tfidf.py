@@ -21,9 +21,10 @@ is the ``jaccard`` decision site's over-budget arm in ``dedup.py``
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.numeric import snap6
 from ..plans.registry import register
 from ..sources.tables import load_table
 from .dedup import (
@@ -34,10 +35,6 @@ from .dedup import (
 )
 
 TOP_TERMS = 3
-
-
-def _snap6(c: Column) -> Column:
-    return F.round(c.cast("decimal(30,12)"), 6).cast("double")
 
 
 @register(
@@ -103,7 +100,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         scored.select(
-            "doc_id", rank.alias("rank"), "term", "tf", _snap6(F.col("tfidf_raw")).alias("tfidf")
+            "doc_id", rank.alias("rank"), "term", "tf", snap6(F.col("tfidf_raw")).alias("tfidf")
         )
         .filter(F.col("rank") <= TOP_TERMS)
         .orderBy("doc_id", "rank")
@@ -228,7 +225,7 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk.select(
         rank.alias("rank"),
         "doc_id",
-        _snap6(F.col("score_dec")).alias("score"),
+        snap6(F.col("score_dec")).alias("score"),
     ).orderBy("rank")
 
 

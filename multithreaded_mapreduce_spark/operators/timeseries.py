@@ -19,10 +19,12 @@ oracle-exact under any partitioning.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from decimal import ROUND_HALF_UP, Decimal
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.numeric import DEC
+from ..functions.numeric import DEC, snap6, snap6_value
 from ..plans.registry import register
 from ..sources.tables import load_table
 
@@ -224,24 +226,107 @@ def events_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+
+
+# --------------------------------------------------------------------------
+# daily recurrences: EWMA, CUSUM and Holt over each event type's day totals.
+# Each is defined once per engine: a Spark step for the batch fold
+# (_daily_fold) and a Python chain for the streaming twin
+# (streaming/stateful.py running_daily_fold), both snapping every step
+# exactly like its recursive-CTE oracle.
+# --------------------------------------------------------------------------
+
+#: the oracles' shared day rollup and per-series day index
+_DAILY_CTE = f"""daily AS (
+  SELECT event_type, CAST(ts AS DATE) AS day,
+         round(CAST(sum(CAST(value AS {DEC})) AS DOUBLE), 2) AS daily_total
+  FROM events WHERE ts IS NOT NULL
+  GROUP BY 1, 2
+)"""
+_IDX_CTE = """idx AS (
+  SELECT event_type, day, daily_total,
+         row_number() OVER (PARTITION BY event_type ORDER BY day) AS t
+  FROM daily
+)"""
+
+
+def _daily_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, day, daily_total): the map-side-combinable day
+    rollup every recurrence folds, rendered as ``_DAILY_CTE`` does."""
+    events = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    return events.groupBy("event_type", F.col("ts").cast("date").alias("day")).agg(
+        F.round(F.sum(F.col("value").cast(DEC)).cast("double"), 2).alias("daily_total")
+    )
+
+
+def _daily_fold(daily: DataFrame, step, fields, *extra: Column) -> DataFrame:
+    """The one batch fold: each event type's (day, daily_total)
+    rows become one day-sorted array (|days| entries — time-bounded at
+    any traffic volume; struct order leads with the unique day, so the
+    fold order is deterministic), ``extra`` are further per-series
+    aggregates the step may read by name (CUSUM's μ), and ``F.aggregate``
+    folds the array into an accumulator of (day, daily_total, *fields)
+    structs. ``step(acc, x)`` returns the new element's ``fields`` (all
+    double) from the accumulator so far and the day ``x``; an empty
+    ``acc`` is the first day. Returns ``daily``'s per-series columns
+    plus ``r``, one exploded accumulator element per day.
+
+    Sequential per series, parallel across series; the same shape runs
+    per (series, month) chunks if a series' history outgrows one row."""
+    arr = daily.groupBy("event_type").agg(
+        F.sort_array(F.collect_list(F.struct("day", "daily_total"))).alias("xs"), *extra
+    )
+    acc0 = F.array().cast(
+        "array<struct<day:date,daily_total:double,"
+        + ",".join(f"{f}:double" for f in fields)
+        + ">>"
+    )
+
+    def _append(acc, x):
+        new = [c.alias(f) for f, c in zip(fields, step(acc, x))]
+        return F.concat(
+            acc,
+            F.array(
+                F.struct(x["day"].alias("day"), x["daily_total"].alias("daily_total"), *new)
+            ),
+        )
+
+    return arr.select("*", F.explode(F.aggregate("xs", acc0, _append)).alias("r"))
+
+
 #: EWMA smoothing factor: ewma_t = EWMA_ALPHA·x_t + (1−EWMA_ALPHA)·ewma_{t−1}
 EWMA_ALPHA = 0.3
 _EWMA_BETA = 1 - EWMA_ALPHA
 
 
+def _ewma_step(acc, x):
+    prev = F.element_at(acc, -1)["ewma"]
+    return (
+        F.when(F.size(acc) == 0, x["daily_total"]).otherwise(
+            snap6(F.lit(EWMA_ALPHA) * x["daily_total"] + F.lit(_EWMA_BETA) * prev)
+        ),
+    )
+
+
+def ewma_chain(xs: list[float | None]) -> list[tuple]:
+    """:func:`_ewma_step` over Python day totals: one (ewma,) per day; a
+    NULL day poisons the rest of the chain, as NULL arithmetic does."""
+    out, e = [], None
+    for i, x in enumerate(xs):
+        if i == 0:
+            e = x
+        elif x is None or e is None:
+            e = None
+        else:
+            e = snap6_value(EWMA_ALPHA * x + _EWMA_BETA * e)
+        out.append((e,))
+    return out
+
+
 #: shared with streaming_ewma_daily (operators/streaming_queries.py):
 #: the streaming twin's final state must hash-match the same oracle
 EWMA_DAILY_ORACLE = f"""
-WITH RECURSIVE daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         round(CAST(sum(CAST(value AS {{DEC}})) AS DOUBLE), 2) AS daily_total
-  FROM events WHERE ts IS NOT NULL
-  GROUP BY 1, 2
-), idx AS (
-  SELECT event_type, day, daily_total,
-         row_number() OVER (PARTITION BY event_type ORDER BY day) AS t
-  FROM daily
-), ew AS (
+WITH RECURSIVE {_DAILY_CTE}, {_IDX_CTE}, ew AS (
   SELECT event_type, day, daily_total, t, daily_total AS ewma
   FROM idx WHERE t = 1
   UNION ALL
@@ -249,12 +334,13 @@ WITH RECURSIVE daily AS (
          CAST(round(CAST({EWMA_ALPHA} * i.daily_total
                          + {_EWMA_BETA} * e.ewma AS DECIMAL(30,12)), 6)
               AS DOUBLE) AS ewma
-  FROM idx i JOIN ew e ON i.event_type = e.event_type AND i.t = e.t + 1
+  FROM idx i JOIN ew e ON i.event_type IS NOT DISTINCT FROM e.event_type
+                      AND i.t = e.t + 1
 )
 SELECT event_type, day, daily_total, ewma
 FROM ew
 ORDER BY event_type, day
-""".format(DEC=DEC)
+"""
 
 
 @register(
@@ -274,67 +360,53 @@ ORDER BY event_type, day
     tags=("timeseries", "events", "report", "iterative"),
 )
 def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    daily = events.groupBy(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(
-        F.round(F.sum(F.col("value").cast(DEC)).cast("double"), 2).alias(
-            "daily_total"
-        )
-    )
-    # one bounded array per series: |days| entries (30 at the test SFs;
-    # time-bounded at any traffic volume). sort_array orders the fold
-    # deterministically — struct comparison leads with the unique day.
-    arr = daily.groupBy("event_type").agg(
-        F.sort_array(F.collect_list(F.struct("day", "daily_total"))).alias("xs")
-    )
-    acc0 = F.array().cast(
-        "array<struct<day:date,daily_total:double,ewma:double>>"
-    )
-
-    def _step(acc, x):
-        prev = F.element_at(acc, -1)["ewma"]
-        ew = (
-            F.when(F.size(acc) == 0, x["daily_total"])
-            .otherwise(
-                F.round(
-                    (
-                        F.lit(EWMA_ALPHA) * x["daily_total"]
-                        + F.lit(_EWMA_BETA) * prev
-                    ).cast("decimal(30,12)"),
-                    6,
-                ).cast("double")
-            )
-        )
-        return F.concat(
-            acc,
-            F.array(
-                F.struct(
-                    x["day"].alias("day"),
-                    x["daily_total"].alias("daily_total"),
-                    ew.alias("ewma"),
-                )
-            ),
-        )
-
     return (
-        arr.select(
-            "event_type", F.explode(F.aggregate("xs", acc0, _step)).alias("r")
-        )
+        _daily_fold(_daily_totals(spark, sf_dir), _ewma_step, ("ewma",))
         .select("event_type", "r.day", "r.daily_total", "r.ewma")
         .orderBy("event_type", "day")
     )
 
 
+def _cusum_step(acc, x):
+    prev = F.element_at(acc, -1)["cusum"]
+    raw = F.when(F.size(acc) == 0, snap6(x["daily_total"] - F.col("mu"))).otherwise(
+        snap6(prev + (x["daily_total"] - F.col("mu")))
+    )
+    # explicit NULL guard: Spark's greatest SKIPS nulls while
+    # DuckDB's returns NULL — the CASE makes both poison the chain
+    return (
+        F.when(
+            x["daily_total"].isNull() | ((F.size(acc) > 0) & prev.isNull()),
+            F.lit(None).cast("double"),
+        ).otherwise(F.greatest(F.lit(0.0), raw)),
+    )
+
+
+def cusum_chain(xs: list[float | None]) -> list[tuple]:
+    """:func:`_cusum_step` over Python day totals: one (cusum,
+    drift_flag) per day. μ is the batch expression term by term: the
+    DECIMAL(30,6) sum of the non-NULL totals cast to double, over the
+    count of ALL days, snapped."""
+    six = Decimal("0.000001")
+    sum6 = sum(
+        (Decimal(repr(x)).quantize(six, ROUND_HALF_UP) for x in xs if x is not None),
+        Decimal(0),
+    )
+    mu = snap6_value(float(sum6) / len(xs))
+    out, s = [], None
+    for i, x in enumerate(xs):
+        if x is None or (i > 0 and s is None):
+            s = None
+        else:
+            s = max(0.0, snap6_value((x - mu) if i == 0 else s + (x - mu)))
+        out.append((s, None if s is None else int(s > mu)))
+    return out
+
+
 #: shared with the streaming twin (streaming_cusum_daily), like
 #: EWMA_DAILY_ORACLE above
 CUSUM_DAILY_ORACLE = f"""
-WITH RECURSIVE daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         round(CAST(sum(CAST(value AS {{DEC}})) AS DOUBLE), 2) AS daily_total
-  FROM events WHERE ts IS NOT NULL
-  GROUP BY 1, 2
-), mu AS (
+WITH RECURSIVE {_DAILY_CTE}, mu AS (
   SELECT event_type,
          CAST(round(CAST(CAST(sum(CAST(daily_total AS DECIMAL(30,6))) AS DOUBLE)
                          / count(*) AS DECIMAL(30,12)), 6) AS DOUBLE) AS mu
@@ -364,7 +436,7 @@ SELECT event_type, day, daily_total, cusum,
             WHEN cusum > mu THEN 1 ELSE 0 END AS drift_flag
 FROM cs
 ORDER BY event_type, day
-""".format(DEC=DEC)
+"""
 
 
 @register(
@@ -385,62 +457,11 @@ ORDER BY event_type, day
     tags=("timeseries", "events", "anomaly", "report", "iterative"),
 )
 def events_cusum_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    daily = events.groupBy(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(
-        F.round(F.sum(F.col("value").cast(DEC)).cast("double"), 2).alias(
-            "daily_total"
-        )
-    )
-    arr = daily.groupBy("event_type").agg(
-        F.sort_array(F.collect_list(F.struct("day", "daily_total"))).alias("xs"),
-        F.round(
-            (
-                F.sum(F.col("daily_total").cast("decimal(30,6)")).cast("double")
-                / F.count(F.lit(1))
-            ).cast("decimal(30,12)"),
-            6,
-        )
-        .cast("double")
-        .alias("mu"),
-    )
-    acc0 = F.array().cast(
-        "array<struct<day:date,daily_total:double,cusum:double>>"
-    )
-
-    def _snap6(c):
-        return F.round(c.cast("decimal(30,12)"), 6).cast("double")
-
-    def _step(acc, x):
-        prev = F.element_at(acc, -1)["cusum"]
-        raw = F.when(F.size(acc) == 0, _snap6(x["daily_total"] - F.col("mu"))).otherwise(
-            _snap6(prev + (x["daily_total"] - F.col("mu")))
-        )
-        # explicit NULL guard: Spark's greatest SKIPS nulls while
-        # DuckDB's returns NULL — the CASE makes both poison the chain
-        s = F.when(
-            x["daily_total"].isNull()
-            | ((F.size(acc) > 0) & prev.isNull()),
-            F.lit(None).cast("double"),
-        ).otherwise(F.greatest(F.lit(0.0), raw))
-        return F.concat(
-            acc,
-            F.array(
-                F.struct(
-                    x["day"].alias("day"),
-                    x["daily_total"].alias("daily_total"),
-                    s.alias("cusum"),
-                )
-            ),
-        )
-
+    mu = snap6(
+        F.sum(F.col("daily_total").cast("decimal(30,6)")).cast("double") / F.count(F.lit(1))
+    ).alias("mu")
     return (
-        arr.select(
-            "event_type",
-            "mu",
-            F.explode(F.aggregate("xs", acc0, _step)).alias("r"),
-        )
+        _daily_fold(_daily_totals(spark, sf_dir), _cusum_step, ("cusum",), mu)
         .select(
             "event_type",
             "r.day",
@@ -465,22 +486,46 @@ _HOLT_A1 = 1 - HOLT_ALPHA
 HOLT_BETA = 0.3
 _HOLT_B1 = 1 - HOLT_BETA
 
+
+def _holt_step(acc, x):
+    prev = F.element_at(acc, -1)
+    lv = F.when(F.size(acc) == 0, x["daily_total"]).otherwise(
+        snap6(
+            F.lit(HOLT_ALPHA) * x["daily_total"]
+            + F.lit(_HOLT_A1) * (prev["level"] + prev["trend"])
+        )
+    )
+    tr = F.when(
+        F.size(acc) == 0,
+        F.when(x["daily_total"].isNull(), F.lit(None).cast("double")).otherwise(F.lit(0.0)),
+    ).otherwise(snap6(F.lit(HOLT_BETA) * (lv - prev["level"]) + F.lit(_HOLT_B1) * prev["trend"]))
+    return lv, tr
+
+
+def holt_chain(xs: list[float | None]) -> list[tuple]:
+    """:func:`_holt_step` over Python day totals: one (level, trend,
+    forecast_next) per day; the trend reads the NEW level."""
+    out, lv, tr = [], None, None
+    for i, x in enumerate(xs):
+        if i == 0:
+            lv, tr = x, (None if x is None else 0.0)
+        elif x is None or lv is None:
+            lv = tr = None
+        else:
+            nl = snap6_value(HOLT_ALPHA * x + _HOLT_A1 * (lv + tr))
+            tr = snap6_value(HOLT_BETA * (nl - lv) + _HOLT_B1 * tr)
+            lv = nl
+        out.append((lv, tr, None if lv is None or tr is None else snap6_value(lv + tr)))
+    return out
+
+
 _HOLT_SNAP = "CAST(round(CAST({x} AS DECIMAL(30,12)), 6) AS DOUBLE)"
 _HOLT_LEVEL_SQL = _HOLT_SNAP.format(
     x=f"{HOLT_ALPHA!r} * i.daily_total + {_HOLT_A1!r} * (h.level + h.trend)"
 )
 
 HOLT_DAILY_ORACLE = f"""
-WITH RECURSIVE daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         round(CAST(sum(CAST(value AS {DEC})) AS DOUBLE), 2) AS daily_total
-  FROM events WHERE ts IS NOT NULL
-  GROUP BY 1, 2
-), idx AS (
-  SELECT event_type, day, daily_total,
-         row_number() OVER (PARTITION BY event_type ORDER BY day) AS t
-  FROM daily
-), hw AS (
+WITH RECURSIVE {_DAILY_CTE}, {_IDX_CTE}, hw AS (
   SELECT event_type, day, daily_total, t,
          daily_total AS level,
          CASE WHEN daily_total IS NULL THEN NULL
@@ -522,66 +567,14 @@ ORDER BY event_type, day
     tags=("timeseries", "events", "report", "iterative", "forecast"),
 )
 def events_holt_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    daily = events.groupBy(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(
-        F.round(F.sum(F.col("value").cast(DEC)).cast("double"), 2).alias(
-            "daily_total"
-        )
-    )
-    arr = daily.groupBy("event_type").agg(
-        F.sort_array(F.collect_list(F.struct("day", "daily_total"))).alias("xs")
-    )
-    acc0 = F.array().cast(
-        "array<struct<day:date,daily_total:double,level:double,trend:double>>"
-    )
-
-    def _snap6(c):
-        return F.round(c.cast("decimal(30,12)"), 6).cast("double")
-
-    def _step(acc, x):
-        prev = F.element_at(acc, -1)
-        lv = F.when(F.size(acc) == 0, x["daily_total"]).otherwise(
-            _snap6(
-                F.lit(HOLT_ALPHA) * x["daily_total"]
-                + F.lit(_HOLT_A1) * (prev["level"] + prev["trend"])
-            )
-        )
-        tr = F.when(
-            F.size(acc) == 0,
-            F.when(x["daily_total"].isNull(), F.lit(None).cast("double")).otherwise(
-                F.lit(0.0)
-            ),
-        ).otherwise(
-            _snap6(F.lit(HOLT_BETA) * (lv - prev["level"]) + F.lit(_HOLT_B1) * prev["trend"])
-        )
-        return F.concat(
-            acc,
-            F.array(
-                F.struct(
-                    x["day"].alias("day"),
-                    x["daily_total"].alias("daily_total"),
-                    lv.alias("level"),
-                    tr.alias("trend"),
-                )
-            ),
-        )
-
     fc = F.when(
         F.col("r.level").isNull() | F.col("r.trend").isNull(),
         F.lit(None).cast("double"),
-    ).otherwise(_snap6(F.col("r.level") + F.col("r.trend")))
+    ).otherwise(snap6(F.col("r.level") + F.col("r.trend")))
     return (
-        arr.select(
-            "event_type", F.explode(F.aggregate("xs", acc0, _step)).alias("r")
-        )
+        _daily_fold(_daily_totals(spark, sf_dir), _holt_step, ("level", "trend"))
         .select(
-            "event_type",
-            "r.day",
-            "r.daily_total",
-            "r.level",
-            "r.trend",
+            "event_type", "r.day", "r.daily_total", "r.level", "r.trend",
             fc.alias("forecast_next"),
         )
         .orderBy("event_type", "day")

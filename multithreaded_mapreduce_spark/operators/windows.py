@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.numeric import DEC
+from ..functions.numeric import DEC, snap6
 from ..plans.registry import register
 from ..sources.tables import load_table
 
@@ -185,7 +185,6 @@ def part_price_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_retailprice").asc_nulls_last(), "p_partkey"
     )
     wall = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    snap6 = lambda c: F.round(c.cast("decimal(30,12)"), 6).cast("double")  # noqa: E731
     return (
         part.select(
             "p_brand",

@@ -24,7 +24,7 @@ import os
 import tempfile
 
 from ..functions.numeric import DEC
-from ..sources.tables import _ltz, table_path
+from ..sources.tables import _ltz, table_path, table_stamp
 
 
 def _as_stream_dir(path: str) -> str:
@@ -66,8 +66,10 @@ def stream_events_multibatch(
     The driver ships one parquet file per table, which the file source
     consumes in a single trigger — fine for end-state parity, but it
     never exercises state carried ACROSS batches. This helper splits
-    the events table into ``n_files`` parquet files once (idempotent,
-    under the system temp dir) and sets ``maxFilesPerTrigger=1``, so a
+    the events table into ``n_files`` parquet files once per table
+    version (idempotent, under the system temp dir, keyed on the
+    table's ``table_stamp`` so a table rewritten in place is split
+    afresh, never replayed stale) and sets ``maxFilesPerTrigger=1``, so a
     query sees a genuine multi-trigger replay: windows accumulate
     incrementally, stateful operators merge state batch over batch.
 
@@ -80,7 +82,9 @@ def stream_events_multibatch(
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = table_path(sf_dir, "events")
-    tag = hashlib.md5(f"{src}:{n_files}:tsorted".encode()).hexdigest()[:12]
+    tag = hashlib.md5(
+        f"{table_stamp(sf_dir, 'events')}:{n_files}:tsorted".encode()
+    ).hexdigest()[:12]
     d = os.path.join(tempfile.gettempdir(), f"mmr_spark_stream_split_{tag}")
     batch = spark.read.parquet(src)
     if not os.path.isdir(d) or len([f for f in os.listdir(d) if f.endswith(".parquet")]) < n_files:

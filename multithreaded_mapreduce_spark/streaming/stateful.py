@@ -1,22 +1,32 @@
-"""Custom stateful streaming operator: running per-user aggregates via
-``applyInPandasWithState`` — the escape hatch for streaming semantics
+"""Custom stateful streaming operators in explicit per-key group state
+(``applyInPandasWithState``) — the escape hatch for streaming semantics
 the built-in windowed aggregations can't express (per-key accumulators,
-custom eviction, ML feature state, ...).
+custom eviction, ML feature state, ...). Two state shapes:
 
-State is one row per user (event count + value sum), Arrow-batched in
-and out. On a live feed the watermark-driven timeout would evict idle
-users' state; with the file-replay source the query processes the whole
-history and the final state equals the batch per-user aggregate — which
-is exactly what the test asserts (tests/test_streaming.py).
+* per-user running totals (event count + exact value sum), also through
+  Spark 4's ``transformWithStateInPandas``;
+* per-event-type day totals (:func:`running_daily_fold`), the one day
+  accumulator the streaming twins of the daily recurrences
+  (EWMA, CUSUM, Holt) share. This module holds no recurrence: each
+  twin passes its Python chain from ``operators/timeseries.py``.
 
-Scale: state is hash-partitioned by user_id across executors and
+Both accumulate exact integer decimal units, so the state is
+arrival-order independent: with the file-replay source the query
+processes the whole history and the final state equals the batch
+aggregate bit-for-bit, which the oracle gate and tests/test_streaming.py
+assert. On a live feed a watermark-driven timeout would evict idle keys.
+
+Scale: state is hash-partitioned by key across executors and
 checkpointed incrementally (RocksDB state store on a real cluster), so
-state size scales with distinct keys, never with events processed.
+state size scales with distinct keys (× days for the day accumulator),
+never with events processed.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import datetime as _dt
+import json
+from collections.abc import Callable, Iterator
 from decimal import ROUND_HALF_UP, Decimal
 from typing import Any
 
@@ -57,28 +67,38 @@ def _dec_units(v: float) -> int:
     return int(Decimal(repr(float(v))).quantize(_UNIT, ROUND_HALF_UP).scaleb(12))
 
 
+def _add_values(prev: tuple | None, pdfs: Iterator[pd.DataFrame]) -> tuple[int, int]:
+    """Fold a micro-batch's non-NULL values into a user's (count,
+    1e-12 units) state; ``prev`` is the stored (count, units-string)
+    state or None."""
+    n, units = (int(prev[0]), int(prev[1])) if prev is not None else (0, 0)
+    for pdf in pdfs:
+        vals = pdf["value"].dropna()
+        n += int(len(vals))
+        units += sum(_dec_units(v) for v in vals)
+    return n, units
+
+
+def _user_row(key: tuple[Any, ...], n: int, units: int) -> pd.DataFrame:
+    # plain decimal string (no exponent) — parsed exactly by a
+    # decimal(38,12) cast downstream
+    return pd.DataFrame(
+        {
+            "user_id": [key[0]],
+            "n_events": [n],
+            "total_dec": [format(Decimal(units).scaleb(-12), "f")],
+        }
+    )
+
+
 def _update_user_totals(
     key: tuple[Any, ...],
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    n, units = (
-        (state.get[0], int(state.get[1])) if state.exists else (0, 0)
-    )
-    for pdf in pdfs:
-        vals = pdf["value"].dropna()
-        n += int(len(vals))
-        units += sum(_dec_units(v) for v in vals)
+    n, units = _add_values(state.get if state.exists else None, pdfs)
     state.update((n, str(units)))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            # plain decimal string (no exponent) — parsed exactly by a
-            # decimal(38,12) cast downstream
-            "total_dec": [format(Decimal(units).scaleb(-12), "f")],
-        }
-    )
+    yield _user_row(key, n, units)
 
 
 def running_user_totals(events: DataFrame) -> DataFrame:
@@ -127,23 +147,11 @@ def running_user_totals_tws(events: DataFrame) -> DataFrame:
             self._totals = handle.getValueState("totals", STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            if self._totals.exists():
-                st = self._totals.get()
-                n, units = st[0], int(st[1])
-            else:
-                n, units = 0, 0
-            for pdf in rows:
-                vals = pdf["value"].dropna()
-                n += int(len(vals))
-                units += sum(_dec_units(v) for v in vals)
-            self._totals.update((n, str(units)))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_dec": [format(Decimal(units).scaleb(-12), "f")],
-                }
+            n, units = _add_values(
+                self._totals.get() if self._totals.exists() else None, rows
             )
+            self._totals.update((n, str(units)))
+            yield _user_row(key, n, units)
 
         def close(self) -> None:
             pass
@@ -161,20 +169,10 @@ def running_user_totals_tws(events: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# per-type daily EWMA: numeric-recurrence state (vs the counter state above)
+# per-type day totals: the one day accumulator of the daily recurrences
 # --------------------------------------------------------------------------
 
-EWMA_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("day", T.DateType(), True),
-        T.StructField("daily_total", T.DoubleType(), True),
-        T.StructField("ewma", T.DoubleType(), True),
-        T.StructField("version", T.LongType(), False),
-    ]
-)
-
-EWMA_STATE_SCHEMA = T.StructType(
+DAYS_STATE_SCHEMA = T.StructType(
     [
         T.StructField("days_json", T.StringType(), False),
         T.StructField("version", T.LongType(), False),
@@ -183,12 +181,6 @@ EWMA_STATE_SCHEMA = T.StructType(
 
 #: 6-dp quantum — the value sums run at DECIMAL(30,6) (functions/numeric.DEC)
 _UNIT6 = Decimal("0.000001")
-
-#: EWMA coefficients — MUST stay equal to operators/timeseries.py's
-#: EWMA_ALPHA/_EWMA_BETA (asserted in tests/test_streaming.py); a local
-#: copy avoids importing the operator module from the streaming layer
-EWMA_ALPHA = 0.3
-EWMA_BETA = 1 - EWMA_ALPHA
 
 
 def _dec6_units(v: float) -> int:
@@ -200,36 +192,25 @@ def _dec6_units(v: float) -> int:
 def _round_like_spark(x: float, places: int) -> float:
     """Replicate Spark's round(double, n): BigDecimal.valueOf(double)
     parses the shortest round-trip repr (== Python repr), setScale
-    HALF_UP. Property-tested against the engine in
-    tests/test_randomized_props.py (the EWMA fold test)."""
+    HALF_UP."""
     return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP))
 
 
-def _snap_ewma_step(raw: float) -> float:
-    """The engine's per-step snap: cast double → DECIMAL(30,12)
-    (shortest-repr at 12 dp) then round to 6 dp, back to double."""
-    d = Decimal(repr(raw)).quantize(Decimal("1e-12"), ROUND_HALF_UP)
-    return float(d.quantize(Decimal("1e-6"), ROUND_HALF_UP))
-
-
-def _update_type_ewma(
+def _update_days(
     key: tuple[Any, ...],
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Accumulate exact per-day 1e-6 units across micro-batches (a day
-    may straddle batches), then re-emit the WHOLE per-type EWMA chain
-    each batch — the last emission per (type, day) is the final value.
-    State is |days| entries per type: time-bounded, never traffic-
-    bounded (same argument as the batch operator's fold array)."""
-    import datetime as _dt
-    import json
-
-    if state.exists:
-        days = json.loads(state.get[0])
-        version = int(state.get[1])
-    else:
-        days, version = {}, 0
+    chain: Callable[[list], list[tuple]],
+    dtypes: dict[str, str],
+) -> pd.DataFrame:
+    """Add a micro-batch's (day, value) rows to the type's exact per-day
+    (count, 1e-6 units) state — a day may straddle batches — then render
+    every day's total as the batch rollup does and re-emit the WHOLE
+    chain ``chain(totals)``, one row per day, tagged with the state
+    version (the last emission per (type, day) is the final value)."""
+    days, version = (
+        (json.loads(state.get[0]), int(state.get[1])) if state.exists else ({}, 0)
+    )
     for pdf in pdfs:
         for day, v in zip(pdf["day"], pdf["value"]):
             k = day.isoformat() if hasattr(day, "isoformat") else str(day)
@@ -243,269 +224,56 @@ def _update_type_ewma(
     version += 1
     state.update((json.dumps(days), version))
 
-    out_day, out_total, out_ewma = [], [], []
-    prev: float | None = None
-    for i, k in enumerate(sorted(days)):
-        n, units = days[k]
-        daily = (
-            _round_like_spark(float(Decimal(units).scaleb(-6)), 2) if n else None
-        )
-        if i == 0:
-            e = daily
-        elif daily is None or prev is None:
-            e = None
-        else:
-            e = _snap_ewma_step(EWMA_ALPHA * daily + EWMA_BETA * prev)
-        prev = e
-        out_day.append(_dt.date.fromisoformat(k))
-        out_total.append(daily)
-        out_ewma.append(e)
-    # explicit float64 dtype: an all-None column would otherwise land
-    # as object and trip pandas' all-NA concat FutureWarning inside
-    # pyspark's serializer
-    yield pd.DataFrame(
-        {
-            "event_type": pd.Series([key[0]] * len(out_day), dtype="object"),
-            "day": pd.Series(out_day, dtype="object"),
-            "daily_total": pd.Series(out_total, dtype="float64"),
-            "ewma": pd.Series(out_ewma, dtype="float64"),
-            "version": pd.Series([version] * len(out_day), dtype="int64"),
-        }
-    )
-
-
-def running_type_ewma(typed_days: DataFrame) -> DataFrame:
-    """Per-event-type daily EWMA in explicit group state. Expects a
-    streaming frame with (event_type, day, value) — day precomputed
-    engine-side (CAST(ts AS DATE)) so the pandas layer never touches
-    timezone arithmetic."""
-    return (
-        typed_days.select("event_type", "day", "value")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_type_ewma,
-            outputStructType=EWMA_OUTPUT_SCHEMA,
-            stateStructType=EWMA_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# per-type daily one-sided CUSUM: max-clamped recurrence state with a
-# GLOBAL per-series statistic (mu) recomputed from state each emission
-# --------------------------------------------------------------------------
-
-CUSUM_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("day", T.DateType(), True),
-        T.StructField("daily_total", T.DoubleType(), True),
-        T.StructField("cusum", T.DoubleType(), True),
-        T.StructField("drift_flag", T.IntegerType(), True),
-        T.StructField("version", T.LongType(), False),
-    ]
-)
-
-
-def _update_type_cusum(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """The CUSUM sibling of :func:`_update_type_ewma`: identical exact
-    per-day 1e-6-unit accumulation (a day may straddle micro-batches),
-    but the emission recomputes the series MEAN from state each batch
-    — μ depends on every day seen so far, so unlike the EWMA's purely
-    prefix-dependent chain the whole chain genuinely changes as data
-    arrives — then folds S_t = max(0, S_{t-1} + (x_t − μ)) with the
-    engines' exact decimal snaps. The last emission per (type, day)
-    covers all days and hash-matches the batch recursive-CTE oracle
-    (operators/timeseries.py CUSUM_DAILY_ORACLE). State stays |days|
-    entries per type — time-bounded, never traffic-bounded."""
-    import datetime as _dt
-    import json
-
-    if state.exists:
-        days = json.loads(state.get[0])
-        version = int(state.get[1])
-    else:
-        days, version = {}, 0
-    for pdf in pdfs:
-        for day, v in zip(pdf["day"], pdf["value"]):
-            k = day.isoformat() if hasattr(day, "isoformat") else str(day)
-            n, units = days.get(k, (0, 0))
-            if v is not None and not pd.isna(v):
-                n += 1
-                units += _dec6_units(v)
-            days[k] = [int(n), int(units)]
-    version += 1
-    state.update((json.dumps(days), version))
-
-    # daily totals exactly as the batch aggregate renders them
     ordered = sorted(days)
     totals = [
-        _round_like_spark(float(Decimal(days[k][1]).scaleb(-6)), 2)
-        if days[k][0]
-        else None
-        for k in ordered
+        _round_like_spark(float(Decimal(units).scaleb(-6)), 2) if n else None
+        for n, units in (days[k] for k in ordered)
     ]
-    # μ: sum(CAST(daily_total AS DECIMAL(30,6))) cast double, / count,
-    # snapped through DECIMAL(30,12) → 6 dp — the batch expression
-    # replicated term by term (NULL totals skipped by sum, counted by
-    # count, exactly like SQL aggregates)
-    sum6 = sum(
-        (Decimal(repr(t)).quantize(_UNIT6, ROUND_HALF_UP) for t in totals if t is not None),
-        Decimal(0),
-    )
-    mu = _snap_ewma_step(float(sum6) / len(ordered)) if ordered else None
-
-    out_day, out_total, out_cusum, out_flag = [], [], [], []
-    prev: float | None = None
-    for i, (k, daily) in enumerate(zip(ordered, totals)):
-        if daily is None or (i > 0 and prev is None):
-            s = None
-        elif i == 0:
-            s = max(0.0, _snap_ewma_step(daily - mu))
-        else:
-            s = max(0.0, _snap_ewma_step(prev + (daily - mu)))
-        prev = s
-        out_day.append(_dt.date.fromisoformat(k))
-        out_total.append(daily)
-        out_cusum.append(s)
-        out_flag.append(None if s is None else (1 if s > mu else 0))
-    yield pd.DataFrame(
+    cols = list(zip(*chain(totals)))
+    # explicit dtypes, not pandas' inference from the chain's values: an
+    # all-None column would infer as object, ints mixed with None as float
+    return pd.DataFrame(
         {
-            "event_type": pd.Series([key[0]] * len(out_day), dtype="object"),
-            "day": pd.Series(out_day, dtype="object"),
-            "daily_total": pd.Series(out_total, dtype="float64"),
-            "cusum": pd.Series(out_cusum, dtype="float64"),
-            "drift_flag": pd.Series(out_flag, dtype="object"),
-            "version": pd.Series([version] * len(out_day), dtype="int64"),
+            "event_type": pd.Series([key[0]] * len(ordered), dtype="object"),
+            "day": pd.Series([_dt.date.fromisoformat(k) for k in ordered], dtype="object"),
+            "daily_total": pd.Series(totals, dtype="float64"),
+            **{f: pd.Series(c, dtype=t) for (f, t), c in zip(dtypes.items(), cols)},
+            "version": pd.Series([version] * len(ordered), dtype="int64"),
         }
     )
 
 
-# --------------------------------------------------------------------------
-# per-type daily Holt level+trend: COUPLED two-variable recurrence state
-# --------------------------------------------------------------------------
+def running_daily_fold(
+    typed_days: DataFrame, chain: Callable[[list], list[tuple]], fields: str
+) -> DataFrame:
+    """Per-event-type daily recurrence in explicit group state, emitting
+    (event_type, day, daily_total, *fields, version) in update mode.
 
-HOLT_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("day", T.DateType(), True),
-        T.StructField("daily_total", T.DoubleType(), True),
-        T.StructField("level", T.DoubleType(), True),
-        T.StructField("trend", T.DoubleType(), True),
-        T.StructField("forecast_next", T.DoubleType(), True),
-        T.StructField("version", T.LongType(), False),
-    ]
-)
-
-#: MUST stay equal to operators/timeseries.py's HOLT_* family (asserted
-#: in tests/test_streaming.py) — local copies keep the streaming layer
-#: import-free of operator modules, same policy as the EWMA constants
-HOLT_ALPHA = 0.5
-HOLT_A1 = 1 - HOLT_ALPHA
-HOLT_BETA = 0.3
-HOLT_B1 = 1 - HOLT_BETA
-
-
-def _update_type_holt(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """The Holt sibling of :func:`_update_type_ewma` — the COUPLED
-    recurrence state shape (trend reads the NEW level): same exact
-    per-day 1e-6-unit accumulation, chain re-folded per emission with
-    the engines' decimal snaps; the last emission per (type, day)
-    hash-matches the batch recursive-CTE oracle
-    (operators/timeseries.py HOLT_DAILY_ORACLE)."""
-    import datetime as _dt
-    import json
-
-    if state.exists:
-        days = json.loads(state.get[0])
-        version = int(state.get[1])
-    else:
-        days, version = {}, 0
-    for pdf in pdfs:
-        for day, v in zip(pdf["day"], pdf["value"]):
-            k = day.isoformat() if hasattr(day, "isoformat") else str(day)
-            n, units = days.get(k, (0, 0))
-            if v is not None and not pd.isna(v):
-                n += 1
-                units += _dec6_units(v)
-            days[k] = [int(n), int(units)]
-    version += 1
-    state.update((json.dumps(days), version))
-
-    out_day, out_total, out_level, out_trend, out_fc = [], [], [], [], []
-    l: float | None = None
-    b: float | None = None
-    for i, k in enumerate(sorted(days)):
-        n, units = days[k]
-        daily = (
-            _round_like_spark(float(Decimal(units).scaleb(-6)), 2) if n else None
-        )
-        if i == 0:
-            l = daily
-            b = 0.0 if daily is not None else None
-        elif daily is None or l is None:
-            l = b = None
-        else:
-            nl = _snap_ewma_step(HOLT_ALPHA * daily + HOLT_A1 * (l + b))
-            b = _snap_ewma_step(HOLT_BETA * (nl - l) + HOLT_B1 * b)
-            l = nl
-        fc = None if (l is None or b is None) else _snap_ewma_step(l + b)
-        out_day.append(_dt.date.fromisoformat(k))
-        out_total.append(daily)
-        out_level.append(l)
-        out_trend.append(b)
-        out_fc.append(fc)
-    yield pd.DataFrame(
-        {
-            "event_type": pd.Series([key[0]] * len(out_day), dtype="object"),
-            "day": pd.Series(out_day, dtype="object"),
-            "daily_total": pd.Series(out_total, dtype="float64"),
-            "level": pd.Series(out_level, dtype="float64"),
-            "trend": pd.Series(out_trend, dtype="float64"),
-            "forecast_next": pd.Series(out_fc, dtype="float64"),
-            "version": pd.Series([version] * len(out_day), dtype="int64"),
-        }
+    ``typed_days`` is a streaming frame with (event_type, day, value) —
+    day precomputed engine-side (CAST(ts AS DATE)) so the pandas layer
+    never touches timezone arithmetic. ``chain`` maps one type's
+    day-ordered totals (None for an all-NULL day) to one tuple of
+    ``fields`` values per day; ``fields`` is their DDL (``"ewma double"``).
+    State is |days| entries per type: time-bounded, never
+    traffic-bounded (same argument as the batch fold array)."""
+    schema = T.StructType.fromDDL(
+        f"event_type string, day date, daily_total double, {fields}, version long"
     )
+    dtypes = {
+        f.name: "float64" if isinstance(f.dataType, T.DoubleType) else "object"
+        for f in schema.fields[3:-1]
+    }
 
+    def update(key, pdfs, state):
+        yield _update_days(key, pdfs, state, chain, dtypes)
 
-def running_type_holt(typed_days: DataFrame) -> DataFrame:
-    """Per-event-type daily Holt level+trend in explicit group state —
-    the streaming forecaster. Same input contract as
-    :func:`running_type_ewma`."""
     return (
         typed_days.select("event_type", "day", "value")
         .groupBy("event_type")
         .applyInPandasWithState(
-            _update_type_holt,
-            outputStructType=HOLT_OUTPUT_SCHEMA,
-            stateStructType=EWMA_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def running_type_cusum(typed_days: DataFrame) -> DataFrame:
-    """Per-event-type daily one-sided CUSUM in explicit group state —
-    the streaming drift detector. Same input contract as
-    :func:`running_type_ewma`."""
-    return (
-        typed_days.select("event_type", "day", "value")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _update_type_cusum,
-            outputStructType=CUSUM_OUTPUT_SCHEMA,
-            stateStructType=EWMA_STATE_SCHEMA,
+            update,
+            outputStructType=schema,
+            stateStructType=DAYS_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )

@@ -135,8 +135,6 @@ def test_collapsed_groups_and_rarity_prefixes_are_built_once():
     rarity-ordered prefixes, the cross-engine MinHash signature fold and
     the SimHash fingerprint assembly. A second copy of any of them is a
     fork of the pipeline its consumers share."""
-    import ast
-
     owners = {
         r"""\.groupBy\(\s*["']toks\w*["']\s*\)""": "_group_relation",
         r"""row_number\(\)\s*\.over\(.*orderBy\(\s*["']freq["'],\s*["']token["']\s*\)""":
@@ -145,17 +143,49 @@ def test_collapsed_groups_and_rarity_prefixes_are_built_once():
         r"""-9223372036854775807L""": "_simhash_pairs",
     }
     for pattern, owner in owners.items():
-        found = []
-        for path, text in _package_sources().items():
-            n = len(re.findall(pattern, text))
-            if not n:
-                continue
-            defs = [
-                node.name
-                for node in ast.parse(text).body
-                if isinstance(node, ast.FunctionDef)
-                for _ in re.findall(pattern, ast.get_source_segment(text, node))
-            ]
-            assert len(defs) == n, f"{pattern} outside a function in {path}"
-            found += defs
-        assert found == [owner], f"{pattern} built in {found}, expected only in {owner}"
+        _assert_one_owning_function(pattern, owner)
+
+
+def _assert_one_owning_function(pattern: str, owner: str) -> None:
+    """``pattern`` occurs in the package exactly once, inside the
+    module-level function ``owner``."""
+    import ast
+
+    found = []
+    for path, text in _package_sources().items():
+        n = len(re.findall(pattern, text))
+        if not n:
+            continue
+        defs = [
+            node.name
+            for node in ast.parse(text).body
+            if isinstance(node, ast.FunctionDef)
+            for _ in re.findall(pattern, ast.get_source_segment(text, node))
+        ]
+        assert len(defs) == n, f"{pattern} outside a function in {path}"
+        found += defs
+    assert found == [owner], f"{pattern} built in {found}, expected only in {owner}"
+
+
+def test_daily_recurrences_are_defined_once():
+    """The daily-recurrence family (EWMA, CUSUM, Holt) has one batch
+    fold, one home for its coefficients and one 6-dp snap: the day
+    array is collected only in ``_daily_fold``, the coefficients are
+    assigned only in operators/timeseries.py, and ``snap6`` is defined
+    only in functions/numeric.py. A second copy is a fork the oracle
+    gate only catches once the copies disagree on its data."""
+    _assert_one_owning_function(
+        r"""collect_list\(F\.struct\("day", "daily_total"\)\)""", "_daily_fold"
+    )
+    owners = {
+        r"^\s*EWMA_ALPHA\s*=": "operators/timeseries.py",
+        r"^\s*HOLT_ALPHA\s*=": "operators/timeseries.py",
+        r"^\s*def _?snap6\b": "functions/numeric.py",
+    }
+    for pattern, owner in owners.items():
+        found = sorted(
+            path.split("multithreaded_mapreduce_spark/")[1]
+            for path, text in _package_sources().items()
+            if re.search(pattern, text, re.M)
+        )
+        assert found == [owner], f"{pattern} in {found}, expected only in {owner}"

@@ -248,16 +248,35 @@ def test_pq_codebooks_match_python_lloyd_on_random_vectors(spark, tmp_path):
         assert got == want, (trial, {m: got[m] for m in list(got)[:1]})
 
 
+def _fold_random_series(df, step, fields, *extra):
+    """Run the events_*_daily batch fold (``_daily_fold``) with a
+    module step over (sid, t, x[, ...]) rows: sid is the series, t the
+    day offset, x the day total. Returns {(sid, t): fields tuple}."""
+    from multithreaded_mapreduce_spark.operators.timeseries import _daily_fold
+
+    day0 = F.lit("2024-01-01").cast("date")
+    daily = df.withColumnsRenamed({"sid": "event_type", "x": "daily_total"}).withColumn(
+        "day", F.date_add(day0, F.col("t").cast("int"))
+    )
+    out = _daily_fold(daily, step, fields, *extra).select(
+        "event_type", F.datediff("r.day", day0).alias("t"), "r.*"
+    )
+    return {(r.event_type, r.t): tuple(r[f] for f in fields) for r in out.collect()}
+
+
 def test_ewma_fold_matches_python_on_random_series(spark):
-    """The events_ewma_daily fold (array-accumulator F.aggregate with a
-    per-step decimal snap) must replay a transparent Python recurrence
-    on random series — including negative values, zeros, and
-    single-element series (the when(size==0) seed branch)."""
+    """The events_ewma_daily fold (``_daily_fold`` with ``_ewma_step``:
+    array-accumulator F.aggregate with a per-step decimal snap) and the
+    streaming twin's ``ewma_chain`` must both replay a transparent
+    Python recurrence on random series — including negative values,
+    zeros, and single-element series (the when(size==0) seed branch)."""
     from decimal import ROUND_HALF_UP, Decimal
 
     from multithreaded_mapreduce_spark.operators.timeseries import (
         EWMA_ALPHA,
         _EWMA_BETA,
+        _ewma_step,
+        ewma_chain,
     )
 
     rng = random.Random(424242)
@@ -286,40 +305,13 @@ def test_ewma_fold_matches_python_on_random_series(spark):
         cases.append((sid, xs))
     rows = [(sid, i, x) for sid, xs in cases for i, x in enumerate(xs)]
     df = spark.createDataFrame(rows, "sid long, t long, x double")
-    arr = df.groupBy("sid").agg(
-        F.sort_array(F.collect_list(F.struct("t", F.col("x").alias("daily_total")))).alias("xs")
-    )
-    acc0 = F.array().cast("array<struct<t:long,daily_total:double,ewma:double>>")
-
-    def _step(acc, s):
-        prev = F.element_at(acc, -1)["ewma"]
-        ew = F.when(F.size(acc) == 0, s["daily_total"]).otherwise(
-            F.round(
-                (F.lit(EWMA_ALPHA) * s["daily_total"] + F.lit(_EWMA_BETA) * prev).cast(
-                    "decimal(30,12)"
-                ),
-                6,
-            ).cast("double")
-        )
-        return F.concat(
-            acc,
-            F.array(
-                F.struct(
-                    s["t"].alias("t"),
-                    s["daily_total"].alias("daily_total"),
-                    ew.alias("ewma"),
-                )
-            ),
-        )
-
-    got = {
-        (r.sid, r.r.t): r.r.ewma
-        for r in arr.select("sid", F.explode(F.aggregate("xs", acc0, _step)).alias("r")).collect()
-    }
+    got = _fold_random_series(df, _ewma_step, ("ewma",))
     for sid, xs in cases:
         expected = py_ewma(xs)
+        chain = ewma_chain(xs)
         for t, e in enumerate(expected):
-            assert abs(got[(sid, t)] - e) < 1e-9, (sid, t, got[(sid, t)], e)
+            assert abs(got[(sid, t)][0] - e) < 1e-9, (sid, t, got[(sid, t)], e)
+            assert abs(chain[t][0] - e) < 1e-9, (sid, t, chain[t], e)
 
 
 def test_rendezvous_argmax_matches_hashlib_reference(spark):
@@ -367,11 +359,17 @@ def test_rendezvous_argmax_matches_hashlib_reference(spark):
 
 
 def test_cusum_fold_matches_python_on_random_series(spark):
-    """The events_cusum_daily fold (max-clamped recurrence with
-    per-step decimal snap and explicit NULL guards) must replay a
+    """The events_cusum_daily fold (``_daily_fold`` with ``_cusum_step``:
+    max-clamped recurrence with per-step decimal snap and explicit NULL
+    guards) and the streaming twin's ``cusum_chain`` must both replay a
     transparent Python recurrence on random series — negatives, zeros,
     all-below-mean runs (the clamp at 0), and single elements."""
     from decimal import ROUND_HALF_UP, Decimal
+
+    from multithreaded_mapreduce_spark.operators.timeseries import (
+        _cusum_step,
+        cusum_chain,
+    )
 
     rng = random.Random(31337)
 
@@ -391,6 +389,12 @@ def test_cusum_fold_matches_python_on_random_series(spark):
             prev = s
         return out
 
+    def py_mean(xs):
+        # events_cusum_daily's mu: exact 6-dp decimal sum / count, snapped
+        six = Decimal("1e-6")
+        exact = sum(Decimal(repr(x)).quantize(six, ROUND_HALF_UP) for x in xs)
+        return snap6(float(exact) / len(xs))
+
     cases = []
     for sid in range(8):
         n = rng.choice([1, 2, 5, 30])
@@ -399,39 +403,21 @@ def test_cusum_fold_matches_python_on_random_series(spark):
         cases.append((sid, xs, mu))
     rows = [(sid, i, x, mu) for sid, xs, mu in cases for i, x in enumerate(xs)]
     df = spark.createDataFrame(rows, "sid long, t long, x double, mu double")
-    arr = df.groupBy("sid").agg(
-        F.sort_array(F.collect_list(F.struct("t", F.col("x").alias("daily_total")))).alias("xs"),
-        F.first("mu").alias("mu"),
-    )
-    acc0 = F.array().cast("array<struct<t:long,cusum:double>>")
-
-    def _snap6(c):
-        return F.round(c.cast("decimal(30,12)"), 6).cast("double")
-
-    def _step(acc, s):
-        prev = F.element_at(acc, -1)["cusum"]
-        raw = F.when(
-            F.size(acc) == 0, _snap6(s["daily_total"] - F.col("mu"))
-        ).otherwise(_snap6(prev + (s["daily_total"] - F.col("mu"))))
-        v = F.greatest(F.lit(0.0), raw)
-        return F.concat(acc, F.array(F.struct(s["t"].alias("t"), v.alias("cusum"))))
-
-    got = {
-        (r.sid, r.r.t): r.r.cusum
-        for r in arr.select(
-            "sid", F.explode(F.aggregate("xs", acc0, _step)).alias("r")
-        ).collect()
-    }
+    got = _fold_random_series(df, _cusum_step, ("cusum",), F.first("mu").alias("mu"))
     for sid, xs, mu in cases:
         for t, e in enumerate(py_cusum(xs, mu)):
-            assert abs(got[(sid, t)] - e) < 1e-9, (sid, t, got[(sid, t)], e)
+            assert abs(got[(sid, t)][0] - e) < 1e-9, (sid, t, got[(sid, t)], e)
+        mean = py_mean(xs)
+        for t, (e, (c, flag)) in enumerate(zip(py_cusum(xs, mean), cusum_chain(xs))):
+            assert abs(c - e) < 1e-9 and flag == int(e > mean), (sid, t, c, flag, e, mean)
 
 
 def test_holt_fold_matches_python_on_random_series(spark):
-    """The events_holt_daily coupled level+trend fold must replay a
-    transparent Python recurrence on random series — the struct-state
-    fold's inter-accumulator coupling (trend reads the NEW level) is
-    exactly where an off-by-one-step bug would hide."""
+    """The events_holt_daily coupled level+trend fold (``_daily_fold``
+    with ``_holt_step``) and the streaming twin's ``holt_chain`` must
+    both replay a transparent Python recurrence on random series — the
+    struct-state fold's inter-accumulator coupling (trend reads the NEW
+    level) is exactly where an off-by-one-step bug would hide."""
     from decimal import ROUND_HALF_UP, Decimal
 
     from multithreaded_mapreduce_spark.operators.timeseries import (
@@ -439,6 +425,8 @@ def test_holt_fold_matches_python_on_random_series(spark):
         _HOLT_B1,
         HOLT_ALPHA,
         HOLT_BETA,
+        _holt_step,
+        holt_chain,
     )
 
     rng = random.Random(777)
@@ -470,43 +458,10 @@ def test_holt_fold_matches_python_on_random_series(spark):
         cases.append((sid, xs))
     rows = [(sid, i, x) for sid, xs in cases for i, x in enumerate(xs)]
     df = spark.createDataFrame(rows, "sid long, t long, x double")
-    arr = df.groupBy("sid").agg(
-        F.sort_array(
-            F.collect_list(F.struct("t", F.col("x").alias("daily_total")))
-        ).alias("xs")
-    )
-    acc0 = F.array().cast("array<struct<t:long,level:double,trend:double>>")
-
-    def _snap6(c):
-        return F.round(c.cast("decimal(30,12)"), 6).cast("double")
-
-    def _step(acc, s):
-        prev = F.element_at(acc, -1)
-        lv = F.when(F.size(acc) == 0, s["daily_total"]).otherwise(
-            _snap6(
-                F.lit(HOLT_ALPHA) * s["daily_total"]
-                + F.lit(_HOLT_A1) * (prev["level"] + prev["trend"])
-            )
-        )
-        tr = F.when(F.size(acc) == 0, F.lit(0.0)).otherwise(
-            _snap6(
-                F.lit(HOLT_BETA) * (lv - prev["level"]) + F.lit(_HOLT_B1) * prev["trend"]
-            )
-        )
-        return F.concat(
-            acc,
-            F.array(
-                F.struct(s["t"].alias("t"), lv.alias("level"), tr.alias("trend"))
-            ),
-        )
-
-    got = {
-        (r.sid, r.r.t): (r.r.level, r.r.trend)
-        for r in arr.select(
-            "sid", F.explode(F.aggregate("xs", acc0, _step)).alias("r")
-        ).collect()
-    }
+    got = _fold_random_series(df, _holt_step, ("level", "trend"))
     for sid, xs in cases:
-        for t, (l, b) in enumerate(py_holt(xs)):
+        for t, ((l, b), (cl, cb, cf)) in enumerate(zip(py_holt(xs), holt_chain(xs))):
             gl, gb = got[(sid, t)]
             assert abs(gl - l) < 1e-9 and abs(gb - b) < 1e-9, (sid, t, gl, gb, l, b)
+            assert abs(cl - l) < 1e-9 and abs(cb - b) < 1e-9, (sid, t, cl, cb, l, b)
+            assert abs(cf - snap6(l + b)) < 1e-9, (sid, t, cf, l, b)

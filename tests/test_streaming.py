@@ -433,15 +433,26 @@ def test_multibatch_stream_static_join_equals_batch(spark, sf_dir):
     assert _rows(got, cols) == _rows(want, cols)
 
 
-def test_ewma_coefficients_stay_in_sync():
-    """streaming/stateful.py keeps a local copy of the EWMA
-    coefficients to avoid importing the operator layer; they must
-    never drift from the batch operator's."""
-    from multithreaded_mapreduce_spark.operators import timeseries as batch
-    from multithreaded_mapreduce_spark.streaming import stateful as stream
+def _coefficient_copies(prefix):
+    """Globals of the streaming layer named like a recurrence coefficient
+    that are not operators/timeseries.py's own objects: the twins fold
+    with that module's chains, so the streaming layer defines none."""
+    from multithreaded_mapreduce_spark.operators import streaming_queries, timeseries
+    from multithreaded_mapreduce_spark.streaming import events, stateful
 
-    assert stream.EWMA_ALPHA == batch.EWMA_ALPHA
-    assert stream.EWMA_BETA == batch._EWMA_BETA
+    return [
+        f"{m.__name__}.{n}"
+        for m in (events, stateful, streaming_queries)
+        for n, v in vars(m).items()
+        if n.lstrip("_").startswith(prefix) and v is not getattr(timeseries, n, None)
+    ]
+
+
+def test_ewma_coefficients_stay_in_sync():
+    """The EWMA coefficients are defined once, in operators/timeseries.py,
+    next to ewma_chain, the fold the streaming twin runs: the streaming
+    layer holds no copy that could drift."""
+    assert not _coefficient_copies("EWMA_")
 
 
 def test_streaming_ewma_matches_batch_operator(spark, sf_dir):
@@ -489,18 +500,14 @@ def test_streaming_cusum_matches_batch_operator(spark, sf_dir):
 
 def test_streaming_holt_matches_batch_operator_and_constants(spark, sf_dir):
     """End-state parity of the streaming Holt twin with the batch fold,
-    plus the coefficient-copy equality guard (the streaming layer keeps
-    local constants to stay import-free of operator modules)."""
-    import multithreaded_mapreduce_spark.operators.timeseries as ts
-    import multithreaded_mapreduce_spark.streaming.stateful as st
+    plus the single-definition guard: the Holt coefficients live only in
+    operators/timeseries.py (holt_chain), none in the streaming layer."""
     from multithreaded_mapreduce_spark.operators.streaming_queries import (
         streaming_holt_daily,
     )
     from multithreaded_mapreduce_spark.operators.timeseries import events_holt_daily
 
-    assert (st.HOLT_ALPHA, st.HOLT_A1, st.HOLT_BETA, st.HOLT_B1) == (
-        ts.HOLT_ALPHA, ts._HOLT_A1, ts.HOLT_BETA, ts._HOLT_B1
-    )
+    assert not _coefficient_copies("HOLT_")
     got = {
         (r.event_type, r.day): (r.daily_total, r.level, r.trend, r.forecast_next)
         for r in streaming_holt_daily(spark, sf_dir).collect()
@@ -511,3 +518,75 @@ def test_streaming_holt_matches_batch_operator_and_constants(spark, sf_dir):
     }
     assert got == want
     assert any(l is not None for (_t, l, _b, _f) in got.values())
+
+
+def _write_events(path, series):
+    """One single-file events table (the shipped tables' layout): ``series``
+    maps event_type (None allowed) to {day offset: [values]}, one event
+    per value, minutes apart within the day."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = []
+    for etype, days in series.items():
+        for day, values in days.items():
+            for k, v in enumerate(values):
+                ts = dt.datetime(2024, 1, 1) + dt.timedelta(days=day, minutes=7 * k + 1)
+                rows.append((len(rows), ts, 1 + len(rows) % 3, etype, v, None))
+    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
+    schema = pa.schema(
+        [
+            ("event_id", pa.int64()),
+            ("ts", pa.timestamp("us")),
+            ("user_id", pa.int64()),
+            ("event_type", pa.string()),
+            ("value", pa.float64()),
+            ("props", pa.string()),
+        ]
+    )
+    table = pa.table({c: [r[i] for r in rows] for i, c in enumerate(cols)}, schema=schema)
+    pq.write_table(table, path)
+
+
+def test_recurrences_match_oracle_on_null_type_series_and_in_place_rewrite(
+    spark, sf_dir, tmp_path
+):
+    """The six daily-recurrence queries (batch fold and streaming twin
+    of EWMA, CUSUM and Holt) match their oracles on a series whose
+    event_type is NULL (the recursive CTE must join it NULL-safely) and
+    on a day whose every value is NULL, and still do after ``events``
+    is rewritten in place with longer series and a new one (the
+    multi-batch replay must split the NEW table, not replay the old
+    split)."""
+    import shutil
+
+    from multithreaded_mapreduce_spark.sources.tables import TABLES, table_path
+    from .oracle import compare_query
+
+    d = str(tmp_path)
+    for t in TABLES:
+        if t != "events":
+            shutil.copyfile(table_path(sf_dir, t), table_path(d, t))
+    series = {
+        None: {0: [1.25, 2.5], 1: [3.0], 2: [4.75, 0.5]},
+        "click": {0: [10.0, 2.25], 1: [None, None], 2: [7.5], 3: [1.0, 3.0]},
+        "view": {1: [5.5], 2: [6.25, 1.0]},
+    }
+    names = [
+        f"{engine}_{r}_daily"
+        for engine in ("events", "streaming")
+        for r in ("ewma", "cusum", "holt")
+    ]
+    for step in ("initial", "rewritten"):
+        if step == "rewritten":
+            series[None][3] = [2.0]
+            series["click"][4] = [8.5, 0.25]
+            series["purchase"] = {3: [100.0], 4: [40.0, 2.5], 5: [60.0]}
+        _write_events(table_path(d, "events"), series)
+        for name in names:
+            try:
+                compare_query(spark, d, Q[name].builder, Q[name].oracle)
+            except AssertionError as e:
+                raise AssertionError(f"{name} ({step} table): {e}") from None
