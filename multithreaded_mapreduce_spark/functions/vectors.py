@@ -109,17 +109,3 @@ def norm_sq_fast(a: Column | str, dim: int = VECTOR_DIM) -> Column:
         ]
     )
 
-
-def cosine_fast(a: Column | str, b: Column | str, dim: int = VECTOR_DIM) -> Column:
-    """Plain double-precision cosine — ~100× cheaper than the decimal
-    fold but with order-dependent rounding, so NOT oracle-stable. Use it
-    to pre-rank/prefilter, then rescore the survivors with
-    ``cosine_exact``: the exact/fast disagreement (~1e-15 relative) is
-    orders of magnitude below any real ranking gap, so a modest margin
-    or buffer makes the two-phase result identical to scoring
-    everything exactly. When both sides join repeatedly, precompute
-    ``norm_sq_fast`` per vector instead and divide by the stored norms.
-    """
-    return F.try_divide(
-        dot_fast(a, b, dim), F.sqrt(norm_sq_fast(a, dim)) * F.sqrt(norm_sq_fast(b, dim))
-    )

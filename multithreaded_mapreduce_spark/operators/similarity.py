@@ -1,20 +1,32 @@
 """Similarity search over the ``embeddings`` table (64-dim float
-vectors): brute-force cosine top-k as the exact baseline, and a
-sign-sketch-prefiltered ANN variant as the scale path. Both are pure
-Column-expression plans (zip_with/aggregate folds — no Python UDFs).
+vectors): candidate generators + one rank tail.
 
-Scale design:
-* brute force broadcasts the (small) query set against the corpus —
-  a BroadcastNestedLoopJoin with no shuffle of the corpus; the per-pair
-  cost is the 64-dim fold. This is the O(n·q) baseline every ANN path
-  is measured against.
-* the ANN variant compresses each vector to a 16-bit sign sketch
-  (1 bit per leading dimension). Candidate pairs must agree on >= 12 of
-  16 sign bits (Hamming <= 4 on a 2-byte mask — a popcount, ~100×
-  cheaper than the full fold); only candidates get the exact cosine and
-  final rank. At 100 TB the sketch column is 8 bytes/row and can be
-  bucketed/partitioned for locality; recall/cost trades by widening the
-  Hamming radius or the sketch.
+Every kNN builder here supplies only its CANDIDATE GENERATOR — the
+(query, neighbor) pairs it is willing to score, each side projected
+once by ``_knn_side``:
+
+* brute force: every pair — the small query set broadcasts against the
+  spread corpus (a BroadcastNestedLoopJoin, no shuffle of the corpus);
+  the O(n·q) baseline every ANN path is measured against;
+* sign-sketch ANN: pairs whose 16-bit sign sketches agree on >= 12 of
+  16 bits (Hamming <= 4, a popcount ~100× cheaper than the 64-dim
+  fold); recall/cost trades by widening the radius or the sketch;
+* IVF: pairs inside the query's probed inverted lists;
+* int8 scalar and product quantization: every pair, scored cheaply on
+  the compressed codes;
+* label-filtered search and hard-negative mining: pairs whose labels
+  agree / differ, as a join condition;
+* kNN join: every vector is a query.
+
+All of them end in ONE tail, ``_knn_rank``: the optional cheap-score
+buffer cut (``_approx_cosine`` or a builder's own code-space score),
+the optional true-vector fetch (PQ), the oracle-stable 6-dp decimal
+cosine rescore and the per-query row_number top-k on (cosine DESC,
+neighbor_id). MMR re-ranks the tail's exact pool; the recall report
+joins two tails. The DuckDB oracles mirror the split: each supplies
+its candidate pairs to ``_pair_dots``, and ``_rank_ctes`` is the one
+decimal-cosine + ranked top-k chain (``_knn_oracle`` composes them).
+Every plan is pure Column expressions (unrolled folds, no Python UDFs).
 
 Extension surface (SURVEY.md §2.3 similarity row): the reference has
 no numeric types beyond int counts (reference 1.cpp:18-21).
@@ -104,7 +116,7 @@ def _ann_query_sample_pred(k: int) -> Column:
 def _ann_eval_ctes(target: int | None = None) -> str:
     """Oracle CTE pair ``ann_k, eval_queries`` mirroring
     :func:`_ann_eval_decision` + :func:`_ann_query_sample_pred`;
-    composes after ``queries`` in the shared _DOT_CTE head."""
+    composes after ``queries`` in the shared ``_knn_head``."""
     from .dedup import _oracle_hex_id
 
     t = ANN_EVAL_TARGET_QUERIES if target is None else target
@@ -121,23 +133,22 @@ def _ann_eval_ctes(target: int | None = None) -> str:
 
 
 def _rescore_buffer(prelim: DataFrame) -> DataFrame:
-    """Shared two-phase buffer cut for every kNN variant (review r4 +
-    ADVICE r5). rank() over the 6-dp-ROUNDED approx — not row_number
-    over the raw double — keeps a boundary tie group WHOLE, so the
-    oracle's id-tie-broken winner can never be evicted by 1e-16 raw
-    jitter below the buffer cut. But on a duplicate-dense corpus one
-    tie group of near-identical vectors can exceed RESCORE_BUFFER and
-    make the expensive decimal-rescore phase unbounded per query, so a
-    SECOND deterministic cut — row_number over (rounded approx DESC,
-    neighbor_id) — caps the buffer at RESCORE_HARD_CAP. For vectors
-    whose exact cosines tie (true duplicates, the only way giant tie
-    groups arise), the hard cap keeps the smallest neighbor_ids —
-    exactly the rows the final (cosine DESC, neighbor_id) ranking
-    selects — so the cap can only matter when > HARD_CAP vectors that
-    DIFFER at full precision collide at 6 dp, below the output's own
-    granularity. Both windows share one sort (the second ordering
-    extends the first), so the cap adds no exchange and no extra sort
-    (plan-asserted in tests/test_similarity.py)."""
+    """The buffer cut of ``_knn_rank`` (review r4 + ADVICE r5). rank()
+    over the 6-dp-ROUNDED approx — not row_number over the raw double —
+    keeps a boundary tie group WHOLE, so the oracle's id-tie-broken
+    winner can never be evicted by 1e-16 raw jitter below the buffer
+    cut. But on a duplicate-dense corpus one tie group of near-identical
+    vectors can exceed RESCORE_BUFFER and make the expensive
+    decimal-rescore phase unbounded per query, so a SECOND deterministic
+    cut — row_number over (rounded approx DESC, neighbor_id) — caps the
+    buffer at RESCORE_HARD_CAP. For vectors whose exact cosines tie
+    (true duplicates, the only way giant tie groups arise), the hard cap
+    keeps the smallest neighbor_ids — exactly the rows the final
+    (cosine DESC, neighbor_id) ranking selects — so the cap can only
+    matter when > HARD_CAP vectors that DIFFER at full precision collide
+    at 6 dp, below the output's own granularity. Both windows share one
+    sort (the second ordering extends the first), so the cap adds no
+    exchange and no extra sort (plan-asserted in tests/test_similarity.py)."""
     rounded = F.round(F.col("approx"), 6)
     pw = W.partitionBy("query_id").orderBy(rounded.desc())
     hw = W.partitionBy("query_id").orderBy(rounded.desc(), F.col("neighbor_id"))
@@ -150,53 +161,192 @@ def _rescore_buffer(prelim: DataFrame) -> DataFrame:
         .drop("prnk", "hard_rn")
     )
 
-_DOT_CTE = """
-WITH dims AS (SELECT unnest(range(1, 65)) AS i),
-queries AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < {n_queries}),
-norms AS (
-  SELECT vec_id,
-         CAST(sum(CAST(CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
-                       AS DECIMAL(30,20))) AS DOUBLE) AS nsq
-  FROM embeddings CROSS JOIN dims
-  GROUP BY 1
-)
-"""
-
 
 def _rounded_cosine(a: Column, b: Column) -> Column:
     """Exact-sum cosine snapped to 6 decimals (engine-stable)."""
     return F.round(cosine_exact(a, b).cast("decimal(30,12)"), 6).cast("double")
 
 
-@register(
-    "knn_cosine_bruteforce",
-    oracle=_DOT_CTE.format(n_queries=N_QUERIES)
-    + f"""
-, dots AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         CAST(sum(CAST(CAST(q.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)
+def _knn_side(
+    emb: DataFrame, side: str, *carry, vec: str = "embedding", nsq=norm_sq_fast
+) -> DataFrame:
+    """One side of a candidate relation: ``side`` "q" projects
+    (query_id, q_emb, *carry, q_nsq), "n" projects (neighbor_id, n_emb,
+    *carry, n_nsq) from ``emb``'s (vec_id, ``vec``). ``carry`` columns
+    (names or aliased Columns) pass through unchanged. The squared norm
+    is computed ONCE PER VECTOR here, before any join, so scoring a pair
+    costs the 64 dot-product multiplies instead of 192 (dot and both
+    norms re-derived per pair); a builder that never reads it pays
+    nothing (column pruning drops it)."""
+    return emb.select(
+        F.col("vec_id").alias("query_id" if side == "q" else "neighbor_id"),
+        F.col(vec).alias(f"{side}_emb"),
+        *carry,
+        nsq(vec).alias(f"{side}_nsq"),
+    )
+
+
+def _cross_pairs(queries: DataFrame, neighbors: DataFrame) -> DataFrame:
+    """Every (query, other vector) pair: the small query side broadcasts
+    and the corpus side streams through the nested loop on however many
+    partitions the scan produced — a single-file scan is ONE task, which
+    would put every dot product on one core, so it is spread first."""
+    return (
+        F.broadcast(queries)
+        .crossJoin(spread(neighbors))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+    )
+
+
+def _approx_cosine(n_emb: str = "n_emb", n_nsq: str = "n_nsq") -> Column:
+    """The cheap approximate cosine of a candidate pair: an unrolled
+    double dot over the precomputed per-vector norms (PQ passes its
+    reconstruction and its norm as the neighbor side). The sqrt(q*n) vs
+    sqrt(q)*sqrt(n) ulp difference is immaterial — this score only
+    ranks. try_divide: a zero vector's norm product is 0 — NULL approx
+    (ranked NULLS LAST) on both engines, never an ANSI crash."""
+    return F.try_divide(
+        dot_fast("q_emb", n_emb), F.sqrt(F.col("q_nsq") * F.col(n_nsq))
+    )
+
+
+def _knn_rank(
+    cand: DataFrame,
+    k: int,
+    *keep: str,
+    approx: Column | None = None,
+    fetch: DataFrame | None = None,
+) -> DataFrame:
+    """The one kNN rank tail: candidate pairs (query_id, q_emb,
+    neighbor_id, n_emb, ...) in, the per-query top ``k`` out as
+    (query_id, neighbor_id, *keep, cosine, rnk).
+
+    Rank cheaply, rescore exactly. A plain double-precision score is
+    ~100× cheaper than the decimal fold but rounds in an order-dependent
+    way, so it is NOT oracle-stable; it may only pre-rank. With
+    ``approx`` the pairs are first cut to the tie-safe, hard-capped
+    RESCORE_BUFFER best per query (``_rescore_buffer``; WindowGroupLimit
+    prunes per partition before the shuffle), and only those survivors
+    pay the decimal rescore: the fast/exact disagreement (~1e-15
+    relative) is orders of magnitude below any real rank-k→rank-20 gap,
+    so the final top-k equals scoring every candidate exactly. Without
+    ``approx`` (the sketch ANN, whose candidate set is already small)
+    every candidate is rescored. ``fetch`` (neighbor_id, n_emb) joins
+    the TRUE vectors onto the buffer only — the PQ deal: codes in the
+    index, full precision only for the survivors. The rescore is the
+    6-dp decimal cosine, ranked by row_number over (cosine DESC,
+    neighbor_id) exactly as ``_rank_ctes`` ranks in the oracle."""
+    if approx is not None:
+        cols = ["query_id", "q_emb", "neighbor_id", *keep]
+        if fetch is None and "n_emb" not in keep:
+            cols.append("n_emb")
+        cand = _rescore_buffer(cand.select(*cols, approx.alias("approx")))
+    if fetch is not None:
+        cand = cand.join(fetch, "neighbor_id")
+    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    return (
+        cand.select(
+            "query_id",
+            "neighbor_id",
+            *keep,
+            _rounded_cosine(F.col("q_emb"), F.col("n_emb")).alias("cosine"),
+        )
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+    )
+
+
+# ------------------------------------------------------------------
+# oracle twins: every kNN oracle is a candidate-pair source fed to
+# _pair_dots, then the shared _rank_ctes chain
+# ------------------------------------------------------------------
+
+_DIMS_NORMS = """dims AS (SELECT unnest(range(1, 65)) AS i),
+norms AS (
+  SELECT vec_id,
+         CAST(sum(CAST(CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)
+                       AS DECIMAL(30,20))) AS DOUBLE) AS nsq
+  FROM embeddings CROSS JOIN dims
+  GROUP BY 1
+)"""
+
+#: the default candidate-pair ids: ``q`` and ``e`` are the query and
+#: neighbor aliases of every _pair_dots source
+_PAIR = ("q.vec_id AS query_id", "e.vec_id AS neighbor_id")
+
+
+def _knn_head(where: str = f"vec_id < {N_QUERIES}") -> str:
+    """WITH head of the embeddings-table oracles: ``dims``, the exact
+    per-vector ``norms`` and the ``queries`` rows matching ``where``."""
+    return f"""
+WITH {_DIMS_NORMS},
+queries AS (SELECT * FROM embeddings WHERE {where})"""
+
+
+def _pair_dots(
+    src: str, ids: tuple = _PAIR, a: str = "q.embedding", b: str = "e.embedding"
+) -> str:
+    """Exact decimal dot product of every candidate pair in ``src`` (a
+    FROM clause whose vectors are ``a`` and ``b``), grouped by ``ids`` —
+    the oracle twin of the decimal fold in ``cosine_exact``."""
+    group = ", ".join(str(i + 1) for i in range(len(ids)))
+    return f"""SELECT {", ".join(ids)},
+         CAST(sum(CAST(CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)
                        AS DECIMAL(30,20))) AS DOUBLE) AS dot
-  FROM queries q
-  JOIN embeddings e ON e.vec_id != q.vec_id
+  FROM {src}
   CROSS JOIN dims
-  GROUP BY 1, 2
-), scored AS (
-  SELECT d.query_id, d.neighbor_id,
+  GROUP BY {group}"""
+
+
+def _rank_ctes(k: int, *keep: str, prefix: str = "") -> str:
+    """``{prefix}scored`` (the 6-dp decimal cosine of every pair in
+    ``{prefix}dots`` over the shared ``norms``) and ``{prefix}ranked``
+    (its per-query top ``k`` on (cosine DESC, neighbor_id)) — the oracle
+    twin of ``_knn_rank``'s rescore and top-k. ``keep`` columns ride
+    along from the dots CTE."""
+    d_keep = "".join(f" d.{c}," for c in keep)
+    r_keep = "".join(f"{c}, " for c in keep)
+    return f"""{prefix}scored AS (
+  SELECT d.query_id, d.neighbor_id,{d_keep}
          CAST(round(CAST(d.dot / (sqrt(nq.nsq) * sqrt(nn.nsq)) AS DECIMAL(30,12)), 6)
               AS DOUBLE) AS cosine
-  FROM dots d
+  FROM {prefix}dots d
   JOIN norms nq ON d.query_id = nq.vec_id
   JOIN norms nn ON d.neighbor_id = nn.vec_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, rnk
-FROM ranked WHERE rnk <= {TOP_K}
+), {prefix}ranked AS (
+  SELECT * FROM (
+    SELECT query_id, neighbor_id, {r_keep}cosine,
+           row_number() OVER (PARTITION BY query_id
+                              ORDER BY cosine DESC, neighbor_id) AS rnk
+    FROM {prefix}scored
+  ) WHERE rnk <= {k}
+)"""
+
+
+def _knn_oracle(
+    head: str, src: str, k: int, *keep: str, ids: tuple = _PAIR, tail: str | None = None
+) -> str:
+    """A kNN oracle: ``head`` (a WITH chain defining ``dims``, ``norms``
+    and whatever ``src`` reads), the exact dots of the ``src`` pairs,
+    the shared rank chain, then ``tail`` — by default the top-k rows
+    themselves."""
+    if tail is None:
+        cols = ", ".join(("query_id", "neighbor_id", *keep, "cosine", "rnk"))
+        tail = f"""
+SELECT {cols}
+FROM ranked
 ORDER BY query_id, rnk
-""",
+"""
+    return f"""{head}, dots AS (
+  {_pair_dots(src, ids)}
+), {_rank_ctes(k, *keep)}{tail}"""
+
+
+@register(
+    "knn_cosine_bruteforce",
+    oracle=_knn_oracle(
+        _knn_head(), "queries q JOIN embeddings e ON e.vec_id != q.vec_id", TOP_K
+    ),
     description=f"Exact cosine top-{TOP_K} for {N_QUERIES} query vectors via "
     "broadcast nested-loop scoring + per-query row_number ranking "
     "(tie-broken on neighbor id; cosine snapped to 6 decimals).",
@@ -206,69 +356,13 @@ def knn_cosine_bruteforce(
     spark: SparkSession, sf_dir: str, *, query_pred: Column | None = None
 ) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    if query_pred is not None:
-        # ann_recall_report's sampled-eval mode: restrict the query set
-        # BEFORE the broadcast cross join, so ground-truth cost is
-        # |sample| x |corpus|, never |queries| x |corpus|
-        emb_q = emb.filter(query_pred)
-    else:
-        emb_q = emb
-    queries = emb_q.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm_sq_fast("embedding").alias("q_nsq"),
-    )
-    # phase 1: every pair scored with the cheap double-precision cosine.
-    # Norms are precomputed ONCE PER VECTOR on each side before the cross
-    # join — scoring a pair is then just the 64 dot-product multiplies
-    # instead of 192 (dot + both norms re-derived per pair). The approx
-    # phase only ranks, so sqrt(q_nsq*n_nsq) vs sqrt(q)*sqrt(n) ulp
-    # differences are immaterial; the exact rescore below is unchanged.
-    # Keep a rescore buffer of RESCORE_BUFFER per query (WindowGroupLimit
-    # prunes per-partition before the shuffle).
-    # the corpus side streams through the broadcast join on however
-    # many partitions the scan produced — a single-file scan is ONE
-    # task, which would put every dot product on one core; spread it
-    neighbors = spread(
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("n_emb"),
-            norm_sq_fast("embedding").alias("n_nsq"),
-        )
-    )
-    prelim = (
-        F.broadcast(queries)
-        .crossJoin(neighbors)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "q_emb",
-            "neighbor_id",
-            "n_emb",
-            # try_divide: a zero vector's norm product is 0 — NULL approx
-            # (ranked NULLS LAST) on both engines, never an ANSI crash
-            F.try_divide(
-                dot_fast("q_emb", "n_emb"),
-                F.sqrt(F.col("q_nsq") * F.col("n_nsq")),
-            ).alias("approx"),
-        )
-    )
-    # tie-safe + hard-capped buffer cut — see _rescore_buffer
-    buffer = _rescore_buffer(prelim)
-    # phase 2: oracle-stable decimal rescore of the buffer only — fast/
-    # exact disagreement (~1e-15) cannot cross the rank-5→rank-20 gap,
-    # so the final top-k equals scoring everything exactly
-    scored = buffer.select(
-        "query_id",
-        "neighbor_id",
-        _rounded_cosine(F.col("q_emb"), F.col("n_emb")).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .orderBy("query_id", "rnk")
-    )
+    # ann_recall_report's sampled-eval mode: restrict the query set
+    # BEFORE the broadcast cross join, so ground-truth cost is
+    # |sample| x |corpus|, never |queries| x |corpus|
+    emb_q = emb.filter(query_pred) if query_pred is not None else emb
+    queries = _knn_side(emb_q.filter(F.col("vec_id") < N_QUERIES), "q")
+    cand = _cross_pairs(queries, _knn_side(emb, "n"))
+    return _knn_rank(cand, TOP_K, approx=_approx_cosine()).orderBy("query_id", "rnk")
 
 
 def _sign_sketch_spark(emb: Column) -> Column:
@@ -289,42 +383,25 @@ def _sign_sketch_sql(col: str) -> str:
     return f"CAST({terms} AS BIGINT)"
 
 
+_SKETCHES = f""",
+sketches AS (
+  SELECT vec_id, embedding, {_sign_sketch_sql("embedding")} AS sketch FROM embeddings
+)"""
+
+
+def _sketch_pairs(queries: str) -> str:
+    """Oracle candidate pairs of the sign-sketch ANN for the query rows
+    of CTE ``queries``: every other vector within HAMMING_RADIUS."""
+    return f"""{queries} qs
+  JOIN sketches q ON q.vec_id = qs.vec_id
+  JOIN sketches e
+    ON e.vec_id != q.vec_id
+   AND bit_count(xor(q.sketch, e.sketch)) <= {HAMMING_RADIUS}"""
+
+
 @register(
     "knn_sketch_ann",
-    oracle=_DOT_CTE.format(n_queries=N_QUERIES)
-    + f"""
-, sketches AS (
-  SELECT vec_id, embedding, {_sign_sketch_sql("embedding")} AS sketch FROM embeddings
-), cand AS (
-  SELECT q.vec_id AS query_id, q.embedding AS q_emb,
-         e.vec_id AS neighbor_id, e.embedding AS n_emb
-  FROM sketches q
-  JOIN sketches e
-    ON q.vec_id < {N_QUERIES} AND e.vec_id != q.vec_id
-   AND bit_count(xor(q.sketch, e.sketch)) <= {HAMMING_RADIUS}
-), dots AS (
-  SELECT query_id, neighbor_id,
-         CAST(sum(CAST(CAST(q_emb[i] AS DOUBLE) * CAST(n_emb[i] AS DOUBLE)
-                       AS DECIMAL(30,20))) AS DOUBLE) AS dot
-  FROM cand CROSS JOIN dims
-  GROUP BY 1, 2
-), scored AS (
-  SELECT d.query_id, d.neighbor_id,
-         CAST(round(CAST(d.dot / (sqrt(nq.nsq) * sqrt(nn.nsq)) AS DECIMAL(30,12)), 6)
-              AS DOUBLE) AS cosine
-  FROM dots d
-  JOIN norms nq ON d.query_id = nq.vec_id
-  JOIN norms nn ON d.neighbor_id = nn.vec_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, rnk
-FROM ranked WHERE rnk <= {TOP_K}
-ORDER BY query_id, rnk
-""",
+    oracle=_knn_oracle(_knn_head() + _SKETCHES, _sketch_pairs("queries"), TOP_K),
     description=f"ANN top-{TOP_K}: 16-bit sign-sketch prefilter (candidates "
     f"within Hamming {HAMMING_RADIUS}), exact cosine rerank of survivors. "
     "Same output schema as the brute-force baseline so recall is directly "
@@ -338,36 +415,15 @@ def knn_sketch_ann(
         "vec_id", "embedding", _sign_sketch_spark(F.col("embedding")).alias("sketch")
     )
     emb_q = emb.filter(query_pred) if query_pred is not None else emb
-    queries = emb_q.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("sketch").alias("q_sketch"),
+    queries = _knn_side(
+        emb_q.filter(F.col("vec_id") < N_QUERIES), "q", F.col("sketch").alias("q_sketch")
     )
     hamming = F.bit_count(F.col("q_sketch").bitwiseXOR(F.col("sketch")))
-    cand = (
-        F.broadcast(queries)
-        .crossJoin(
-            spread(
-                emb.select(
-                    F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("n_emb"),
-                    F.col("sketch"),
-                )
-            )
-        )
-        .filter((F.col("neighbor_id") != F.col("query_id")) & (hamming <= HAMMING_RADIUS))
+    cand = _cross_pairs(queries, _knn_side(emb, "n", "sketch")).filter(
+        hamming <= HAMMING_RADIUS
     )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        _rounded_cosine(F.col("q_emb"), F.col("n_emb")).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .orderBy("query_id", "rnk")
-    )
+    # the sketch survivors are few: every one gets the exact rescore
+    return _knn_rank(cand, TOP_K).orderBy("query_id", "rnk")
 
 
 IVF_K = 16       # coarse centroids
@@ -377,14 +433,12 @@ IVF_EXACT_ITERS = 2  # Lloyd rounds for the deterministic quantizer
 
 def _build_ivf_exact_oracle() -> str:
     """Unrolled deterministic-IVF oracle: the shared Lloyd CTE builds
-    the identical quantizer, then inverted lists, probe sets, and the
-    exact-decimal cosine rerank — full value parity, unlike an
-    engine-seeded KMeans quantizer ever could."""
+    the identical quantizer, then inverted lists and probe sets; the
+    probed pairs take the shared exact-decimal rerank — full value
+    parity, unlike an engine-seeded KMeans quantizer ever could."""
     from .vectors import _km_assign_sql, _km_dist_sql, lloyd_cte
 
-    return (
-        lloyd_cte(IVF_K)
-        + f""", cd AS ({_km_dist_sql("xl", "c1l")}
+    head = lloyd_cte(IVF_K) + f""", cd AS ({_km_dist_sql("xl", "c1l")}
 ), lists AS ({_km_assign_sql("cd")}
 ), probes AS (
   SELECT vec_id AS query_id, k FROM (
@@ -392,37 +446,14 @@ def _build_ivf_exact_oracle() -> str:
            row_number() OVER (PARTITION BY vec_id ORDER BY d, k) AS rn
     FROM cd WHERE vec_id < {N_QUERIES}
   ) WHERE rn <= {IVF_N_PROBE}
-), norms AS (
-  SELECT vec_id, CAST(sum(CAST(x * x AS DECIMAL(30,20))) AS DOUBLE) AS nsq
-  FROM x GROUP BY 1
-), cand AS (
-  SELECT p.query_id, l.vec_id AS neighbor_id
-  FROM probes p JOIN lists l USING (k)
-  WHERE l.vec_id != p.query_id
-), dots AS (
-  SELECT c.query_id, c.neighbor_id,
-         CAST(sum(CAST(xq.x * xn.x AS DECIMAL(30,20))) AS DOUBLE) AS dot
-  FROM cand c
-  JOIN x xq ON xq.vec_id = c.query_id
-  JOIN x xn ON xn.vec_id = c.neighbor_id AND xn.dim = xq.dim
-  GROUP BY 1, 2
-), scored AS (
-  SELECT d.query_id, d.neighbor_id,
-         CAST(round(CAST(d.dot / (sqrt(nq.nsq) * sqrt(nn.nsq)) AS DECIMAL(30,12)), 6)
-              AS DOUBLE) AS cosine
-  FROM dots d
-  JOIN norms nq ON d.query_id = nq.vec_id
-  JOIN norms nn ON d.neighbor_id = nn.vec_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, rnk
-FROM ranked WHERE rnk <= {TOP_K}
-ORDER BY query_id, rnk
-"""
+), {_DIMS_NORMS}"""
+    return _knn_oracle(
+        head,
+        """probes p
+  JOIN lists l ON l.k = p.k AND l.vec_id != p.query_id
+  JOIN embeddings q ON q.vec_id = p.query_id
+  JOIN embeddings e ON e.vec_id = l.vec_id""",
+        TOP_K,
     )
 
 
@@ -456,61 +487,27 @@ def knn_ivf_exact_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- index: every vector into its nearest deterministic centroid's
     # list. spread first (r10, guide §2.5): the single-file scan ran the
     # K-centroid fold — and the probe join it feeds — on ONE task.
-    lists = lloyd_assign(spread(emb), cents).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("n_emb"), "k"
-    )
+    lists = _knn_side(lloyd_assign(spread(emb), cents), "n", "k", vec="v")
     # --- probe: per query, the IVF_N_PROBE nearest centroids (sort the
     # tiny per-row struct array, slice, explode — no window needed)
     probes = (
         emb.filter(F.col("vec_id") < N_QUERIES)
         .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("q_emb"),
+            "vec_id",
+            "v",
             F.explode(
-                F.slice(
-                    F.array_sort(lloyd_dist_array(cents)),
-                    1,
-                    IVF_N_PROBE,
-                )
+                F.slice(F.array_sort(lloyd_dist_array(cents)), 1, IVF_N_PROBE)
             ).alias("p"),
         )
-        .select("query_id", "q_emb", F.col("p.k").alias("k"))
+        .select("vec_id", "v", F.col("p.k").alias("k"))
     )
-    # --- search inside the probed lists, two-phase like the bruteforce:
-    # cheap double cosine ranks everything, only the RESCORE_BUFFER best
-    # per query pay the oracle-stable decimal rescore (fast/exact
-    # disagreement ~1e-15 cannot cross the rank-5→rank-20 gap, so the
-    # final top-k equals exact-scoring every candidate)
-    prelim = (
-        F.broadcast(
-            probes.withColumn("q_nsq", norm_sq_fast("q_emb"))
-        )
-        .join(lists.withColumn("n_nsq", norm_sq_fast("n_emb")), "k")
+    # --- search inside the probed lists
+    cand = (
+        F.broadcast(_knn_side(probes, "q", "k", vec="v"))
+        .join(lists, "k")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "q_emb",
-            "neighbor_id",
-            "n_emb",
-            F.try_divide(
-                dot_fast("q_emb", "n_emb"),
-                F.sqrt(F.col("q_nsq") * F.col("n_nsq")),
-            ).alias("approx"),
-        )
     )
-    # tie-safe + hard-capped buffer cut — see _rescore_buffer
-    buffer = _rescore_buffer(prelim)
-    scored = buffer.select(
-        "query_id",
-        "neighbor_id",
-        _rounded_cosine(F.col("q_emb"), F.col("n_emb")).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .orderBy("query_id", "rnk")
-    )
+    return _knn_rank(cand, TOP_K, approx=_approx_cosine()).orderBy("query_id", "rnk")
 
 
 # ------------------------------------------------------------------
@@ -540,11 +537,10 @@ def _int_dot_unrolled(a: str, b: str, dim: int = 64) -> Column:
     )
 
 
-@register(
-    "knn_quantized_ann",
-    oracle=_DOT_CTE.format(n_queries=N_QUERIES)
-    + f"""
-, meta AS (
+def _build_quantized_oracle() -> str:
+    """int8 candidates ranked by the de-scaled integer dot, cut to the
+    rescore buffer; the buffer takes the shared exact-decimal rerank."""
+    head = _knn_head() + f""", meta AS (
   SELECT vec_id,
          127.0 / list_max(list_transform(embedding,
                                          x -> abs(CAST(x AS DOUBLE)))) AS scale
@@ -561,8 +557,6 @@ def _int_dot_unrolled(a: str, b: str, dim: int = 64) -> Column:
   GROUP BY 1, 2
 ), prelim AS (
   SELECT d.query_id, d.neighbor_id,
-         (CAST(d.idot AS DOUBLE) / (mq.scale * me.scale))
-           / (sqrt(nq.nsq) * sqrt(nn.nsq)) AS approx,
          row_number() OVER (PARTITION BY d.query_id
                             ORDER BY (CAST(d.idot AS DOUBLE) / (mq.scale * me.scale))
                                      / (sqrt(nq.nsq) * sqrt(nn.nsq)) DESC,
@@ -574,32 +568,19 @@ def _int_dot_unrolled(a: str, b: str, dim: int = 64) -> Column:
   JOIN norms nn ON d.neighbor_id = nn.vec_id
 ), buffer AS (
   SELECT query_id, neighbor_id FROM prelim WHERE prnk <= {RESCORE_BUFFER}
-), exact_dots AS (
-  SELECT b.query_id, b.neighbor_id,
-         CAST(sum(CAST(CAST(q.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)
-                       AS DECIMAL(30,20))) AS DOUBLE) AS dot
-  FROM buffer b
+)"""
+    return _knn_oracle(
+        head,
+        """buffer b
   JOIN embeddings q ON q.vec_id = b.query_id
-  JOIN embeddings e ON e.vec_id = b.neighbor_id
-  CROSS JOIN dims
-  GROUP BY 1, 2
-), scored AS (
-  SELECT d.query_id, d.neighbor_id,
-         CAST(round(CAST(d.dot / (sqrt(nq.nsq) * sqrt(nn.nsq)) AS DECIMAL(30,12)), 6)
-              AS DOUBLE) AS cosine
-  FROM exact_dots d
-  JOIN norms nq ON d.query_id = nq.vec_id
-  JOIN norms nn ON d.neighbor_id = nn.vec_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, rnk
-FROM ranked WHERE rnk <= {TOP_K}
-ORDER BY query_id, rnk
-""",
+  JOIN embeddings e ON e.vec_id = b.neighbor_id""",
+        TOP_K,
+    )
+
+
+@register(
+    "knn_quantized_ann",
+    oracle=_build_quantized_oracle(),
     description=f"Scalar-quantized ANN top-{TOP_K}: vectors compress to "
     "symmetric int8 (scale = 127/max|x| per vector), candidates rank by "
     "the exact INTEGER dot product de-scaled to a cosine estimate, and "
@@ -627,24 +608,13 @@ def knn_quantized_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         scale.alias("scale"),
         _quantize_spark(F.col("embedding"), scale).alias("q"),
-        norm_sq_exact("embedding").alias("nsq"),
     )
-    queries = sides.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("scale").alias("q_scale"),
-        F.col("q").alias("q_q"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    neighbors = spread(
-        sides.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("n_emb"),
-            F.col("scale").alias("n_scale"),
-            F.col("q").alias("n_q"),
-            F.col("nsq").alias("n_nsq"),
-        )
-    )
+
+    def side(s: str, df: DataFrame) -> DataFrame:
+        # exact norms: the approx below mirrors the oracle's IEEE tree
+        carry = [F.col(c).alias(f"{s}_{c}") for c in ("scale", "q")]
+        return _knn_side(df, s, *carry, nsq=norm_sq_exact)
+
     idot = _int_dot_unrolled("q_q", "n_q")
     # parenthesization mirrors the oracle exactly: (idot/(sa*sb)) /
     # (sqrt(nsqa)*sqrt(nsqb)) — identical IEEE trees → identical ranks.
@@ -654,25 +624,9 @@ def knn_quantized_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.try_divide(idot.cast("double"), F.col("q_scale") * F.col("n_scale")),
         F.sqrt(F.col("q_nsq")) * F.sqrt(F.col("n_nsq")),
     )
-    prelim = (
-        F.broadcast(queries)
-        .crossJoin(neighbors)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "q_emb", "neighbor_id", "n_emb", approx.alias("approx"))
-    )
-    # tie-safe + hard-capped buffer cut — see _rescore_buffer
-    buffer = _rescore_buffer(prelim)
-    scored = buffer.select(
-        "query_id",
-        "neighbor_id",
-        _rounded_cosine(F.col("q_emb"), F.col("n_emb")).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .orderBy("query_id", "rnk")
-    )
+    queries = side("q", sides.filter(F.col("vec_id") < N_QUERIES))
+    cand = _cross_pairs(queries, side("n", sides))
+    return _knn_rank(cand, TOP_K, approx=approx).orderBy("query_id", "rnk")
 
 
 # ------------------------------------------------------------------
@@ -684,36 +638,11 @@ FILTERED_TOP_K = 3
 
 @register(
     "knn_cosine_filtered",
-    oracle=_DOT_CTE.format(n_queries=N_QUERIES).replace(
-        "SELECT vec_id, embedding FROM embeddings",
-        "SELECT vec_id, embedding, label FROM embeddings",
-    )
-    + f"""
-, dots AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         CAST(sum(CAST(CAST(q.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)
-                       AS DECIMAL(30,20))) AS DOUBLE) AS dot
-  FROM queries q
-  JOIN embeddings e ON e.label = q.label AND e.vec_id != q.vec_id
-  CROSS JOIN dims
-  GROUP BY 1, 2
-), scored AS (
-  SELECT d.query_id, d.neighbor_id,
-         CAST(round(CAST(d.dot / (sqrt(nq.nsq) * sqrt(nn.nsq)) AS DECIMAL(30,12)), 6)
-              AS DOUBLE) AS cosine
-  FROM dots d
-  JOIN norms nq ON d.query_id = nq.vec_id
-  JOIN norms nn ON d.neighbor_id = nn.vec_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, rnk
-FROM ranked WHERE rnk <= {FILTERED_TOP_K}
-ORDER BY query_id, rnk
-""",
+    oracle=_knn_oracle(
+        _knn_head(),
+        "queries q JOIN embeddings e ON e.label = q.label AND e.vec_id != q.vec_id",
+        FILTERED_TOP_K,
+    ),
     description=f"Metadata-filtered vector search: exact cosine top-"
     f"{FILTERED_TOP_K} restricted to the query's own label group — the "
     "'filtered ANN' shape every production vector store needs (RAG over "
@@ -727,54 +656,17 @@ ORDER BY query_id, rnk
 )
 def knn_cosine_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_emb"),
-        norm_sq_fast("embedding").alias("q_nsq"),
+    queries = _knn_side(
+        emb.filter(F.col("vec_id") < N_QUERIES), "q", F.col("label").alias("q_label")
     )
-    neighbors = spread(
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").alias("n_label"),
-            F.col("embedding").alias("n_emb"),
-            norm_sq_fast("embedding").alias("n_nsq"),
-        )
+    neighbors = spread(_knn_side(emb, "n", F.col("label").alias("n_label")))
+    cand = F.broadcast(queries).join(
+        neighbors,
+        (F.col("q_label") == F.col("n_label"))
+        & (F.col("neighbor_id") != F.col("query_id")),
     )
-    prelim = (
-        F.broadcast(queries)
-        .join(
-            neighbors,
-            (F.col("q_label") == F.col("n_label"))
-            & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            "q_emb",
-            "neighbor_id",
-            "n_emb",
-            # try_divide: a zero vector's norm product is 0 — NULL approx
-            # (ranked NULLS LAST) on both engines, never an ANSI crash
-            F.try_divide(
-                dot_fast("q_emb", "n_emb"),
-                F.sqrt(F.col("q_nsq") * F.col("n_nsq")),
-            ).alias("approx"),
-        )
-    )
-    # same two-phase ranking as knn_cosine_bruteforce: cheap double
-    # cosine ranks, the decimal-exact rescore runs only on the buffer
-    # tie-safe + hard-capped buffer cut — see _rescore_buffer
-    buffer = _rescore_buffer(prelim)
-    scored = buffer.select(
-        "query_id",
-        "neighbor_id",
-        _rounded_cosine(F.col("q_emb"), F.col("n_emb")).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= FILTERED_TOP_K)
-        .orderBy("query_id", "rnk")
+    return _knn_rank(cand, FILTERED_TOP_K, approx=_approx_cosine()).orderBy(
+        "query_id", "rnk"
     )
 
 
@@ -787,35 +679,9 @@ KNN_JOIN_K = 3
 
 @register(
     "knn_join_bruteforce",
-    oracle=_DOT_CTE.format(n_queries=10**9).replace(
-        "WHERE vec_id < 1000000000", "WHERE TRUE"
-    )
-    + f"""
-, dots AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         CAST(sum(CAST(CAST(q.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)
-                       AS DECIMAL(30,20))) AS DOUBLE) AS dot
-  FROM queries q
-  JOIN embeddings e ON e.vec_id != q.vec_id
-  CROSS JOIN dims
-  GROUP BY 1, 2
-), scored AS (
-  SELECT d.query_id, d.neighbor_id,
-         CAST(round(CAST(d.dot / (sqrt(nq.nsq) * sqrt(nn.nsq)) AS DECIMAL(30,12)), 6)
-              AS DOUBLE) AS cosine
-  FROM dots d
-  JOIN norms nq ON d.query_id = nq.vec_id
-  JOIN norms nn ON d.neighbor_id = nn.vec_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, rnk
-FROM ranked WHERE rnk <= {KNN_JOIN_K}
-ORDER BY query_id, rnk
-""",
+    oracle=_knn_oracle(
+        _knn_head("TRUE"), "queries q JOIN embeddings e ON e.vec_id != q.vec_id", KNN_JOIN_K
+    ),
     description=f"kNN JOIN: exact cosine top-{KNN_JOIN_K} for EVERY "
     "vector (not a fixed query set) — the all-corpus neighbor join that "
     "embedding dedup and clustering consume. O(n²) exactness baseline: "
@@ -828,48 +694,12 @@ ORDER BY query_id, rnk
 )
 def knn_join_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries = spread(
-        emb.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            norm_sq_fast("embedding").alias("q_nsq"),
-        )
+    cand = spread(_knn_side(emb, "q")).join(
+        F.broadcast(_knn_side(emb, "n")),
+        F.col("neighbor_id") != F.col("query_id"),
     )
-    neighbors = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        norm_sq_fast("embedding").alias("n_nsq"),
-    )
-    prelim = (
-        queries.join(
-            F.broadcast(neighbors),
-            F.col("neighbor_id") != F.col("query_id"),
-        )
-        .select(
-            "query_id",
-            "q_emb",
-            "neighbor_id",
-            "n_emb",
-            # try_divide: a zero vector's norm product is 0 — NULL approx
-            # (ranked NULLS LAST) on both engines, never an ANSI crash
-            F.try_divide(
-                dot_fast("q_emb", "n_emb"),
-                F.sqrt(F.col("q_nsq") * F.col("n_nsq")),
-            ).alias("approx"),
-        )
-    )
-    # tie-safe + hard-capped buffer cut — see _rescore_buffer
-    buffer = _rescore_buffer(prelim)
-    scored = buffer.select(
-        "query_id",
-        "neighbor_id",
-        _rounded_cosine(F.col("q_emb"), F.col("n_emb")).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= KNN_JOIN_K)
-        .orderBy("query_id", "rnk")
+    return _knn_rank(cand, KNN_JOIN_K, approx=_approx_cosine()).orderBy(
+        "query_id", "rnk"
     )
 
 
@@ -923,41 +753,21 @@ def _mmr_oracle() -> str:
 )"""
         )
     chained = ",\n".join(rounds)
-    return (
-        _DOT_CTE.format(n_queries=N_QUERIES)
-        + f"""
-, dots AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         CAST(sum(CAST(CAST(q.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)
-                       AS DECIMAL(30,20))) AS DOUBLE) AS dot
-  FROM queries q
-  JOIN embeddings e ON e.vec_id != q.vec_id
-  CROSS JOIN dims
-  GROUP BY 1, 2
-), scored AS (
-  SELECT d.query_id, d.neighbor_id,
-         CAST(round(CAST(d.dot / (sqrt(nq.nsq) * sqrt(nn.nsq)) AS DECIMAL(30,12)), 6)
-              AS DOUBLE) + 0.0 AS cosine
-  FROM dots d
-  JOIN norms nq ON d.query_id = nq.vec_id
-  JOIN norms nn ON d.neighbor_id = nn.vec_id
-), cand AS (
-  SELECT query_id, neighbor_id, cosine FROM (
-    SELECT query_id, neighbor_id, cosine,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, neighbor_id) AS rn
-    FROM scored
-  ) WHERE rn <= {MMR_POOL}
-), ccdots AS (
-  SELECT a.query_id, a.neighbor_id AS na, b.neighbor_id AS nb,
-         CAST(sum(CAST(CAST(ea.embedding[i] AS DOUBLE) * CAST(eb.embedding[i] AS DOUBLE)
-                       AS DECIMAL(30,20))) AS DOUBLE) AS dot
-  FROM cand a
+    ccdots = _pair_dots(
+        """cand a
   JOIN cand b ON a.query_id = b.query_id AND a.neighbor_id != b.neighbor_id
   JOIN embeddings ea ON ea.vec_id = a.neighbor_id
-  JOIN embeddings eb ON eb.vec_id = b.neighbor_id
-  CROSS JOIN dims
-  GROUP BY 1, 2, 3
+  JOIN embeddings eb ON eb.vec_id = b.neighbor_id""",
+        ("a.query_id", "a.neighbor_id AS na", "b.neighbor_id AS nb"),
+        "ea.embedding",
+        "eb.embedding",
+    )
+    # the pool is the shared rank chain's top MMR_POOL; + 0.0 maps a
+    # -0.0 cosine to +0.0 (see _nz) once the pool is cut
+    tail = f""", cand AS (
+  SELECT query_id, neighbor_id, cosine + 0.0 AS cosine FROM ranked
+), ccdots AS (
+  {ccdots}
 ), cc AS (
   SELECT c.query_id, c.na, c.nb,
          CAST(round(CAST(c.dot / (sqrt(na_.nsq) * sqrt(nb_.nsq)) AS DECIMAL(30,12)), 6)
@@ -978,6 +788,8 @@ SELECT query_id, rnk, neighbor_id, mmr_score
 FROM selu{MMR_K}
 ORDER BY query_id, rnk
 """
+    return _knn_oracle(
+        _knn_head(), "queries q JOIN embeddings e ON e.vec_id != q.vec_id", MMR_POOL, tail=tail
     )
 
 
@@ -998,51 +810,14 @@ ORDER BY query_id, rnk
     tags=("similarity", "knn", "mmr", "rerank"),
 )
 def knn_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vectors import norm_sq_fast
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id"), F.col("embedding")
     ).filter(F.col("embedding").isNotNull())
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm_sq_fast("embedding").alias("q_nsq"),
+    cand = _cross_pairs(
+        _knn_side(emb.filter(F.col("vec_id") < N_QUERIES), "q"), _knn_side(emb, "n")
     )
-    neighbors = spread(
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("n_emb"),
-            norm_sq_fast("embedding").alias("n_nsq"),
-        )
-    )
-    prelim = (
-        F.broadcast(queries)
-        .crossJoin(neighbors)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "q_emb",
-            "neighbor_id",
-            "n_emb",
-            F.try_divide(
-                dot_fast("q_emb", "n_emb"),
-                F.sqrt(F.col("q_nsq") * F.col("n_nsq")),
-            ).alias("approx"),
-        )
-    )
-    buffer = _rescore_buffer(prelim)
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    cand = (
-        buffer.select(
-            "query_id",
-            "neighbor_id",
-            "n_emb",
-            _nz(_rounded_cosine(F.col("q_emb"), F.col("n_emb"))).alias("cosine"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= MMR_POOL)
-        .drop("rn")
-    )
+    # the pool: the exact top-MMR_POOL per query from the shared tail
+    pool = _knn_rank(cand, MMR_POOL, "n_emb", approx=_approx_cosine())
     # ---- greedy selection as ONE plan over per-query pool arrays
     # (r10 optimization, guide §1.2/§2.4). The former implementation
     # ran every selection round as relational joins with an eager
@@ -1058,13 +833,13 @@ def knn_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One job + broadcasts instead of 53; identical output (oracle
     # unchanged, hand-fixture + rank-1-parity tests unchanged).
     pool0 = (
-        cand.groupBy("query_id")
+        pool.groupBy("query_id")
         .agg(
             F.sort_array(
                 F.collect_list(
                     F.struct(
                         F.col("neighbor_id").alias("nid"),
-                        F.col("cosine").alias("cos"),
+                        _nz(F.col("cosine")).alias("cos"),
                         F.col("n_emb").alias("emb"),
                     )
                 )
@@ -1158,36 +933,13 @@ HARD_NEG_K = 5
 
 @register(
     "hard_negative_mining",
-    oracle=_DOT_CTE.format(n_queries=N_QUERIES).replace(
-        "SELECT vec_id, embedding FROM embeddings",
-        "SELECT vec_id, embedding, label FROM embeddings",
-    )
-    + f"""
-, dots AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id, e.label AS n_label,
-         CAST(sum(CAST(CAST(q.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)
-                       AS DECIMAL(30,20))) AS DOUBLE) AS dot
-  FROM queries q
-  JOIN embeddings e ON e.label != q.label AND e.vec_id != q.vec_id
-  CROSS JOIN dims
-  GROUP BY 1, 2, 3
-), scored AS (
-  SELECT d.query_id, d.neighbor_id, d.n_label,
-         CAST(round(CAST(d.dot / (sqrt(nq.nsq) * sqrt(nn.nsq)) AS DECIMAL(30,12)), 6)
-              AS DOUBLE) AS cosine
-  FROM dots d
-  JOIN norms nq ON d.query_id = nq.vec_id
-  JOIN norms nn ON d.neighbor_id = nn.vec_id
-), ranked AS (
-  SELECT query_id, neighbor_id, n_label, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id, n_label, cosine, rnk
-FROM ranked WHERE rnk <= {HARD_NEG_K}
-ORDER BY query_id, rnk
-""",
+    oracle=_knn_oracle(
+        _knn_head(),
+        "queries q JOIN embeddings e ON e.label != q.label AND e.vec_id != q.vec_id",
+        HARD_NEG_K,
+        "n_label",
+        ids=(*_PAIR, "e.label AS n_label"),
+    ),
     description=f"Hard-negative mining for contrastive training: for "
     f"each anchor (the {N_QUERIES} query vectors), the top-{HARD_NEG_K} "
     "most-cosine-similar vectors whose label DIFFERS — maximally "
@@ -1206,52 +958,17 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", "label"
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_emb"),
-        norm_sq_fast("embedding").alias("q_nsq"),
+    queries = _knn_side(
+        emb.filter(F.col("vec_id") < N_QUERIES), "q", F.col("label").alias("q_label")
     )
-    neighbors = spread(
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").alias("n_label"),
-            F.col("embedding").alias("n_emb"),
-            norm_sq_fast("embedding").alias("n_nsq"),
-        )
+    neighbors = spread(_knn_side(emb, "n", F.col("label").alias("n_label")))
+    cand = F.broadcast(queries).join(
+        neighbors,
+        (F.col("q_label") != F.col("n_label"))
+        & (F.col("neighbor_id") != F.col("query_id")),
     )
-    prelim = (
-        F.broadcast(queries)
-        .join(
-            neighbors,
-            (F.col("q_label") != F.col("n_label"))
-            & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            "q_emb",
-            "neighbor_id",
-            "n_label",
-            "n_emb",
-            # try_divide: zero-vector norms → NULL approx, ranked last
-            F.try_divide(
-                dot_fast("q_emb", "n_emb"),
-                F.sqrt(F.col("q_nsq") * F.col("n_nsq")),
-            ).alias("approx"),
-        )
-    )
-    buffer = _rescore_buffer(prelim)
-    scored = buffer.select(
-        "query_id",
-        "neighbor_id",
-        "n_label",
-        _rounded_cosine(F.col("q_emb"), F.col("n_emb")).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= HARD_NEG_K)
-        .orderBy("query_id", "rnk")
+    return _knn_rank(cand, HARD_NEG_K, "n_label", approx=_approx_cosine()).orderBy(
+        "query_id", "rnk"
     )
 
 
@@ -1398,7 +1115,7 @@ def _build_pq_oracle() -> str:
         "list_transform({x}.sv, (a, i) -> (a - {c}.c[i]) * (a - {c}.c[i]))), "
         "(acc, y) -> acc + y)"
     )
-    return f"""
+    head = f"""
 WITH e AS (
   SELECT vec_id, embedding FROM embeddings WHERE embedding IS NOT NULL
 ), x AS (
@@ -1456,10 +1173,7 @@ WITH e AS (
   JOIN (SELECT m, k, generate_subscripts(c, 1) - 1 AS j, unnest(c) AS c
         FROM c1l) c1j
     ON c1j.m = cd.m AND c1j.k = cd.k
-), norms AS (
-  SELECT vec_id, CAST(sum(CAST(x * x AS DECIMAL(30,20))) AS DOUBLE) AS nsq
-  FROM x GROUP BY 1
-), rnorms AS (
+), {_DIMS_NORMS}, rnorms AS (
   SELECT vec_id,
          CAST(sum(CAST(rxv * rxv AS DECIMAL(30,20))) AS DOUBLE) AS rnsq
   FROM rx GROUP BY 1
@@ -1480,30 +1194,14 @@ WITH e AS (
   JOIN rnorms rn ON a.neighbor_id = rn.vec_id
 ), buffer AS (
   SELECT query_id, neighbor_id FROM prelim WHERE prnk <= {RESCORE_BUFFER}
-), exact_dots AS (
-  SELECT b.query_id, b.neighbor_id,
-         CAST(sum(CAST(xq.x * xn.x AS DECIMAL(30,20))) AS DOUBLE) AS dot
-  FROM buffer b
-  JOIN x xq ON xq.vec_id = b.query_id
-  JOIN x xn ON xn.vec_id = b.neighbor_id AND xn.dim = xq.dim
-  GROUP BY 1, 2
-), scored AS (
-  SELECT d.query_id, d.neighbor_id,
-         CAST(round(CAST(d.dot / (sqrt(nq.nsq) * sqrt(nn.nsq)) AS DECIMAL(30,12)), 6)
-              AS DOUBLE) AS cosine
-  FROM exact_dots d
-  JOIN norms nq ON d.query_id = nq.vec_id
-  JOIN norms nn ON d.neighbor_id = nn.vec_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine, rnk
-FROM ranked WHERE rnk <= {TOP_K}
-ORDER BY query_id, rnk
-"""
+)"""
+    return _knn_oracle(
+        head,
+        """buffer b
+  JOIN embeddings q ON q.vec_id = b.query_id
+  JOIN embeddings e ON e.vec_id = b.neighbor_id""",
+        TOP_K,
+    )
 
 
 @register(
@@ -1538,51 +1236,16 @@ def knn_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # struct per subspace carries its centroid along, so no join)
     bests = [_pq_best(m, cents[m]) for m in range(PQ_M)]
     recon = F.flatten(F.array(*[b["c"] for b in bests]))
-    neighbors = spread(
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            recon.alias("recon"),
-        ).withColumn("rnsq", norm_sq_fast("recon"))
-    )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("q_emb"),
-        norm_sq_fast("v").alias("q_nsq"),
-    )
-    prelim = (
-        F.broadcast(queries)
-        .crossJoin(neighbors)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "q_emb",
-            "neighbor_id",
-            # try_divide: a zero (or zero-reconstruction) vector's norm
-            # product is 0 — NULL approx on both engines, ranked last
-            F.try_divide(
-                dot_fast("q_emb", "recon"),
-                F.sqrt(F.col("q_nsq") * F.col("rnsq")),
-            ).alias("approx"),
-        )
-    )
-    # tie-safe + hard-capped buffer cut — see _rescore_buffer
-    buffer = _rescore_buffer(prelim)
-    # rerank fetches TRUE vectors for the buffer only (the PQ deal:
-    # codes in the index, full precision only for the survivors)
-    truth = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("n_emb")
-    )
-    scored = buffer.join(truth, "neighbor_id").select(
-        "query_id",
-        "neighbor_id",
-        _rounded_cosine(F.col("q_emb"), F.col("n_emb")).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .orderBy("query_id", "rnk")
-    )
+    neighbors = emb.select(
+        F.col("vec_id").alias("neighbor_id"), recon.alias("recon")
+    ).withColumn("rnsq", norm_sq_fast("recon"))
+    queries = _knn_side(emb.filter(F.col("vec_id") < N_QUERIES), "q", vec="v")
+    cand = _cross_pairs(queries, neighbors)
+    # rank on the reconstruction; only the buffer fetches TRUE vectors
+    truth = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("n_emb"))
+    return _knn_rank(
+        cand, TOP_K, approx=_approx_cosine("recon", "rnsq"), fetch=truth
+    ).orderBy("query_id", "rnk")
 
 
 # ------------------------------------------------------------------
@@ -1591,70 +1254,17 @@ def knn_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_recall_oracle(target: int | None = None) -> str:
-    """The full ann_recall_report oracle SQL: composes the
-    knn_cosine_bruteforce chain (ground truth) and the knn_sketch_ann
-    chain (sketch CTEs renamed s_*) verbatim over the md5-uniform
-    query sample, then left-joins the two top-k sets per query.
+    """The full ann_recall_report oracle SQL: the knn_cosine_bruteforce
+    chain (ground truth) and the knn_sketch_ann chain (the ``s_``
+    prefix) over the md5-uniform query sample, both on the shared rank
+    chain, then a per-query left join of the two top-k sets.
     ``target`` parameterizes the sample cap for the forced-k parity
     tests; the registered oracle uses the default."""
-    return (
-        _DOT_CTE.format(n_queries=N_QUERIES)
-        + ", "
-        + _ann_eval_ctes(target)
-        + f"""
-, dots AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         CAST(sum(CAST(CAST(q.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)
-                       AS DECIMAL(30,20))) AS DOUBLE) AS dot
-  FROM eval_queries q
-  JOIN embeddings e ON e.vec_id != q.vec_id
-  CROSS JOIN dims
-  GROUP BY 1, 2
-), scored AS (
-  SELECT d.query_id, d.neighbor_id,
-         CAST(round(CAST(d.dot / (sqrt(nq.nsq) * sqrt(nn.nsq)) AS DECIMAL(30,12)), 6)
-              AS DOUBLE) AS cosine
-  FROM dots d
-  JOIN norms nq ON d.query_id = nq.vec_id
-  JOIN norms nn ON d.neighbor_id = nn.vec_id
-), exact_k AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, neighbor_id) AS rnk
-    FROM scored
-  ) WHERE rnk <= {TOP_K}
-), sketches AS (
-  SELECT vec_id, embedding, {_sign_sketch_sql("embedding")} AS sketch FROM embeddings
-), s_cand AS (
-  SELECT q.vec_id AS query_id, q.embedding AS q_emb,
-         e.vec_id AS neighbor_id, e.embedding AS n_emb
-  FROM sketches q
-  JOIN eval_queries eq ON q.vec_id = eq.vec_id
-  JOIN sketches e
-    ON e.vec_id != q.vec_id
-   AND bit_count(xor(q.sketch, e.sketch)) <= {HAMMING_RADIUS}
-), s_dots AS (
-  SELECT query_id, neighbor_id,
-         CAST(sum(CAST(CAST(q_emb[i] AS DOUBLE) * CAST(n_emb[i] AS DOUBLE)
-                       AS DECIMAL(30,20))) AS DOUBLE) AS dot
-  FROM s_cand CROSS JOIN dims
-  GROUP BY 1, 2
-), s_scored AS (
-  SELECT d.query_id, d.neighbor_id,
-         CAST(round(CAST(d.dot / (sqrt(nq.nsq) * sqrt(nn.nsq)) AS DECIMAL(30,12)), 6)
-              AS DOUBLE) AS cosine
-  FROM s_dots d
-  JOIN norms nq ON d.query_id = nq.vec_id
-  JOIN norms nn ON d.neighbor_id = nn.vec_id
-), approx_k AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cosine DESC, neighbor_id) AS rnk
-    FROM s_scored
-  ) WHERE rnk <= {TOP_K}
-)
+    return f"""{_knn_head()}, {_ann_eval_ctes(target)}{_SKETCHES}, dots AS (
+  {_pair_dots("eval_queries q JOIN embeddings e ON e.vec_id != q.vec_id")}
+), {_rank_ctes(TOP_K)}, s_dots AS (
+  {_pair_dots(_sketch_pairs("eval_queries"))}
+), {_rank_ctes(TOP_K, prefix="s_")}
 SELECT e.query_id,
        count(*) AS n_exact,
        CAST(coalesce(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END), 0)
@@ -1662,13 +1272,12 @@ SELECT e.query_id,
        CAST(round(CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
                        * 1.0 / count(*) AS DECIMAL(30,12)), 4)
             AS DOUBLE) AS recall_at_k
-FROM exact_k e
-LEFT JOIN approx_k a
+FROM ranked e
+LEFT JOIN s_ranked a
   ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
 GROUP BY e.query_id
 ORDER BY e.query_id
 """
-    )
 
 
 @register(

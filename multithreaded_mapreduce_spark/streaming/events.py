@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 import hashlib
 import os
+import shutil
 import tempfile
 
 from ..functions.numeric import DEC
@@ -67,9 +68,10 @@ def stream_events_multibatch(
     consumes in a single trigger — fine for end-state parity, but it
     never exercises state carried ACROSS batches. This helper splits
     the events table into ``n_files`` parquet files once per table
-    version (idempotent, under the system temp dir, keyed on the
-    table's ``table_stamp`` so a table rewritten in place is split
-    afresh, never replayed stale) and sets ``maxFilesPerTrigger=1``, so a
+    version (idempotent, under the system temp dir, named by the
+    file's realpath and keyed on the table's ``table_stamp`` so a
+    table rewritten in place is split afresh, never replayed stale;
+    writing a new version's split removes the older versions') and sets ``maxFilesPerTrigger=1``, so a
     query sees a genuine multi-trigger replay: windows accumulate
     incrementally, stateful operators merge state batch over batch.
 
@@ -82,10 +84,13 @@ def stream_events_multibatch(
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = table_path(sf_dir, "events")
-    tag = hashlib.md5(
-        f"{table_stamp(sf_dir, 'events')}:{n_files}:tsorted".encode()
+    tmp = tempfile.gettempdir()
+    src_tag = hashlib.md5(os.path.realpath(src).encode()).hexdigest()[:12]
+    stamp = hashlib.md5(
+        f"{table_stamp(sf_dir, 'events')}:tsorted".encode()
     ).hexdigest()[:12]
-    d = os.path.join(tempfile.gettempdir(), f"mmr_spark_stream_split_{tag}")
+    prefix = f"mmr_spark_stream_split_{src_tag}_"
+    d = os.path.join(tmp, f"{prefix}{stamp}_{n_files}")
     batch = spark.read.parquet(src)
     if not os.path.isdir(d) or len([f for f in os.listdir(d) if f.endswith(".parquet")]) < n_files:
         batch.repartitionByRange(n_files, "ts").write.mode("overwrite").parquet(d)
@@ -97,6 +102,12 @@ def stream_events_multibatch(
         base = int(os.path.getmtime(os.path.join(d, parts[0])))
         for k, f in enumerate(parts):
             os.utime(os.path.join(d, f), (base + 10 * k, base + 10 * k))
+        # a split of any OTHER version of this file is stale by
+        # construction (its table stamp no longer matches): drop it, so
+        # in-place rewrites leave one split per n_files, not one each
+        for f in os.listdir(tmp):
+            if f.startswith(prefix) and not f.startswith(f"{prefix}{stamp}_"):
+                shutil.rmtree(os.path.join(tmp, f), ignore_errors=True)
     schema = batch.schema
     raw = (
         spark.readStream.schema(schema)

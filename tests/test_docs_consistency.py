@@ -167,6 +167,22 @@ def _assert_one_owning_function(pattern: str, owner: str) -> None:
     assert found == [owner], f"{pattern} built in {found}, expected only in {owner}"
 
 
+def test_knn_rank_tail_is_built_once():
+    """Every kNN builder supplies only its candidate pairs: the cheap
+    approximate cosine, the rescore-buffer cut and the final per-query
+    row_number live in one Spark function each, and the oracles' 6-dp
+    decimal cosine over ``norms`` in one SQL generator. A second copy is
+    a fork of the rank tail the eleven kNN-family queries share."""
+    owners = {
+        re.escape("sqrt(nq.nsq) * sqrt(nn.nsq)) AS DECIMAL(30,12)"): "_rank_ctes",
+        re.escape('.withColumn("rnk", F.row_number()'): "_knn_rank",
+        r"(?<!def )\b_rescore_buffer\(": "_knn_rank",
+        re.escape('dot_fast("q_emb"'): "_approx_cosine",
+    }
+    for pattern, owner in owners.items():
+        _assert_one_owning_function(pattern, owner)
+
+
 def test_daily_recurrences_are_defined_once():
     """The daily-recurrence family (EWMA, CUSUM, Holt) has one batch
     fold, one home for its coefficients and one 6-dp snap: the day

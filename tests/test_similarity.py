@@ -297,3 +297,49 @@ def test_centroid_key_contract_is_checked_under_python_O(spark):
         lloyd_dist_array({0: [0.0, 1.0], 2: [1.0, 0.0]})
     with pytest.raises(ValueError, match="0..K-1"):
         _pq_best(0, {0: [0.0, 1.0], 2: [1.0, 0.0]})
+
+
+def test_mmr_pool_cut_ties_negative_and_positive_zero(spark, tmp_path, sf_dir):
+    """Hand fixture: 19 near-duplicates of one direction fill pool
+    ranks 1-19; the next two neighbors straddle the MMR_POOL cut, one
+    with a tiny negative cosine that rounds to zero and the smaller id,
+    one exactly orthogonal (0.0). The two must tie at the cut on both
+    engines whichever sign the rounded zero carries, so the smaller id
+    enters the pool — and it is the one MMR then picks in round 2,
+    being anti-correlated with the round-1 winner. Pins that the pool
+    does not depend on whether the +0.0 (-0.0 → +0.0) step runs before
+    or after the pool cut."""
+    import os
+    import shutil
+
+    from multithreaded_mapreduce_spark.operators.similarity import MMR_POOL
+    from multithreaded_mapreduce_spark.sources.tables import TABLES, table_path
+
+    from .oracle import compare_query
+
+    dim = 64
+
+    def v(head: dict) -> list[float]:
+        return [float(head.get(i, 0.0)) for i in range(dim)]
+
+    rows = [(0, v({0: 1.0}), 0)]  # the query
+    # pool ranks 1-19: near-duplicates of (1, -1, 0, ...), distinct cosines
+    rows += [(100 + j, v({0: 1.0, 1: -1.0, 2 + j: 0.01 * (j + 1)}), 0) for j in range(19)]
+    rows.append((119, v({0: -1e-7, 1: 1.0}), 0))  # cosine rounds to zero, below it
+    rows.append((120, v({40: 1.0}), 0))  # cosine exactly 0.0
+    rows += [(121 + j, v({0: -1.0, 41 + j: 0.5}), 0) for j in range(4)]
+    assert len(rows) - 1 == 25 and MMR_POOL == 20
+
+    d = str(tmp_path)
+    for t in TABLES:
+        if t != "embeddings":
+            shutil.copyfile(table_path(sf_dir, t), table_path(d, t))
+    schema = spark.read.parquet(table_path(sf_dir, "embeddings")).schema
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{d}/_emb")
+    part = next(f for f in os.listdir(f"{d}/_emb") if f.endswith(".parquet"))
+    shutil.copyfile(f"{d}/_emb/{part}", table_path(d, "embeddings"))
+
+    q = Q["knn_mmr_rerank"]
+    compare_query(spark, d, q.builder, q.oracle)
+    picked = [r.neighbor_id for r in q.builder(spark, d).orderBy("rnk").collect()]
+    assert picked[:2] == [100, 119], picked

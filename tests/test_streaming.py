@@ -590,3 +590,32 @@ def test_recurrences_match_oracle_on_null_type_series_and_in_place_rewrite(
                 compare_query(spark, d, Q[name].builder, Q[name].oracle)
             except AssertionError as e:
                 raise AssertionError(f"{name} ({step} table): {e}") from None
+
+
+def test_stream_split_rewrites_leave_one_split_dir(spark, tmp_path, monkeypatch, sf_dir):
+    """Each events-table version gets its own multi-batch split, named
+    by the file's realpath plus its table stamp; writing a new version's
+    split removes the older versions' splits. Two in-place rewrites of
+    ``events`` leave exactly one split directory, and the streaming
+    twins replayed from the fresh split still match their oracles."""
+    import os
+    import shutil
+    import tempfile
+
+    from multithreaded_mapreduce_spark.sources.tables import TABLES, table_path
+    from .oracle import compare_query
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
+    for t in TABLES:
+        shutil.copyfile(table_path(sf_dir, t), table_path(d, t))
+    stream_events_multibatch(spark, d, n_files=4)
+    events = table_path(d, "events")
+    for i, name in enumerate(("streaming_ewma_daily", "streaming_cusum_daily")):
+        shutil.copyfile(table_path(sf_dir, "events"), events)  # rewrite in place
+        t = os.stat(events).st_mtime_ns + (i + 1) * 10**9
+        os.utime(events, ns=(t, t))
+        compare_query(spark, d, Q[name].builder, Q[name].oracle)
+    splits = [f for f in os.listdir(tmp_path) if f.startswith("mmr_spark_stream_split_")]
+    assert len(splits) == 1, splits
