@@ -27,7 +27,7 @@ from multithreaded_mapreduce_spark.plans.caching import (  # noqa: E402
     result_memo_stats,
 )
 from multithreaded_mapreduce_spark.plans.registry import all_queries  # noqa: E402
-from multithreaded_mapreduce_spark.session import get_spark  # noqa: E402
+from multithreaded_mapreduce_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 #: headline set — one per operator family (SURVEY.md §2), heaviest shapes
 HEADLINE = (
@@ -254,11 +254,13 @@ def _decision_stamps(records: dict[str, dict]) -> dict:
 def _time_headline(spark, sf_dir: str, queries, per_pass: int):
     """Two temporally-separated sweeps of ``per_pass`` cold runs per
     HEADLINE query. Returns (per-pass run times, query -> the decision
-    record of its last run)."""
+    record of its last run, generated classes compiled per sweep)."""
     pass_runs: list[dict[str, list[float]]] = []
     records: dict[str, dict] = {}
+    compiles: list[int] = []
     for _pass in range(2):
         this_pass: dict[str, list[float]] = {}
+        compiles_before = codegen_compiles(spark)
         for name in HEADLINE:
             q = queries[name]
             runs: list[float] = []
@@ -276,7 +278,8 @@ def _time_headline(spark, sf_dir: str, queries, per_pass: int):
                 records[name] = decisions.record()
             this_pass[name] = runs
         pass_runs.append(this_pass)
-    return pass_runs, records
+        compiles.append(codegen_compiles(spark) - compiles_before)
+    return pass_runs, records, compiles
 
 
 def _memo_chain(spark, sf_dir: str, queries, names, memos=(), cold=True):
@@ -434,7 +437,7 @@ def main() -> None:
             "value would silently change the effective sample count)"
         )
     per_pass = n_runs // 2
-    pass_runs, records = _time_headline(spark, sf_dir, queries, per_pass)
+    pass_runs, records, compiles = _time_headline(spark, sf_dir, queries, per_pass)
     decision_stamps = _decision_stamps(records)
 
     timings: dict[str, float] = {}
@@ -497,6 +500,10 @@ def main() -> None:
         # 10×-replica sweep with the setmask disabled — the at-scale
         # dedup branch the r11 bitmap prune targets (r11)
         "scale_sweep": scale_sweep_stamp,
+        # generated classes compiled in [sweep_a, sweep_b]: once the
+        # session's codegen cache holds the working set, sweep_b
+        # compiles only what no earlier build generated
+        "codegen_compiles": compiles,
         "runs_per_query": per_pass * 2,
         "median_total_r3_comparable": round(sum(medians[n] for n in r3_set), 3),
         "median_total_r4_comparable": round(sum(medians[n] for n in r4_set), 3),

@@ -3007,8 +3007,13 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )["d"].alias("rep_doc_id")
     )
+    # rep (one row per cluster) is the broadcast side. Unhinted, the
+    # labels' checkpoint scan has no size estimate, so AQE picked the
+    # build side by which of the two shuffle stages finished first:
+    # warm rebuilds alternated between two plans and recompiled their
+    # generated classes (8-10 per build at sf0.001).
     out = (
-        assigned.join(rep, "cluster_id")
+        assigned.join(F.broadcast(rep), "cluster_id")
         .select(
             "doc_id",
             "cluster_id",

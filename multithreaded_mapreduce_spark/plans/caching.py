@@ -271,7 +271,13 @@ def tracked_count() -> int:
 #: seeded it (same epoch, lineage intact); an unfilled entry from an
 #: earlier epoch is evicted, because its lineage can read tracked
 #: checkpoint blocks that release_tracked() has since dropped (after an
-#: ``explain``, or any build whose action never ran). Residency stays
+#: ``explain``, or any build whose action never ran). That rule is
+#: defensive: no input is known on which serving the stale entry fails.
+#: Measured, a copy without it still matched the oracle at sf0.001 and
+#: sf0.01 and differed only in the recorded memo outcome. The suspected
+#: reason, not verified: the entry's action reads the shuffle output of
+#: the AQE stages that already ran at build time, not the dropped
+#: blocks. Residency stays
 #: bounded: one checkpoint per memo name (a key change replaces the
 #: entry, and unpersists it unless the current build seeded or was
 #: served it), and every memoized relation is label-sized — never text

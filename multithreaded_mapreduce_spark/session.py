@@ -11,6 +11,9 @@ local mode:
 * UTC session timezone so timestamp semantics are stable across engines
   (the DuckDB oracle compares naive-UTC values).
 * Arrow enabled for any pandas interchange (Pandas UDFs, toPandas).
+* a codegen class cache that holds the engine's working set
+  (``CODEGEN_CACHE_ENTRIES``), so a query built again in the same
+  session reuses its compiled classes instead of recompiling them.
 """
 
 from __future__ import annotations
@@ -18,6 +21,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+#: entries of Spark's JVM-wide cache of compiled generated classes
+#: (``spark.sql.codegen.cache.maxEntries``, default 100). Measured: one
+#: sf0.01 session's 87 bench.py headline queries compile 1,431 distinct
+#: classes, the perfbench ``catalog-cold`` pass 131 and the
+#: ``daily-pipeline`` pass 186-191. At the default size every repeated
+#: pass evicted and recompiled nearly all of them (98 and 176-178
+#: compiles per pass). Holding all 1,431 classes cost about 15 MB of
+#: metaspace and 17 MB of JIT code heap.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def default_parallelism() -> int:
@@ -37,6 +51,12 @@ def get_spark(
     count; ``shuffle_partitions`` defaults to ``cores`` (local mode:
     one wave of shuffle tasks; a cluster deployment would raise this
     and let AQE coalesce).
+
+    The codegen cache size is a static conf that the JVM fixes at its
+    first compile, so it takes effect only in a session this function
+    starts (the CLI, bench.py, the tests and perfbench all do); a
+    session that already exists keeps its size. ``extra_conf`` can
+    override it like any other conf.
     """
     n = cores or default_parallelism()
     parts = shuffle_partitions or n
@@ -53,6 +73,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # NOTE: runtime-filter injection (bloomFilter / semiJoinReduction)
         # is deliberately LEFT AT DEFAULT: measured here, enabling it sent
         # the optimizer into a multi-minute planning blowup on the deeply
@@ -65,3 +86,10 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes the session's JVM has compiled so far (Spark's
+    ``CodegenMetrics`` compile count; a cache hit does not count)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

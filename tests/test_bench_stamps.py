@@ -8,6 +8,7 @@ wrapper."""
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 from types import SimpleNamespace
 
@@ -61,7 +62,8 @@ def test_stamps_are_read_before_the_scale_sweep(monkeypatch, tmp_path):
     bench = _bench()
     monkeypatch.setattr(bench, "HEADLINE", ("dedup_components",))
     monkeypatch.setattr(bench, "SCALE_SWEEP_QUERIES", ("dedup_components",))
-    _, records = bench._time_headline(
+    monkeypatch.setattr(bench, "codegen_compiles", lambda spark: 0)
+    _, records, _ = bench._time_headline(
         _SPARK, "sf", {"dedup_components": _components(7)}, per_pass=1
     )
     stamps = bench._decision_stamps(records)
@@ -161,3 +163,55 @@ def test_memo_stamps_count_their_own_chain(monkeypatch):
         "minhash_verified_pairs": {"hits": 1, "misses": 1},
     }
     assert stamps["quality_memo_decision"]["trio_stats"] == one_miss_two_hits
+
+
+class _StubSpark:
+    """The session calls bench.py's ``main`` makes, as no-ops."""
+
+    catalog = _SPARK.catalog
+
+    def range(self, _n):
+        return SimpleNamespace(selectExpr=lambda *_: SimpleNamespace(collect=lambda: []))
+
+    def stop(self):
+        pass
+
+
+def test_codegen_compiles_stamp_counts_each_headline_sweep(monkeypatch, tmp_path, capsys):
+    """A stubbed ``main``: every query "compiles" one class the first
+    time it is built. The stamp holds each sweep's compile delta — the
+    warm-up's builds excluded — and sits ahead of the tail keys, so the
+    stdout tail still ends with ``value``."""
+    from multithreaded_mapreduce_spark.operators import bucketing
+
+    bench = _bench()
+    built: set[str] = set()
+
+    def query(name):
+        def build(spark, sf_dir):
+            built.add(name)
+            return _Sink()
+
+        return SimpleNamespace(builder=build)
+
+    names = set(bench.HEADLINE) | {"media_png_roundtrip", "media_jpeg_roundtrip"}
+    monkeypatch.setattr(bench, "get_spark", lambda app: _StubSpark())
+    monkeypatch.setattr(bench, "all_queries", lambda: {n: query(n) for n in names})
+    monkeypatch.setattr(bench, "codegen_compiles", lambda spark: len(built))
+    monkeypatch.setattr(bench, "_memo_stamps", lambda spark, sf_dir, queries: {})
+    monkeypatch.setattr(bucketing, "ensure_bucketed_tables", lambda spark, sf_dir: None)
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "sf")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "2")
+    monkeypatch.setenv("MMR_BENCH_SCALE_SWEEP", "off")
+    bench.main()
+
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    result = json.loads(line)
+    warmed = {"wordcount", "media_png_roundtrip", "media_jpeg_roundtrip"}
+    assert result["codegen_compiles"] == [len(set(bench.HEADLINE) - warmed), 0]
+    keys = list(result)
+    assert keys.index("scale_sweep") < keys.index("codegen_compiles") < keys.index("runs_per_query")
+    assert keys[-2:] == ["value", "sf"]
+    assert '"value"' in line[-2000:]
+    assert (tmp_path / "bench_result.json").read_text().strip() == line
